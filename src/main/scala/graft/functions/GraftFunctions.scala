@@ -31,6 +31,20 @@ object GraftFunctions {
   def currentEngine(): Column = call_function("current_engine")
   def geoMean(c: Column): Column = call_function("geomean", c)
 
+  /** Squared L2 distance of two numeric arrays, Σ (a_i − b_i)², summed
+    * left to right into a double (exact while the terms are integers whose
+    * sum stays below 2^53 — the quantized-vector contract). Arrays of
+    * unequal length pad the shorter with nulls, so the result is null.
+    */
+  def l2sq(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, d) => acc + d)
+
+  /** Cosine similarity floor-quantized to 4dp integer units (a BIGINT in
+    * [-10000, 10000]) — the hash-portable similarity surface every ranking
+    * on cosine uses.
+    */
+  def cos4(a: Column, b: Column): Column = floor(cosineSim(a, b) * 10000)
+
   /** 64-bit sign-random-projection signature (see RandomHyperplaneBits). */
   def rhBits(v: Column, numBits: Int, seed: Long): Column =
     call_function("rh_bits_" + numBits + "_" + seed, v)

@@ -567,11 +567,8 @@ object Links {
       // chain cost two extra exchanges of the (host, label, cnt) frame per
       // iteration. row_number ordered by (cnt desc, label asc) picks the
       // identical winner — same tie rule, oracle re-verified.
-      val winners = neigh
-        .withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("host")
-            .orderBy(col("cnt").desc, col("label").asc)))
-        .filter(col("__rn") === 1)
+      val winners = Rank.topK(neigh, Seq("host"),
+          Seq(col("cnt").desc, col("label").asc), 1, "__rn")
         .select(col("host"), col("label").as("nl"))
       labels = labels.join(winners, Seq("host"), "left")
         .select(col("host"), coalesce(col("nl"), col("label")).as("label"))

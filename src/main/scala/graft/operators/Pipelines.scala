@@ -134,11 +134,8 @@ object Pipelines {
     val labeled = labels.join(multi, Seq("cluster_id"), "left_semi")
     val base = docs.select(Keys.id(docs, idCol).as("doc_id"),
       col(scoreCol).cast("double").as("score"))
-    val canon = base.join(labeled, Seq("doc_id"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("cluster_id")
-          .orderBy(col("score").desc_nulls_last, col("doc_id").asc)))
-      .filter(col("rn") === 1)
+    val canon = Rank.topK(base.join(labeled, Seq("doc_id")), Seq("cluster_id"),
+        Seq(col("score").desc_nulls_last, col("doc_id").asc), 1, "rn")
       .select("doc_id", "cluster_id", "score")
     val singletons = base
       .join(labeled.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -450,12 +447,9 @@ object Pipelines {
   def stratifiedSample(docs: DataFrame, idCol: String, strataCol: String,
       k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    docs
-      .select(Keys.id(docs, idCol).as("doc_id"), col(strataCol).as("stratum"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("stratum")
-          .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))))
-      .filter(col("rn") <= k)
+    Rank.topK(
+        docs.select(Keys.id(docs, idCol).as("doc_id"), col(strataCol).as("stratum")),
+        Seq("stratum"), Seq(md5(col("doc_id").cast("string")), col("doc_id")), k, "rn")
       .select(col("doc_id"), col("stratum"), col("rn"))
   }
 
@@ -617,24 +611,19 @@ object Pipelines {
     *
     * Scale shape: one count aggregate collected as ≤|shares| rows (bounded
     * by the ARGUMENT, not the corpus — the IVF-codebook discipline), then
-    * the [[tokenBudgetSample]]/hostCap salted two-level rank: 256
-    * md5-prefix buckets rank in parallel per (domain, salt), a broadcast
-    * per-bucket offset table turns bucket ranks into exact global ranks —
-    * no per-domain single reducer, flood-flat like ProfileSkew §5-§7.
+    * the cut ranks by [[Rank.bucketedPrefix]] over the md5 order's 256
+    * leading-hex buckets — no per-domain single reducer.
     */
   def mixtureApply(docs: DataFrame, idCol: String, domainCol: String,
       shares: Map[String, Int]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(shares.nonEmpty && shares.values.forall(_ > 0),
       "shares must be positive basis points")
     require(shares.values.sum == 10000,
       s"shares must sum to 10000 bp, got ${shares.values.sum}")
-    val base = docs
+    val base = Rank.md5Salted(docs
       .select(Keys.id(docs, idCol).as("doc_id"),
         col(domainCol).cast("string").as("domain"))
-      .filter(col("domain").isin(shares.keys.toSeq: _*))
-      .withColumn("__ord", md5(col("doc_id").cast("string")))
-      .withColumn("__salt", substring(col("__ord"), 1, 2))
+      .filter(col("domain").isin(shares.keys.toSeq: _*)), "doc_id")
       .cache()
     val counts = base.groupBy("domain").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -648,19 +637,18 @@ object Pipelines {
     val spark = docs.sparkSession
     import spark.implicits._
     val capDf = targets.toSeq.toDF("domain", "__cap")
-    val offsets = base.groupBy("domain", "__salt").agg(count(lit(1)).as("__bn"))
-      .withColumn("__off", coalesce(sum("__bn").over(
-        Window.partitionBy("domain").orderBy("__salt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("domain", "__salt", "__off")
-    base
-      .withColumn("__prn", row_number().over(
-        Window.partitionBy("domain", "__salt").orderBy(col("__ord"), col("doc_id"))))
-      .join(broadcast(offsets), Seq("domain", "__salt"))
-      .join(broadcast(capDf), Seq("domain"))
-      .filter(col("__off") + col("__prn") <= col("__cap"))
-      .select("doc_id", "domain")
+    capCut(base, capDf)
   }
+
+  /** Each domain's first `__cap` documents of the [[Rank.md5Salted]]
+    * (doc_id, domain) frame `base` in (md5, doc_id) order — the cut
+    * [[mixtureApply]] and [[temperatureMixture]] share.
+    */
+  private def capCut(base: DataFrame, capDf: DataFrame): DataFrame =
+    Rank.md5Prefix(base, Seq("domain"), "doc_id")
+      .join(broadcast(capDf), Seq("domain"))
+      .filter(col("__pre") < col("__cap"))
+      .select("doc_id", "domain")
 
   /** Temperature-flattened mixture sampling — the multilingual α-sampling
     * standard (mBERT/XLM-R practice: sample domain d with probability
@@ -676,20 +664,16 @@ object Pipelines {
     *
     * Scale shape: one count aggregate collected as |domains| rows (a
     * mixture domain is a config-scale label — source/language, not a host;
-    * the guard rejects unbounded key spaces) and the [[mixtureApply]]
-    * salted two-level rank for the cut — no per-domain reducer.
+    * the guard rejects unbounded key spaces) and the [[mixtureApply]] cut.
     */
   def temperatureMixture(docs: DataFrame, idCol: String, domainCol: String,
       totalDocs: Long, alphaQuarters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(totalDocs >= 1, "need totalDocs >= 1")
     require(alphaQuarters == 1 || alphaQuarters == 2,
       "supported temperatures: alphaQuarters = 2 (α = 1/2) or 1 (α = 1/4)")
-    val base = docs
+    val base = Rank.md5Salted(docs
       .select(Keys.id(docs, idCol).as("doc_id"),
-        coalesce(col(domainCol).cast("string"), lit("<null>")).as("domain"))
-      .withColumn("__ord", md5(col("doc_id").cast("string")))
-      .withColumn("__salt", substring(col("__ord"), 1, 2))
+        coalesce(col(domainCol).cast("string"), lit("<null>")).as("domain")), "doc_id")
       .cache()
     val counts = base.groupBy("domain").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -710,18 +694,7 @@ object Pipelines {
     val capDf = counts.toSeq.map { case (d, n) =>
       (d, (w6(n) * 10000L / sw) * totalDocs / 10000L) }
       .toDF("domain", "__cap")
-    val offsets = base.groupBy("domain", "__salt").agg(count(lit(1)).as("__bn"))
-      .withColumn("__off", coalesce(sum("__bn").over(
-        Window.partitionBy("domain").orderBy("__salt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("domain", "__salt", "__off")
-    base
-      .withColumn("__prn", row_number().over(
-        Window.partitionBy("domain", "__salt").orderBy(col("__ord"), col("doc_id"))))
-      .join(broadcast(offsets), Seq("domain", "__salt"))
-      .join(broadcast(capDf), Seq("domain"))
-      .filter(col("__off") + col("__prn") <= col("__cap"))
-      .select("doc_id", "domain")
+    capCut(base, capDf)
   }
 
   /** [[mixtureApply]] in the denomination mixture specs are actually
@@ -855,23 +828,15 @@ object Pipelines {
     * least one document for q > 0. Null scores are dropped (a doc with no
     * score cannot be quality-ranked).
     *
-    * Scale shape — TWO-LEVEL SALTED RANK (the [[tokenBudgetSample]] prefix-sum
-    * machinery adapted to a score ordering): a naive per-domain window routes
-    * a whole domain through one reducer. Here each domain's score range
-    * [min, max] (one tiny broadcast aggregate) is cut into 256 grid buckets,
-    * monotone DESCENDING along the rank order, so sorting by (bucket,
-    * score desc, doc_id) equals sorting by (score desc, doc_id) — the bucket
-    * is a contiguous prefix of the sort order exactly like the md5 hex pair:
-    *   1. partial rank within (domain, bucket) — 256-way parallel;
-    *   2. per-(domain, bucket) counts → rows in all higher-score buckets,
-    *      broadcast back as offsets; global rank = offset + partial, and the
-    *      domain count n comes from the same tiny aggregate.
-    * EXACTLY the single-reducer result for any score distribution. Degenerate
-    * residual: a domain whose kept boundary falls inside one massive
-    * EQUAL-score tie group still concentrates that group in one bucket (ties
-    * cut by doc_id are inherently one ordered stream); distinct-but-clustered
-    * scores spread fine. The narrow (doc_id, domain, score) projection is
-    * cached (caller releases per [[Caches]]) — both levels consume it.
+    * Scale shape: each domain's score range [min, max] and count n (one
+    * tiny broadcast aggregate) cut the domain into 256 grid buckets,
+    * monotone DESCENDING along the rank order, and [[Rank.bucketedPrefix]]
+    * ranks within them — EXACTLY the single-reducer result for any score
+    * distribution. Degenerate residual: a domain whose kept boundary falls
+    * inside one massive EQUAL-score tie group still concentrates that group
+    * in one bucket (ties cut by doc_id are inherently one ordered stream).
+    * The narrow (doc_id, domain, score) projection is cached (caller
+    * releases per [[Caches]]) — the range aggregate and the rank both read it.
     */
   def quantileFilter(docs: DataFrame, idCol: String, scoreCol: String,
       domainCol: String, q: Double): DataFrame = {
@@ -881,37 +846,20 @@ object Pipelines {
       .select(Keys.id(docs, idCol).as("doc_id"),
         col(domainCol).as("domain"), col(scoreCol).cast("double").as("score"))
       .filter(col("score").isNotNull && !isnan(col("score")))
-      // null-safe working key: the equi-joins below drop null keys
-      // (null != null), silently losing null-domain rows that the
-      // Window.partitionBy semantics keep as one group — (__dk, __dn) is an
-      // exact, collision-free null-safe two-column key
-      .withColumn("__dk", coalesce(col("domain").cast("string"), lit("")))
-      .withColumn("__dn", col("domain").isNull)
       .cache()
-    // per-domain score range + count: one broadcastable row per domain
-    val rng = base.groupBy("__dk", "__dn").agg(
+    // per-domain score range + count: one broadcastable row per domain,
+    // joined back null-safe so null-domain rows rank as one group
+    val rng = base.groupBy(col("domain").as("__rd")).agg(
       min("score").as("__lo"), max("score").as("__hi"),
       count(lit(1)).as("__n"))
     // grid bucket, monotone DESCENDING in score so bucket order = rank order
-    val bucketed = base.join(broadcast(rng), Seq("__dk", "__dn"))
+    val bucketed = base.join(broadcast(rng), col("domain") <=> col("__rd"))
       .withColumn("__b", when(col("__hi") === col("__lo"), lit(0)).otherwise(
         least(lit(255), floor((col("__hi") - col("score"))
           / (col("__hi") - col("__lo")) * 256).cast("int"))))
-    // level 2: rows in strictly-higher-score buckets of the same domain
-    val offsets = bucketed.groupBy("__dk", "__dn", "__b")
-      .agg(count(lit(1)).as("__bn"))
-      .withColumn("__off", coalesce(sum("__bn").over(
-        Window.partitionBy("__dk", "__dn").orderBy("__b")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__dk", "__dn", "__b", "__off")
-    // level 1: partial rank within the (domain, bucket) slice
-    val wPart = Window.partitionBy("__dk", "__dn", "__b")
-      .orderBy(col("score").desc, col("doc_id").asc)
-    bucketed
-      .withColumn("__prn", row_number().over(wPart))
-      .join(broadcast(offsets), Seq("__dk", "__dn", "__b"))
-      .filter((col("__off") + col("__prn") - 1L) * 10000L
-        < lit(myriad.toLong) * col("__n"))
+    Rank.bucketedPrefix(bucketed, Seq("domain"), "__b",
+        Seq(col("score").desc, col("doc_id").asc))
+      .filter(col("__pre") * 10000L < lit(myriad.toLong) * col("__n"))
       .select("doc_id", "domain", "score")
   }
 
@@ -921,59 +869,28 @@ object Pipelines {
     * is the exclusive running token sum before the doc in md5 order, so the
     * kept-set is a deterministic, engine-portable function of (corpus, budgets).
     *
-    * Scale shape — TWO-LEVEL SALTED PREFIX SUM. A naive
-    * `Window.partitionBy(domain)` routes a whole domain through ONE reducer; a
-    * 100 TB corpus that is 90% one domain straggles there. Instead the prefix
-    * sum is computed in two levels, exploiting that the md5 sort key's own
-    * leading hex pair partitions the order into 256 RANGE-CONTIGUOUS buckets
-    * (sorting by (salt, md5) ≡ sorting by md5, because salt is a prefix of md5):
-    *   1. partial exclusive prefix within (domain, salt) — 256-way parallel per
-    *      domain, each window sees ~1/256 of the domain;
-    *   2. per-(domain, salt) token totals → exclusive prefix over salt buckets
-    *      (a ≤ |domains|·256-row aggregate) broadcast back as bucket offsets.
-    * `start_tok = bucket_offset + partial` is EXACTLY the single-reducer value:
-    * integer sums are order-insensitive within a bucket and the buckets tile the
-    * md5 order. ProfileSkew's 90%-one-domain corpus pins the no-straggler claim.
-    *
-    * The narrow (doc_id, domain, n_tokens) projection is cached (caller releases
-    * per the [[Caches]] contract) because both levels consume it — without the
-    * cache the text tokenization pass would run twice.
+    * Scale shape: `start_tok` is [[Rank.bucketedPrefix]] of the token counts
+    * over the md5 order's 256 leading-hex buckets, so no domain routes through
+    * one reducer (ProfileSkew's 90%-one-domain corpus pins the no-straggler
+    * claim). The narrow (doc_id, domain, n_tokens) projection is cached
+    * (caller releases per the [[Caches]] contract) because both levels of the
+    * prefix read it — without the cache the tokenization pass would run twice.
     */
   def tokenBudgetSample(docs: DataFrame, idCol: String, textCol: String,
       domainCol: String, budgets: Map[String, Long],
       defaultBudget: Long = Long.MaxValue): DataFrame = {
     val nTok = size(filter(split(lower(col(textCol)), "\\s+"), w => length(w) > 0))
-    val base = Par.spread(docs).select(
+    val base = Rank.md5Salted(Par.spread(docs).select(
       Keys.id(docs, idCol).as("doc_id"),
       col(domainCol).as("domain"),
-      nTok.cast("long").as("n_tokens"))
-      .withColumn("__ord", md5(col("doc_id").cast("string")))
-      .withColumn("__salt", substring(col("__ord"), 1, 2))
-      // null-safe working key (see quantileFilter): the offsets equi-join
-      // would silently drop null-domain rows
-      .withColumn("__dk", coalesce(col("domain").cast("string"), lit("")))
-      .withColumn("__dn", col("domain").isNull)
+      nTok.cast("long").as("n_tokens")), "doc_id")
       .cache()
-    // level 1: partial exclusive prefix within the (domain, salt) bucket
-    val wPart = Window.partitionBy("__dk", "__dn", "__salt")
-      .orderBy(col("__ord"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // level 2: tokens in all md5-earlier buckets of the same domain
-    val offsets = base.groupBy("__dk", "__dn", "__salt")
-      .agg(sum("n_tokens").as("__bucket_tok"))
-      .withColumn("__offset", coalesce(sum("__bucket_tok").over(
-        Window.partitionBy("__dk", "__dn").orderBy("__salt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__dk", "__dn", "__salt", "__offset")
     // a null domain never equals a configured name, so it draws the default
     // budget — the pre-split Window semantics
     val budget = budgets.foldLeft(lit(defaultBudget)) {
       case (acc, (dom, b)) => when(col("domain") === dom, lit(b)).otherwise(acc)
     }
-    base
-      .withColumn("__partial", coalesce(sum("n_tokens").over(wPart), lit(0L)))
-      .join(broadcast(offsets), Seq("__dk", "__dn", "__salt"))
-      .withColumn("start_tok", col("__offset") + col("__partial"))
+    Rank.md5Prefix(base, Seq("domain"), "doc_id", Some(col("n_tokens")), "start_tok")
       .filter(col("start_tok") < budget)
       .select(col("doc_id"), col("domain"), col("n_tokens"), col("start_tok"))
   }
@@ -1005,9 +922,8 @@ object Pipelines {
     * each straddling doc resets per batch boundary — the exact semantics of
     * shipping data as it arrives.
     *
-    * Scale shape: [[tokenBudgetSample]]'s two-level salted prefix sum
-    * verbatim, plus one broadcast join of the ≤|domains|-row state — no new
-    * exchange, no per-domain reducer.
+    * Scale shape: [[tokenBudgetSample]]'s prefix plus one broadcast join of
+    * the ≤|domains|-row state — no new exchange, no per-domain reducer.
     */
   def tokenBudgetIncremental(newDocs: DataFrame, idCol: String,
       textCol: String, domainCol: String, state: DataFrame,
@@ -1016,38 +932,20 @@ object Pipelines {
     require(state.columns.contains("domain") && state.columns.contains("spent_tok"),
       "state must be a tokenBudgetState table carrying (domain, spent_tok)")
     val nTok = size(filter(split(lower(col(textCol)), "\\s+"), w => length(w) > 0))
-    val base = Par.spread(newDocs).select(
+    val base = Rank.md5Salted(Par.spread(newDocs).select(
       Keys.id(newDocs, idCol).as("doc_id"),
       col(domainCol).as("domain"),
-      nTok.cast("long").as("n_tokens"))
-      .withColumn("__ord", md5(col("doc_id").cast("string")))
-      .withColumn("__salt", substring(col("__ord"), 1, 2))
-      .withColumn("__dk", coalesce(col("domain").cast("string"), lit("")))
-      .withColumn("__dn", col("domain").isNull)
+      nTok.cast("long").as("n_tokens")), "doc_id")
       .cache()
-    val wPart = Window.partitionBy("__dk", "__dn", "__salt")
-      .orderBy(col("__ord"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = base.groupBy("__dk", "__dn", "__salt")
-      .agg(sum("n_tokens").as("__bucket_tok"))
-      .withColumn("__offset", coalesce(sum("__bucket_tok").over(
-        Window.partitionBy("__dk", "__dn").orderBy("__salt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__dk", "__dn", "__salt", "__offset")
-    // the ≤|domains|-row spend state, null-safe-keyed like everything here
-    val spent = state.select(
-      coalesce(col("domain").cast("string"), lit("")).as("__dk"),
-      col("domain").isNull.as("__dn"),
+    // the ≤|domains|-row spend state, joined null-safe on the domain name
+    val spent = state.select(col("domain").cast("string").as("__sd"),
       col("spent_tok").cast("long").as("__spent"))
     val budget = budgets.foldLeft(lit(defaultBudget)) {
       case (acc, (dom, b)) => when(col("domain") === dom, lit(b)).otherwise(acc)
     }
-    base
-      .withColumn("__partial", coalesce(sum("n_tokens").over(wPart), lit(0L)))
-      .join(broadcast(offsets), Seq("__dk", "__dn", "__salt"))
-      .join(broadcast(spent), Seq("__dk", "__dn"), "left")
-      .withColumn("start_tok",
-        coalesce(col("__spent"), lit(0L)) + col("__offset") + col("__partial"))
+    Rank.md5Prefix(base, Seq("domain"), "doc_id", Some(col("n_tokens")))
+      .join(broadcast(spent), col("domain").cast("string") <=> col("__sd"), "left")
+      .withColumn("start_tok", coalesce(col("__spent"), lit(0L)) + col("__pre"))
       .filter(col("start_tok") < budget)
       .select(col("doc_id"), col("domain"), col("n_tokens"), col("start_tok"))
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Semantic (embedding-space) deduplication — the SemDeDup recipe (Abbas et
   * al. 2023): coarse-cluster the embedding space, then prune near-duplicate
@@ -83,8 +84,7 @@ object Semantic {
       .select(col("vec_id").as("seed_id"), col("qv").as("sv"))
     vecs.crossJoin(broadcast(seeds))
       .select(col("vec_id"), col("seed_id"),
-        aggregate(zip_with(col("qv"), col("sv"), (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x).as("d2"))
+        GraftFunctions.l2sq(col("qv"), col("sv")).as("d2"))
       // min(struct(...)) = lexicographic argmin: smallest distance, then
       // smallest seed id — the engine-portable tie-break
       .groupBy("vec_id")
@@ -280,10 +280,10 @@ object Semantic {
     */
   def semanticIncremental(newEmb: DataFrame, idCol: String, vecCol: String,
       state: DataFrame, threshold: Double, maxCell: Int = 1024): DataFrame = {
-    import graft.functions.GraftFunctions.cosineSim
+    import GraftFunctions.cosineSim
     require(Seq("vec_id", "cell", "v", "is_seed").forall(state.columns.contains),
       "state must be a semanticState table: (vec_id, cell, v, is_seed)")
-    graft.functions.GraftFunctions.register(newEmb.sparkSession)
+    GraftFunctions.register(newEmb.sparkSession)
     // the state feeds FOUR subplans (seeds, hot-cell widths, the cold and
     // hot history sides) — a computed state lineage (the retract form chains
     // semanticState → semanticRetract in one plan) would be recomputed and
@@ -322,8 +322,7 @@ object Semantic {
     // crossJoin+aggregate subtree
     val assigned = Par.sever(vecs.crossJoin(broadcast(seedsG))
       .select(col("vec_id"), col("v"), col("seed_id"),
-        aggregate(zip_with(col("qv"), col("sv"), (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x).as("d2"))
+        GraftFunctions.l2sq(col("qv"), col("sv")).as("d2"))
       .groupBy("vec_id")
       .agg(min(struct(col("d2"), col("seed_id"))).as("m"), first(col("v")).as("v"))
       .select(col("vec_id"), col("m.seed_id").as("cell"), col("v")))
@@ -414,8 +413,8 @@ object Semantic {
   private[operators] def subspaceDistCols(m: Int, dsub: Int): Seq[org.apache.spark.sql.Column] =
     (0 until m).map { j =>
       val lo = j * dsub + 1
-      expr(s"aggregate(zip_with(slice(qv, $lo, $dsub), slice(sv, $lo, $dsub), " +
-        s"(a, b) -> (a - b) * (a - b)), 0.0d, (acc, x) -> acc + x)").as(s"d$j")
+      GraftFunctions.l2sq(slice(col("qv"), lo, dsub), slice(col("sv"), lo, dsub))
+        .as(s"d$j")
     }
 
   /** Guarded quantized (vec_id, qv) rows + the probed dim, shared by the
@@ -497,7 +496,10 @@ object Semantic {
     * path added (each LUT entry and the m-term sum stay < 2^53 under the
     * qvGuard bound, so double addition is exact and order-irrelevant; the
     * hash-oracle contract is untouched), evaluated in one codegen'd pass
-    * per (query, vector) pair with no exchange.
+    * per (query, vector) pair with no exchange. Null for a null `codes`
+    * array (and, with ANSI mode off, a short one): rankers sort nulls last
+    * and drop them AFTER the top-k — a filter before it would be pushed into
+    * the scan and evaluate this expression twice per row.
     */
   private[operators] def adcDist(m: Int): org.apache.spark.sql.Column =
     expr(s"cast(aggregate(sequence(0, ${m - 1}), 0.0d, (acc, j) -> " +
@@ -510,8 +512,7 @@ object Semantic {
   private[operators] def assignAgainst(vecs: DataFrame, seeds: DataFrame): DataFrame =
     vecs.crossJoin(broadcast(seeds))
       .select(col("vec_id"), col("cell"),
-        aggregate(zip_with(col("qv"), col("cv"), (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x).as("d2"))
+        GraftFunctions.l2sq(col("qv"), col("cv")).as("d2"))
       .groupBy("vec_id")
       .agg(min(struct(col("d2"), col("cell"))).as("m"))
       .select(col("vec_id"), col("m.cell").as("cell"))
@@ -571,8 +572,9 @@ object Semantic {
       .filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(lut))
       .select(col("vec_id"), adcDist(m).as("adist"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
+      .orderBy(col("adist").asc_nulls_last, col("vec_id").asc)
       .limit(k)
+      .filter(col("adist").isNotNull)
   }
 
   /** Batch-query ADC search — [[pqTopK]] generalized from one literal
@@ -593,7 +595,6 @@ object Semantic {
   def pqTopKBatch(emb: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, m: Int = 8, ksub: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val p = pqParts(emb, idCol, vecCol, m, ksub)
     val qv = queries.filter(col(qVecCol).isNotNull)
       .select(Keys.id(queries, qIdCol).as("query_id"), quantized(qVecCol).as("qv"))
@@ -603,13 +604,13 @@ object Semantic {
     // single codegen'd array pass — no explode, no LUT join, no pair-stream
     // re-aggregate
     val luts = queryLuts(qv, p.seeds, p.distCols, m)
-    encodeCodeArray(p)
+    val scored = encodeCodeArray(p)
       .crossJoin(broadcast(luts))
       .filter(col("vec_id") =!= col("lqid"))
       .select(col("lqid").as("query_id"), col("vec_id"), adcDist(m).as("adist"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adist").asc, col("vec_id").asc)))
-      .filter(col("__rn") <= k)
+    Rank.topK(scored, Seq("query_id"),
+        Seq(col("adist").asc_nulls_last, col("vec_id").asc), k, "__rn")
+      .filter(col("adist").isNotNull)
       .select("query_id", "vec_id", "adist")
   }
 
@@ -635,7 +636,7 @@ object Semantic {
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, threshold: Double, maxCell: Int = 1024): DataFrame = {
     require(maxCell > 1, "maxCell must be > 1")
-    graft.functions.GraftFunctions.register(emb.sparkSession)
+    GraftFunctions.register(emb.sparkSession)
     val assigned = assignCells(emb, idCol, vecCol, k).select("vec_id", "cell")
     val vecs = emb.filter(col(vecCol).isNotNull)
       .select(Keys.id(emb, idCol).as("vec_id"), col(vecCol).as("v"))
@@ -652,7 +653,7 @@ object Semantic {
     */
   private def withinCellDrops(cells: DataFrame, threshold: Double,
       maxCell: Int): DataFrame = {
-    import graft.functions.GraftFunctions.cosineSim
+    import GraftFunctions.cosineSim
     // hot-cell width count: map-side-combined aggregate over (vec_id, cell)
     // rows; the hot list holds only skewed cells, hence broadcastable
     val hot = cells.groupBy("cell").count()

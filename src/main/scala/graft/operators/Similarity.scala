@@ -26,8 +26,7 @@ object Similarity {
     emb.filter(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
       .select(Keys.id(emb, idCol).as("vec_id"),
-        (floor(GraftFunctions.cosineSim(col(vecCol), col("qv")) * 10000)
-          .cast("double") / 10000.0).as("cos"))
+        (GraftFunctions.cos4(col(vecCol), col("qv")).cast("double") / 10000.0).as("cos"))
       .orderBy(col("cos").desc, col("vec_id").asc)
       .limit(k)
   }
@@ -93,8 +92,7 @@ object Similarity {
       .filter(col("cell").isin(probeCells.toSeq: _*) && col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        (floor(GraftFunctions.cosineSim(col("v"), col("qv")) * 10000)
-          .cast("double") / 10000.0).as("cos"))
+        (GraftFunctions.cos4(col("v"), col("qv")).cast("double") / 10000.0).as("cos"))
       .orderBy(col("cos").desc, col("vec_id").asc)
       .limit(k)
   }
@@ -165,8 +163,7 @@ object Similarity {
     val qLit = array(queryVec.map(x => lit(x)): _*)
     idx.filter(col("cell").isin(probeCells: _*))
       .select(col("vec_id"),
-        (floor(GraftFunctions.cosineSim(col("v"), qLit) * 10000)
-          .cast("double") / 10000.0).as("cos"))
+        (GraftFunctions.cos4(col("v"), qLit).cast("double") / 10000.0).as("cos"))
       .orderBy(col("cos").desc, col("vec_id").asc)
       .limit(k)
   }
@@ -292,8 +289,7 @@ object Similarity {
       .filter(col(vecCol).isNotNull)
       .crossJoin(broadcast(q))
       .select(Keys.id(emb, idCol).as("vec_id"),
-        floor(GraftFunctions.cosineSim(col(vecCol), col("qv")) * 10000)
-          .cast("long").as("rel4"),
+        GraftFunctions.cos4(col(vecCol), col("qv")).cast("long").as("rel4"),
         col(vecCol).as("v"))
       .orderBy(col("rel4").desc, col("vec_id").asc)
       .limit(poolSize)
@@ -335,7 +331,6 @@ object Similarity {
     require(k >= 1 && poolSize >= k, "need poolSize >= k >= 1")
     require(lambdaBp >= 0 && lambdaBp <= 10000, "lambdaBp is basis points")
     import graft.functions.GraftFunctions
-    import org.apache.spark.sql.expressions.Window
     val spark = emb.sparkSession
     GraftFunctions.register(spark)
     // query_id is surfaced as STRING (r10 ADVICE): the greedy phase reads
@@ -343,16 +338,14 @@ object Similarity {
     // instead of throwing ClassCastException at collect time
     val q = queries.select(col(queryIdCol).cast("string").as("query_id"),
       col(queryVecCol).as("qv"))
-    val pools = emb.filter(col(vecCol).isNotNull)
+    val scored = emb.filter(col(vecCol).isNotNull)
       .select(Keys.id(emb, idCol).as("vec_id"), col(vecCol).as("v"))
       .crossJoin(broadcast(q))
       .select(col("query_id"), col("vec_id"),
-        floor(GraftFunctions.cosineSim(col("v"), col("qv")) * 10000)
-          .cast("long").as("rel4"),
+        GraftFunctions.cos4(col("v"), col("qv")).cast("long").as("rel4"),
         col("v"))
-      .withColumn("rn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("rel4").desc, col("vec_id"))))
-      .filter(col("rn") <= poolSize)
+    val pools = Rank.topK(scored, Seq("query_id"),
+        Seq(col("rel4").desc, col("vec_id")), poolSize, "rn")
       .collect() // |queries|·poolSize rows — bounded sidecar
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getSeq[Float](3).toArray))
@@ -419,8 +412,7 @@ object Similarity {
     val qLit = array(queryVec.map(x => lit(x)): _*)
     idx.filter(col("cell").isin(probeCells: _*))
       .select(col("vec_id"),
-        (floor(GraftFunctions.cosineSim(col("v"), qLit) * 10000)
-          .cast("double") / 10000.0).as("cos"))
+        (GraftFunctions.cos4(col("v"), qLit).cast("double") / 10000.0).as("cos"))
       .filter(col("cos") >= minCos)
   }
 
@@ -541,8 +533,9 @@ object Similarity {
       .withColumn("lut", array(flat.toSeq.map(d => lit(d.toDouble)): _*))
       .withColumn("ks", lit(ksub))
       .select(col("vec_id"), Semantic.adcDist(m).as("adist"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
+      .orderBy(col("adist").asc_nulls_last, col("vec_id").asc)
       .limit(k)
+      .filter(col("adist").isNotNull)
   }
 
   /** Append new vectors to an existing IVF+PQ index — the incremental-ingest
@@ -682,8 +675,7 @@ object Similarity {
         Semantic.quantized(vecCol).as("qv"))
       .join(broadcast(cand), "vec_id")
       .select(col("vec_id"), col("adist"),
-        aggregate(zip_with(col("qv"), qLit, (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x).cast("long").as("edist"))
+        GraftFunctions.l2sq(col("qv"), qLit).cast("long").as("edist"))
       .orderBy(col("edist").asc, col("vec_id").asc)
       .limit(k)
   }
@@ -715,7 +707,6 @@ object Similarity {
     */
   def ivfPqProbeBatch(spark: SparkSession, dir: String, queries: DataFrame,
       qIdCol: String, qVecCol: String, k: Int, nprobe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cb = spark.read.parquet(s"$dir.codebook")
     val mRow = cb.select("m").limit(1).collect()
     require(mRow.nonEmpty, s"$dir.codebook is empty — not an ivfPqWrite index")
@@ -731,13 +722,10 @@ object Similarity {
     val dsub = dim / m
     val cells = spark.read.parquet(s"$dir.cells")
       .select(col("cell"), col("qv").as("cv"))
-    val probe = qv.crossJoin(broadcast(cells))
-      .select(col("query_id"), col("cell"),
-        aggregate(zip_with(col("qv"), col("cv"), (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x).as("cd"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cd").asc, col("cell").asc)))
-      .filter(col("__rn") <= nprobe)
+    val probe = Rank.topK(qv.crossJoin(broadcast(cells))
+        .select(col("query_id"), col("cell"),
+          GraftFunctions.l2sq(col("qv"), col("cv")).as("cd")),
+        Seq("query_id"), Seq(col("cd").asc, col("cell").asc), nprobe, "__rn")
       .select("query_id", "cell")
     // one flattened LUT row per query (Semantic.queryLuts — the same
     // subspaceDistCols arithmetic as the index build), broadcast-joined to
@@ -746,13 +734,13 @@ object Similarity {
     // join, no (query_id, vec_id) re-aggregate exchange
     val luts = Semantic.queryLuts(qv, cb.select(col("r"), col("sv")),
       Semantic.subspaceDistCols(m, dsub), m)
-    dropTombstoned(spark, dir, spark.read.parquet(dir).join(probe, "cell"))
+    val scored = dropTombstoned(spark, dir, spark.read.parquet(dir).join(probe, "cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(luts), col("query_id") === col("lqid"))
       .select(col("query_id"), col("vec_id"), Semantic.adcDist(m).as("adist"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adist").asc, col("vec_id").asc)))
-      .filter(col("__rn") <= k)
+    Rank.topK(scored, Seq("query_id"),
+        Seq(col("adist").asc_nulls_last, col("vec_id").asc), k, "__rn")
+      .filter(col("adist").isNotNull)
       .select("query_id", "vec_id", "adist")
   }
 
@@ -778,23 +766,20 @@ object Similarity {
   def ivfPqRerankBatch(spark: SparkSession, dir: String, queries: DataFrame,
       qIdCol: String, qVecCol: String, emb: DataFrame, idCol: String,
       vecCol: String, k: Int, topN: Int, nprobe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k <= topN, s"k=$k must not exceed the candidate budget topN=$topN")
     val cand = ivfPqProbeBatch(spark, dir, queries, qIdCol, qVecCol, topN, nprobe)
     val qv = queries.filter(col(qVecCol).isNotNull)
       .select(Keys.id(queries, qIdCol).as("query_id"),
         Semantic.quantized(qVecCol).as("qqv"))
-    emb.filter(col(vecCol).isNotNull)
+    val scored = emb.filter(col(vecCol).isNotNull)
       .select(Keys.id(emb, idCol).as("vec_id"),
         Semantic.quantized(vecCol).as("qv"))
       .join(cand, "vec_id")
       .join(qv, "query_id")
       .select(col("query_id"), col("vec_id"), col("adist"),
-        aggregate(zip_with(col("qv"), col("qqv"), (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x).cast("long").as("edist"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("edist").asc, col("vec_id").asc)))
-      .filter(col("__rn") <= k)
+        GraftFunctions.l2sq(col("qv"), col("qqv")).cast("long").as("edist"))
+    Rank.topK(scored, Seq("query_id"), Seq(col("edist").asc, col("vec_id").asc),
+        k, "__rn")
       .select("query_id", "vec_id", "adist", "edist")
   }
 
@@ -821,8 +806,7 @@ object Similarity {
     buckets.filter(col("vec_id") =!= queryId)
       .join(broadcast(qb), Seq("t", "bucket"))
       .select(col("vec_id"),
-        (floor(GraftFunctions.cosineSim(col("v"), col("qv")) * 10000)
-          .cast("double") / 10000.0).as("cos"))
+        (GraftFunctions.cos4(col("v"), col("qv")).cast("double") / 10000.0).as("cos"))
       .groupBy("vec_id").agg(max("cos").as("cos"))
       .orderBy(col("cos").desc, col("vec_id").asc)
       .limit(k)

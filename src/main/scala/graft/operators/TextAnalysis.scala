@@ -382,12 +382,15 @@ object TextAnalysis {
       import spark.implicits._
       // merged sidecar staged beside, postings appended, then the sidecar
       // rename-swapped (the ivfPqCompact idiom) — a crash leaves either the
-      // old or the new sidecar in place, never a torn or missing one
-      // the three payload writes are independent (disjoint paths) and the
-      // commit marker only lands after ALL of them — overlap (guide §2.6)
+      // old or the new sidecar in place, never a torn or missing one.
+      // The staged sidecar is the recovery marker, so it lands FIRST and
+      // alone: were it written beside the payload and failed while the
+      // appends landed, a retry would find no marker and append twice
+      Seq((prev.getLong(0) + delta.getLong(0), prev.getLong(1) + delta.getLong(1)))
+        .toDF("nd", "ltot").write.mode("overwrite").parquet(s"$dir.stats.next")
+      // the two payload appends are independent (disjoint paths) and the
+      // commit marker only lands after both — overlap (guide §2.6)
       Par.inParallel(
-        () => Seq((prev.getLong(0) + delta.getLong(0), prev.getLong(1) + delta.getLong(1)))
-          .toDF("nd", "ltot").write.mode("overwrite").parquet(s"$dir.stats.next"),
         () => base.select("doc_id", "dl")
           .write.mode("append").parquet(s"$dir.docs"),
         () => base.select(col("doc_id"), col("dl"), explode(col("ws")).as("term"))
@@ -493,7 +496,6 @@ object TextAnalysis {
   def bm25ProbeBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, queryIdCol: String, queryTextCol: String,
       k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1, "need k >= 1")
     val qterms = queries.select(col(queryIdCol).as("query_id"),
       explode(array_distinct(words(coalesce(col(queryTextCol), lit("")))))
@@ -516,15 +518,14 @@ object TextAnalysis {
         raw.join(spark.read.parquet(s"$dir.tombstones"), Seq("doc_id"), "left_anti")
       else raw
     val dfT = postings.groupBy("term").agg(count(lit(1)).as("df"))
-    bm25Contribution(postings
+    val scored = bm25Contribution(postings
       .join(broadcast(dfT), "term")
       .join(broadcast(qterms), "term")
       .crossJoin(broadcast(stats)))
       .groupBy("query_id", "doc_id")
       .agg(bm25SumExpr.as("bm25_e6"))
-      .withColumn("rank", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("bm25_e6").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
+    Rank.topK(scored, Seq("query_id"), Seq(col("bm25_e6").desc, col("doc_id")),
+        k, "rank")
       .select("query_id", "doc_id", "rank", "bm25_e6")
   }
 
@@ -545,7 +546,6 @@ object TextAnalysis {
   def bm25ScoreBatch(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, queryTextCol: String,
       k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1, "need k >= 1")
     val qterms = queries.select(col(queryIdCol).as("query_id"),
       explode(array_distinct(words(coalesce(col(queryTextCol), lit("")))))
@@ -568,10 +568,8 @@ object TextAnalysis {
       .crossJoin(broadcast(stats)))
       .groupBy("query_id", "doc_id")
       .agg(bm25SumExpr.as("bm25_e6"))
-    scored
-      .withColumn("rank", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("bm25_e6").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
+    Rank.topK(scored, Seq("query_id"), Seq(col("bm25_e6").desc, col("doc_id")),
+        k, "rank")
       .select("query_id", "doc_id", "rank", "bm25_e6")
   }
 
@@ -650,43 +648,29 @@ object TextAnalysis {
     * reproducibly and engine-portably, excluding the positive.
     *
     * "Random" = the md5 shuffle: every document gets the exact global rank
-    * 0..D−1 of (md5(doc_id), doc_id) via the salted two-level rank (256
-    * md5-prefix buckets rank in parallel, a broadcast per-bucket offset
-    * table lifts bucket ranks to global — the mixtureApply shape, no
-    * single-reducer sort); a query reads the documents at positions
+    * 0..D−1 of (md5(doc_id), doc_id) from [[Rank.bucketedPrefix]] over
+    * the 256 md5-prefix buckets; a query reads the documents at positions
     * off, off+1, …, off+k with off = hex(md5(query_id)[0:8]) mod D,
     * skipping the positive (k+1 candidates guarantee k survivors).
     * Contiguous positions after the shuffle ARE the uniform draw — the md5
     * order is the shuffle — and the candidate set probes the rank table by
     * position equality instead of any per-query corpus scan.
     *
-    * Output: (query_id, pos_id, neg_id, rk), rk 1..k in draw order.
-    *
-    * Scale shape: the rank table is corpus-sized but bounded-reducer
-    * (256-way salt) and built once per call; the probe ships
-    * |pairs|·(k+1) position keys — batch-sized, never a q×D cross.
+    * Output: (query_id, pos_id, neg_id, rk), rk 1..k in draw order. The
+    * rank table is built once per call; the probe ships |pairs|·(k+1)
+    * position keys — batch-sized, never a q×D cross.
     */
   def randomNegatives(pairs: DataFrame, docs: DataFrame, queryIdCol: String,
       posIdCol: String, docIdCol: String, k: Int = 10): DataFrame = {
     require(k >= 1, "k must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val ids = docs.select(Keys.id(docs, docIdCol).as("neg_id")).distinct()
-      .withColumn("__h", md5(col("neg_id").cast("string")))
-      .withColumn("__salt", substring(col("__h"), 1, 2))
-    val offsets = ids.groupBy("__salt").agg(count(lit(1)).as("__bn"))
-      .withColumn("__off0", coalesce(sum("__bn").over(
-        Window.orderBy("__salt").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select("__salt", "__off0")
-    val ranked = ids
-      .withColumn("__prn", row_number().over(
-        Window.partitionBy("__salt").orderBy(col("__h"), col("neg_id"))))
-      .join(broadcast(offsets), Seq("__salt"))
-      .select(col("neg_id"), (col("__off0") + col("__prn") - 1).as("__r"))
+    val ids = Rank.md5Salted(
+      docs.select(Keys.id(docs, docIdCol).as("neg_id")).distinct(), "neg_id")
+    val ranked = Rank.md5Prefix(ids, Nil, "neg_id", out = "__r")
+      .select("neg_id", "__r")
       .localCheckpoint(eager = false)
     val nD = ranked.count()
     require(nD > k, s"need more than k=$k distinct documents, got $nD")
-    pairs
+    val cands = pairs
       .select(col(queryIdCol).as("query_id"),
         Keys.id(pairs, posIdCol).as("pos_id"))
       .withColumn("__qoff", expr(
@@ -696,9 +680,7 @@ object TextAnalysis {
       .withColumn("__r", (col("__qoff") + col("__j")) % nD)
       .join(ranked, "__r")
       .filter(col("neg_id") =!= col("pos_id"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id", "pos_id").orderBy("__j")))
-      .filter(col("rk") <= k)
+    Rank.topK(cands, Seq("query_id", "pos_id"), Seq(col("__j")), k, "rk")
       .select("query_id", "pos_id", "neg_id", "rk")
   }
 
@@ -824,14 +806,12 @@ object TextAnalysis {
   def trainLangProfiles(docs: DataFrame, idCol: String, textCol: String,
       langCol: String, depth: Int = 20): DataFrame = {
     require(depth >= 1, "need depth >= 1")
-    normTrigrams(docs, idCol, textCol)
+    val counts = normTrigrams(docs, idCol, textCol)
       .join(docs.select(Keys.id(docs, idCol).as("doc_id"),
         col(langCol).as("plang")), "doc_id")
       .groupBy("plang", "tri").count()
-      .withColumn("lr_", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("plang")
-          .orderBy(col("count").desc, col("tri").asc)))
-      .filter(col("lr_") <= depth)
+    Rank.topK(counts, Seq("plang"), Seq(col("count").desc, col("tri").asc),
+        depth, "lr_")
       .select("plang", "tri", "lr_")
   }
 
@@ -850,11 +830,9 @@ object TextAnalysis {
     // a collect_list + in-memory array_sort aggregate — the window form is
     // ~10% faster here (the agg pays struct allocation per trigram), and
     // doc_id is a high-cardinality partition key, so no reducer skew
-    val top = normTrigrams(docs, idCol, textCol).groupBy("doc_id", "tri").count()
-      .withColumn("dr", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-          .orderBy(col("count").desc, col("tri").asc)))
-      .filter(col("dr") <= topM)
+    val top = Rank.topK(
+      normTrigrams(docs, idCol, textCol).groupBy("doc_id", "tri").count(),
+      Seq("doc_id"), Seq(col("count").desc, col("tri").asc), topM, "dr")
     val scored = top.crossJoin(broadcast(langsDf))
       .join(broadcast(profileDf), Seq("plang", "tri"), "left")
       .groupBy("doc_id", "plang")
@@ -1063,12 +1041,8 @@ object TextAnalysis {
       PortableLog.floorDec6Sql(
         PortableLog.log10RatioSql("nd", "df", spark = true), spark = true))
       .as("idf"))
-    tf.join(broadcast(idf), "w")
-      .withColumn("score", col("tf") * col("idf"))
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-          .orderBy(col("score").desc, col("w").asc)))
-      .filter(col("rnk") <= k)
+    Rank.topK(tf.join(broadcast(idf), "w").withColumn("score", col("tf") * col("idf")),
+        Seq("doc_id"), Seq(col("score").desc, col("w").asc), k, "rnk")
       // 4dp by FLOOR of the exact decimal, not round(double, 4): a 6dp
       // decimal score can land exactly on a .xxxx50 tie, where Spark's
       // BigDecimal HALF_UP and DuckDB's multiply-based round() disagree
@@ -1976,11 +1950,7 @@ object TextAnalysis {
             s" + (${dampBp}L * coalesce(contrib, 0L)) div 10000L").as("rank"))
         .localCheckpoint(eager = false)
     }
-    import org.apache.spark.sql.expressions.Window
-    ranks
-      .withColumn("rk", row_number().over(Window.partitionBy("doc_id")
-        .orderBy(col("rank").desc, col("w"))))
-      .filter(col("rk") <= topK)
+    Rank.topK(ranks, Seq("doc_id"), Seq(col("rank").desc, col("w")), topK, "rk")
       .select(col("doc_id"), col("w").as("word"), col("rank"), col("rk"))
   }
 }

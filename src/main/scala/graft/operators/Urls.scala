@@ -185,43 +185,23 @@ object Urls {
   /** Per-host document CAP: keep at most `maxPerHost` docs per canonical
     * host, chosen deterministically in md5(doc_id) order (the engine-portable
     * draw every sampler here uses) — the site-level cap that stops one SEO
-    * farm from dominating a crawl corpus.
+    * farm from dominating a crawl corpus. Null-url docs share the null
+    * host and are capped as one group.
     *
-    * Scale shape — the [[graft.operators.Pipelines.tokenBudgetSample]]
-    * two-level salted rank: the md5 order key's leading hex pair gives 256
-    * range-contiguous buckets, so a partial rank per (host, salt) plus
-    * broadcast per-bucket count offsets reconstructs the exact per-host rank
-    * and NO host routes through a single reducer, no matter how hot. The
-    * narrow (doc_id, host, ord) projection is cached (caller releases per the
-    * [[Caches]] contract) because both levels consume it.
+    * Scale shape: the per-host rank is [[Rank.bucketedPrefix]] over the md5
+    * order's 256 leading-hex buckets, so NO host routes through a single
+    * reducer, no matter how hot. The narrow (doc_id, host, ord) projection is
+    * cached (caller releases per the [[Caches]] contract) because both levels
+    * of the rank read it.
     */
   def hostCap(docs: DataFrame, idCol: String, urlCol: String,
       maxPerHost: Int): DataFrame = {
     require(maxPerHost >= 1, "need maxPerHost >= 1")
-    val base = docs.select(Keys.id(docs, idCol).as("doc_id"),
-      hostOf(col(urlCol)).as("host"))
-      .withColumn("__ord", md5(col("doc_id").cast("string")))
-      .withColumn("__salt", substring(col("__ord"), 1, 2))
-      // null-safe working key (see Pipelines.quantileFilter): a null url
-      // yields a null host, and the offsets equi-join would silently drop
-      // those rows where the Window semantics cap them as one group
-      .withColumn("__hk", coalesce(col("host"), lit("")))
-      .withColumn("__hn", col("host").isNull)
+    val base = Rank.md5Salted(docs.select(Keys.id(docs, idCol).as("doc_id"),
+      hostOf(col(urlCol)).as("host")), "doc_id")
       .cache()
-    val offsets = base.groupBy("__hk", "__hn", "__salt")
-      .agg(count(lit(1)).as("__bn"))
-      .withColumn("__off", coalesce(sum("__bn").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("__hk", "__hn")
-          .orderBy("__salt")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select("__hk", "__hn", "__salt", "__off")
-    val wPart = org.apache.spark.sql.expressions.Window
-      .partitionBy("__hk", "__hn", "__salt").orderBy(col("__ord"), col("doc_id"))
-    base
-      .withColumn("__prn", row_number().over(wPart))
-      .join(broadcast(offsets), Seq("__hk", "__hn", "__salt"))
-      .filter(col("__off") + col("__prn") <= maxPerHost)
+    Rank.md5Prefix(base, Seq("host"), "doc_id")
+      .filter(col("__pre") < maxPerHost)
       .select("doc_id", "host")
   }
 

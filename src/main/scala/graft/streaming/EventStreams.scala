@@ -227,11 +227,8 @@ object EventStreams {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
         // within-batch compaction: one change per key, the newest wins
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
-        val latest = batch
-          .withColumn("__rn", row_number().over(w))
-          .where(col("__rn") === 1).drop("__rn")
+        val latest = graft.operators.Rank.topK(batch, keyCols,
+          Seq(col(seqCol).desc), 1, "__rn").drop("__rn")
         val view = s"__graft_upserts_${java.util.UUID.randomUUID().toString.take(8)}"
         latest.createOrReplaceTempView(view)
         val on = keyCols.map(k => s"t.`$k` = s.`$k`").mkString(" AND ")

@@ -3,14 +3,20 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Dump `.explain("formatted")` of named headline queries to files — the
-  * r15 optimization round's plan evidence (plans/r15/<q>_{before,after}.txt).
+/** Dump `.explain("formatted")` of named queries to `<outDir>/<q>_<suffix>.txt`
+  * — before/after plan evidence for a change (dump both trees with the same
+  * suffix scheme and diff them).
   *
   * sbt "Test/runMain graft.ExplainDump <sfDir> <outDir> <suffix> q_a,q_b"
+  *
+  * Runs on `local[N]` with N shuffle partitions, N = `SPARK_GRAFT_CPUS`
+  * (default: the machine's available processors).
   */
 object ExplainDump extends App {
-  val spark = SparkSession.builder().master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
+  val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+  val spark = SparkSession.builder().master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus.toString)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")

@@ -18,6 +18,32 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Executed plans of every query `f` runs, in order — for operators that
+    * collect or checkpoint a stage internally, so the frame they return no
+    * longer shows it. Listener delivery is asynchronous; a marker query run
+    * last tells when every earlier plan has arrived.
+    */
+  private def plansRunBy(f: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val mark = s"plans_marker_${java.util.UUID.randomUUID().toString.take(8)}"
+    spark.listenerManager.register(listener)
+    try {
+      f
+      spark.range(1).select(lit(mark)).collect()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!plans.asScala.exists(_.contains(mark)) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq.filterNot(_.contains(mark))
+  }
+
   /** Build plans with [[graft.operators.Par.spread]] disabled. The
     * narrow-pass tests below pin the AT-SCALE plan shape, where the spread
     * gate is a no-op (inputs past the size threshold); on the tiny test
@@ -235,6 +261,34 @@ class PlanSpec extends SparkSpec {
     val plan = executedPlan(df)
     assert(plan.contains("WindowGroupLimit"),
       s"window top-k not optimized:\n$plan")
+
+    // the operators' per-query top-k keeps the shape, also when no join
+    // side is small enough to broadcast on its own
+    import spark.implicits._
+    import graft.operators.{Semantic, Similarity, TextAnalysis}
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val emb = graft.sources.Tables(spark, sfDir, "embeddings")
+      val queries = emb.filter(col("vec_id") % 100 === 0)
+      val dir = Files.createTempDirectory("plan_ivfpq").toString + "/idx"
+      Similarity.ivfPqWrite(emb, "vec_id", "embedding", dir, nlist = 8, m = 8, ksub = 16)
+      val qs = Seq(("q1", "data join"), ("q2", "slow table")).toDF("query_id", "qtext")
+      val ops = Seq(
+        "pqTopKBatch" -> Seq(executedPlan(Semantic.pqTopKBatch(emb, "vec_id",
+          "embedding", queries, "vec_id", "embedding", k = 10))),
+        "ivfPqProbeBatch" -> Seq(executedPlan(Similarity.ivfPqProbeBatch(spark, dir,
+          queries, "vec_id", "embedding", k = 10, nprobe = 4))),
+        "bm25ScoreBatch" -> Seq(executedPlan(TextAnalysis.bm25ScoreBatch(
+          graft.sources.Tables(spark, sfDir, "documents"), "doc_id", "text",
+          qs, "query_id", "qtext", k = 5))),
+        // the candidate pools rank in a plan the operator collects inside
+        "mmrTopKBatch" -> plansRunBy(Similarity.mmrTopKBatch(emb, "vec_id",
+          "embedding", queries.select(col("vec_id"), col("embedding").as("qv")),
+          "vec_id", "qv", k = 3, poolSize = 10)))
+      for ((label, plans) <- ops)
+        assert(plans.exists(_.contains("WindowGroupLimit")),
+          s"$label top-k not optimized:\n${plans.mkString("\n")}")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("curation pipeline plans one narrow pass + one dedup shuffle, no joins") {
@@ -466,29 +520,36 @@ class PlanSpec extends SparkSpec {
 
   test("token-budget sampling: salted two-level prefix — no per-domain reducer, text never shuffles") {
     val docs = graft.sources.Tables(spark, sfDir, "documents")
-    val out = graft.operators.Pipelines.tokenBudgetSample(docs, "doc_id", "text",
+    val sample = graft.operators.Pipelines.tokenBudgetSample(docs, "doc_id", "text",
       "source", budgets = Map("src0" -> 8000L), defaultBudget = 4000L)
-    try {
+    val state = graft.operators.Pipelines.tokenBudgetState(
+      docs.filter(col("doc_id") % 7 === 0), "doc_id", "text", "source")
+    val incremental = graft.operators.Pipelines.tokenBudgetIncremental(docs,
+      "doc_id", "text", "source", state, budgets = Map("src0" -> 8000L),
+      defaultBudget = 4000L)
+    try for ((label, out) <- Seq("tokenBudgetSample" -> sample,
+        "tokenBudgetIncremental" -> incremental)) {
       val plan = out.queryExecution.executedPlan.toString
       // the corpus-side window must partition on (domain, salt), never on the
-      // domain alone — a domain-only window is the one-reducer straggler at scale
+      // domain alone — a domain-only window is the one-reducer straggler at
+      // scale; the tiny offsets window orders by the salt, so every window
+      // names it
       val windowLines = plan.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-      assert(windowLines.nonEmpty, s"expected window operators:\n$plan")
-      val corpusWindows = windowLines.filterNot(_.contains("__bucket_tok"))
-      assert(corpusWindows.forall(_.contains("__salt")),
-        s"corpus window must be salted:\n${corpusWindows.mkString("\n")}")
+      assert(windowLines.nonEmpty, s"$label: expected window operators:\n$plan")
+      assert(windowLines.forall(_.contains("__salt")),
+        s"$label: corpus window must be salted:\n${windowLines.mkString("\n")}")
       // bucket offsets join back as a broadcast — a sort-merge join would
       // re-shuffle the corpus on (domain, salt) a second time
       assert(plan.contains("BroadcastHashJoin"),
-        s"bucket offsets must broadcast:\n$plan")
+        s"$label: bucket offsets must broadcast:\n$plan")
       assert(!plan.contains("SortMergeJoin"),
-        s"offsets must not sort-merge against the corpus:\n$plan")
+        s"$label: offsets must not sort-merge against the corpus:\n$plan")
       // the token count is computed BEFORE any exchange so only (doc_id,
       // domain, n_tokens, ord, salt) shuffles — the text column must not
       // survive into any exchange's output schema
       val exchangeLines = plan.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
       assert(exchangeLines.nonEmpty && exchangeLines.forall(!_.contains("text")),
-        s"text must be projected away before every shuffle:\n${exchangeLines.mkString("\n")}")
+        s"$label: text must be projected away before every shuffle:\n${exchangeLines.mkString("\n")}")
     } finally graft.operators.Caches.release(spark)
   }
 
@@ -678,17 +739,33 @@ class PlanSpec extends SparkSpec {
 
   test("mixtureApply: salted two-level rank — offsets broadcast, no domain-only window") {
     val docs = graft.sources.Tables(spark, sfDir, "documents")
-    val out = graft.operators.Pipelines.mixtureApply(docs, "doc_id", "source",
-      Map("src0" -> 5000, "src1" -> 3000, "src2" -> 2000))
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"bucket offsets must ride a broadcast:\n$plan")
-    // every window partition key set must include the salt — a domain-only
-    // window would be the per-domain reducer the two-level design removes
-    val winSpecs = "windowspecdefinition\\(([^)]*)\\)".r
-      .findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(winSpecs.nonEmpty && winSpecs.forall(_.contains("__salt")),
-      s"every rank window must be salted:\n$winSpecs")
+    import spark.implicits._
+    import graft.operators.{Pipelines, TextAnalysis, Urls}
+    val urls = docs.select(col("doc_id"),
+      concat(lit("https://h"), col("doc_id") % 7, lit(".example.com/p")).as("url"))
+    val pairs = Seq(("q1", 5L), ("q2", 123L)).toDF("query_id", "pos_id")
+    val plans = Seq(
+      "mixtureApply" -> Pipelines.mixtureApply(docs, "doc_id", "source",
+        Map("src0" -> 5000, "src1" -> 3000, "src2" -> 2000)),
+      "temperatureMixture" -> Pipelines.temperatureMixture(docs, "doc_id", "source",
+        totalDocs = 200L),
+      "hostCap" -> Urls.hostCap(urls, "doc_id", "url", maxPerHost = 30))
+      .map { case (label, out) => label -> out.queryExecution.executedPlan.toString } :+
+      // the global md5 rank is checkpointed inside the operator: pin the plan
+      // that builds it
+      ("randomNegatives" -> plansRunBy(TextAnalysis.randomNegatives(pairs, docs,
+        "query_id", "pos_id", "doc_id", k = 5).collect())
+        .find(_.contains("windowspecdefinition")).getOrElse(""))
+    for ((label, plan) <- plans) {
+      assert(plan.contains("BroadcastHashJoin"),
+        s"$label: bucket offsets must ride a broadcast:\n$plan")
+      // every window partition key set must include the salt — a domain-only
+      // window would be the per-domain reducer the two-level design removes
+      val winSpecs = "windowspecdefinition\\(([^)]*)\\)".r
+        .findAllMatchIn(plan).map(_.group(1)).toSeq
+      assert(winSpecs.nonEmpty && winSpecs.forall(_.contains("__salt")),
+        s"$label: every rank window must be salted:\n$winSpecs")
+    }
     graft.operators.Caches.release(spark)
   }
 

@@ -84,6 +84,38 @@ class RetirementSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir.stats.next"), true)
   }
 
+  test("bm25 append: a failed stats.next write leaves a retry that refuses or lands the batch once") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25fail").toString + "/idx"
+    TextAnalysis.bm25IndexWrite(corpus.filter($"doc_id" <= 3), "doc_id", "text", dir)
+    val batch = corpus.filter($"doc_id" >= 4)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.refusenext.impl", classOf[RefuseStatsNextFs].getName)
+    hconf.setBoolean("fs.refusenext.impl.disable.cache", true)
+    try {
+      // the same index, reached through a scheme whose writes under
+      // *.stats.next fail: the staged sidecar never lands
+      intercept[Exception] {
+        TextAnalysis.bm25IndexAppend(batch, "doc_id", "text", s"refusenext://$dir")
+      }
+    } finally {
+      hconf.unset("fs.refusenext.impl")
+      hconf.unset("fs.refusenext.impl.disable.cache")
+    }
+    val retried = scala.util.Try(
+      TextAnalysis.bm25IndexAppend(batch, "doc_id", "text", dir))
+    retried.failed.foreach(e => assert(e.isInstanceOf[IllegalStateException] &&
+      e.getMessage.contains(".stats.next"), s"retry failed for another reason: $e"))
+    if (retried.isSuccess) {
+      val counts = spark.read.parquet(s"$dir.docs").groupBy("doc_id").count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(counts == (1L to 5L).map(_ -> 1L).toMap,
+        s"a retry after the failed append must land each doc once: $counts")
+      val st = spark.read.parquet(s"$dir.stats").head()
+      assert(st.getLong(0) == 5L, s"stats must count the batch once: $st")
+    }
+  }
+
   test("ivfPq: delete hides tombstoned ids; compact purges them and re-admits appends") {
     import spark.implicits._
     val emb = graft.sources.Tables(spark, sfDir, "embeddings")
@@ -399,5 +431,56 @@ class RetirementSpec extends SparkSpec {
     // and it is applied physically by the next compact
     States.compact(spark, dir)
     assert(States.read(spark, dir).collect().map(_.getLong(0)).toSet == Set(1L))
+  }
+}
+
+/** Local file system under the `refusenext` scheme that refuses every create
+  * and mkdirs under a `*.stats.next` path — the failure of a staged-sidecar
+  * write, with every other write landing normally.
+  */
+class RefuseStatsNextFs extends org.apache.hadoop.fs.FilterFileSystem(
+    new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def getUri: java.net.URI = java.net.URI.create("refusenext:///")
+    }) {
+  import org.apache.hadoop.fs.{CreateFlag, FSDataOutputStream, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+
+  private def refuse(p: Path): Unit =
+    if (p.toUri.getPath.contains(".stats.next"))
+      throw new java.io.IOException(s"injected failure: write refused under $p")
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    refuse(f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def create(f: Path, permission: FsPermission,
+      flags: java.util.EnumSet[CreateFlag], bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable,
+      checksumOpt: org.apache.hadoop.fs.Options.ChecksumOpt): FSDataOutputStream = {
+    refuse(f)
+    super.create(f, permission, flags, bufferSize, replication, blockSize, progress,
+      checksumOpt)
+  }
+
+  override def createNonRecursive(f: Path, permission: FsPermission,
+      flags: java.util.EnumSet[CreateFlag], bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    refuse(f)
+    super.createNonRecursive(f, permission, flags, bufferSize, replication,
+      blockSize, progress)
+  }
+
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    refuse(f)
+    super.mkdirs(f, permission)
+  }
+
+  override def mkdirs(f: Path): Boolean = {
+    refuse(f)
+    super.mkdirs(f)
   }
 }

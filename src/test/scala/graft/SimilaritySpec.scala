@@ -412,6 +412,36 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("ivfPq probes never rank a row whose codes array is null") {
+    GraftFunctions.register(spark)
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_null").toString + "/idx"
+    Similarity.ivfPqWrite(emb, "vec_id", "embedding", dir, nlist = 8, m = 8, ksub = 16)
+    // a null codes array has no ADC distance; sorting nulls first would
+    // rank it ahead of every real candidate
+    val idx = spark.read.parquet(dir)
+    val cell = idx.select("cell").head().get(0)
+    val bad = org.apache.spark.sql.Row.fromSeq(idx.schema.fieldNames.toSeq.map {
+      case "vec_id" => -1L
+      case "cell" => cell
+      case _ => null
+    })
+    spark.createDataFrame(java.util.List.of(bad), idx.schema)
+      .write.partitionBy("cell").mode("append").parquet(dir)
+    val qids = Seq(0L, 100L)
+    qids.foreach { q =>
+      val qv = emb.filter(col("vec_id") === q).head().getSeq[Float](1).toArray
+      val single = Similarity.ivfPqProbe(spark, dir, qv, k = 10, nprobe = 8,
+        excludeId = Some(q)).collect()
+      assert(single.length == 10 && single.forall(r => r.getLong(0) != -1L),
+        s"ivfPqProbe ranked the null-codes row for query $q")
+    }
+    val batch = Similarity.ivfPqProbeBatch(spark, dir,
+      emb.filter(col("vec_id").isin(qids: _*)), "vec_id", "embedding",
+      k = 10, nprobe = 8).collect()
+    assert(batch.length == 10 * qids.size && batch.forall(r => r.getLong(1) != -1L),
+      "ivfPqProbeBatch ranked the null-codes row")
+  }
+
   test("ivfPqRerankBatch: each query's reranked list equals the single-query ivfPqRerank") {
     GraftFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_rb").toString + "/idx"

@@ -1113,10 +1113,15 @@ object Dedup {
     // every iteration's logical plan, where it gets re-canonicalized for
     // cache lookup and re-stringified for the listener bus on every action —
     // the loop must start from a plan LEAF. `uniq` keeps u==v rows so the
-    // final node cover includes docs that only self-pair.
+    // final node cover includes docs that only self-pair. A null id would
+    // fold into a self-pair through greatest/least and quietly vanish from
+    // the components, so the eager checkpoint asserts non-null ids once.
+    def id(c: String): Column = when(col(c).isNull, raise_error(lit(
+      s"Dedup.clusters: pair column '$c' holds a null doc id — drop or " +
+        "repair null ids before clustering"))).otherwise(col(c))
     val uniq = pairs.select(
-      greatest(col("doc_a"), col("doc_b")).as("u"),
-      least(col("doc_a"), col("doc_b")).as("v"))
+      greatest(id("doc_a"), id("doc_b")).as("u"),
+      least(id("doc_a"), id("doc_b")).as("v"))
       .distinct()
       .localCheckpoint()
     var edges = uniq.filter(col("u") =!= col("v")).localCheckpoint()

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, Seeds}
 
 /** Semantic (embedding-space) deduplication — the SemDeDup recipe (Abbas et
   * al. 2023): coarse-cluster the embedding space, then prune near-duplicate
@@ -23,9 +23,9 @@ import graft.functions.GraftFunctions
   *    arithmetic, summation order irrelevant. Argmin ties break on the
   *    smaller seed id. No engine-private RNG, no order-dependent float sums.
   *
-  * Scale shape (100 TB): seeds are k rows — a global top-k (TakeOrdered) then
-  * a broadcast; assignment is one narrow pass computing k distances per row
-  * (exactly IVF's coarse quantizer, `Similarity.ivfTopK`); the within-cell
+  * Scale shape (100 TB): seeds are k rows — a global top-k (TakeOrdered)
+  * collected once; assignment is one narrow compiled pass computing k
+  * distances per row (exactly IVF's coarse quantizer); the within-cell
   * prune self-joins on the cell key, so reducer width is bounded by the
   * widest cell — k is the knob (pick k ≈ n / targetCellSize; SemDeDup uses
   * n/cell ≈ 1e4 at web scale), and cells that still run hot past `maxCell`
@@ -36,8 +36,8 @@ import graft.functions.GraftFunctions
   */
 object Semantic {
 
-  private[operators] def quantized(vecCol: String): org.apache.spark.sql.Column =
-    expr(s"transform($vecCol, x -> floor(cast(x as double) * 1000000.0d + 0.5d))")
+  private[operators] def quantized(vecCol: String): Column =
+    GraftFunctions.quantize6(col(vecCol))
 
   /** Guard for the exact-integer distance contract: squared distances (and
     * PQ's packed `dist2·64 + rank` keys) are bit-for-bit portable only while
@@ -46,14 +46,13 @@ object Semantic {
     * distance, each difference at most twice the max magnitude. Unit-scale
     * embeddings sit far inside the bound (|x| ≲ 2 even at dsub = 8 packed);
     * anything outside it must FAIL LOUDLY rather than silently void the
-    * hash-oracle contract with inexact summation. One array_max pass per row,
-    * folded into the quantize projection (no extra job).
+    * hash-oracle contract with inexact summation. One array_max and one
+    * array_min pass per row (max |x| = greatest(max x, −min x)), folded into
+    * the quantize projection (no extra job).
     */
-  private def qvGuard(qv: org.apache.spark.sql.Column,
-      width: org.apache.spark.sql.Column, packFactor: Int,
-      ctx: String): org.apache.spark.sql.Column = {
+  private def qvGuard(qv: Column, width: Column, packFactor: Int, ctx: String): Column = {
     val maxAbs = floor(sqrt(lit(9.0e15 / (4.0 * packFactor)) / width)).cast("long")
-    when(coalesce(array_max(transform(qv, a => abs(a))), lit(0L)) <= maxAbs, qv)
+    when(coalesce(greatest(array_max(qv), -array_min(qv)), lit(0L)) <= maxAbs, qv)
       .otherwise(raise_error(concat(
         lit(s"$ctx: quantized component magnitude exceeds the exact-integer " +
           s"bound ("), maxAbs.cast("string"),
@@ -67,31 +66,46 @@ object Semantic {
     * (they have no position in the space). This is the deterministic coarse
     * quantizer SemDeDup and IVF both start from.
     */
-  def assignCells(emb: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame =
-    assignCellsFromQv(Par.spread(emb.filter(col(vecCol).isNotNull))
-      .select(Keys.id(emb, idCol).as("vec_id"),
-        qvGuard(quantized(vecCol), size(col(vecCol)), 1, "assignCells").as("qv")), k)
-
-  /** [[assignCells]] over an already-quantized (vec_id, qv) frame — lets a
-    * caller that quantizes once (e.g. [[Similarity.ivfPqWrite]]'s cached
-    * frame) feed every consumer from it.
-    */
-  private[operators] def assignCellsFromQv(vecs: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, "k must be positive")
-    val seeds = vecs
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(k)
-      .select(col("vec_id").as("seed_id"), col("qv").as("sv"))
-    vecs.crossJoin(broadcast(seeds))
-      .select(col("vec_id"), col("seed_id"),
-        GraftFunctions.l2sq(col("qv"), col("sv")).as("d2"))
-      // min(struct(...)) = lexicographic argmin: smallest distance, then
-      // smallest seed id — the engine-portable tie-break
-      .groupBy("vec_id")
-      .agg(min(struct(col("d2"), col("seed_id"))).as("m"))
+  def assignCells(emb: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
+    val (vecs, seeds) = coarseInputs(emb, idCol, vecCol, k, "assignCells")
+    // the argmin runs map-side: every row computes its k distances against
+    // the collected seeds in one compiled projection (`nearest` orders as
+    // min(struct(d2, seed_id)): smallest distance, then smallest seed id —
+    // the engine-portable tie-break), so no vec_id exchange forms
+    vecs.select(col("vec_id"), GraftFunctions.nearest(col("qv"), seeds).as("m"))
       .select(col("vec_id"), col("m.seed_id").as("cell"),
         col("m.d2").cast("long").as("dist2"))
   }
+
+  /** The coarse quantizer's inputs: guarded (vec_id, v, qv) rows of the
+    * non-null embeddings, spread for the per-row pass (`v` is pruned away
+    * where unused), and their `k` collected seeds, drawn from the same rows
+    * unspread — a top-k needs no spread, and drawing from the spread frame
+    * would pay its shuffle a second time.
+    */
+  private[operators] def coarseInputs(emb: DataFrame, idCol: String, vecCol: String,
+      k: Int, ctx: String): (DataFrame, Seeds) = {
+    def rows(src: DataFrame) = src.select(Keys.id(emb, idCol).as("vec_id"),
+      col(vecCol).as("v"), qvGuard(quantized(vecCol), size(col(vecCol)), 1, ctx).as("qv"))
+    val base = emb.filter(col(vecCol).isNotNull)
+    (rows(Par.spread(base)), Seeds.collect(seedDraw(rows(base), k), "vec_id", "qv"))
+  }
+
+  /** The `k` deterministic seed rows of a (vec_id, qv) frame: the smallest
+    * (md5(vec_id), vec_id) rows, a global top-k that callers collect once
+    * (k rows of plan-time metadata, as the IVF sidecars are).
+    */
+  private[operators] def seedDraw(vecs: DataFrame, k: Int): DataFrame = {
+    require(k >= 1, "k must be positive")
+    vecs.orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
+  }
+
+  /** `vecs` plus `cell`, the nearest of the frozen `seeds` to each row's
+    * `qv`; no rows at all when there are no seeds.
+    */
+  private[operators] def withCell(vecs: DataFrame, seeds: Seeds): DataFrame =
+    vecs.where(lit(seeds.size > 0))
+      .withColumn("cell", GraftFunctions.nearest(col("qv"), seeds).getField("seed_id"))
 
   /** Lloyd's k-means TRAINING on the quantized integer grid — the trained
     * form of [[assignCells]]' md5-seeded coarse quantizer (which IVF and
@@ -114,7 +128,7 @@ object Semantic {
     * n_members counted from the FINAL assignment against the trained
     * centroids (0 for a cell that ended empty).
     *
-    * Scale shape: per iteration one broadcast-centroid assignment pass
+    * Scale shape: per iteration one collected-centroid assignment pass
     * (k·d multiply-adds per row inside codegen, no shuffle) plus one
     * (cell, pos)-keyed aggregate whose map-side partial combine caps the
     * exchange at k·d rows per task; centroids live as a k-row frame with
@@ -131,9 +145,7 @@ object Semantic {
       .select(Keys.id(emb, idCol).as("vec_id"),
         qvGuard(quantized(vecCol), size(col(vecCol)), 1, "kmeansTrain").as("qv"))
       .localCheckpoint(eager = false)
-    var cents = vecs
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(k)
+    var cents = seedDraw(vecs, k)
       .select(col("vec_id").as("cell"), col("qv").as("cv"))
       .localCheckpoint(eager = false)
     for (_ <- 1 to iters) {
@@ -177,7 +189,7 @@ object Semantic {
     * Input/output schema = [[kmeansTrain]]'s (cell, pos, c, n_members),
     * so updates chain: state → update(batch₁) → update(batch₂) → …
     *
-    * Scale shape: one broadcast-centroid assignment pass over the batch +
+    * Scale shape: one collected-centroid assignment pass over the batch +
     * one (cell, pos) partial-agg exchange of ≤ k·d rows per task — batch-
     * sized work, the state never rescans its history.
     */
@@ -270,7 +282,7 @@ object Semantic {
     * (2) survive the within-batch keep-first prune. Returns (vec_id, cell)
     * survivors; callers append the survivors' state rows afterwards.
     *
-    * Scale shape: seeds broadcast (k rows); the history check is an equality
+    * Scale shape: seeds collected (k rows); the history check is an equality
     * join on the cell key — only same-cell (new, history) pairs are scored,
     * the SemDeDup containment argument applied across batches — and cells
     * whose STATE side has grown past `maxCell` fall back to bipartite
@@ -283,49 +295,28 @@ object Semantic {
     import GraftFunctions.cosineSim
     require(Seq("vec_id", "cell", "v", "is_seed").forall(state.columns.contains),
       "state must be a semanticState table: (vec_id, cell, v, is_seed)")
-    GraftFunctions.register(newEmb.sparkSession)
     // the state feeds FOUR subplans (seeds, hot-cell widths, the cold and
     // hot history sides) — a computed state lineage (the retract form chains
     // semanticState → semanticRetract in one plan) would be recomputed and
     // RE-PLANNED per consumer; sever materializes it once (no-op for a
     // parquet-backed state, which each consumer re-scans with pruning)
     val st = Par.sever(state)
-    val seeds = st.filter(col("is_seed"))
-      .select(col("vec_id").as("seed_id"),
-        expr("transform(v, x -> floor(cast(x as double) * 1000000.0d + 0.5d))")
-          .as("sv"))
+    val seeds = Seeds.collect(st.filter(col("is_seed"))
+      .select(col("vec_id").as("seed_id"), quantized("v").as("sv")), "seed_id", "sv")
     // an empty codebook would assign NOTHING and silently drop the whole
     // batch — the inverse of dedup's usual over-retention failure and far
     // worse. First-run callers must bootstrap with semanticDedup +
-    // semanticState instead. The guard is LAZY: a broadcast seed-count rides
-    // the batch's own job and assert_true fails it with this message, instead
-    // of the eager isEmpty probe that cost one extra Spark job per
-    // micro-batch in the streaming hot loop.
-    // the guard rides the seeds BROADCAST itself: a sentinel row that exists
-    // (and whose projection raises) only when the seed count is zero. A
-    // row-side guard cannot work — crossJoin with an empty build side emits
-    // no rows, so nothing downstream would ever evaluate it — and the old
-    // eager isEmpty probe cost one extra Spark job per streaming micro-batch.
-    val guard = seeds.agg(count(lit(1)).as("__n")).filter(col("__n") === 0)
-      .select(
-        raise_error(lit(
-          "state has no seed rows (is_seed) — bootstrap the first batch " +
-            "with semanticDedup and persist semanticState before running " +
-            "incrementally")).cast("long").as("seed_id"),
-        lit(null).cast(seeds.schema("sv").dataType).as("sv"))
-    val seedsG = seeds.unionByName(guard)
+    // semanticState instead.
+    require(seeds.size > 0,
+      "state has no seed rows (is_seed) — bootstrap the first batch " +
+        "with semanticDedup and persist semanticState before running " +
+        "incrementally")
     val vecs = newEmb.filter(col(vecCol).isNotNull)
       .select(Keys.id(newEmb, idCol).as("vec_id"), col(vecCol).as("v"),
         quantized(vecCol).as("qv"))
     // batch-sized; severed because it feeds the history tag, the survivor
-    // anti-join AND the within-batch prune — three consumers of one
-    // crossJoin+aggregate subtree
-    val assigned = Par.sever(vecs.crossJoin(broadcast(seedsG))
-      .select(col("vec_id"), col("v"), col("seed_id"),
-        GraftFunctions.l2sq(col("qv"), col("sv")).as("d2"))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d2"), col("seed_id"))).as("m"), first(col("v")).as("v"))
-      .select(col("vec_id"), col("m.seed_id").as("cell"), col("v")))
+    // anti-join AND the within-batch prune
+    val assigned = Par.sever(withCell(vecs, seeds).select("vec_id", "cell", "v"))
     // History check, with the SAME hot-cell bound the within-batch prune
     // has: a cell whose STATE side exceeds maxCell would otherwise put
     // |batch-in-cell| × width cosines in one reducer. Cold cells join
@@ -386,68 +377,54 @@ object Semantic {
     * compute the identical integer, ties resolved to the smallest rank by
     * construction. code_j = key_j mod 64.
     *
-    * Scale shape: one narrow pass over (n × ksub broadcast) rows computing m
-    * subspace distances each, then ONE groupBy(vec_id) with m struct-min
-    * aggregates — map-side combined, a single exchange of (vec_id, m keys)
-    * rows. Encoding 100 TB of vectors is one broadcast join + one shuffle of
-    * fixed-width rows.
+    * Scale shape: the ksub-row codebook is collected once, then encoding is
+    * one narrow compiled projection (`GraftFunctions.pqEncode`: m·ksub
+    * subspace distances per row) — no pair stream, no shuffle. Encoding
+    * 100 TB of vectors is a map-only job.
     */
   def pqEncode(emb: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, ksub: Int = 16): DataFrame =
     encodeCodes(pqParts(emb, idCol, vecCol, m, ksub))
 
-  /** Shared PQ scaffolding — quantized vectors, ranked codebook, and the m
-    * per-subspace distance columns. ONE construction serves both pqEncode
-    * and pqTopK: the seed/rank/key arithmetic must stay bit-identical
-    * between them for the external oracle to hold, so it must not exist as
-    * divergent copies.
+  /** Shared PQ scaffolding — quantized vectors, the ranked codebook draw
+    * (`seeds`: r, sv) and its collected form, the subspace count and width.
+    * ONE construction serves pqEncode, pqTopK and the IVF-PQ index: the
+    * seed/rank/key arithmetic must stay bit-identical between them for the
+    * external oracle to hold, so it must not exist as divergent copies.
     */
   private[operators] case class PqParts(vecs: DataFrame, seeds: DataFrame,
-      distCols: Seq[org.apache.spark.sql.Column], m: Int)
+      codebook: Seeds, m: Int, dsub: Int)
 
-  /** The m per-subspace exact-integer distance columns between a `qv` row
-    * and a joined `sv` seed row — ONE definition feeds pqParts, the frozen
-    * variant, and (via [[Similarity]]) the batch probes: the arithmetic must
-    * never fork.
-    */
-  private[operators] def subspaceDistCols(m: Int, dsub: Int): Seq[org.apache.spark.sql.Column] =
-    (0 until m).map { j =>
-      val lo = j * dsub + 1
-      GraftFunctions.l2sq(slice(col("qv"), lo, dsub), slice(col("sv"), lo, dsub))
-        .as(s"d$j")
-    }
-
-  /** Guarded quantized (vec_id, qv) rows + the probed dim, shared by the
-    * fresh and frozen PqParts constructions.
+  /** Guarded quantized (vec_id, qv) rows — spread for the per-row pass,
+    * and unspread for the codebook draw (see [[coarseInputs]]) — plus the
+    * probed dim, shared by the fresh and frozen PqParts constructions.
     */
   private def quantizedVecs(emb: DataFrame, idCol: String, vecCol: String,
-      m: Int): (DataFrame, Int) = {
-    val vecsRaw = Par.spread(emb.filter(col(vecCol).isNotNull))
-      .select(Keys.id(emb, idCol).as("vec_id"), quantized(vecCol).as("qv"))
-    val dim = vecsRaw.select(size(col("qv"))).limit(1).collect().headOption
+      m: Int): (DataFrame, DataFrame, Int) = {
+    val base = emb.filter(col(vecCol).isNotNull)
+    val dim = base.select(size(col(vecCol))).limit(1).collect().headOption
       .map(_.getInt(0))
       .getOrElse(throw new IllegalArgumentException(
         s"no non-null vectors in '$vecCol' — nothing to quantize"))
     require(dim % m == 0, s"embedding dim $dim must divide into m=$m subspaces")
     // packed-key exactness bound: dist2·64 + r < 2^53 over dsub-wide subspace
     // distances (tighter than assignCells' unpacked bound by the ×64 factor)
-    (vecsRaw.select(col("vec_id"),
-      qvGuard(col("qv"), lit(dim / m), 64, "pq").as("qv")), dim)
+    def rows(src: DataFrame) = src.select(Keys.id(emb, idCol).as("vec_id"),
+      qvGuard(quantized(vecCol), lit(dim / m), 64, "pq").as("qv"))
+    (rows(Par.spread(base)), rows(base), dim)
   }
 
   private[operators] def pqParts(emb: DataFrame, idCol: String, vecCol: String,
       m: Int, ksub: Int): PqParts = {
     require(m >= 1 && ksub >= 2 && ksub <= 64,
       "need 1 <= m and 2 <= ksub <= 64 (codes pack as dist2*64 + rank)")
-    val (vecs, dim) = quantizedVecs(emb, idCol, vecCol, m)
-    val seeds = vecs
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(ksub)
+    val (vecs, unspread, dim) = quantizedVecs(emb, idCol, vecCol, m)
+    val seeds = seedDraw(unspread, ksub)
       .select(col("vec_id").as("seed_id"), col("qv").as("sv"))
       .withColumn("r",
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(md5(col("seed_id").cast("string")), col("seed_id"))) - 1)
-    PqParts(vecs, seeds, subspaceDistCols(m, dim / m), m)
+    PqParts(vecs, seeds, Seeds.collect(seeds, "r", "sv"), m, dim / m)
   }
 
   /** [[pqParts]] with a FROZEN codebook (r, sv rows — an ivfPqWrite sidecar)
@@ -458,89 +435,67 @@ object Semantic {
     */
   private[operators] def pqPartsFrozen(emb: DataFrame, idCol: String,
       vecCol: String, codebook: DataFrame, m: Int): PqParts = {
-    val (vecs, dim) = quantizedVecs(emb, idCol, vecCol, m)
-    PqParts(vecs, codebook.select(col("r"), col("sv")),
-      subspaceDistCols(m, dim / m), m)
+    val (vecs, _, dim) = quantizedVecs(emb, idCol, vecCol, m)
+    val seeds = codebook.select(col("r"), col("sv"))
+    PqParts(vecs, seeds, Seeds.collect(seeds, "r", "sv"), m, dim / m)
   }
 
   /** Per-query flattened ADC LUT — ONE row per query: (lqid, ks, lut) where
     * `lut[j·ks + r + 1]` (1-based element_at) is the exact-integer subspace-j
-    * distance from the query to codebook entry r, built from the SAME
-    * [[subspaceDistCols]] arithmetic as the row-per-(j,r) form it replaces.
-    * Collapsing the LUT j-major into one array row lets the scoring side
-    * ([[adcDist]]) read it with two integer ops per code inside whole-stage
-    * codegen, instead of posexploding every corpus row m-ways, joining an
-    * (|queries|·m·ksub)-row broadcast, and re-aggregating the pair stream
-    * back with a (query_id, vec_id) hash aggregate — the r16 optimization
-    * round measured that explode/join/agg shape as the dominant cost of
-    * every ADC query (guide §2.3 "aggregate before you shuffle" /
-    * §2.4 "remove shuffles outright": the explode multiplied the pair
-    * stream ×m and the re-aggregate was a full extra exchange).
+    * distance from the query to codebook entry r, ks the codebook size. One
+    * compiled projection over the query rows (`GraftFunctions.pqLut`, the
+    * same subspace arithmetic as the encoding) — no (query × codebook) pair
+    * stream and no query_id re-aggregate. Collapsing the LUT j-major into
+    * one array row lets the scoring side ([[adcDist]]) read it with two
+    * integer ops per code inside whole-stage codegen: no per-code explode,
+    * no LUT join and no (query_id, vec_id) re-aggregate.
     */
-  private[operators] def queryLuts(qv: DataFrame, seeds: DataFrame,
-      distCols: Seq[org.apache.spark.sql.Column], m: Int): DataFrame = {
-    val fields = col("r") +: (0 until m).map(j => col(s"d$j"))
-    qv.crossJoin(broadcast(seeds))
-      .select(col("query_id") +: col("r") +: distCols: _*)
-      .groupBy("query_id")
-      // array_sort on (r, ...) structs: r is 0..ksub-1 and distinct, so the
-      // list is keyed by rank regardless of collect_list's arrival order
-      .agg(array_sort(collect_list(struct(fields: _*))).as("ls"))
-      .select(col("query_id").as("lqid"), size(col("ls")).as("ks"),
-        flatten(array((0 until m).map(j =>
-          expr(s"transform(ls, s -> s.d$j)")): _*)).as("lut"))
-  }
+  private[operators] def queryLuts(qv: DataFrame, codebook: Seeds, m: Int,
+      dsub: Int): DataFrame =
+    qv.select(col("query_id").as("lqid"), lit(codebook.size).as("ks"),
+      GraftFunctions.pqLut(col("qv"), codebook, m, dsub).as("lut"))
 
   /** ADC distance of a `codes` array against a joined [[queryLuts]] row:
-    * Σ_j lut[j·ks + codes[j]] — the SAME integers the old explode/join/sum
-    * path added (each LUT entry and the m-term sum stay < 2^53 under the
-    * qvGuard bound, so double addition is exact and order-irrelevant; the
-    * hash-oracle contract is untouched), evaluated in one codegen'd pass
-    * per (query, vector) pair with no exchange. Null for a null `codes`
-    * array (and, with ANSI mode off, a short one): rankers sort nulls last
-    * and drop them AFTER the top-k — a filter before it would be pushed into
-    * the scan and evaluate this expression twice per row.
+    * Σ_j lut[j·ks + codes[j]] (`GraftFunctions.adcDist`) as a bigint — each
+    * LUT entry and the m-term sum stay < 2^53 under the qvGuard bound, so
+    * double addition is exact and order-irrelevant and the hash-oracle
+    * contract holds; one compiled pass per (query, vector) pair with no
+    * exchange. Null for a null `codes` array or code: rankers sort nulls
+    * last and drop them AFTER the top-k — a filter before it would be pushed
+    * into the scan and evaluate this expression twice per row. A short
+    * `codes` array raises Spark's `element_at` index error under ANSI mode
+    * (null without it).
     */
-  private[operators] def adcDist(m: Int): org.apache.spark.sql.Column =
-    expr(s"cast(aggregate(sequence(0, ${m - 1}), 0.0d, (acc, j) -> " +
-      "acc + element_at(lut, j * ks + cast(element_at(codes, j + 1) as int) + 1)) as long)")
+  private[operators] def adcDist(m: Int): Column =
+    GraftFunctions.adcDist(col("codes"), col("lut"), col("ks"), m).cast("long")
 
   /** Nearest-cell assignment against GIVEN coarse seeds (cell, cv quantized)
     * — [[assignCells]]' argmin with a frozen codebook, for index appends and
-    * probes. Returns (vec_id, cell).
+    * k-means rounds: the seeds are collected, the argmin is one compiled
+    * projection. Returns (vec_id, cell).
     */
   private[operators] def assignAgainst(vecs: DataFrame, seeds: DataFrame): DataFrame =
-    vecs.crossJoin(broadcast(seeds))
-      .select(col("vec_id"), col("cell"),
-        GraftFunctions.l2sq(col("qv"), col("cv")).as("d2"))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d2"), col("cell"))).as("m"))
-      .select(col("vec_id"), col("m.cell").as("cell"))
+    withCell(vecs, Seeds.collect(seeds, "cell", "cv")).select("vec_id", "cell")
+
+  /** The m PQ codes of each `qv` row (array<tinyint>) against `p`'s codebook. */
+  private[operators] def codesOf(p: PqParts): Column =
+    GraftFunctions.pqEncode(col("qv"), p.codebook, p.m, p.dsub)
 
   /** Array form of the PQ encoding — (vec_id, codes array<tinyint>): the
     * representation the ADC paths and the materialized index actually use.
     * A code is < 64, so tinyint storage makes the "m bytes/vector" claim
-    * literal in parquet, and probes posexplode the array directly instead of
+    * literal in parquet, and probes read the array directly instead of
     * parsing a CSV string per row. [[encodeCodes]] derives the public string
     * form from THIS frame so the min-key arithmetic exists exactly once.
     */
-  private[operators] def encodeCodeArray(p: PqParts): DataFrame = {
-    val keyed = p.vecs.crossJoin(broadcast(p.seeds))
-      .select(col("vec_id") +: col("r") +: p.distCols: _*)
-    val minKeys = (0 until p.m).map { j =>
-      min(col(s"d$j") * 64 + col("r")).as(s"k$j")
-    }
-    keyed.groupBy("vec_id").agg(minKeys.head, minKeys.tail: _*)
-      .select(col("vec_id"),
-        array((0 until p.m).map(j =>
-          (col(s"k$j").cast("long") % 64).cast("tinyint")): _*).as("codes"))
-  }
+  private[operators] def encodeCodeArray(p: PqParts): DataFrame =
+    p.vecs.select(col("vec_id"), codesOf(p).as("codes"))
 
   /** [[pqEncode]]'s public CSV form of [[encodeCodeArray]] (the q_pq_encode
     * oracle pins this string shape). */
   private[operators] def encodeCodes(p: PqParts): DataFrame =
     encodeCodeArray(p).select(col("vec_id"),
-      expr("array_join(transform(codes, c -> cast(c as string)), ',')").as("code"))
+      array_join(col("codes").cast("array<string>"), ",").as("code"))
 
   /** PQ asymmetric-distance (ADC) top-k: rank the corpus against one query
     * using only the m-code compression from [[pqEncode]] plus an m × ksub
@@ -550,24 +505,20 @@ object Semantic {
     * (< 2^53), so unlike the LSH/IVF paths this approximate search is fully
     * hash-oracle-able; ties break on vec_id.
     *
-    * Scale shape: the LUT is m·ksub rows built from the broadcast seeds and
-    * the single query row; scoring explodes each code into m (j, code) rows,
-    * joins the broadcast LUT, and sums per vector — one narrow explode, one
-    * broadcast join, one map-side-combined groupBy, then a top-k
-    * (TakeOrdered). The raw vectors are never touched after encoding, which
-    * is the point of PQ at 100 TB: the scan reads m bytes per vector, not
-    * 4·d.
+    * Scale shape: the query's LUT is one compiled projection of the single
+    * query row against the collected codebook ([[queryLuts]]), broadcast as
+    * one row; scoring is one compiled [[adcDist]] pass per encoded corpus
+    * row, then a top-k (TakeOrdered). The raw vectors are never touched
+    * after encoding, which is the point of PQ at 100 TB: the scan reads m
+    * bytes per vector, not 4·d.
     */
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int, m: Int = 8, ksub: Int = 16): DataFrame = {
     val p = pqParts(emb, idCol, vecCol, m, ksub)
-    // LUT: the query row against every codebook entry, flattened j-major
-    // into ONE broadcast row (see queryLuts) — scoring is then a single
-    // codegen'd array pass per corpus row, no explode/join/re-aggregate
     val lut = queryLuts(
       p.vecs.filter(col("vec_id") === queryId)
         .select(col("vec_id").as("query_id"), col("qv")),
-      p.seeds, p.distCols, m)
+      p.codebook, m, p.dsub)
     encodeCodeArray(p)
       .filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(lut))
@@ -585,12 +536,14 @@ object Semantic {
     * single-query form because every LUT entry is the same exact-integer
     * arithmetic.
     *
-    * Scale shape: ONE broadcast of all query LUTs (|queries| · m · ksub
-    * narrow rows — queries are the small side by assumption, the corpus the
-    * big one), one explode of corpus codes, one map-side-combined
-    * groupBy(query_id, vec_id), then a per-query top-k window partitioned by
-    * query_id (WindowGroupLimit pushes the rank filter below the sort at
-    * scale). No per-query job loop, no plan growth in |queries|.
+    * Scale shape: the corpus is encoded and the query LUTs built by two
+    * compiled projections against the collected codebook; ONE broadcast of
+    * the |queries| LUT rows (queries are the small side by assumption, the
+    * corpus the big one) meets the encoded corpus in a nested loop whose
+    * compiled [[adcDist]] scores each pair, then a per-query top-k window
+    * partitioned by query_id (WindowGroupLimit pushes the rank filter below
+    * the sort at scale). No vec_id or query_id aggregate, no per-query job
+    * loop, no plan growth in |queries|.
     */
   def pqTopKBatch(emb: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
@@ -598,12 +551,7 @@ object Semantic {
     val p = pqParts(emb, idCol, vecCol, m, ksub)
     val qv = queries.filter(col(qVecCol).isNotNull)
       .select(Keys.id(queries, qIdCol).as("query_id"), quantized(qVecCol).as("qv"))
-    // all query LUTs at once: ONE flattened row per query (queryLuts),
-    // built by the SAME distCols so the integer arithmetic cannot drift
-    // between the forms; scoring each (corpus row × query) pair is then a
-    // single codegen'd array pass — no explode, no LUT join, no pair-stream
-    // re-aggregate
-    val luts = queryLuts(qv, p.seeds, p.distCols, m)
+    val luts = queryLuts(qv, p.codebook, m, p.dsub)
     val scored = encodeCodeArray(p)
       .crossJoin(broadcast(luts))
       .filter(col("vec_id") =!= col("lqid"))
@@ -636,7 +584,6 @@ object Semantic {
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, threshold: Double, maxCell: Int = 1024): DataFrame = {
     require(maxCell > 1, "maxCell must be > 1")
-    GraftFunctions.register(emb.sparkSession)
     val assigned = assignCells(emb, idCol, vecCol, k).select("vec_id", "cell")
     val vecs = emb.filter(col(vecCol).isNotNull)
       .select(Keys.id(emb, idCol).as("vec_id"), col(vecCol).as("v"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, Seeds}
 
 /** Similarity search over an embedding column (north-star extension,
   * SURVEY.md §2.13).
@@ -102,16 +102,16 @@ object Similarity {
     * coarse assignment runs ONCE (deterministic seed cells via
     * [[Semantic.assignCells]], so rebuilding appends consistently), and every
     * later probe is an ordinary partition-pruned scan. Layout:
-    * `dir/cell=<id>/…` with (vec_id, v).
+    * `dir/cell=<id>/…` with (vec_id, v). The assignment is one compiled
+    * projection that carries each vector along — no join back by vec_id.
     */
   def ivfWrite(emb: DataFrame, idCol: String, vecCol: String,
       dir: String, nlist: Int = 16): Unit = {
-    val rows = Semantic.assignCells(emb, idCol, vecCol, nlist)
-      .select("vec_id", "cell")
-      .join(emb.filter(col(vecCol).isNotNull)
-        .select(Keys.id(emb, idCol).as("vec_id"), col(vecCol).as("v")), "vec_id")
+    val (vecs, seeds) = Semantic.coarseInputs(emb, idCol, vecCol, nlist, "ivfWrite")
+    val rows = Semantic.withCell(vecs, seeds)
+      .select("vec_id", "cell", "v")
       .cache() // two writes below — an uncached plan would run the full
-               // assignment (scan + k-distance pass + argmin) twice
+               // assignment (scan + quantize + k-distance argmin) twice
     try {
       // cluster by cell before the partitioned write (guide §6 / the Iceberg
       // write.distribution-mode=hash shape): without it every upstream
@@ -143,8 +143,6 @@ object Similarity {
     */
   def ivfProbe(spark: SparkSession, dir: String,
       queryVec: Array[Float], k: Int, nprobe: Int = 4): DataFrame = {
-    import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val idx = spark.read.parquet(dir)
     // seed rows are plan-time metadata (nlist rows) read from the sidecar
     // codebook: their distance to the query picks the probe cells — same
@@ -280,9 +278,7 @@ object Similarity {
       k: Int, poolSize: Int = 50, lambdaBp: Int = 7000): DataFrame = {
     require(k >= 1 && poolSize >= k, "need poolSize >= k >= 1")
     require(lambdaBp >= 0 && lambdaBp <= 10000, "lambdaBp is basis points")
-    import graft.functions.GraftFunctions
     val spark = emb.sparkSession
-    GraftFunctions.register(spark)
     val q = emb.filter(Keys.id(emb, idCol) === queryId)
       .select(col(vecCol).as("qv"))
     val pool = emb.filter(Keys.id(emb, idCol) =!= queryId)
@@ -330,9 +326,7 @@ object Similarity {
       k: Int, poolSize: Int = 50, lambdaBp: Int = 7000): DataFrame = {
     require(k >= 1 && poolSize >= k, "need poolSize >= k >= 1")
     require(lambdaBp >= 0 && lambdaBp <= 10000, "lambdaBp is basis points")
-    import graft.functions.GraftFunctions
     val spark = emb.sparkSession
-    GraftFunctions.register(spark)
     // query_id is surfaced as STRING (r10 ADVICE): the greedy phase reads
     // the collected pool generically, so a bigint/int query id is cast here
     // instead of throwing ClassCastException at collect time
@@ -393,8 +387,6 @@ object Similarity {
     */
   def ivfRange(spark: SparkSession, dir: String, queryVec: Array[Float],
       minCos: Double, nprobe: Int = 4): DataFrame = {
-    import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val idx = spark.read.parquet(dir)
     def q6(x: Float): Long = math.floor(x.toDouble * 1000000.0 + 0.5).toLong
     val probeCells = spark.read.parquet(s"$dir.seeds")
@@ -427,55 +419,55 @@ object Similarity {
     * quantized PQ seeds (LUT construction). Both quantizers use the
     * deterministic md5-seed draw, so rebuild/append is consistent and every
     * probe is reproducible by an external SQL engine bit-for-bit.
+    *
+    * Scale shape: both seed sets are collected (nlist + ksub rows), then the
+    * PQ codes and the coarse cell of every vector come out of ONE compiled
+    * projection over the quantized rows — no pair stream, no vec_id
+    * aggregate, no join of codes to cells — followed by the cell-clustered
+    * partitioned write.
     */
   def ivfPqWrite(emb: DataFrame, idCol: String, vecCol: String, dir: String,
       nlist: Int = 16, m: Int = 8, ksub: Int = 16): Unit = {
     val p0 = Semantic.pqParts(emb, idCol, vecCol, m, ksub)
-    // the quantized vectors feed FOUR subplans (PQ encode, coarse assign via
-    // its own seed draw, the .cells sidecar, and the seed draws themselves);
-    // uncached they would re-scan + re-quantize the source each time
+    // the quantized vectors feed the encode + assign projection, both seed
+    // draws and the .cells sidecar; uncached they would re-scan +
+    // re-quantize the source each time
     val p = p0.copy(vecs = p0.vecs.cache())
-    val rows = Semantic.encodeCodeArray(p)
-      .join(Semantic.assignCellsFromQv(p.vecs, nlist)
-        .select("vec_id", "cell"), "vec_id")
-      .cache() // the index write and the .cells sidecar both read it; an
-               // uncached plan would run encode + assignment twice
+    val draw = Semantic.seedDraw(p.vecs, nlist)
+    val cells = Seeds.collect(draw, "vec_id", "qv")
+    val rows = Semantic.withCell(p.vecs, cells)
+      .select(col("vec_id"), Semantic.codesOf(p).as("codes"), col("cell"))
     try {
-      // the codebook sidecar depends only on p.seeds — overlap it with the
-      // index + cells writes (guide §2.6: independent output jobs from a
-      // small pool; disjoint paths)
+      // the index and its two sidecars are independent outputs — overlap
+      // them (guide §2.6: independent output jobs from a small pool;
+      // disjoint paths)
       Par.inParallel(
-        () => {
-          // hash-cluster by cell before the write (the ivfWrite rationale)
-          rows.repartition(col("cell"))
-            .write.partitionBy("cell").mode("overwrite").parquet(dir)
-          // coarse-seed sidecar: nlist quantized vectors, keyed by the cell
-          // they anchor (a vec_id filter over the partitioned index would
-          // touch every cell directory — the ivfWrite.seeds reasoning);
-          // sequenced after the index write so it reads the materialized
-          // `rows` cache instead of racing to compute it
-          p.vecs
-            .join(rows.filter(col("vec_id") === col("cell")).select("vec_id"), "vec_id")
-            .select(col("vec_id").as("cell"), col("qv"))
-            // repartition, NOT coalesce: coalesce(1) would propagate up
-            // through the narrow broadcast join and serialize the full
-            // cached-vecs pass on one task (ADVICE r15)
-            .repartition(1) // nlist rows, read whole by every probe: one file
-            .write.mode("overwrite").parquet(s"$dir.cells")
-        },
+        // hash-cluster by cell before the write (the ivfWrite rationale)
+        () => rows.repartition(col("cell"))
+          .write.partitionBy("cell").mode("overwrite").parquet(dir),
+        // coarse-seed sidecar: the drawn seeds that anchor their own cell
+        // (a seed whose twin has a smaller id anchors none), keyed by that
+        // cell (a vec_id filter over the partitioned index would touch every
+        // cell directory — the ivfWrite.seeds reasoning)
+        () => draw
+          .filter(GraftFunctions.nearest(col("qv"), cells)
+            .getField("seed_id") === col("vec_id"))
+          .select(col("vec_id").as("cell"), col("qv"))
+          .repartition(1) // nlist rows, read whole by every probe: one file
+          .write.mode("overwrite").parquet(s"$dir.cells"),
         // PQ-codebook sidecar: ksub ranked quantized seeds + the subspace
         // count (m rides along so a probe needs no out-of-band metadata)
         () => p.seeds.select(col("r"), col("sv"), lit(p.m).as("m"))
           .write.mode("overwrite").parquet(s"$dir.codebook"))
-    } finally { rows.unpersist(); p.vecs.unpersist() }
+    } finally p.vecs.unpersist()
   }
 
   /** Probe a materialized IVF+PQ index: coarse-seed distances (nlist sidecar
     * rows, driver-side — plan-time metadata) pick the `nprobe` cells, the
     * ksub-row codebook sidecar builds the query's m × ksub LUT of EXACT
     * integer subspace distances, and the scan — partition-pruned to the probe
-    * cells, reading only the m-code column — explodes codes, joins the
-    * broadcast LUT, and sums per vector. I/O per probe: nprobe/nlist of the
+    * cells, reading only the m-code column — scores each row with one
+    * compiled ADC pass against the literal LUT. I/O per probe: nprobe/nlist of the
     * index's m bytes/vector. With nprobe >= nlist the result equals
     * [[Semantic.pqTopK]] exactly (full probe ⇒ no IVF recall loss), and with
     * nprobe < nlist it is STILL deterministic — cell choice is exact integer
@@ -549,8 +541,9 @@ object Similarity {
     * = full [[ivfPqWrite]] rebuild). Appended ids are assumed disjoint from
     * the index's (re-ingestion dedupes upstream, as everywhere).
     *
-    * Scale shape: two broadcasts (ksub-row codebook, nlist-row cells), one
-    * narrow encode+assign pass, one partitioned append — ingesting a batch
+    * Scale shape: two collected sidecars (ksub-row codebook, nlist-row
+    * cells), one narrow compiled encode+assign projection, one partitioned
+    * append — ingesting a batch
     * touches no existing data file. Probes are oblivious to how many appends
     * built the index, and stay hash-oracle-able: an external engine
     * reproduces seed draw (over the ORIGINAL corpus), encoding, and ADC for
@@ -573,10 +566,9 @@ object Similarity {
           "purge deletions first")
     }
     val p = Semantic.pqPartsFrozen(newEmb, idCol, vecCol, cb, m)
-    val assigned = Semantic.assignAgainst(p.vecs,
-      spark.read.parquet(s"$dir.cells").select(col("cell"), col("qv").as("cv")))
-    Semantic.encodeCodeArray(p)
-      .join(assigned, "vec_id")
+    val cells = Seeds.collect(spark.read.parquet(s"$dir.cells"), "cell", "qv")
+    Semantic.withCell(p.vecs, cells)
+      .select(col("vec_id"), Semantic.codesOf(p).as("codes"), col("cell"))
       .repartition(col("cell"))
       .write.partitionBy("cell").mode("append").parquet(dir)
   }
@@ -693,16 +685,17 @@ object Similarity {
     * hash-oracle-able even at nprobe < nlist:
     *  - cell selection: queries × broadcast cells sidecar (nlist rows),
     *    integer squared-L2, per-query top-nprobe window (ties on cell id);
-    *  - LUTs: queries × broadcast codebook sidecar (ksub rows), the
-    *    [[Semantic.pqParts]] subspace formula verbatim;
+    *  - LUTs: one compiled projection of the queries against the collected
+    *    codebook sidecar (ksub rows), the [[Semantic.pqParts]] subspace
+    *    formula verbatim ([[Semantic.queryLuts]]);
     *  - scan: index ⋈ probe pairs on the cell PARTITION key — Spark's
     *    dynamic partition pruning keeps unprobed cell directories unread
     *    (the nprobe/nlist × m bytes/vector I/O claim, now for the UNION of
-    *    the batch's probe cells), then explode codes, join the broadcast
-    *    LUTs on (query, subspace, code), one map-side-combined sum, one
+    *    the batch's probe cells), then the broadcast LUT row joins on the
+    *    query id, one compiled ADC pass per (query, vector) pair, one
     *    per-query top-k window (WindowGroupLimit).
     *
-    * Driver-side reads: one codebook row (m) and one query row (dim) —
+    * Driver-side reads: the codebook (ksub rows) and one query row (dim) —
     * plan-time metadata, the [[Semantic.pqParts]] convention.
     */
   def ivfPqProbeBatch(spark: SparkSession, dir: String, queries: DataFrame,
@@ -728,12 +721,11 @@ object Similarity {
         Seq("query_id"), Seq(col("cd").asc, col("cell").asc), nprobe, "__rn")
       .select("query_id", "cell")
     // one flattened LUT row per query (Semantic.queryLuts — the same
-    // subspaceDistCols arithmetic as the index build), broadcast-joined to
-    // the DPP-pruned pair stream; scoring is one codegen'd array pass per
+    // subspace arithmetic as the index build), broadcast-joined to the
+    // DPP-pruned pair stream; scoring is one compiled array pass per
     // (query, vector) pair — no m-way explode, no (|Q|·m·ksub)-row LUT
     // join, no (query_id, vec_id) re-aggregate exchange
-    val luts = Semantic.queryLuts(qv, cb.select(col("r"), col("sv")),
-      Semantic.subspaceDistCols(m, dsub), m)
+    val luts = Semantic.queryLuts(qv, Seeds.collect(cb, "r", "sv"), m, dsub)
     val scored = dropTombstoned(spark, dir, spark.read.parquet(dir).join(probe, "cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(luts), col("query_id") === col("lqid"))

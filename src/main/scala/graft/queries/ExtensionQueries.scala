@@ -422,9 +422,9 @@ object ExtensionQueries {
         queryId = 0L, k = 20, m = 8, ksub = 16)),
 
     // batch-query ADC: every vec_id % 100 == 0 row is a query, scored against
-    // the one encoded corpus in a single plan (one LUT broadcast, one explode,
-    // one groupBy, one per-query window) — exact integers, so the multi-query
-    // form stays hash-checkable
+    // the one encoded corpus in a single plan (one LUT broadcast, one compiled
+    // ADC pass per pair, one per-query window) — exact integers, so the
+    // multi-query form stays hash-checkable
     "q_pq_topk_batch" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       graft.operators.Semantic.pqTopKBatch(emb, "vec_id", "embedding",
@@ -562,7 +562,6 @@ object ExtensionQueries {
 
     // ---- similarity search ----
     "q_sim_topk" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Similarity.bruteForceTopK(t(s, d, "embeddings"), "vec_id", "embedding",
         queryId = 0L, k = 20)
     }),
@@ -612,7 +611,6 @@ object ExtensionQueries {
         queryId = 0L, k = 20)),
 
     "q_sim_ann" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // LSH-bucketed ANN: approximate by construction ⇒ rows-only check
       Similarity.annTopK(s, t(s, d, "embeddings"), "vec_id", "embedding",
         queryId = 0L, k = 10)
@@ -1438,7 +1436,6 @@ object ExtensionQueries {
     // by k, never corpus-sized).
     "q_rrf_fusion" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftFunctions.register(s)
       val lex = TextAnalysis.bm25Score(t(s, d, "documents"), "doc_id", "text",
         query = "data join slow vector")
         .orderBy(col("bm25_e6").desc, col("doc_id")).limit(20)

@@ -974,7 +974,6 @@ object SurfaceQueries {
     // sf0.01), so non-zero rows here are falsifiable recall, not vacuous
     // precision; DedupSpec asserts pairs ⊆ exact and recall ≥ 0.9.
     "q_dedup_embedding_ann" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       graft.operators.Dedup.embeddingPairs(
         t(s, d, "embeddings"), "vec_id", "embedding", threshold = 0.4)
         .select("vec_a", "vec_b")
@@ -1043,7 +1042,6 @@ object SurfaceQueries {
 
     // ---- IVF ANN: KMeans coarse quantizer + probe (approximate ⇒ rows-only) ----
     "q_sim_ivf" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       graft.operators.Similarity.ivfTopK(
         t(s, d, "embeddings"), "vec_id", "embedding", queryId = 0L, k = 10)
     }),

@@ -56,6 +56,30 @@ object GraftSqlShims {
   def columnOf(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 
+  /** Classic `Column` → Catalyst `Expression`, the inverse bridge. Used by
+    * `graft.functions.GraftFunctions` to build its native expressions over
+    * caller Columns without a session function registry.
+    */
+  def expressionOf(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    classic.ExpressionUtils.expression(c)
+
+  /** The errors Spark's own arithmetic, cast and `element_at` raise under
+    * ANSI mode, for `graft.functions.VectorKernels`, which must fail exactly
+    * where the SQL forms it replaces failed.
+    */
+  def arithmeticOverflow(e: ArithmeticException): ArithmeticException =
+    errors.QueryExecutionErrors.arithmeticOverflowError(e.getMessage, "", null)
+
+  def castOverflow(v: Any, from: org.apache.spark.sql.types.DataType,
+      to: org.apache.spark.sql.types.DataType): ArithmeticException =
+    errors.QueryExecutionErrors.castingCauseOverflowError(v, from, to)
+
+  def elementAtIndexError(index: Int, n: Int): ArrayIndexOutOfBoundsException =
+    errors.QueryExecutionErrors.invalidElementAtIndexError(index, n, null)
+
+  def indexOfZeroError(): RuntimeException =
+    errors.QueryExecutionErrors.invalidIndexOfZeroError(null)
+
   /** Catalyst `Expression` → V1 `sources.Filter` (None when untranslatable)
     * — the same conversion Spark applies before V1 pushdown. Used by the
     * graft catalog's FILE-granularity row-level groups to evaluate the

@@ -271,6 +271,20 @@ class DedupSpec extends SparkSpec {
     assert(pairs == Set(("doc-a", "doc-b")), s"got $pairs")
   }
 
+  test("clusters refuses a null doc id instead of folding it into a self-pair") {
+    import spark.implicits._
+    // greatest/least would turn (2, null) into the self-pair (2, 2) and the
+    // null side would drop out of the components without a trace
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null), (3L, 4L))
+      .toDF("doc_a", "doc_b")
+    val e = intercept[Exception](Dedup.clusters(pairs).collect())
+    val messages = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
+      .mkString("\n")
+    assert(messages.contains("'doc_b'") && messages.contains("null doc id"),
+      s"unexpected failure chain:\n$messages")
+  }
+
   test("LSH-blocked embedding dedup: no false positives, recall >= 0.9 vs exact") {
     graft.functions.GraftFunctions.register(spark)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

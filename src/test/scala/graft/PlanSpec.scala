@@ -380,23 +380,50 @@ class PlanSpec extends SparkSpec {
 
   test("semantic dedup: no cross-cell comparison — every join keys on the cell or the id") {
     val emb = graft.sources.Tables(spark, sfDir, "embeddings")
-    val out = graft.operators.Semantic.semanticDedup(emb, "vec_id", "embedding",
-      k = 16, threshold = 0.9)
+    var out: org.apache.spark.sql.DataFrame = null
+    // the k seeds are collected while the operator builds its plan
+    val draws = plansRunBy {
+      out = graft.operators.Semantic.semanticDedup(emb, "vec_id", "embedding",
+        k = 16, threshold = 0.9)
+    }
     val plan = out.queryExecution.executedPlan.toString
     // the pairwise stage must be an EQUALITY join on the cell key — that is
     // the SemDeDup containment guarantee bounding candidates at Σ cell² —
-    // so the only nested-loop allowed is the deliberate k-row broadcast of
-    // the seeds (BuildRight Cross over a TakeOrdered of 16 rows)
+    // and the seed assignment is a compiled projection against the
+    // collected seeds, so nothing may nested-loop
     assert(!plan.contains("CartesianProduct"), s"no cartesian stage:\n$plan")
-    val nljs = plan.linesIterator.filter(_.contains("BroadcastNestedLoopJoin")).toSeq
-    assert(nljs.forall(_.contains("Cross")),
-      s"only the broadcast seed cross-join may nested-loop:\n$plan")
+    assert(!plan.contains("NestedLoop"), s"no nested-loop join:\n$plan")
     assert("(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \\[cell".r
       .findFirstIn(plan).isDefined,
       s"within-cell prune must hash/merge-join on the cell key:\n$plan")
     // seed selection is a global top-k (TakeOrdered), not a full sort
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"seed pick must be top-k, not a global sort:\n$plan")
+    assert(draws.exists(_.contains("TakeOrderedAndProject")),
+      s"seed pick must be top-k, not a global sort:\n${draws.mkString("\n")}")
+  }
+
+  test("vector kernels: no interpreted lambdas, no vec_id exchange before the codes or cells") {
+    // ROADMAP item 4's bar, at the at-scale plan shape (no size-based
+    // broadcast): distance, encode and score projections are compiled
+    // kernels, and every vector's code or cell comes out of a map-side
+    // projection instead of a (vector × seed) pair stream re-aggregated
+    // by vec_id
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val emb = graft.sources.Tables(spark, sfDir, "embeddings")
+      val dir = Files.createTempDirectory("plan_ivf").toString + "/idx"
+      val ops = Seq("q_pq_topk_batch", "q_pq_encode", "q_ivfpq_probe_batch").map { q =>
+        q -> plansRunBy(SparkEntry.queries(q)(spark, sfDir).collect())
+      } :+ ("ivfWrite" -> plansRunBy(graft.operators.Similarity.ivfWrite(
+        emb, "vec_id", "embedding", dir, nlist = 8)))
+      for ((label, plans) <- ops) {
+        assert(plans.nonEmpty, s"$label ran no query")
+        for (plan <- plans) {
+          assert(!plan.contains("lambdafunction"), s"$label interprets a lambda:\n$plan")
+          assert("Exchange hashpartitioning\\(vec_id#".r.findFirstIn(plan).isEmpty,
+            s"$label exchanges on vec_id:\n$plan")
+        }
+      }
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("semantic ops prune the scan to (vec_id, embedding) — label never read") {

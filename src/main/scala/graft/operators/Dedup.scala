@@ -284,15 +284,7 @@ object Dedup {
   private def containmentRepCore(docs: DataFrame, idCol: String,
       textCol: String, n: Int, threshold: Double,
       minShingles: Int): (DataFrame, DataFrame, DataFrame) = {
-    val withFp = shingleArrays(docs, idCol, textCol, n)
-      .select(col("doc_id"), col("shs"),
-        // 128-bit set key: two independently-seeded xxhash64's of the
-        // sorted shingle array (r9 ADVICE — a single 64-bit key makes
-        // birthday collisions non-negligible at billions of distinct sets,
-        // and a collision here silently merges two different documents)
-        struct(xxhash64(array_sort(col("shs"))).as("h1"),
-          xxhash64(lit(1), array_sort(col("shs"))).as("h2")).as("fp"))
-      .cache()
+    val withFp = withSetKey(shingleArrays(docs, idCol, textCol, n)).cache()
     val reps = withFp.groupBy("fp")
       .agg(min("doc_id").as("doc_id"),
         min_by(col("shs"), col("doc_id")).as("shs"))
@@ -493,6 +485,20 @@ object Dedup {
     containmentCore(shNew, shAll, threshold, minShingles, earlierOnly = true)
   }
 
+  /** (doc_id, shs) plus `fp`, the 128-bit set key: two independently
+    * seeded xxhash64's of the sorted shingle array (r9 ADVICE — a single
+    * 64-bit key makes birthday collisions non-negligible at billions of
+    * distinct sets, and a collision here silently merges two different
+    * documents). The array is sorted ONCE, by the codegen'd `sort_array`,
+    * and both hashes read that copy; the elements are non-null hashes, so
+    * it orders them exactly as `array_sort` would, without that function's
+    * interpreted comparator lambda.
+    */
+  private def withSetKey(shs: DataFrame): DataFrame =
+    shs.select(col("doc_id"), col("shs"), sort_array(col("shs")).as("__sorted"))
+      .select(col("doc_id"), col("shs"), struct(xxhash64(col("__sorted")).as("h1"),
+        xxhash64(lit(1), col("__sorted")).as("h2")).as("fp"))
+
   /** Per-document DISTINCT shingle-hash array, computed in one narrow pass —
     * no explode, no shuffle. The array form is the scale-friendly layout: at
     * 100 TB the shingle stream never materializes as rows, so the only shuffle
@@ -609,15 +615,7 @@ object Dedup {
     // ~bands·g·maxBucket candidate pairs through the salted buckets, and
     // identical-set pairs are emitted at recall 1 REGARDLESS of maxBucket
     // (the salt split can no longer scatter them).
-    val withFp = shingleArrays(docs, idCol, textCol, n)
-      .select(col("doc_id"), col("shs"),
-        // 128-bit set key: two independently-seeded xxhash64's of the
-        // sorted shingle array (r9 ADVICE — a single 64-bit key makes
-        // birthday collisions non-negligible at billions of distinct sets,
-        // and a collision here silently merges two different documents)
-        struct(xxhash64(array_sort(col("shs"))).as("h1"),
-          xxhash64(lit(1), array_sort(col("shs"))).as("h2")).as("fp"))
-      .cache()
+    val withFp = withSetKey(shingleArrays(docs, idCol, textCol, n)).cache()
     val cached = withFp
       .groupBy("fp")
       .agg(min("doc_id").as("doc_id"), min_by(col("shs"), col("doc_id")).as("shs"))

@@ -67,7 +67,7 @@ object Semantic {
     * quantizer SemDeDup and IVF both start from.
     */
   def assignCells(emb: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val (vecs, seeds) = coarseInputs(emb, idCol, vecCol, k, "assignCells")
+    val (vecs, seeds, _) = coarseInputs(emb, idCol, vecCol, k, "assignCells")
     // the argmin runs map-side: every row computes its k distances against
     // the collected seeds in one compiled projection (`nearest` orders as
     // min(struct(d2, seed_id)): smallest distance, then smallest seed id —
@@ -79,17 +79,24 @@ object Semantic {
 
   /** The coarse quantizer's inputs: guarded (vec_id, v, qv) rows of the
     * non-null embeddings, spread for the per-row pass (`v` is pruned away
-    * where unused), and their `k` collected seeds, drawn from the same rows
-    * unspread — a top-k needs no spread, and drawing from the spread frame
-    * would pay its shuffle a second time.
+    * where unused), their `k` collected seeds, and the seed draw itself
+    * (the same rows unspread — a top-k needs no spread, and drawing from
+    * the spread frame would pay its shuffle a second time).
     */
   private[operators] def coarseInputs(emb: DataFrame, idCol: String, vecCol: String,
-      k: Int, ctx: String): (DataFrame, Seeds) = {
+      k: Int, ctx: String): (DataFrame, Seeds, DataFrame) = {
     def rows(src: DataFrame) = src.select(Keys.id(emb, idCol).as("vec_id"),
       col(vecCol).as("v"), qvGuard(quantized(vecCol), size(col(vecCol)), 1, ctx).as("qv"))
     val base = emb.filter(col(vecCol).isNotNull)
-    (rows(Par.spread(base)), Seeds.collect(seedDraw(rows(base), k), "vec_id", "qv"))
+    val draw = seedDraw(rows(base), k)
+    (rows(Par.spread(base)), Seeds.collect(draw, "vec_id", "qv"), draw)
   }
+
+  /** The rows of a seed `draw` that anchor their own cell — a seed whose
+    * twin vector has a smaller id anchors none — as the cell's sidecar row.
+    */
+  private[operators] def anchors(draw: DataFrame, seeds: Seeds): DataFrame =
+    draw.filter(GraftFunctions.nearest(col("qv"), seeds).getField("seed_id") === col("vec_id"))
 
   /** The `k` deterministic seed rows of a (vec_id, qv) frame: the smallest
     * (md5(vec_id), vec_id) rows, a global top-k that callers collect once

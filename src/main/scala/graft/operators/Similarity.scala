@@ -107,30 +107,28 @@ object Similarity {
     */
   def ivfWrite(emb: DataFrame, idCol: String, vecCol: String,
       dir: String, nlist: Int = 16): Unit = {
-    val (vecs, seeds) = Semantic.coarseInputs(emb, idCol, vecCol, nlist, "ivfWrite")
-    val rows = Semantic.withCell(vecs, seeds)
-      .select("vec_id", "cell", "v")
-      .cache() // two writes below — an uncached plan would run the full
-               // assignment (scan + quantize + k-distance argmin) twice
-    try {
+    val (vecs, seeds, draw) = Semantic.coarseInputs(emb, idCol, vecCol, nlist, "ivfWrite")
+    // the index and its sidecar are independent outputs — overlap them
+    // (the ivfPqWrite shape; disjoint paths)
+    Par.inParallel(
       // cluster by cell before the partitioned write (guide §6 / the Iceberg
       // write.distribution-mode=hash shape): without it every upstream
       // partition opens a file in every cell directory — the r15 spread
       // parallelism turned that into up to #cores tiny files per cell and
       // probe latency regressed on file-open overhead
-      rows.repartition(col("cell"))
-        .write.partitionBy("cell").mode("overwrite").parquet(dir)
+      () => Semantic.withCell(vecs, seeds)
+        .select("vec_id", "cell", "v")
+        .repartition(col("cell"))
+        .write.partitionBy("cell").mode("overwrite").parquet(dir),
       // sidecar codebook (nlist rows): probes must find the seed vectors
       // WITHOUT scanning the index — a vec_id filter over the partitioned
-      // table would touch every cell directory
-      rows.filter(col("vec_id") === col("cell"))
-        // repartition, NOT coalesce: coalesce(1) propagates up the narrow
-        // chain and serializes the whole cached-partition filter pass on one
-        // task (ADVICE r15); repartition keeps the scan parallel and
-        // shuffles only the nlist result rows to the single writer
+      // table would touch every cell directory. Written from the k-row seed
+      // draw: the index rows whose vec_id equals their cell are exactly the
+      // seeds that anchor their own cell
+      () => Semantic.anchors(draw, seeds)
+        .select(col("vec_id"), col("vec_id").as("cell"), col("v"))
         .repartition(1) // nlist rows, read whole by every probe: one file
-        .write.mode("overwrite").parquet(s"$dir.seeds")
-    } finally rows.unpersist()
+        .write.mode("overwrite").parquet(s"$dir.seeds"))
   }
 
   /** Probe a materialized IVF index: pick the `nprobe` cells whose seed
@@ -449,9 +447,7 @@ object Similarity {
         // (a seed whose twin has a smaller id anchors none), keyed by that
         // cell (a vec_id filter over the partitioned index would touch every
         // cell directory — the ivfWrite.seeds reasoning)
-        () => draw
-          .filter(GraftFunctions.nearest(col("qv"), cells)
-            .getField("seed_id") === col("vec_id"))
+        () => Semantic.anchors(draw, cells)
           .select(col("vec_id").as("cell"), col("qv"))
           .repartition(1) // nlist rows, read whole by every probe: one file
           .write.mode("overwrite").parquet(s"$dir.cells"),

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSqlShims}
+import org.apache.spark.sql.catalyst.expressions.IntegralDivide
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableLog
@@ -190,10 +191,11 @@ object TextAnalysis {
     * even when the values agree, so micro-units ARE the contract.
     *
     * Determinism (the BASELINE.md oracle-portability contract): idf =
-    * ln((2N+2)/(2·df+1)) — a ratio of exact integers — evaluated via
-    * [[PortableLog]] (bit-identical on any engine) and floor-quantized to
-    * 1e-6 units; the tf/length-normalization factor is evaluated wholly in
-    * integer arithmetic as tfq6 = (22·tf·10⁶) div (10·tf + 3 + q) with
+    * ln((2N+2)/(2·df+1)) — a ratio of exact integers — evaluated by the
+    * compiled [[PortableLog.ln]] kernel (bit-identical to the oracle's SQL
+    * text on any engine) and floor-quantized to 1e-6 units; the
+    * tf/length-normalization factor is evaluated wholly in integer
+    * arithmetic as tfq6 = (22·tf·10⁶) div (10·tf + 3 + q) with
     * q = (9·dl·N) div L — the k1/b constants cleared to integers and the
     * avgdl ratio floor-quantized (|error| < 1 in a ≥ 10·tf+3 denominator;
     * documented deviation from real-division BM25, irrelevant to ranking).
@@ -210,18 +212,32 @@ object TextAnalysis {
   /** The BM25 integer arithmetic, shared verbatim by the in-plan scorers
     * and the materialized-index probe: consumes (tf, dl, df, nd, ltot)
     * columns, yields the per-(doc, term) micro-unit contribution `c6` and
-    * the per-doc BIGINT micro-unit sum (exact, order-free).
+    * the per-doc BIGINT micro-unit sum (exact, order-free). All three
+    * columns are built as Columns: idf6 runs the compiled [[PortableLog.ln]]
+    * kernel twice per row and the tf factor is plain BIGINT `div`, the same
+    * expressions and evaluation order the DuckDB oracle text spells out.
     */
   private def bm25Contribution(scored: DataFrame): DataFrame =
     scored
-      .withColumn("idf6", expr(
-        s"cast(floor((${PortableLog.lnSql("(2*nd + 2)", spark = true)} - " +
-          s"${PortableLog.lnSql("(2*df + 1)", spark = true)}) * 1000000.0D) as bigint)"))
-      .withColumn("tfq6", expr(
-        "(22L * tf * 1000000L) div (10L * tf + 3L + (9L * dl * nd) div ltot)"))
-      .withColumn("c6", expr("(idf6 * tfq6) div 1000000L"))
+      .withColumn("idf6", e6(PortableLog.ln(lit(2) * col("nd") + lit(2)) -
+        PortableLog.ln(lit(2) * col("df") + lit(1))))
+      .withColumn("tfq6", div(lit(22L) * col("tf") * lit(1000000L),
+        lit(10L) * col("tf") + lit(3L) + div(lit(9L) * col("dl") * col("nd"), col("ltot"))))
+      .withColumn("c6", div(col("idf6") * col("tfq6"), lit(1000000L)))
 
-  private val bm25SumExpr = expr("sum(c6)")
+  private val bm25SumExpr = sum(col("c6"))
+
+  /** `a div b`: Spark's BIGINT integral division, as the SQL operator. */
+  private def div(a: Column, b: Column): Column = GraftSqlShims.columnOf(
+    IntegralDivide(GraftSqlShims.expressionOf(a), GraftSqlShims.expressionOf(b)))
+
+  /** floor(x · 10⁶) as BIGINT micro-units. */
+  private def e6(x: Column): Column = floor(x * 1000000.0).cast("bigint")
+
+  /** lp6[num/den]: the [[PortableLog]] log10 of an exact integer ratio as
+    * BIGINT micro-units — the per-entry log-prob of the LM and DSIR tables.
+    */
+  private def lp6(num: Column, den: Column): Column = e6(PortableLog.log10Ratio(num, den))
 
   def bm25Score(docs: DataFrame, idCol: String, textCol: String,
       query: String): DataFrame = {
@@ -1037,10 +1053,8 @@ object TextAnalysis {
     val tf = tokens.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("w").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(countDistinct(Keys.id(docs, idCol)).as("nd"))
-    val idf = dfreq.crossJoin(broadcast(nDocs)).select(col("w"), expr(
-      PortableLog.floorDec6Sql(
-        PortableLog.log10RatioSql("nd", "df", spark = true), spark = true))
-      .as("idf"))
+    val idf = dfreq.crossJoin(broadcast(nDocs)).select(col("w"),
+      PortableLog.floorDec6(PortableLog.log10Ratio(col("nd"), col("df"))).as("idf"))
     Rank.topK(tf.join(broadcast(idf), "w").withColumn("score", col("tf") * col("idf")),
         Seq("doc_id"), Seq(col("score").desc, col("w").asc), k, "rnk")
       // 4dp by FLOOR of the exact decimal, not round(double, 4): a 6dp
@@ -1129,15 +1143,10 @@ object TextAnalysis {
     val total = freq.agg(sum("c").as("t"))
     val vocab = freq.crossJoin(broadcast(total))
       .orderBy(col("c").desc, col("w").asc).limit(topV)
-      .select(col("w"), expr(
-        PortableLog.floorDec6Sql(
-          PortableLog.log10RatioSql("c", "t", spark = true), spark = true))
-        .as("lp"))
-    val oov = total.select(expr(
-      PortableLog.floorDec6Sql(
-        PortableLog.log10RatioSql("cast(1 as bigint)", "t", spark = true),
-        spark = true))
-      .as("oov_lp"))
+      .select(col("w"),
+        PortableLog.floorDec6(PortableLog.log10Ratio(col("c"), col("t"))).as("lp"))
+    val oov = total.select(
+      PortableLog.floorDec6(PortableLog.log10Ratio(lit(1L), col("t"))).as("oov_lp"))
     tokens
       .join(broadcast(vocab), Seq("w"), "left")
       .crossJoin(broadcast(oov))
@@ -1212,15 +1221,10 @@ object TextAnalysis {
     val total = freq.agg(sum("c12").as("t"))
     val vocab = freq.join(ctx, "w1")
       .orderBy(col("c12").desc, col("w1").asc, col("w2").asc).limit(topV)
-      .select(col("w1"), col("w2"), expr(
-        PortableLog.floorDec6Sql(
-          PortableLog.log10RatioSql("c12", "c1", spark = true), spark = true))
-        .as("lp"))
-    val oov = total.select(expr(
-      PortableLog.floorDec6Sql(
-        PortableLog.log10RatioSql("cast(1 as bigint)", "t", spark = true),
-        spark = true))
-      .as("oov_lp"))
+      .select(col("w1"), col("w2"),
+        PortableLog.floorDec6(PortableLog.log10Ratio(col("c12"), col("c1"))).as("lp"))
+    val oov = total.select(
+      PortableLog.floorDec6(PortableLog.log10Ratio(lit(1L), col("t"))).as("oov_lp"))
     bigrams
       .join(broadcast(vocab), Seq("w1", "w2"), "left")
       .crossJoin(broadcast(oov))
@@ -1295,21 +1299,18 @@ object TextAnalysis {
     val ctx2 = freq2.groupBy("w2").agg(sum("c23").as("c2"))
     val freq1 = freq2.groupBy("w3").agg(sum("c23").as("c3"))
     val total = freq1.agg(sum("c3").as("t"))
-    def lp6(num: String, den: String): String =
-      s"cast(floor(${PortableLog.log10RatioSql(num, den, spark = true)} " +
-        "* 1000000.0D) as bigint)"
     val triV = freq3.join(ctx12, Seq("w1", "w2"))
       .orderBy(col("c123").desc, col("w1").asc, col("w2").asc, col("w3").asc)
       .limit(topV)
       .select(col("w1"), col("w2"), col("w3"),
-        expr(lp6("c123", "c12")).as("lp3"))
+        lp6(col("c123"), col("c12")).as("lp3"))
     val biV = freq2.join(ctx2, Seq("w2"))
       .orderBy(col("c23").desc, col("w2").asc, col("w3").asc).limit(topV)
-      .select(col("w2"), col("w3"), expr(lp6("2 * c23", "5 * c2")).as("lp2"))
+      .select(col("w2"), col("w3"), lp6(lit(2) * col("c23"), lit(5) * col("c2")).as("lp2"))
     val uniV = freq1.crossJoin(total)
       .orderBy(col("c3").desc, col("w3").asc).limit(topV)
-      .select(col("w3"), expr(lp6("4 * c3", "25 * t")).as("lp1"))
-    val oov = total.select(expr(lp6("cast(4 as bigint)", "25 * t")).as("lp0"))
+      .select(col("w3"), lp6(lit(4) * col("c3"), lit(25) * col("t")).as("lp1"))
+    val oov = total.select(lp6(lit(4L), lit(25) * col("t")).as("lp0"))
     val scored = target
       .join(broadcast(triV), Seq("w1", "w2", "w3"), "left")
       .join(broadcast(biV), Seq("w2", "w3"), "left")
@@ -1392,23 +1393,20 @@ object TextAnalysis {
       .agg(sum("c12").as("c1"), count(lit(1)).as("n1"))
     val cont = freq2.groupBy("w2").agg(count(lit(1)).as("nc"))
     val nb = freq2.agg(count(lit(1)).as("nb"))
-    def lp6(num: String, den: String): String =
-      s"cast(floor(${PortableLog.log10RatioSql(num, den, spark = true)} " +
-        "* 1000000.0D) as bigint)"
     // every branch precomputed on vocab-/topV-sized frames — the scoring
     // stage evaluates no log series
     val bgV = freq2.join(ctx, "w1").join(cont, "w2").crossJoin(nb)
       .orderBy(col("c12").desc, col("w1").asc, col("w2").asc).limit(topV)
       .select(col("w1"), col("w2"),
-        expr(lp6("(4 * c12 - 3) * nb + 3 * n1 * nc", "4 * c1 * nb"))
-          .as("lp12"))
+        lp6((lit(4) * col("c12") - lit(3)) * col("nb") + lit(3) * col("n1") * col("nc"),
+          lit(4) * col("c1") * col("nb")).as("lp12"))
     val ctxL = ctx.select(col("w1"),
-      expr(lp6("3 * n1", "4 * c1")).as("lp_ctx"))
+      lp6(lit(3) * col("n1"), lit(4) * col("c1")).as("lp_ctx"))
     val contL = cont.crossJoin(nb).select(col("w2"),
-      expr(lp6("nc", "nb")).as("lp_cont"))
+      lp6(col("nc"), col("nb")).as("lp_cont"))
     val consts = nb.select(
-      expr(lp6("cast(1 as bigint)", "nb")).as("lp_cont0"),
-      expr(lp6("cast(1 as bigint)", "4 * nb")).as("lp_oov"))
+      lp6(lit(1L), col("nb")).as("lp_cont0"),
+      lp6(lit(1L), lit(4) * col("nb")).as("lp_oov"))
     val lpSql =
       """CASE
         |  WHEN lp12 IS NOT NULL THEN lp12
@@ -1490,9 +1488,6 @@ object TextAnalysis {
     val ct = tgt.groupBy("f").agg(count(lit(1)).as("ct"))
     val cr = raw.groupBy("f").agg(count(lit(1)).as("cr"))
     val tots = ct.agg(sum("ct").as("tt")).crossJoin(cr.agg(sum("cr").as("tr")))
-    def lp6(num: String, den: String): String =
-      s"cast(floor(${PortableLog.log10RatioSql(num, den, spark = true)} " +
-        "* 1000000.0D) as bigint)"
     // FULL outer (r10 ADVICE): a bucket with target evidence but absent
     // from the raw sample keeps its ct (cr coalesced to 0) instead of
     // falling to the both-zero OOV weight — the paper's importance ratio
@@ -1500,11 +1495,11 @@ object TextAnalysis {
     // carry them; in-sample (target ⊆ raw) the branch never fires
     val weights = cr.join(ct, Seq("f"), "full").crossJoin(tots)
       .select(col("f"),
-        (expr(lp6("coalesce(ct, cast(0 as bigint)) + 1", s"tt + $nBuckets")) -
-          expr(lp6("coalesce(cr, cast(0 as bigint)) + 1", s"tr + $nBuckets"))).as("w6"))
+        (lp6(coalesce(col("ct"), lit(0L)) + lit(1), col("tt") + lit(nBuckets)) -
+          lp6(coalesce(col("cr"), lit(0L)) + lit(1), col("tr") + lit(nBuckets))).as("w6"))
     val oov = tots.select(lit(-1L).as("f"),
-      (expr(lp6("cast(1 as bigint)", s"tt + $nBuckets")) -
-        expr(lp6("cast(1 as bigint)", s"tr + $nBuckets"))).as("w6"))
+      (lp6(lit(1L), col("tt") + lit(nBuckets)) -
+        lp6(lit(1L), col("tr") + lit(nBuckets))).as("w6"))
     weights.unionByName(oov)
   }
 
@@ -1654,11 +1649,9 @@ object TextAnalysis {
       .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
     wc.groupBy("doc_id")
       .agg(sum("c").as("n_words"),
-        sum(expr("c * " + PortableLog.floorDec6Sql(
-          PortableLog.log2Sql("c", spark = true), spark = true))).as("__s"))
+        sum(col("c") * PortableLog.floorDec6(PortableLog.log2(col("c")))).as("__s"))
       .select(col("doc_id"), col("n_words"),
-        (floor((expr(PortableLog.floorDec6Sql(
-          PortableLog.log2Sql("n_words", spark = true), spark = true))
+        (floor((PortableLog.floorDec6(PortableLog.log2(col("n_words")))
           * col("n_words") - col("__s")) * 10000).cast("double") / 10000.0)
           .as("ent_sum"))
       .withColumn("entropy", col("ent_sum") / col("n_words"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -25,6 +25,9 @@ import graft.functions.PortableLog
   * side, a literal SELECT on the oracle side.
   */
 object CanaryQueries {
+
+  /** floor(x · 10⁶) as BIGINT micro-units. */
+  private def e6(x: Column): Column = floor(x * 1000000.0).cast("bigint")
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // DECIMAL(18,6) on the comparison surface — the r9 red class. Two
@@ -59,16 +62,14 @@ object CanaryQueries {
           .as("h60"))),
 
     // PortableLog's basic-op series on fixed integers (a prime near 1e6 and
-    // a power-of-two boundary neighbor), floor-quantized to e6 — any libm
-    // or fp-evaluation divergence in the driver's build lands exactly here
+    // a power-of-two boundary neighbor), floor-quantized to e6: the compiled
+    // kernel here, its SQL text on the oracle side — any libm or
+    // fp-evaluation divergence in the driver's build lands exactly here
     "q_canary_portable_log" -> ((s, _) =>
       s.range(1).select(
-        expr(s"cast(floor(${PortableLog.lnSql("1000003", spark = true)} " +
-          "* 1000000.0D) as bigint)").as("ln_prime_e6"),
-        expr(s"cast(floor(${PortableLog.lnSql("1048575", spark = true)} " +
-          "* 1000000.0D) as bigint)").as("ln_pow2m1_e6"),
-        expr(s"cast(floor(${PortableLog.log10RatioSql("999999937", "7", spark = true)} " +
-          "* 1000000.0D) as bigint)").as("log10_ratio_e6"))),
+        e6(PortableLog.ln(lit(1000003))).as("ln_prime_e6"),
+        e6(PortableLog.ln(lit(1048575))).as("ln_pow2m1_e6"),
+        e6(PortableLog.log10Ratio(lit(999999937), lit(7))).as("log10_ratio_e6"))),
 
     // the HALF_UP tie class this repo swept OFF its hash surfaces (r10):
     // round(double, 4) on .xxxx5 ties — if the driver's build rounds these
@@ -96,11 +97,11 @@ object CanaryQueries {
         |  ('0x' || substr(md5('graft-canary'), 1, 15))::BIGINT AS h60""".stripMargin,
 
     "q_canary_portable_log" ->
-      (s"SELECT CAST(floor(${PortableLog.lnSql("1000003", spark = false)} " +
+      (s"SELECT CAST(floor(${PortableLog.lnSql("1000003")} " +
         "* 1000000.0::DOUBLE) AS BIGINT) AS ln_prime_e6,\n" +
-        s"  CAST(floor(${PortableLog.lnSql("1048575", spark = false)} " +
+        s"  CAST(floor(${PortableLog.lnSql("1048575")} " +
         "* 1000000.0::DOUBLE) AS BIGINT) AS ln_pow2m1_e6,\n" +
-        s"  CAST(floor(${PortableLog.log10RatioSql("999999937", "7", spark = false)} " +
+        s"  CAST(floor(${PortableLog.log10RatioSql("999999937", "7")} " +
         "* 1000000.0::DOUBLE) AS BIGINT) AS log10_ratio_e6"),
 
     "q_canary_round_tie" ->

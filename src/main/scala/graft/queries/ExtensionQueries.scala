@@ -3063,8 +3063,8 @@ object ExtensionQueries {
       |dls AS (SELECT doc_id, len(ws)::BIGINT AS dl FROM w),
       |sc AS (SELECT qt.doc_id, qt.term,
       |""".stripMargin +
-      s"  CAST(floor((${PortableLog.lnSql("(2*nd + 2)", spark = false)} - " +
-      s"${PortableLog.lnSql("(2*df + 1)", spark = false)}) * 1000000.0::DOUBLE) AS BIGINT) AS idf6,\n" +
+      s"  CAST(floor((${PortableLog.lnSql("(2*nd + 2)")} - " +
+      s"${PortableLog.lnSql("(2*df + 1)")}) * 1000000.0::DOUBLE) AS BIGINT) AS idf6,\n" +
       """|  (22 * qt.tf * 1000000) // (10 * qt.tf + 3 + (9 * dls.dl * st.nd) // st.ltot) AS tfq6
       |  FROM qt JOIN dfp USING (term) JOIN dls USING (doc_id), st)""".stripMargin
   }
@@ -3528,13 +3528,13 @@ object ExtensionQueries {
           |cx2 AS (SELECT w2, sum(c23)::BIGINT AS c2 FROM f2 GROUP BY 1),
           |f1 AS (SELECT w3, sum(c23)::BIGINT AS c3 FROM f2 GROUP BY 1),
           |tot AS (SELECT sum(c3)::BIGINT AS t FROM f1),
-          |v3 AS (SELECT w1, w2, w3, floor(${PortableLog.log10RatioSql("c123", "c12", spark = false)} * 1000000.0::DOUBLE)::BIGINT AS lp3
+          |v3 AS (SELECT w1, w2, w3, floor(${PortableLog.log10RatioSql("c123", "c12")} * 1000000.0::DOUBLE)::BIGINT AS lp3
           |       FROM f3 JOIN cx12 USING (w1, w2) ORDER BY c123 DESC, w1, w2, w3 LIMIT 50),
-          |v2 AS (SELECT w2, w3, floor(${PortableLog.log10RatioSql("2 * c23", "5 * c2", spark = false)} * 1000000.0::DOUBLE)::BIGINT AS lp2
+          |v2 AS (SELECT w2, w3, floor(${PortableLog.log10RatioSql("2 * c23", "5 * c2")} * 1000000.0::DOUBLE)::BIGINT AS lp2
           |       FROM f2 JOIN cx2 USING (w2) ORDER BY c23 DESC, w2, w3 LIMIT 50),
-          |v1 AS (SELECT w3, floor(${PortableLog.log10RatioSql("4 * c3", "25 * t", spark = false)} * 1000000.0::DOUBLE)::BIGINT AS lp1
+          |v1 AS (SELECT w3, floor(${PortableLog.log10RatioSql("4 * c3", "25 * t")} * 1000000.0::DOUBLE)::BIGINT AS lp1
           |       FROM f1, tot ORDER BY c3 DESC, w3 LIMIT 50),
-          |o AS (SELECT floor(${PortableLog.log10RatioSql("4::BIGINT", "25 * t", spark = false)} * 1000000.0::DOUBLE)::BIGINT AS lp0 FROM tot)
+          |o AS (SELECT floor(${PortableLog.log10RatioSql("4::BIGINT", "25 * t")} * 1000000.0::DOUBLE)::BIGINT AS lp0 FROM tot)
           |SELECT doc_id, count(*) AS n_trigrams,
           |  sum(coalesce(lp3, lp2, lp1, lp0))::BIGINT AS sum_log10p_e6,
           |  sum(coalesce(lp3, lp2, lp1, lp0))::DOUBLE / 1000000.0 / count(*) AS avg_log10p
@@ -4205,7 +4205,7 @@ object ExtensionQueries {
           |  JOIN bw USING (doc_id) JOIN lg USING (doc_id)""".stripMargin),
 
     // BM25 restated: the same integer tf/length factors, the idf via the
-    // identical PortableLog basic-op sequence (spark=false dialect)
+    // identical PortableLog basic-op sequence (its DuckDB text)
     "q_bm25" -> (s"WITH ${bm25Ctes(Seq("data", "join", "slow", "vector"))}\n$bm25FinalSelect"),
 
     // the index probe must reproduce the in-plan scorer bit-for-bit — the
@@ -5088,12 +5088,12 @@ object ExtensionQueries {
         |        WHERE i <= len(ws)),
         |wc AS (SELECT doc_id, w, count(*)::BIGINT AS c FROM tok GROUP BY 1, 2),
         |d AS (SELECT doc_id, sum(c)::BIGINT AS n,
-        |        sum(c * ${PortableLog.floorDec6Sql(PortableLog.log2Sql("c", spark = false), spark = false)}) AS s
+        |        sum(c * ${PortableLog.floorDec6Sql(PortableLog.log2Sql("c"))}) AS s
         |      FROM wc GROUP BY 1)
         |SELECT doc_id, n AS n_words,
-        |  floor((${PortableLog.floorDec6Sql(PortableLog.log2Sql("n", spark = false), spark = false)} * n - s) * 10000)::DOUBLE
+        |  floor((${PortableLog.floorDec6Sql(PortableLog.log2Sql("n"))} * n - s) * 10000)::DOUBLE
         |    / 10000.0 AS ent_sum,
-        |  floor((${PortableLog.floorDec6Sql(PortableLog.log2Sql("n", spark = false), spark = false)} * n - s) * 10000)::DOUBLE
+        |  floor((${PortableLog.floorDec6Sql(PortableLog.log2Sql("n"))} * n - s) * 10000)::DOUBLE
         |    / 10000.0 / n AS entropy
         |FROM d""".stripMargin),
 
@@ -5372,7 +5372,7 @@ object ExtensionQueries {
         |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok GROUP BY 1, 2),
         |dfreq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1),
         |nd AS (SELECT count(DISTINCT doc_id)::BIGINT AS nd FROM documents),
-        |idf AS (SELECT w, ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("nd", "df", spark = false), spark = false)} AS idf
+        |idf AS (SELECT w, ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("nd", "df"))} AS idf
         |        FROM dfreq, nd),
         |sc AS (SELECT tf.doc_id, tf.w, tf.tf * idf.idf AS score FROM tf JOIN idf USING (w)),
         |rk AS (SELECT doc_id, w, score,
@@ -5702,9 +5702,9 @@ object ExtensionQueries {
         |            FROM documents),
         |f AS (SELECT w, count(*)::BIGINT AS c FROM w GROUP BY 1),
         |tot AS (SELECT sum(c)::BIGINT AS t FROM f),
-        |v AS (SELECT w, ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("c", "t", spark = false), spark = false)} AS lp
+        |v AS (SELECT w, ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("c", "t"))} AS lp
         |      FROM f, tot ORDER BY c DESC, w LIMIT 20),
-        |o AS (SELECT ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("1::BIGINT", "t", spark = false), spark = false)} AS oov_lp FROM tot)
+        |o AS (SELECT ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("1::BIGINT", "t"))} AS oov_lp FROM tot)
         |SELECT doc_id, count(*) AS n_tokens,
         |  floor(sum(coalesce(lp, oov_lp)) * 10000)::DOUBLE / 10000.0 AS sum_log10p,
         |  floor(sum(coalesce(lp, oov_lp)) * 10000)::DOUBLE / 10000.0 / count(*) AS avg_log10p
@@ -5723,9 +5723,9 @@ object ExtensionQueries {
         |f AS (SELECT w1, w2, count(*)::BIGINT AS c12 FROM bg GROUP BY 1, 2),
         |cx AS (SELECT w1, sum(c12)::BIGINT AS c1 FROM f GROUP BY 1),
         |tot AS (SELECT sum(c12)::BIGINT AS t FROM f),
-        |v AS (SELECT w1, w2, ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("c12", "c1", spark = false), spark = false)} AS lp
+        |v AS (SELECT w1, w2, ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("c12", "c1"))} AS lp
         |      FROM f JOIN cx USING (w1) ORDER BY c12 DESC, w1, w2 LIMIT 50),
-        |o AS (SELECT ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("1::BIGINT", "t", spark = false), spark = false)} AS oov_lp FROM tot)
+        |o AS (SELECT ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("1::BIGINT", "t"))} AS oov_lp FROM tot)
         |SELECT doc_id, count(*) AS n_bigrams,
         |  floor(sum(coalesce(lp, oov_lp)) * 10000)::DOUBLE / 10000.0 AS sum_log10p,
         |  floor(sum(coalesce(lp, oov_lp)) * 10000)::DOUBLE / 10000.0 / count(*) AS avg_log10p
@@ -5746,9 +5746,9 @@ object ExtensionQueries {
         |f AS (SELECT w1, w2, count(*)::BIGINT AS c12 FROM rbg GROUP BY 1, 2),
         |cx AS (SELECT w1, sum(c12)::BIGINT AS c1 FROM f GROUP BY 1),
         |tot AS (SELECT sum(c12)::BIGINT AS t FROM f),
-        |v AS (SELECT w1, w2, ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("c12", "c1", spark = false), spark = false)} AS lp
+        |v AS (SELECT w1, w2, ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("c12", "c1"))} AS lp
         |      FROM f JOIN cx USING (w1) ORDER BY c12 DESC, w1, w2 LIMIT 50),
-        |o AS (SELECT ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("1::BIGINT", "t", spark = false), spark = false)} AS oov_lp FROM tot)
+        |o AS (SELECT ${PortableLog.floorDec6Sql(PortableLog.log10RatioSql("1::BIGINT", "t"))} AS oov_lp FROM tot)
         |SELECT doc_id, count(*) AS n_bigrams,
         |  floor(sum(coalesce(lp, oov_lp)) * 10000)::DOUBLE / 10000.0 AS sum_log10p,
         |  floor(sum(coalesce(lp, oov_lp)) * 10000)::DOUBLE / 10000.0 / count(*) AS avg_log10p
@@ -5872,22 +5872,17 @@ object ExtensionQueries {
         |ct AS (SELECT w2, count(*)::BIGINT AS nc FROM f2 GROUP BY 1),
         |nbt AS (SELECT count(*)::BIGINT AS nb FROM f2),
         |v2 AS (SELECT w1, w2, floor(${PortableLog.log10RatioSql(
-             "(4 * c12 - 3) * nb + 3 * n1 * nc", "4 * c1 * nb",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT AS lp12
+             "(4 * c12 - 3) * nb + 3 * n1 * nc", "4 * c1 * nb")} * 1000000.0::DOUBLE)::BIGINT AS lp12
         |       FROM f2 JOIN cx USING (w1) JOIN ct USING (w2), nbt
         |       ORDER BY c12 DESC, w1, w2 LIMIT 50),
         |cxl AS (SELECT w1, floor(${PortableLog.log10RatioSql(
-             "3 * n1", "4 * c1",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT AS lp_ctx FROM cx),
+             "3 * n1", "4 * c1")} * 1000000.0::DOUBLE)::BIGINT AS lp_ctx FROM cx),
         |ctl AS (SELECT w2, floor(${PortableLog.log10RatioSql(
-             "nc", "nb",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT AS lp_cont FROM ct, nbt),
+             "nc", "nb")} * 1000000.0::DOUBLE)::BIGINT AS lp_cont FROM ct, nbt),
         |ko AS (SELECT floor(${PortableLog.log10RatioSql(
-             "1::BIGINT", "nb",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT AS lp_cont0,
+             "1::BIGINT", "nb")} * 1000000.0::DOUBLE)::BIGINT AS lp_cont0,
         |              floor(${PortableLog.log10RatioSql(
-             "1::BIGINT", "4 * nb",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT AS lp_oov FROM nbt),
+             "1::BIGINT", "4 * nb")} * 1000000.0::DOUBLE)::BIGINT AS lp_oov FROM nbt),
         |lp AS (SELECT doc_id,
         |  CASE
         |    WHEN lp12 IS NOT NULL THEN lp12
@@ -5918,11 +5913,9 @@ object ExtensionQueries {
         |                (SELECT sum(cr) FROM cr)::BIGINT AS tr),
         |wt AS (SELECT f,
         |    (floor(${PortableLog.log10RatioSql(
-             "coalesce(ct, 0::BIGINT) + 1", "tt + 256",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT
+             "coalesce(ct, 0::BIGINT) + 1", "tt + 256")} * 1000000.0::DOUBLE)::BIGINT
         |     - floor(${PortableLog.log10RatioSql(
-             "coalesce(cr, 0::BIGINT) + 1", "tr + 256",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT) AS w6
+             "coalesce(cr, 0::BIGINT) + 1", "tr + 256")} * 1000000.0::DOUBLE)::BIGINT) AS w6
         |  FROM cr FULL JOIN ct USING (f), tots)
         |SELECT doc_id, count(*)::BIGINT AS n_tokens, sum(w6)::BIGINT AS dsir_e6
         |FROM tok JOIN wt USING (f) GROUP BY doc_id""".stripMargin),
@@ -5943,17 +5936,13 @@ object ExtensionQueries {
         |                (SELECT sum(cr) FROM cr)::BIGINT AS tr),
         |wt AS (SELECT f,
         |    (floor(${PortableLog.log10RatioSql(
-             "coalesce(ct, 0::BIGINT) + 1", "tt + 1024",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT
+             "coalesce(ct, 0::BIGINT) + 1", "tt + 1024")} * 1000000.0::DOUBLE)::BIGINT
         |     - floor(${PortableLog.log10RatioSql(
-             "coalesce(cr, 0::BIGINT) + 1", "tr + 1024",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT) AS w6
+             "coalesce(cr, 0::BIGINT) + 1", "tr + 1024")} * 1000000.0::DOUBLE)::BIGINT) AS w6
         |  FROM cr FULL JOIN ct USING (f), tots),
         |ov AS (SELECT
-        |    (floor(${PortableLog.log10RatioSql("1::BIGINT", "tt + 1024",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT
-        |     - floor(${PortableLog.log10RatioSql("1::BIGINT", "tr + 1024",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT) AS w0
+        |    (floor(${PortableLog.log10RatioSql("1::BIGINT", "tt + 1024")} * 1000000.0::DOUBLE)::BIGINT
+        |     - floor(${PortableLog.log10RatioSql("1::BIGINT", "tr + 1024")} * 1000000.0::DOUBLE)::BIGINT) AS w0
         |  FROM tots)
         |SELECT doc_id, count(*)::BIGINT AS n_tokens,
         |  sum(coalesce(w6, w0))::BIGINT AS dsir_e6
@@ -5972,11 +5961,9 @@ object ExtensionQueries {
         |                (SELECT sum(cr) FROM cr)::BIGINT AS tr),
         |wt AS (SELECT f,
         |    (floor(${PortableLog.log10RatioSql(
-             "coalesce(ct, 0::BIGINT) + 1", "tt + 256",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT
+             "coalesce(ct, 0::BIGINT) + 1", "tt + 256")} * 1000000.0::DOUBLE)::BIGINT
         |     - floor(${PortableLog.log10RatioSql(
-             "coalesce(cr, 0::BIGINT) + 1", "tr + 256",
-             spark = false)} * 1000000.0::DOUBLE)::BIGINT) AS w6
+             "coalesce(cr, 0::BIGINT) + 1", "tr + 256")} * 1000000.0::DOUBLE)::BIGINT) AS w6
         |  FROM cr FULL JOIN ct USING (f), tots)
         |SELECT doc_id, count(*)::BIGINT AS n_tokens, sum(w6)::BIGINT AS dsir_e6
         |FROM tok JOIN wt USING (f) GROUP BY doc_id

@@ -16,23 +16,6 @@ import graft.functions.{GraftFunctions, Seeds}
   */
 class KernelsSpec extends SparkSpec {
 
-  private def modes(f: => Unit): Unit =
-    for ((factory, compiled) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false");
-         ansi <- Seq("true", "false")) {
-      val confs = Seq("spark.sql.codegen.factoryMode" -> factory,
-        "spark.sql.codegen.wholeStage" -> compiled,
-        // a generated-code compile failure must fail, not fall back quietly
-        "spark.sql.codegen.fallback" -> (if (compiled == "true") "false" else "true"),
-        "spark.sql.ansi.enabled" -> ansi)
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try withClue(s"[$factory, ansi=$ansi] ")(f)
-      finally confs.foreach { case (k, _) => spark.conf.unset(k) }
-    }
-
-  /** Rows from an RDD, so no optimizer rule folds the projection away. */
-  private def frame(schema: StructType, rows: Row*): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-
   /** The rows, or the error condition the query raised. */
   private def outcome(df: => DataFrame, order: String): Either[String, Seq[Row]] =
     try Right(df.orderBy(order).collect().toSeq)
@@ -67,7 +50,7 @@ class KernelsSpec extends SparkSpec {
       Row(7, seq(3000000000L, -7L), seq(-3000000000L, 7L)))
     val overflow = frame(schema, Row(1, seq(Long.MaxValue), seq(-1L)))
     val square = frame(schema, Row(1, seq(null, 4000000000L), seq(1L, -4000000000L)))
-    modes {
+    evalModes {
       for (df <- Seq(values, overflow, square))
         same(df.select(col("id"), GraftFunctions.l2sq(col("a"), col("b"))),
           df.select(col("id"), expr(lambdaL2)), "id")
@@ -84,7 +67,7 @@ class KernelsSpec extends SparkSpec {
       Row(3, fs(null, 0.5f)),
       Row(4, fs()),
       Row(5, fs(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity)))
-    modes {
+    evalModes {
       same(df.select(col("id"), GraftFunctions.quantize6(col("v"))),
         df.select(col("id"),
           expr("transform(v, x -> floor(cast(x as double) * 1000000.0d + 0.5d))")), "id")
@@ -108,7 +91,7 @@ class KernelsSpec extends SparkSpec {
       "one row" -> Seq(Row(4L, seq(1L, 1L))))
     for ((label, rows) <- seedSets) withClue(s"$label: ") {
       val seeds = frame(seedSchema, rows: _*)
-      modes {
+      evalModes {
         val frozen = Seeds.collect(seeds, "seed_id", "sv")
         same(vecs.select(col("vec_id"), GraftFunctions.nearest(col("qv"), frozen).as("m"))
             .select(col("vec_id"), col("m.d2"), col("m.seed_id")),
@@ -143,7 +126,7 @@ class KernelsSpec extends SparkSpec {
 
   test("pqEncode: per-subspace packed-key argmin — ties on rank, null and short vectors") {
     val (m, dsub) = (2, 2)
-    modes {
+    evalModes {
       val frozen = Seeds.collect(codebook, "r", "sv")
       val keys = (0 until m).map(j => min(col(s"d$j") * 64 + col("r")).as(s"k$j"))
       same(pqVecs.select(col("vec_id"), GraftFunctions.pqEncode(col("qv"), frozen, m, dsub)),
@@ -158,7 +141,7 @@ class KernelsSpec extends SparkSpec {
 
   test("pqLut: flattened j-major table in rank order, null and short queries") {
     val (m, dsub) = (2, 2)
-    modes {
+    evalModes {
       val frozen = Seeds.collect(codebook, "r", "sv")
       val fields = col("r") +: (0 until m).map(j => col(s"d$j"))
       same(pqVecs.select(col("vec_id"), lit(frozen.size),
@@ -192,7 +175,7 @@ class KernelsSpec extends SparkSpec {
     val short = frame(schema, Row(1, bs(1.toByte), lut, 3))
     val outOfLut = frame(schema, Row(1, bs(0.toByte, 9.toByte), lut, 3))
     val nullBeforeShort = frame(schema, Row(1, bs(null.asInstanceOf[java.lang.Byte]), lut, 3))
-    modes {
+    evalModes {
       for (df <- Seq(values, short, outOfLut, nullBeforeShort))
         same(df.select(col("id"),
             GraftFunctions.adcDist(col("codes"), col("lut"), col("ks"), m).cast("long")),

@@ -834,6 +834,29 @@ class PlanSpec extends SparkSpec {
       s"every batch window must partition by query_id:\n$winSpecs")
   }
 
+  test("text scoring runs the compiled portable_ln kernel, never the parsed bin/shiftleft series") {
+    import spark.implicits._
+    import graft.operators.TextAnalysis
+    val docs = graft.sources.Tables(spark, sfDir, "documents")
+    val ref = docs.filter(col("source") === "src0")
+    val qs = Seq(("q1", "data join"), ("q2", "slow table")).toDF("query_id", "qtext")
+    val ops = Seq(
+      "bm25ScoreBatch" -> TextAnalysis.bm25ScoreBatch(docs, "doc_id", "text",
+        qs, "query_id", "qtext", k = 5),
+      "tfidfTopTerms" -> TextAnalysis.tfidfTopTerms(docs, "doc_id", "text"),
+      "backoffLogProb" -> TextAnalysis.backoffLogProb(ref, docs, "doc_id", "text", topV = 50),
+      "kneserNeyLogProb" -> TextAnalysis.kneserNeyLogProb(ref, docs, "doc_id", "text",
+        topV = 50),
+      "dsirWeights" -> TextAnalysis.dsirWeights(ref, docs, "doc_id", "text", nBuckets = 256),
+      "wordEntropy" -> TextAnalysis.wordEntropy(docs, "doc_id", "text"))
+    try ops.foreach { case (label, df) =>
+      val plan = df.queryExecution.analyzed.toString
+      assert(plan.contains("portable_ln("), s"$label must call the kernel:\n$plan")
+      assert("""\b(bin|shiftleft)\(""".r.findFirstIn(plan).isEmpty,
+        s"$label must not run the SQL-text series:\n$plan")
+    } finally graft.operators.Caches.release(spark)
+  }
+
   test("robots filter: host-keyed equi-join + map-side-combined verdict max, never cartesian") {
     import spark.implicits._
     val rules = Seq(("h0.example.com", false, "/a/"),

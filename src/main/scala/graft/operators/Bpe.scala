@@ -46,8 +46,7 @@ object Bpe {
     val seg = train(docs, idCol, textCol, numMerges)._2
       .select(col("w"), size(col("syms")).as("n_syms"))
     val counts = docs.select(Keys.id(docs, idCol).as("doc_id"),
-      explode(filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
-        x => length(x) > 0)).as("w"))
+      explode(TextAnalysis.words(coalesce(col(textCol), lit("")))).as("w"))
       .join(seg, "w")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"), sum("n_syms").as("n_bpe_tokens"))
@@ -67,8 +66,7 @@ object Bpe {
       numMerges: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
     require(numMerges >= 1 && numMerges <= 1000, "need 1 <= numMerges <= 1000")
     var words = docs
-      .select(explode(filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
-        x => length(x) > 0)).as("w"))
+      .select(explode(TextAnalysis.words(coalesce(col(textCol), lit("")))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(col("w"), col("cnt"), split(col("w"), "").as("syms"))
       .localCheckpoint()

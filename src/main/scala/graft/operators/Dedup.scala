@@ -32,7 +32,7 @@ object Dedup {
   def shingles(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     Par.spread(docs)
       .select(Keys.id(docs, idCol).as("doc_id"),
-        filter(split(lower(col(textCol)), "\\s+"), w => length(w) > 0).as("w"))
+        TextAnalysis.words(col(textCol)).as("w"))
       .select(col("doc_id"), explode(shingleArrayExpr(n)).as("sh"))
       .distinct()
 
@@ -515,7 +515,7 @@ object Dedup {
     // serially, 5-7 s per pass at sf0.1)
     Par.spread(
       docs.select(Keys.id(docs, idCol).as("doc_id"),
-          filter(split(lower(col(textCol)), "\\s+"), w => length(w) > 0).as("w"))
+          TextAnalysis.words(col(textCol)).as("w"))
         .filter(size(col("w")) >= n))
       .select(col("doc_id"), array_distinct(shingleArrayExpr(n)).as("shs"))
 
@@ -651,16 +651,9 @@ object Dedup {
     // ACROSS bands (the band is hashed into the salt), so a pair sharing k hot
     // buckets still collides with
     // prob 1-(1-1/nsplit)^k, and `clusters()` transitively reconnects the
-    // component even when individual pairs are dropped. The width count is a
-    // map-side-combined aggregate over the narrow bucket stream and the hot
-    // list is tiny by construction (only skewed keys), hence broadcastable.
-    val hot = buckets.groupBy("band", "bh").count()
-      .filter(col("count") > maxBucket)
-      .select(col("band"), col("bh"),
-        ceil(col("count") / maxBucket).cast("int").as("nsplit"))
-    val salted = buckets.join(broadcast(hot), Seq("band", "bh"), "left")
-      .withColumn("salt", when(col("nsplit").isNull, lit(0)).otherwise(
-        pmod(xxhash64(col("band"), col("doc_id")), col("nsplit")).cast("int")))
+    // component even when individual pairs are dropped ([[saltHot]]).
+    val salted = saltHot(buckets, Seq("band", "bh"), maxBucket,
+        Seq(col("band"), col("doc_id")))._1
       .select("doc_id", "band", "bh", "salt")
     val cand = salted.as("x")
       .join(salted.as("y"), Seq("band", "bh", "salt"))
@@ -790,8 +783,7 @@ object Dedup {
       else xxhash64(col("tok"))
     val tokens = Par.spread(docs)
       .select(Keys.id(docs, idCol).as("doc_id"),
-        explode(split(lower(col(textCol)), "\\s+")).as("tok"))
-      .filter(length(col("tok")) > 0)
+        explode(TextAnalysis.words(col(textCol))).as("tok"))
       .select(col("doc_id"), hashCol.as("h"))
 
     // per-bit balance: +1 when bit set, -1 otherwise; all sums in one aggregate pass
@@ -878,14 +870,8 @@ object Dedup {
     val blocked = reps
       .select(col("rep_id"), col("fp"), explode(array(chunks: _*)).as("b"))
       .select(col("rep_id"), col("fp"), col("b.chunk").as("chunk"), col("b.ch").as("ch"))
-    val hot = blocked.groupBy("chunk", "ch").count()
-      .filter(col("count") > maxBucket)
-      .select(col("chunk"), col("ch"),
-        ceil(col("count") / maxBucket).cast("int").as("nsplit"))
-    val salted = blocked.join(broadcast(hot), Seq("chunk", "ch"), "left")
-      .withColumn("salt", when(col("nsplit").isNull, lit(0)).otherwise(
-        pmod(xxhash64(col("chunk"), col("ch"), col("rep_id")), col("nsplit"))
-          .cast("int")))
+    val salted = saltHot(blocked, Seq("chunk", "ch"), maxBucket,
+        Seq(col("chunk"), col("ch"), col("rep_id")))._1
       .select("rep_id", "fp", "chunk", "ch", "salt")
     val repPairs = salted.as("x").join(salted.as("y"), Seq("chunk", "ch", "salt"))
       .filter(col("x.rep_id") < col("y.rep_id"))
@@ -896,6 +882,38 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
     (fps, reps, repPairs)
   }
+
+  /** Hot-bucket salting, shared by every LSH blocking join here: a bucket
+    * (one `key` value) holding more than `maxBucket` rows is split into
+    * nsplit = ceil(count / maxBucket) salt groups, a row's salt being
+    * pmod(xxhash64(hashCols…), nsplit); rows of every other bucket get salt
+    * 0. Returns `rows` plus `salt` (and the join's `nsplit`), and the hot
+    * list itself, (key…, nsplit) — tiny by construction (only skewed keys),
+    * so it is broadcast, and a bipartite caller hands it to [[replicateHot]]
+    * for the probe side. The width count is a map-side-combined aggregate
+    * over the narrow bucket stream.
+    */
+  private def saltHot(rows: DataFrame, key: Seq[String], maxBucket: Int,
+      hashCols: Seq[Column]): (DataFrame, DataFrame) = {
+    val hot = rows.groupBy(key.map(col): _*).count()
+      .filter(col("count") > maxBucket)
+      .select(key.map(col) :+
+        ceil(col("count") / maxBucket).cast("int").as("nsplit"): _*)
+    val salted = rows.join(broadcast(hot), key, "left")
+      .withColumn("salt", when(col("nsplit").isNull, lit(0)).otherwise(
+        pmod(xxhash64(hashCols: _*), col("nsplit")).cast("int")))
+    (salted, hot)
+  }
+
+  /** The probe side of a [[saltHot]] join: each row of a hot bucket is
+    * replicated across all of its nsplit salts (every other row keeps salt
+    * 0), so it still meets every salted row of its bucket exactly once.
+    */
+  private def replicateHot(rows: DataFrame, hot: DataFrame,
+      key: Seq[String]): DataFrame =
+    rows.join(broadcast(hot), key, "left")
+      .withColumn("salt", explode(when(col("nsplit").isNull, array(lit(0)))
+        .otherwise(sequence(lit(0), col("nsplit") - 1))))
 
   /** The pigeonhole band key structs for a 64-bit fingerprint at `maxHamming`:
     * maxHamming+1 chunks of 64/(maxHamming+1) bits (the last chunk absorbs
@@ -1010,20 +1028,12 @@ object Dedup {
     // still meets every probe row of its bucket), so the check stays exact at
     // every maxBucket; the replication cost lands on the small batch side.
     val stateB = state.select(col("chunk"), col("ch"), col("fp").as("hfp"))
-    val hot = stateB.groupBy("chunk", "ch").count()
-      .filter(col("count") > maxBucket)
-      .select(col("chunk"), col("ch"),
-        ceil(col("count") / maxBucket).cast("int").as("nsplit"))
-    val saltedState = stateB.join(broadcast(hot), Seq("chunk", "ch"), "left")
-      .withColumn("salt", when(col("nsplit").isNull, lit(0)).otherwise(
-        pmod(xxhash64(col("hfp")), col("nsplit")).cast("int")))
-      .select("chunk", "ch", "salt", "hfp")
-    val saltedProbe = repBands.join(broadcast(hot), Seq("chunk", "ch"), "left")
-      .select(col("fp"), col("chunk"), col("ch"),
-        explode(when(col("nsplit").isNull, array(lit(0)))
-          .otherwise(sequence(lit(0), col("nsplit") - 1))).as("salt"))
-    val hits = saltedProbe
-      .join(saltedState, Seq("chunk", "ch", "salt"))
+    val (saltedState, hot) =
+      saltHot(stateB, Seq("chunk", "ch"), maxBucket, Seq(col("hfp")))
+    val saltedProbe = replicateHot(repBands, hot, Seq("chunk", "ch"))
+    val hits = saltedProbe.select("fp", "chunk", "ch", "salt")
+      .join(saltedState.select("chunk", "ch", "salt", "hfp"),
+        Seq("chunk", "ch", "salt"))
       .select("fp", "hfp").distinct()
       .filter(bit_count(col("fp").bitwiseXOR(col("hfp"))) <= maxHamming)
       .select("fp").distinct()
@@ -1311,13 +1321,8 @@ object Dedup {
     require(maxBucket > 1, "maxBucket must be > 1")
     val key = within ++ Seq("band", "bh")
     val buckets = lshBuckets(emb, idCol, vecCol, threshold, within).cache()
-    val hot = buckets.groupBy(key.map(col): _*).count()
-      .filter(col("count") > maxBucket)
-      .select(key.map(col) :+
-        ceil(col("count") / maxBucket).cast("int").as("nsplit"): _*)
-    val salted = buckets.join(broadcast(hot), key, "left")
-      .withColumn("salt", when(col("nsplit").isNull, lit(0)).otherwise(
-        pmod(xxhash64(col("band"), col("vec_id")), col("nsplit")).cast("int")))
+    val salted = saltHot(buckets, key, maxBucket,
+        Seq(col("band"), col("vec_id")))._1
       .select(col("vec_id") +: col("v") +: (key :+ "salt").map(col): _*)
     verifyPairs(
       salted.as("x").join(salted.as("y"), key :+ "salt")
@@ -1342,24 +1347,18 @@ object Dedup {
     * Cache lifecycle: caches the right bucket frame (width aggregate + join
     * side); [[Caches.release]], as everywhere.
     */
-  private[operators] def embeddingPairsBetween(left: DataFrame, right: DataFrame,
+  private[graft] def embeddingPairsBetween(left: DataFrame, right: DataFrame,
       idCol: String, vecCol: String, threshold: Double,
       maxBucket: Int = 1024, within: Seq[String] = Nil): DataFrame = {
     require(maxBucket > 1, "maxBucket must be > 1")
     val key = within ++ Seq("band", "bh")
     val lB = lshBuckets(left, idCol, vecCol, threshold, within)
     val rB = lshBuckets(right, idCol, vecCol, threshold, within).cache()
-    val hot = rB.groupBy(key.map(col): _*).count()
-      .filter(col("count") > maxBucket)
-      .select(key.map(col) :+
-        ceil(col("count") / maxBucket).cast("int").as("nsplit"): _*)
-    val rS = rB.join(broadcast(hot), key, "left")
-      .withColumn("salt", when(col("nsplit").isNull, lit(0)).otherwise(
-        pmod(xxhash64(col("band"), col("vec_id")), col("nsplit")).cast("int")))
+    val (rSalted, hot) =
+      saltHot(rB, key, maxBucket, Seq(col("band"), col("vec_id")))
+    val rS = rSalted
       .select(col("vec_id") +: col("v") +: (key :+ "salt").map(col): _*)
-    val lS = lB.join(broadcast(hot), key, "left")
-      .withColumn("salt", explode(when(col("nsplit").isNull, array(lit(0)))
-        .otherwise(sequence(lit(0), col("nsplit") - 1))))
+    val lS = replicateHot(lB, hot, key)
       .select(col("vec_id") +: col("v") +: (key :+ "salt").map(col): _*)
     verifyPairs(
       lS.as("x").join(rS.as("y"), key :+ "salt")

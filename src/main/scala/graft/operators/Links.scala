@@ -168,6 +168,107 @@ object Links {
       .groupBy("src_host", "dst_host")
       .agg(count(lit(1)).as("n_links"))
 
+  /** The edge set every graph operator here starts from: `srcCol`/`dstCol`
+    * as (src, dst), edges with a null end and self edges dropped, then
+    * distinct — or, given `weightCol`, (src, dst, w) with the BIGINT weights
+    * summed per pair. A caller wanting a symmetric graph passes the union of
+    * both directions.
+    */
+  private def edgeSet(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String] = None): DataFrame = {
+    val e = edges.select(Seq(col(srcCol).as("src"), col(dstCol).as("dst")) ++
+        weightCol.map(w => col(w).cast("long").as("w")): _*)
+      .filter(col("src").isNotNull && col("dst").isNotNull &&
+        col("src") =!= col("dst"))
+    if (weightCol.isEmpty) e.distinct()
+    else e.groupBy("src", "dst").agg(sum("w").as("w"))
+  }
+
+  /** The flow frame [[dampedRank]] reads, pinned once (its shuffle stages
+    * run when the pin is created, see [[Par.sever]]): (keys…, src, dst,
+    * num, den) over an edge set `e` of (keys…, src, dst[, w]), where a
+    * node of rank r sends (r·num) div den along each out-edge.
+    *  - Unweighted: num = 1, den = outdeg(src) — the classic r div outdeg.
+    *  - `weighted` (`e` carries w): the weights are quantized per source to
+    *    basis points, num = wq = (w·10⁴) div Σw and den = 10⁴, which keeps
+    *    every product r·wq ≤ Scale·10⁴ = 1e16 — exact BIGINT whatever the
+    *    raw weight magnitudes (r·w directly would overflow at web-scale link
+    *    counts). Σwq ≤ 10⁴, so mass leaks by ≤ outdeg/10⁴ per step — the
+    *    dropped-dangling-mass class.
+    * One aggregate and one join per call; no round recomputes them.
+    */
+  private[operators] def flow(e: DataFrame, keys: Seq[String] = Nil,
+      weighted: Boolean = false): DataFrame = {
+    val bySrc = keys :+ "src"
+    val out = e.groupBy(bySrc.map(col): _*)
+      .agg((if (weighted) sum("w") else count(lit(1))).as("out"))
+    e.join(out, bySrc)
+      .select(bySrc.map(col) ++ Seq(col("dst"),
+        (if (weighted) expr("(w * 10000L) div out") else lit(1L)).as("num"),
+        (if (weighted) lit(10000L) else col("out")).as("den")): _*)
+      .localCheckpoint(eager = false)
+  }
+
+  /** The damped fixed-point rank recurrence — ONE definition feeds
+    * [[pageRank]], [[pageRankFrom]], [[pageRankWeighted]], [[trustRank]]
+    * and [[TextAnalysis.textRankKeywords]], so the arithmetic can never
+    * fork. Ranks are BIGINTs keyed by (keys…, node); per round
+    *
+    *   r'(v) = teleport(v) + dampBp · coalesce(Σ_{u→v} (r(u)·num) div den, 0) div 10⁴
+    *
+    * over the caller's pinned [[flow]] frame, where `teleport` is a column
+    * over `nodes` (keys…, node, …), the frame that lists every node. Every
+    * operand is non-negative, so truncating division is floor in both Spark
+    * (`div`) and the oracle engine (`//`) — exact integer arithmetic,
+    * bit-identical across engines. Spark's `/` would be double division
+    * (and dampBp·Σ brushes 2^53). Each round is one equi-join of the ranks
+    * onto the flow plus one hash aggregate on the destination, then a
+    * localCheckpoint so the plan does not deepen with `iters` — which runs
+    * the round's shuffle stages as it is created ([[Par.sever]]).
+    */
+  private[operators] def dampedRank(flow: DataFrame, nodes: DataFrame,
+      teleport: Column, ranks0: DataFrame, keys: Seq[String], node: String,
+      iters: Int, dampBp: Int): DataFrame = {
+    val kc = keys.map(col)
+    var ranks = ranks0
+    for (_ <- 1 to iters) {
+      val contrib = ranks.select(kc :+ col(node).as("src") :+ col("rank"): _*)
+        .join(flow, keys :+ "src")
+        .groupBy(kc :+ col("dst").as(node): _*)
+        .agg(sum(expr("(rank * num) div den")).as("contrib"))
+      ranks = nodes.join(contrib, keys :+ node, "left")
+        .select(kc :+ col(node) :+ (teleport +
+          expr(s"(${dampBp}L * coalesce(contrib, 0L)) div 10000L")).as("rank"): _*)
+        .localCheckpoint(eager = false)
+    }
+    ranks
+  }
+
+  private def requireRank(iters: Int, dampBp: Int): Unit = {
+    require(iters >= 0 && iters <= 50, "need 0 <= iters <= 50")
+    require(dampBp >= 0 && dampBp <= 10000, "dampBp is basis points")
+  }
+
+  /** The fixed-point unit of every [[dampedRank]] rank: 1e-12. */
+  private[operators] val Scale = 1000000000000L
+
+  /** Every host of a host-keyed flow frame: (host). */
+  private def hostsOf(f: DataFrame): DataFrame =
+    f.select(col("src").as("host")).union(f.select(col("dst").as("host"))).distinct()
+
+  /** [[dampedRank]] over every host of `f` with the uniform teleport
+    * (10⁴−dampBp)·Scale div N div 10⁴; `ranks0` gives round 0 from the
+    * (host) frame and N. An empty graph yields an empty (host, rank).
+    */
+  private def uniformRank(f: DataFrame, iters: Int, dampBp: Int)(
+      ranks0: (DataFrame, Long) => DataFrame): DataFrame = {
+    val nodes = hostsOf(f)
+    val n = nodes.count()
+    if (n == 0) return nodes.withColumn("rank", lit(0L))
+    dampedRank(f, nodes, lit((10000L - dampBp) * Scale / n / 10000L),
+      ranks0(nodes, n), Nil, "host", iters, dampBp)
+  }
+
   /** Fixed-point PageRank over a (src_host, dst_host) edge set.
     *
     * Rank is a BIGINT in units of 1e-12 (`Scale`); with damping `dampBp`
@@ -186,58 +287,15 @@ object Links {
     * consumes). Overflow headroom: dampBp·Σcontrib ≤ 1e4·1e12 = 1e16 ≪ 2^63.
     *
     * Output: (host, rank) for every host that appears as src or dst.
-    * Scale shape: the node/degree frames are one aggregate each; each
-    * iteration is one equi-join on `src` + one hash aggregate on `dst` —
-    * all shuffles keyed by host, AQE-coalesced, with `localCheckpoint`
-    * per round so the plan does not deepen with the iteration count.
+    * Scale shape: the flow frame is one aggregate and one join, pinned;
+    * each iteration is one equi-join on `src` + one hash aggregate on `dst`
+    * ([[dampedRank]]) — all shuffles keyed by host, AQE-coalesced.
     */
   def pageRank(edges: DataFrame, iters: Int = 3, dampBp: Int = 8500,
       srcCol: String = "src_host", dstCol: String = "dst_host"): DataFrame = {
-    require(iters >= 0 && iters <= 50, "need 0 <= iters <= 50")
-    require(dampBp >= 0 && dampBp <= 10000, "dampBp is basis points")
-    val Scale = 1000000000000L
-    // lazy localCheckpoint: the edge set is re-read every iteration — pin it
-    // once instead of recomputing the distinct per round
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(eager = false)
-    val nodes = e.select(col("src").as("host"))
-      .union(e.select(col("dst").as("host"))).distinct()
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val n = nodes.count()
-    if (n == 0) return nodes.withColumn("rank", lit(0L))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ranks0 = nodes.withColumn("rank", lit(Scale / n))
-    pageRankLoop(e, nodes, deg, n, ranks0, iters, dampBp)
-  }
-
-  /** The shared damped-recurrence loop — ONE definition feeds [[pageRank]]
-    * and [[pageRankFrom]] so the arithmetic can never fork.
-    */
-  private def pageRankLoop(e: DataFrame, nodes: DataFrame, deg: DataFrame,
-      n: Long, ranks0: DataFrame, iters: Int, dampBp: Int): DataFrame = {
-    val Scale = 1000000000000L
-    val base = (10000L - dampBp) * Scale / n / 10000L
-    var ranks = ranks0
-    for (_ <- 1 to iters) {
-      val contrib = ranks
-        .join(deg, ranks("host") === deg("src"))
-        // `div`, not `/`: Spark's `/` is double division (and 8500·contrib
-        // brushes 2^53) — `div` keeps the whole recurrence in exact BIGINT
-        .select(col("src"), expr("rank div deg").as("c"))
-        .join(e, "src")
-        .groupBy("dst").agg(sum(col("c")).as("contrib"))
-      ranks = nodes
-        .join(contrib, nodes("host") === contrib("dst"), "left")
-        .select(col("host"),
-          expr(s"${base}L + (${dampBp}L * coalesce(contrib, 0L)) div 10000L")
-            .as("rank"))
-        .localCheckpoint(eager = false)
-    }
-    ranks
+    requireRank(iters, dampBp)
+    uniformRank(flow(edgeSet(edges, srcCol, dstCol)), iters, dampBp)(
+      (nodes, n) => nodes.withColumn("rank", lit(Scale / n)))
   }
 
   /** [[pageRank]] RESUMED from persisted ranks — the incremental form a
@@ -254,27 +312,14 @@ object Links {
   def pageRankFrom(edges: DataFrame, init: DataFrame, iters: Int = 3,
       dampBp: Int = 8500, srcCol: String = "src_host",
       dstCol: String = "dst_host"): DataFrame = {
-    require(iters >= 0 && iters <= 50, "need 0 <= iters <= 50")
-    require(dampBp >= 0 && dampBp <= 10000, "dampBp is basis points")
+    requireRank(iters, dampBp)
     require(Seq("host", "rank").forall(init.columns.contains),
       "init must be a pageRank output: (host, rank)")
-    val Scale = 1000000000000L
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(eager = false)
-    val nodes = e.select(col("src").as("host"))
-      .union(e.select(col("dst").as("host"))).distinct()
-    val n = nodes.count()
-    if (n == 0) return nodes.withColumn("rank", lit(0L))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ranks0 = nodes
-      .join(init.select(col("host").as("i_host"), col("rank").as("i_rank")),
-        col("host") === col("i_host"), "left")
-      .select(col("host"),
-        coalesce(col("i_rank"), lit(Scale / n)).as("rank"))
-    pageRankLoop(e, nodes, deg, n, ranks0, iters, dampBp)
+    uniformRank(flow(edgeSet(edges, srcCol, dstCol)), iters, dampBp)(
+      (nodes, n) => nodes
+        .join(init.select(col("host").as("i_host"), col("rank").as("i_rank")),
+          col("host") === col("i_host"), "left")
+        .select(col("host"), coalesce(col("i_rank"), lit(Scale / n)).as("rank")))
   }
 
   /** Weight-aware PageRank over (src, dst, weight) edges — mass flows in
@@ -283,51 +328,19 @@ object Links {
     * (a farm inflating one edge's multiplicity moves the weighted rank but
     * not the distinct-edge one).
     *
-    * Weights are quantized per source to basis points: wq = (w·10⁴) div
-    * Σw, and a contribution is (rank·wq) div 10⁴, div-then-sum. That keeps
-    * every product ≤ Scale·10⁴ = 1e16 — exact BIGINT regardless of raw
-    * weight magnitudes (rank·w directly would overflow at web-scale link
-    * counts). Σwq ≤ 10⁴, so mass leaks by ≤ outdeg/10⁴ per step — same
-    * class as the documented dropped-dangling-mass behavior; relative
-    * ordering is what the pipeline consumes. All operands non-negative →
-    * floor division in both engines. Same plan shape as [[pageRank]].
+    * Edges with a non-positive weight are dropped; the rest sum per pair and
+    * are quantized per source to basis points, a contribution being
+    * (rank·wq) div 10⁴, div-then-sum ([[flow]]). Relative ordering is what
+    * the pipeline consumes. All operands non-negative → floor division in
+    * both engines. Same plan shape as [[pageRank]].
     */
   def pageRankWeighted(edges: DataFrame, iters: Int = 3, dampBp: Int = 8500,
       srcCol: String = "src_host", dstCol: String = "dst_host",
       weightCol: String = "n_links"): DataFrame = {
-    require(iters >= 0 && iters <= 50, "need 0 <= iters <= 50")
-    require(dampBp >= 0 && dampBp <= 10000, "dampBp is basis points")
-    val Scale = 1000000000000L
-    val ew0 = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst") && col("w") > 0)
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-    val sw = ew0.groupBy("src").agg(sum("w").as("sw"))
-      .select(col("src").as("sw_src"), col("sw"))
-    val ew = ew0.join(sw, col("src") === col("sw_src"))
-      .select(col("src"), col("dst"), expr("(w * 10000L) div sw").as("wq"))
-      .localCheckpoint(eager = false)
-    val nodes = ew.select(col("src").as("host"))
-      .union(ew.select(col("dst").as("host"))).distinct()
-    val n = nodes.count()
-    if (n == 0) return nodes.withColumn("rank", lit(0L))
-    val base = (10000L - dampBp) * Scale / n / 10000L
-    var ranks = nodes.withColumn("rank", lit(Scale / n))
-    for (_ <- 1 to iters) {
-      val contrib = ranks
-        .join(ew, ranks("host") === ew("src"))
-        .select(col("dst"), expr("(rank * wq) div 10000L").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("contrib"))
-      ranks = nodes
-        .join(contrib, nodes("host") === contrib("dst"), "left")
-        .select(col("host"),
-          expr(s"${base}L + (${dampBp}L * coalesce(contrib, 0L)) div 10000L")
-            .as("rank"))
-        .localCheckpoint(eager = false)
-    }
-    ranks
+    requireRank(iters, dampBp)
+    val positive = edges.filter(col(weightCol).cast("long") > 0)
+    uniformRank(flow(edgeSet(positive, srcCol, dstCol, Some(weightCol)),
+      weighted = true), iters, dampBp)((nodes, n) => nodes.withColumn("rank", lit(Scale / n)))
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM 1999) over a host edge set —
@@ -337,40 +350,35 @@ object Links {
     * prioritization and the farm heuristics [[trustRank]] anchors — a link
     * farm shows high hub × low trust.
     *
-    * Fixed-point discipline, Scale = 1e9, hub0 = Scale on every node; per
+    * Fixed-point discipline, HitsScale = 1e9, hub0 = HitsScale on every node; per
     * iteration (Kleinberg's order — authorities first from current hubs,
     * then hubs from the NEW authorities):
     *
-    *   a'(v) = Σ_{u→v} h(u);  a(v) = a'(v) div greatest(max(a') div Scale, 1)
-    *   h'(u) = Σ_{u→v} a(v);  h(u) = h'(u) div greatest(max(h') div Scale, 1)
+    *   a'(v) = Σ_{u→v} h(u);  a(v) = a'(v) div greatest(max(a') div HitsScale, 1)
+    *   h'(u) = Σ_{u→v} a(v);  h(u) = h'(u) div greatest(max(h') div HitsScale, 1)
     *
     * Max-normalization (the standard HITS L∞ choice, here in integers)
-    * bounds every score by < 2·Scale, so the next half-step's sum is
-    * < n·2·Scale — overflow-free in BIGINT for any graph under ~4.6e9
+    * bounds every score by < 2·HitsScale, so the next half-step's sum is
+    * < n·2·HitsScale — overflow-free in BIGINT for any graph under ~4.6e9
     * hosts. Every operand is non-negative, so truncating division is floor
     * in both Spark (`div`) and the oracle engine (`//`); the normalizer is
-    * one max aggregate each engine derives identically (driver-side here —
-    * a 1-row collect, the [[pageRank]] `n` precedent — a scalar subquery in
-    * the oracle). No in-edges → authority 0; no out-edges → hub 0.
+    * one max aggregate each engine derives identically (in-plan here — a
+    * broadcast 1-row cross join — a scalar subquery in the oracle). No
+    * in-edges → authority 0; no out-edges → hub 0.
     *
     * Output: (host, auth, hub) for every host in the graph. Scale shape:
     * per half-step one equi-join on the edge key + one hash aggregate +
-    * one 1-row max — all shuffles host-keyed, AQE-coalesced, with a lazy
+    * one 1-row max — all shuffles host-keyed, AQE-coalesced, with a
     * localCheckpoint per half-step so the plan does not deepen with
-    * `iters` (the [[pageRank]] lineage discipline).
+    * `iters` (the [[pageRank]] lineage discipline). Each pin runs its
+    * half-step's shuffle stages as it is created ([[Par.sever]]).
     */
   def hits(edges: DataFrame, iters: Int = 3, srcCol: String = "src_host",
       dstCol: String = "dst_host"): DataFrame = {
     require(iters >= 1 && iters <= 50, "need 1 <= iters <= 50")
-    val Scale = 1000000000L
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(eager = false)
-    val nodes = e.select(col("src").as("host"))
-      .union(e.select(col("dst").as("host"))).distinct()
-      .localCheckpoint(eager = false)
+    val HitsScale = 1000000000L
+    val e = edgeSet(edges, srcCol, dstCol).localCheckpoint(eager = false)
+    val nodes = hostsOf(e).localCheckpoint(eager = false)
     // one half-step: sum the partner scores over the edges, then divide by
     // the integer normalizer derived from the max
     def half(scores: DataFrame, joinOn: String, outOn: String): DataFrame = {
@@ -379,17 +387,18 @@ object Links {
       // normalizer IN-PLAN as a broadcast 1-row cross join (r15 opt round):
       // the previous `.head.getLong(0)` forced a driver collect per
       // half-step — 2·iters blocking jobs per call whose only purpose was
-      // turning max(raw) into a literal. greatest(m div Scale, 1) is the
-      // identical integer arithmetic (m ≥ 0), so scores are bit-identical;
-      // the whole recurrence now materializes under the ONE final action.
+      // turning max(raw) into a literal. greatest(m div HitsScale, 1) is the
+      // identical integer arithmetic (m ≥ 0), so scores are bit-identical.
+      // The half-step still runs its shuffle stages where it is pinned
+      // below: under AQE a localCheckpoint is not lazy (Par.sever).
       val mx = raw.agg(coalesce(max("raw"), lit(0L)).as("m"))
       nodes.join(raw, nodes("host") === raw("h"), "left")
         .crossJoin(broadcast(mx))
         .select(col("host"),
-          expr(s"coalesce(raw, 0L) div greatest(m div ${Scale}L, 1L)").as("s"))
+          expr(s"coalesce(raw, 0L) div greatest(m div ${HitsScale}L, 1L)").as("s"))
         .localCheckpoint(eager = false)
     }
-    var hub = nodes.withColumn("s", lit(Scale))
+    var hub = nodes.withColumn("s", lit(HitsScale))
     var auth = nodes.withColumn("s", lit(0L))
     for (_ <- 1 to iters) {
       auth = half(hub, "src", "dst")
@@ -424,44 +433,22 @@ object Links {
   def trustRank(edges: DataFrame, seeds: DataFrame, iters: Int = 3,
       dampBp: Int = 8500, srcCol: String = "src_host",
       dstCol: String = "dst_host", seedCol: String = "host"): DataFrame = {
-    require(iters >= 0 && iters <= 50, "need 0 <= iters <= 50")
-    require(dampBp >= 0 && dampBp <= 10000, "dampBp is basis points")
-    val Scale = 1000000000000L
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(eager = false)
-    val nodes = e.select(col("src").as("host"))
-      .union(e.select(col("dst").as("host"))).distinct()
+    requireRank(iters, dampBp)
+    val f = flow(edgeSet(edges, srcCol, dstCol))
+    val nodes = hostsOf(f)
     // seeds ∩ graph — only in-graph seeds receive teleport mass
     val sd = broadcast(
       seeds.select(col(seedCol).as("host")).na.drop().distinct())
-    val seedNodes = nodes.join(sd, "host")
-    val ns = seedNodes.count()
+    val ns = nodes.join(sd, "host").count()
     require(ns > 0, "trustRank: no seed host appears in the edge set")
     val marked = nodes
       .join(sd.withColumn("is_seed", lit(true)), Seq("host"), "left")
       .select(col("host"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
       .localCheckpoint(eager = false)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val base = (10000L - dampBp) * Scale / ns / 10000L
-    var ranks = marked.select(col("host"),
-      when(col("is_seed"), lit(Scale / ns)).otherwise(lit(0L)).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = ranks
-        .join(deg, ranks("host") === deg("src"))
-        .select(col("src"), expr("rank div deg").as("c"))
-        .join(e, "src")
-        .groupBy("dst").agg(sum(col("c")).as("contrib"))
-      ranks = marked
-        .join(contrib, marked("host") === contrib("dst"), "left")
-        .select(col("host"),
-          (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
-            expr(s"(${dampBp}L * coalesce(contrib, 0L)) div 10000L"))
-            .as("rank"))
-        .localCheckpoint(eager = false)
-    }
+    def seedOnly(v: Long) = when(col("is_seed"), lit(v)).otherwise(lit(0L))
+    val ranks = dampedRank(f, marked, seedOnly((10000L - dampBp) * Scale / ns / 10000L),
+      marked.select(col("host"), seedOnly(Scale / ns).as("rank")),
+      Nil, "host", iters, dampBp)
     marked.join(ranks, "host")
       .select(col("host"), col("rank"), col("is_seed"))
   }
@@ -507,14 +494,7 @@ object Links {
   def labelPropagateWeighted(edges: DataFrame, iters: Int = 3,
       srcCol: String = "src_host", dstCol: String = "dst_host",
       weightCol: String = "n_links"): DataFrame = {
-    val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    val e = e0.union(e0.select(col("b").as("a"), col("a").as("b"), col("w")))
-      .groupBy("a", "b").agg(sum("w").as("w"))
-      .localCheckpoint(eager = false)
-    val nodes = e.select(col("a").as("host")).distinct()
-      .localCheckpoint(eager = false)
+    val (e, nodes) = lpaGraph(edges, srcCol, dstCol, Some(weightCol))
     lpaLoop(e, nodes.withColumn("label", col("host")), iters, weighted = true)
   }
 
@@ -538,29 +518,35 @@ object Links {
     lpaLoop(e, labels0, iters)
   }
 
-  private def lpaGraph(edges: DataFrame, srcCol: String,
-      dstCol: String): (DataFrame, DataFrame) = {
-    val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    val e = e0.union(e0.select(col("b").as("a"), col("a").as("b"))).distinct()
+  /** The symmetrized (src, dst[, w]) [[edgeSet]] of an LPA run, both
+    * directions of every edge, and its (host) node frame, both pinned.
+    */
+  private def lpaGraph(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String] = None): (DataFrame, DataFrame) = {
+    val w = weightCol.map(c => col(c).cast("long").as("w")).toSeq
+    val e0 = edges.select(col(srcCol).as("a") +: col(dstCol).as("b") +: w: _*)
+    val both = e0.union(
+      e0.select(col("b").as("a") +: col("a").as("b") +: w.map(_ => col("w")): _*))
+    val e = edgeSet(both, "a", "b", weightCol.map(_ => "w"))
       .localCheckpoint(eager = false)
-    val nodes = e.select(col("a").as("host")).distinct()
+    val nodes = e.select(col("src").as("host")).distinct()
       .localCheckpoint(eager = false)
     (e, nodes)
   }
 
   /** The shared synchronous-round loop — ONE definition feeds
-    * [[labelPropagate]] and [[labelPropagateFrom]] so the tie rule can
-    * never fork (the pageRankLoop discipline).
+    * [[labelPropagate]], [[labelPropagateWeighted]] (`weighted`: the edge
+    * set's `w` is the vote) and [[labelPropagateFrom]], so the tie rule can
+    * never fork (the [[dampedRank]] discipline).
     */
   private def lpaLoop(e: DataFrame, labels0: DataFrame, iters: Int,
       weighted: Boolean = false): DataFrame = {
     require(iters >= 0 && iters <= 50, "need 0 <= iters <= 50")
+    val vote = if (weighted) col("w") else lit(1L)
     var labels = labels0
     for (_ <- 1 to iters) {
-      val vote = if (weighted) col("w") else lit(1L)
-      val neigh = labels.join(e, labels("host") === e("a"))
-        .select(col("b").as("host"), col("label"), vote.as("__v"))
+      val neigh = labels.join(e, labels("host") === e("src"))
+        .select(col("dst").as("host"), col("label"), vote.as("__v"))
         .groupBy("host", "label").agg(sum("__v").as("cnt"))
       // (max vote, min label) in ONE host-partitioned window pass (r15 opt
       // round): the previous max-aggregate + join-back + min-aggregate

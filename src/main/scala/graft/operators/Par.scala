@@ -81,7 +81,7 @@ object Par {
     else df
   }
 
-  /** Materialize a frame once (lazy localCheckpoint) when its lineage is
+  /** Materialize a frame once (a localCheckpoint) when its lineage is
     * COMPUTED — contains a join/aggregate/window/distinct — so an operator
     * that consumes it several times neither recomputes the subtree per
     * consumer nor replays Catalyst analysis/optimization over N copies of it
@@ -94,6 +94,15 @@ object Par {
     * untouched: re-scanning cheap source bytes with pruning beats copying
     * them into block storage. Rows are unchanged — only where they are read
     * from the second time.
+    *
+    * `eager = false` does not make the pin lazy under adaptive execution
+    * (on in every graft session): building the checkpoint's RDD plans the
+    * adaptive query, and that runs every shuffle stage below it there and
+    * then. Only the final stage waits for the first action. On Spark 4.1.2
+    * (range → aggregate → aggregate, `local[2]`) creating the checkpoint ran
+    * 2 jobs with AQE on and 0 with it off. So every pin, here and at the
+    * operators' own `localCheckpoint(eager = false)` sites, pays its
+    * subtree's shuffles where it is created, not where it is read.
     */
   def sever(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical._

@@ -28,7 +28,7 @@ object Pipelines {
       minTokens: Int = 5, maxTokens: Int = 100000,
       lang: String = "en"): DataFrame = {
     val text = col(textCol)
-    val nTokens = size(filter(split(lower(text), "\\s+"), w => length(w) > 0))
+    val nTokens = size(TextAnalysis.words(text))
     val kept = docs
       .filter(nTokens.between(minTokens, maxTokens) &&
         TextAnalysis.langPred(text) === lang)
@@ -51,7 +51,7 @@ object Pipelines {
   def packSequences(docs: DataFrame, idCol: String, textCol: String,
       maxTokens: Int = 2048, shards: Int = 64): DataFrame = {
     require(maxTokens > 0 && shards > 0, "maxTokens and shards must be positive")
-    val nTok = size(filter(split(lower(col(textCol)), "\\s+"), w => length(w) > 0))
+    val nTok = size(TextAnalysis.words(col(textCol)))
     val base = Par.spread(docs).select(
       Keys.id(docs, idCol).as("doc_id"),
       nTok.cast("long").as("n_tokens"))
@@ -301,8 +301,7 @@ object Pipelines {
   private def tokenArrays(df: DataFrame, idCol: String, textCol: String): DataFrame =
     Par.spread(df).select(
       Keys.id(df, idCol).as("doc_id"),
-      filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
-        x => length(x) > 0).as("ws"))
+      TextAnalysis.words(coalesce(col(textCol), lit(""))).as("ws"))
 
   /** Exact-duplicate TOKEN-STREAM collapse shared by the span ops — the
     * [[Dedup.hammingPairs]] discipline applied to whole token streams: a
@@ -428,7 +427,7 @@ object Pipelines {
     require(n >= 1 && minHits >= 1, "n and minHits must be positive")
     def shingleSets(df: DataFrame) = df
       .select(Keys.id(df, idCol).as("doc_id"),
-        filter(split(lower(col(textCol)), "\\s+"), w => length(w) > 0).as("w"))
+        TextAnalysis.words(col(textCol)).as("w"))
       .select(col("doc_id"),
         explode(array_distinct(Dedup.shingleArrayExpr(n))).as("sh"))
     val evalSet = shingleSets(evalDocs).select("sh").distinct()
@@ -576,7 +575,7 @@ object Pipelines {
   def mixtureReport(docs: DataFrame, idCol: String, textCol: String,
       domainCol: String, factors: Map[String, Double],
       defaultFactor: Double = 1.0): DataFrame = {
-    val nTok = size(filter(split(lower(col(textCol)), "\\s+"), w => length(w) > 0))
+    val nTok = size(TextAnalysis.words(col(textCol)))
     val myriad = factors.foldLeft(lit(math.round(defaultFactor * 10000))) {
       case (acc, (dom, w)) =>
         when(col("domain") === dom, lit(math.round(w * 10000))).otherwise(acc)
@@ -714,7 +713,7 @@ object Pipelines {
       "shares must be positive basis points")
     require(shares.values.sum == 10000,
       s"shares must sum to 10000 bp, got ${shares.values.sum}")
-    val nTok = size(filter(split(lower(col(textCol)), "\\s+"), w => length(w) > 0))
+    val nTok = size(TextAnalysis.words(col(textCol)))
     val inShares = docs.filter(
       col(domainCol).cast("string").isin(shares.keys.toSeq: _*))
     val toks = inShares
@@ -879,7 +878,7 @@ object Pipelines {
   def tokenBudgetSample(docs: DataFrame, idCol: String, textCol: String,
       domainCol: String, budgets: Map[String, Long],
       defaultBudget: Long = Long.MaxValue): DataFrame = {
-    val nTok = size(filter(split(lower(col(textCol)), "\\s+"), w => length(w) > 0))
+    val nTok = size(TextAnalysis.words(col(textCol)))
     val base = Rank.md5Salted(Par.spread(docs).select(
       Keys.id(docs, idCol).as("doc_id"),
       col(domainCol).as("domain"),
@@ -905,7 +904,7 @@ object Pipelines {
     */
   def tokenBudgetState(docs: DataFrame, idCol: String, textCol: String,
       domainCol: String): DataFrame = {
-    val nTok = size(filter(split(lower(col(textCol)), "\\s+"), w => length(w) > 0))
+    val nTok = size(TextAnalysis.words(col(textCol)))
     Par.spread(docs)
       .select(col(domainCol).as("domain"), nTok.cast("long").as("n_tokens"))
       .groupBy("domain").agg(sum("n_tokens").as("spent_tok"))
@@ -931,7 +930,7 @@ object Pipelines {
       defaultBudget: Long = Long.MaxValue): DataFrame = {
     require(state.columns.contains("domain") && state.columns.contains("spent_tok"),
       "state must be a tokenBudgetState table carrying (domain, spent_tok)")
-    val nTok = size(filter(split(lower(col(textCol)), "\\s+"), w => length(w) > 0))
+    val nTok = size(TextAnalysis.words(col(textCol)))
     val base = Rank.md5Salted(Par.spread(newDocs).select(
       Keys.id(newDocs, idCol).as("doc_id"),
       col(domainCol).as("domain"),

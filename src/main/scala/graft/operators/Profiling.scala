@@ -117,8 +117,8 @@ object Profiling {
     val base = docs.select(
       Keys.id(docs, idCol).as("doc_id"),
       md5(regexp_replace(lower(coalesce(col(textCol), lit(""))), "\\s+", " ")).as("fp"),
-      size(filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
-        w => length(w) > 0)).cast("long").as("n_tok"),
+      size(TextAnalysis.words(coalesce(col(textCol), lit(""))))
+        .cast("long").as("n_tok"),
       length(coalesce(col(textCol), lit(""))).cast("long").as("n_chars"),
       coalesce(col(langCol).cast("string"), lit("<null>")).as("lang"),
       coalesce(col(domainCol).cast("string"), lit("<null>")).as("domain"))

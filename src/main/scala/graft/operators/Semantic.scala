@@ -139,8 +139,9 @@ object Semantic {
     * (k·d multiply-adds per row inside codegen, no shuffle) plus one
     * (cell, pos)-keyed aggregate whose map-side partial combine caps the
     * exchange at k·d rows per task; centroids live as a k-row frame with
-    * a lazy localCheckpoint per round so the plan does not deepen with
-    * `iters`. Data-sized work is exactly iters+1 scans — the textbook
+    * a localCheckpoint per round so the plan does not deepen with
+    * `iters` (each one runs its round's shuffle stages as it is created,
+    * [[Par.sever]]). Data-sized work is exactly iters+1 scans — the textbook
     * distributed Lloyd shape (Spark MLlib KMeans restated in the
     * portable-integer discipline).
     */

@@ -13,7 +13,12 @@ import graft.functions.PortableLog
   */
 object TextAnalysis {
 
-  private def words(textCol: Column): Column =
+  /** The word tokenizer every Spark-side text operator shares: the
+    * non-empty runs of a lower-cased text split on whitespace. A null text
+    * yields null; callers that want it total wrap the text in
+    * `coalesce(…, "")` first.
+    */
+  private[graft] def words(textCol: Column): Column =
     filter(split(lower(textCol), "\\s+"), w => length(w) > 0)
 
   /** Per-document stats: token count, char count, avg word length, stopword ratio,
@@ -1461,8 +1466,7 @@ object TextAnalysis {
   private def dsirToks(df: DataFrame, idCol: String, textCol: String,
       nBuckets: Int): DataFrame = Par.spread(df)
     .select(Keys.id(df, idCol).as("doc_id"),
-      explode(filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
-        w => length(w) > 0)).as("w"))
+      explode(words(coalesce(col(textCol), lit("")))).as("w"))
     .select(col("doc_id"),
       expr(s"cast(conv(substring(md5(w), 1, 8), 16, 10) as bigint) % $nBuckets")
         .as("f"))
@@ -1526,7 +1530,7 @@ object TextAnalysis {
       textCol: String, nBuckets: Int = 1024): DataFrame =
     // in-sample scoring: every raw bucket is in the table, so the serve
     // path's OOV coalesce never fires — ONE scoring definition, the
-    // pageRankLoop can't-fork discipline
+    // Links.dampedRank can't-fork discipline
     dsirScoreWith(dsirWeights(targetDocs, rawDocs, idCol, textCol, nBuckets),
       rawDocs, idCol, textCol, nBuckets)
 
@@ -1856,8 +1860,7 @@ object TextAnalysis {
     val t = coalesce(col(textCol), lit(""))
     Par.spread(docs).select(
       Keys.id(docs, idCol).as("doc_id"),
-      size(filter(split(lower(t), "\\s+"), w => length(w) > 0))
-        .cast("long").as("n_words"),
+      size(words(t)).cast("long").as("n_words"),
       regexp_count(t, lit("[.!?]+")).cast("long").as("n_sentences"),
       regexp_count(lower(t), lit("[aeiouy]+")).cast("long").as("n_syllables"))
       .withColumn("flesch_e3",
@@ -1875,11 +1878,12 @@ object TextAnalysis {
     * uses for topical routing and mixture labels.
     *
     * The whole recurrence is [[Links.pageRank]]'s 1e-12 fixed-point BIGINT
-    * discipline keyed by (doc_id, word): r0 = Scale div n_d,
-    * r' = (10000−dampBp)·Scale div n_d div 10000 + dampBp·Σ contrib div
+    * loop ([[Links.dampedRank]], ranks in [[Links.Scale]] units) keyed by
+    * (doc_id, word): r0 = Scale div
+    * n_d, r' = (10000−dampBp)·Scale div n_d div 10000 + dampBp·Σ contrib div
     * 10000 — per-document graphs, but every iteration is ONE corpus-wide
-    * pair of (doc_id, word)-keyed equi-join + hash aggregate, so document
-    * count costs nothing extra and no per-doc loop exists. All operands
+    * (doc_id, word)-keyed equi-join + hash aggregate, so document count
+    * costs nothing extra and no per-doc loop exists. All operands
     * non-negative → truncating division is floor in both engines.
     *
     * Co-occurrence edges derive NARROWLY: each token joins the tokens at
@@ -1897,11 +1901,9 @@ object TextAnalysis {
     require(iters >= 1 && iters <= 20, "need 1 <= iters <= 20")
     require(topK >= 1, "topK must be positive")
     require(dampBp >= 0 && dampBp <= 10000, "dampBp is basis points")
-    val Scale = 1000000000000L
     val toks = Par.spread(docs.filter(col(textCol).isNotNull))
       .select(Keys.id(docs, idCol).as("doc_id"),
-        posexplode(filter(split(lower(col(textCol)), "\\s+"),
-          w => length(w) > 0)).as(Seq("pos", "w")))
+        posexplode(words(col(textCol))).as(Seq("pos", "w")))
       .localCheckpoint(eager = false)
     // renamed right-side keys: both sides are `toks`, and a shared-lineage
     // join key trips DetectAmbiguousSelfJoin
@@ -1917,32 +1919,15 @@ object TextAnalysis {
       .unionByName(fwd.select(col("doc_id"), col("w2").as("src"),
         col("w").as("dst")))
       .distinct()
-      .localCheckpoint(eager = false)
     val nodes = toks.select("doc_id", "w").distinct()
       .localCheckpoint(eager = false)
-    val nd = nodes.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .select(col("doc_id").as("nd_doc"), col("n"))
-    val deg = e.groupBy("doc_id", "src").agg(count(lit(1)).as("dg"))
-      .select(col("doc_id").as("dg_doc"), col("src").as("dg_src"), col("dg"))
-    var ranks = nodes
-      .join(nd, col("doc_id") === col("nd_doc"))
-      .select(col("doc_id"), col("w"), expr(s"${Scale}L div n").as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = ranks
-        .join(deg, col("doc_id") === col("dg_doc") && col("w") === col("dg_src"))
-        .select(col("doc_id"), col("w").as("src"), expr("rank div dg").as("c"))
-        .join(e, Seq("doc_id", "src"))
-        .groupBy(col("doc_id"), col("dst")).agg(sum(col("c")).as("contrib"))
-        .select(col("doc_id").as("c_doc"), col("dst"), col("contrib"))
-      ranks = nodes
-        .join(nd, col("doc_id") === col("nd_doc"))
-        .join(contrib,
-          col("doc_id") === col("c_doc") && col("w") === col("dst"), "left")
-        .select(col("doc_id"), col("w"),
-          expr(s"(${10000L - dampBp} * ${Scale}L) div n div 10000L" +
-            s" + (${dampBp}L * coalesce(contrib, 0L)) div 10000L").as("rank"))
-        .localCheckpoint(eager = false)
-    }
+    val perDoc = nodes.join(
+      nodes.groupBy(col("doc_id").as("nd_doc")).agg(count(lit(1)).as("n")),
+      col("doc_id") === col("nd_doc"))
+    val ranks = Links.dampedRank(Links.flow(e, Seq("doc_id")), perDoc,
+      expr(s"(${10000L - dampBp} * ${Links.Scale}L) div n div 10000L"),
+      perDoc.select(col("doc_id"), col("w"), expr(s"${Links.Scale}L div n").as("rank")),
+      Seq("doc_id"), "w", iters, dampBp)
     Rank.topK(ranks, Seq("doc_id"), Seq(col("rank").desc, col("w")), topK, "rk")
       .select(col("doc_id"), col("w").as("word"), col("rank"), col("rk"))
   }

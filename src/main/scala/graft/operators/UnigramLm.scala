@@ -56,9 +56,7 @@ object UnigramLm {
     math.floor(StrictMath.log10(total.toDouble / cnt.toDouble) * 1e6).toLong
 
   private def wordTypes(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(filter(
-      split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
-      x => length(x) > 0)).as("w"))
+    docs.select(explode(TextAnalysis.words(coalesce(col(textCol), lit("")))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
 
   /** Viterbi DP + backtrack as Catalyst SQL over a word column `w` with a
@@ -223,8 +221,7 @@ object UnigramLm {
     val seg = segmentTypes(words, costs, maxPieceLen)
       .select(col("w"), size(col("pieces")).as("n_pieces"))
     val counts = docs.select(Keys.id(docs, idCol).as("doc_id"),
-      explode(filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
-        x => length(x) > 0)).as("w"))
+      explode(TextAnalysis.words(coalesce(col(textCol), lit("")))).as("w"))
       .join(seg, "w")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"), sum("n_pieces").as("n_unigram_tokens"))

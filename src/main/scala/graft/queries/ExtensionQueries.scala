@@ -113,8 +113,7 @@ object ExtensionQueries {
   private def quoteFixture(docs: DataFrame): DataFrame = {
     val quotes = docs.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"),
-        filter(split(lower(coalesce(col("text"), lit(""))), "\\s+"),
-          x => length(x) > 0).as("ws"))
+        TextAnalysis.words(coalesce(col("text"), lit(""))).as("ws"))
       .select((col("doc_id") + 100000L).as("doc_id"),
         expr("concat_ws(' ', slice(ws, 1, greatest(7, size(ws) div 3)))")
           .as("text"))

@@ -300,6 +300,44 @@ class DedupSpec extends SparkSpec {
     assert(recall >= 0.9, s"ANN recall $recall < 0.9 (${ann.size}/${exact.size})")
   }
 
+  test("hot-bucket salts: capped LSH pairs ⊆ uncapped, clone-pair losses pinned; the bipartite probe loses nothing") {
+    graft.functions.GraftFunctions.register(spark)
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+    // three clones of each of three fixture vectors: every band bucket of a
+    // clone group holds at least 4 rows, above maxBucket = 2, so it is salted
+    val clones = emb.filter(col("vec_id").isin(1L, 2L, 3L))
+      .crossJoin(spark.range(1, 4).toDF("k"))
+      .select((col("vec_id") + col("k") * 1000000L).as("vec_id"), col("embedding"))
+    val all = emb.unionByName(clones)
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.select("vec_a", "vec_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val unbounded = pairs(Dedup.embeddingPairs(all, "vec_id", "embedding", 0.9,
+      maxBucket = 1 << 20)).toSet
+    val capped = pairs(Dedup.embeddingPairs(all, "vec_id", "embedding", 0.9,
+      maxBucket = 2)).toSet
+    val identical = (1L to 3L).flatMap { g =>
+      (g +: (1L to 3L).map(g + _ * 1000000L)).combinations(2).map(c => (c.min, c.max))
+    }.toSet
+    assert(identical.subsetOf(unbounded))
+    assert(capped.subsetOf(unbounded), s"capped-only pairs: ${capped.diff(unbounded)}")
+    // the self-join salts each band independently, so an identical pair is
+    // lost only when its two rows get different salts in every band. The
+    // salts are fixed hashes, pmod(xxhash64(band, vec_id), nsplit): under
+    // this cap exactly one of the 18 clone pairs never shares a salt, and
+    // pinning which one pins the salt arithmetic
+    assert(identical.diff(capped) == Set((2000002L, 3000002L)))
+    // bipartite salting replicates the probe side instead of splitting it:
+    // the capped pair stream, band multiplicity included, is the uncapped one
+    val left = all.filter(col("vec_id") % 2 === 1)
+    def between(maxBucket: Int) = pairs(Dedup.embeddingPairsBetween(
+      left, all, "vec_id", "embedding", 0.9, maxBucket))
+    val exact = between(1 << 20)
+    assert(exact.toSet.intersect(identical).nonEmpty)
+    assert(between(2) == exact)
+    graft.operators.Caches.release(spark)
+  }
+
   test("exactIncremental: drops seen fingerprints, keeps batch-first occurrence") {
     import spark.implicits._
     val history = Seq((1L, "already ingested doc"), (2L, "another old doc"))

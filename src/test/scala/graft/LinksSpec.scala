@@ -143,6 +143,58 @@ class LinksSpec extends SparkSpec {
     assert(w3 == u3, s"uniform weights must reduce to pageRank: $w3 vs $u3")
   }
 
+  test("pageRank, pageRankFrom, pageRankWeighted, trustRank == one plain-Scala fixed-point reference") {
+    val S = 1000000000000L
+    val dampBp = 8500L
+    val rnd = new scala.util.Random(7919)
+    val hosts = (0 until 40).map(i => f"h$i%02d.example")
+    // 160 draws: repeated pairs (summed weights) and self edges (dropped)
+    // occur, and some hosts end up dangling or unlinked
+    val raw = Seq.fill(160)((hosts(rnd.nextInt(40)), hosts(rnd.nextInt(40)),
+      1L + rnd.nextInt(5)))
+    val edges = raw.toDF("src_host", "dst_host", "n_links")
+    // the recurrence as documented, in Longs: r'(v) = teleport(v) +
+    // dampBp·Σ_{u→v} share(u→v) div 10⁴; share = r div outdeg, or with
+    // weights (r·((w·10⁴) div Σw_u)) div 10⁴
+    def reference(weighted: Boolean, iters: Int, seeds: Set[String] = Set.empty,
+        init: Map[String, Long] = Map.empty): Map[String, Long] = {
+      val kept = raw.filter { case (s, d, _) => s != d }
+      val w: Map[(String, String), Long] =
+        if (weighted) kept.groupMapReduce(e => (e._1, e._2))(_._3)(_ + _)
+        else kept.map(e => (e._1, e._2) -> 1L).toMap
+      val nodes = w.keySet.flatMap { case (s, d) => Set(s, d) }
+      val out = w.toSeq.groupMapReduce(_._1._1)(_._2)(_ + _)
+      def share(r: Long, u: String, wuv: Long) =
+        if (weighted) r * (wuv * 10000L / out(u)) / 10000L else r / out(u)
+      val mass = if (seeds.isEmpty) nodes else seeds & nodes
+      val tele = nodes.map(v => v ->
+        (if (mass(v)) (10000L - dampBp) * S / mass.size / 10000L else 0L)).toMap
+      var r = nodes.map(v => v -> init.getOrElse(v,
+        if (mass(v)) S / mass.size else 0L)).toMap
+      for (_ <- 1 to iters) {
+        val in = w.toSeq.groupMapReduce(_._1._2) { case ((u, _), wuv) =>
+          share(r(u), u, wuv) }(_ + _)
+        r = nodes.map(v => v -> (tele(v) + dampBp * in.getOrElse(v, 0L) / 10000L)).toMap
+      }
+      r
+    }
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.select("host", "rank").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(ranks(Links.pageRank(edges, iters = 4)) == reference(false, 4))
+    assert(ranks(Links.pageRankWeighted(edges, iters = 4)) == reference(true, 4))
+    // resumed from arbitrary ranks: a third of the hosts carry a state rank,
+    // the rest seed uniform, and a host outside the graph is dropped
+    val init = hosts.filter(_ => rnd.nextInt(3) == 0)
+      .map(h => h -> (1L + rnd.nextInt(1000000)) * 1000L) :+ ("gone.example" -> 7L)
+    val resumed = ranks(Links.pageRankFrom(edges, init.toDF("host", "rank"), iters = 3))
+    assert(resumed == reference(false, 3, init = init.toMap))
+    val seeds = rnd.shuffle(raw.filter(e => e._1 != e._2)
+      .flatMap(e => Seq(e._1, e._2)).distinct).take(3).toSet
+    val trust = Links.trustRank(edges, seeds.toSeq.toDF("host"), iters = 4)
+    assert(ranks(trust) == reference(false, 4, seeds = seeds))
+    assert(trust.filter(col("is_seed")).select("host").as[String].collect().toSet == seeds)
+  }
+
   test("hits: hand-computed hub/authority split on a directory graph") {
     // d is a pure hub (links to a, b, c); a, b, c are pure authorities;
     // c→a adds one non-hub endorsement

@@ -184,6 +184,35 @@ class QualityClassifierSpec extends SparkSpec {
     assert(r1.getLong(1) == 0L && r1.getDouble(3) == 0.0)
   }
 
+  test("auc over >= 300 distinct scores == a tie-aware plain-Scala Mann-Whitney") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(2026)
+    // z6 drawn so the quantized sigmoid p6 = 5e5 ± s lands near-uniformly
+    // on (20000, 980000): s uniform, z6 = ±2e6·s div (1e6 − 2s)
+    val fresh = Seq.fill(360) {
+      val s = rnd.nextInt(480000).toLong
+      ((if (rnd.nextBoolean()) 1L else -1L) * (2000000L * s / (1000000L - 2L * s)),
+        rnd.nextInt(2))
+    }
+    // exact ties (repeated scores, fresh labels) and null scores, which rank
+    // below every score as in an ascending window
+    val scored: Seq[(Option[Long], Int)] =
+      (fresh ++ fresh.take(60).map { case (z, _) => (z, rnd.nextInt(2)) })
+        .map { case (z, y) => (Option(z), y) } ++ Seq((None, 1), (None, 0))
+    def p6(z: Long): Long = 500000L + (if (z < 0) -1L else 1L) *
+      (math.abs(z) * 1000000L / (2000000L + 2L * math.abs(z)))
+    val ps = scored.map { case (z, y) => (z.map(p6), y) }
+    assert(ps.flatMap(_._1).distinct.size >= 300)
+    val pos = ps.filter(_._2 == 1).map(_._1)
+    val neg = ps.filter(_._2 == 0).map(_._1)
+    val u2 = (for (p <- pos; n <- neg) yield
+      math.signum(Ordering[Option[Long]].compare(p, n)) + 1L).sum
+    val r = QualityClassifier.auc(scored.toDF("score_e6", "y"), "score_e6", col("y")).head()
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) ==
+      ((pos.size.toLong, neg.size.toLong, u2)))
+    assert(r.getDouble(3) == (u2 * 1000000L / (2L * pos.size * neg.size)) / 1000000.0)
+  }
+
   test("auc: the trained split model actually ranks (planted signal)") {
     import spark.implicits._
     val docs = corpus.toDF("doc_id", "text", "y")

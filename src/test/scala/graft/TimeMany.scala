@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Batched [[TimeOne]]: time a comma-separated list of headline queries in
+/** Batched [[BenchOne]]: time a comma-separated list of headline queries in
   * ONE session, 3 reps each (best-of-3 is the band discipline), releasing
   * operator caches between queries exactly like Verify/Bench.
   *

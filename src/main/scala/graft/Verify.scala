@@ -46,9 +46,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release operator-internal caches (Caches scaladoc contract): a
-      // 145-query session would otherwise accumulate every query's dead
-      // shingle/signature blocks
+      // safety net: drop any cache a caller-side frame left (operators
+      // leave none; see Caches)
       graft.operators.Caches.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

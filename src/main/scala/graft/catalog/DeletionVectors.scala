@@ -1,5 +1,7 @@
 package graft.catalog
 
+import graft.operators.Par
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit}
@@ -221,31 +223,31 @@ object DeletionVectors {
           col("__graft_pos") === pairs("pos"), "left_anti")
       case None => raw
     }
-    val matched = live.filter(cond)
-      .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
-    matched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // pinned: the per-file counts and the dv write must see the same rows
+    Par.pinned(live.filter(cond)
+      .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))) { matched =>
       val counts = matched.groupBy("file").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (counts.isEmpty) return
-      val touched = counts.keySet
-      val name = s"dv-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-      val dvDir = new Path(new Path(root, Snapshots.DvDir), name)
-      val carried = dvPairs(spark, root, snap,
-        Some(touched.filter(snap.dvs.contains)))
-      val pairsOut = carried.map(matched.unionAll).getOrElse(matched)
-      pairsOut.coalesce(1).write.mode("overwrite").parquet(dvDir.toString)
-      val dvs = snap.dvs ++ touched.map(_ -> name)
-      val dvRows = snap.dvRows ++ counts.map { case (f, n) =>
-        f -> (snap.dvRows.getOrElse(f, 0L) + n)
+      if (counts.nonEmpty) {
+        val touched = counts.keySet
+        val name = s"dv-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+        val dvDir = new Path(new Path(root, Snapshots.DvDir), name)
+        val carried = dvPairs(spark, root, snap,
+          Some(touched.filter(snap.dvs.contains)))
+        val pairsOut = carried.map(matched.unionAll).getOrElse(matched)
+        pairsOut.coalesce(1).write.mode("overwrite").parquet(dvDir.toString)
+        val dvs = snap.dvs ++ touched.map(_ -> name)
+        val dvRows = snap.dvRows ++ counts.map { case (f, n) =>
+          f -> (snap.dvRows.getOrElse(f, 0L) + n)
+        }
+        try Snapshots.commit(fs, root, Some(snap), snap.entries,
+          kind = "dvdelete", dvEdit = Some((dvs, dvRows)))
+        catch { case e: ConcurrentCommitException =>
+          fs.delete(dvDir, true)
+          throw e
+        }
       }
-      try Snapshots.commit(fs, root, Some(snap), snap.entries,
-        kind = "dvdelete", dvEdit = Some((dvs, dvRows)))
-      catch { case e: ConcurrentCommitException =>
-        fs.delete(dvDir, true)
-        throw e
-      }
-    } finally matched.unpersist()
+    }
   }
 
   /** Execute a merge-on-read `UPDATE t SET ... WHERE ...` (r15, see
@@ -280,61 +282,62 @@ object DeletionVectors {
           col("__graft_pos") === pairs("pos"), "left_anti")
       case None => raw
     }
-    val matched = live.filter(cond)
-    matched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // pinned: the counts, the replacement rows and the dv pairs must all
+    // see the rows matched before the new generation lands
+    Par.pinned(live.filter(cond)) { matched =>
       val counts = matched.groupBy("__graft_file").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (counts.isEmpty) return
-      // 1. the replacement rows: assignments applied, declared columns only
-      val outCols = meta.schema.fields.toSeq.map { f =>
-        sets.find(_._1.equalsIgnoreCase(f.name)).map(_._2)
-          .map(_.cast(f.dataType).as(f.name))
-          .getOrElse(col(s"`${f.name}`"))
-      }
-      val newRows = matched.select(outCols: _*)
-      // 2. stage and adopt the new generation(s) — invisible until commit
-      val uuid = java.util.UUID.randomUUID().toString.take(8)
-      val staging = new Path(root.getParent, s".morupd-${root.getName}-$uuid")
-      var entries = snap.entries
-      var adoptedGens: Map[String, String] = Map.empty
-      if (meta.partitionCols.isEmpty) {
-        newRows.write.parquet(staging.toString)
-        val (gen, rels) = Snapshots.adoptStagedFiles(fs, staging, root)
-        adoptedGens = Map("" -> gen)
-        entries = entries ++ Snapshots.fileEntries(rels)
-      } else {
-        newRows.write.partitionBy(meta.partitionCols: _*).parquet(staging.toString)
-        val adopted = Snapshots.adoptStaged(fs, staging, root)
-        adoptedGens = adopted
-        adopted.foreach { case (kv, g) =>
-          entries = entries.updated(kv, entries.getOrElse(kv, Nil) :+ g)
+      if (counts.nonEmpty) {
+        // 1. the replacement rows: assignments applied, declared columns only
+        val outCols = meta.schema.fields.toSeq.map { f =>
+          sets.find(_._1.equalsIgnoreCase(f.name)).map(_._2)
+            .map(_.cast(f.dataType).as(f.name))
+            .getOrElse(col(s"`${f.name}`"))
+        }
+        val newRows = matched.select(outCols: _*)
+        // 2. stage and adopt the new generation(s) — invisible until commit
+        val uuid = java.util.UUID.randomUUID().toString.take(8)
+        val staging = new Path(root.getParent, s".morupd-${root.getName}-$uuid")
+        var entries = snap.entries
+        var adoptedGens: Map[String, String] = Map.empty
+        if (meta.partitionCols.isEmpty) {
+          newRows.write.parquet(staging.toString)
+          val (gen, rels) = Snapshots.adoptStagedFiles(fs, staging, root)
+          adoptedGens = Map("" -> gen)
+          entries = entries ++ Snapshots.fileEntries(rels)
+        } else {
+          newRows.write.partitionBy(meta.partitionCols: _*).parquet(staging.toString)
+          val adopted = Snapshots.adoptStaged(fs, staging, root)
+          adoptedGens = adopted
+          adopted.foreach { case (kv, g) =>
+            entries = entries.updated(kv, entries.getOrElse(kv, Nil) :+ g)
+          }
+        }
+        fs.delete(staging, true)
+        // 3. dv union over the touched files (deleteWhere's discipline: the
+        // new dir carries old-pairs-of-touched ∪ matched, one lookup per file)
+        val touched = counts.keySet
+        val name = s"dv-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+        val dvDir = new Path(new Path(root, Snapshots.DvDir), name)
+        val matchedPairs = matched
+          .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
+        val carried = dvPairs(spark, root, snap,
+          Some(touched.filter(snap.dvs.contains)))
+        val pairsOut = carried.map(matchedPairs.unionAll).getOrElse(matchedPairs)
+        pairsOut.coalesce(1).write.mode("overwrite").parquet(dvDir.toString)
+        val dvs = snap.dvs ++ touched.map(_ -> name)
+        val dvRows = snap.dvRows ++ counts.map { case (f, n) =>
+          f -> (snap.dvRows.getOrElse(f, 0L) + n)
+        }
+        try Snapshots.commit(fs, root, Some(snap), entries,
+          kind = "morupdate", dvEdit = Some((dvs, dvRows)))
+        catch { case e: ConcurrentCommitException =>
+          fs.delete(dvDir, true)
+          Snapshots.dropGens(fs, root, adoptedGens)
+          throw e
         }
       }
-      fs.delete(staging, true)
-      // 3. dv union over the touched files (deleteWhere's discipline: the
-      // new dir carries old-pairs-of-touched ∪ matched, one lookup per file)
-      val touched = counts.keySet
-      val name = s"dv-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-      val dvDir = new Path(new Path(root, Snapshots.DvDir), name)
-      val matchedPairs = matched
-        .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
-      val carried = dvPairs(spark, root, snap,
-        Some(touched.filter(snap.dvs.contains)))
-      val pairsOut = carried.map(matchedPairs.unionAll).getOrElse(matchedPairs)
-      pairsOut.coalesce(1).write.mode("overwrite").parquet(dvDir.toString)
-      val dvs = snap.dvs ++ touched.map(_ -> name)
-      val dvRows = snap.dvRows ++ counts.map { case (f, n) =>
-        f -> (snap.dvRows.getOrElse(f, 0L) + n)
-      }
-      try Snapshots.commit(fs, root, Some(snap), entries,
-        kind = "morupdate", dvEdit = Some((dvs, dvRows)))
-      catch { case e: ConcurrentCommitException =>
-        fs.delete(dvDir, true)
-        Snapshots.dropGens(fs, root, adoptedGens)
-        throw e
-      }
-    } finally matched.unpersist()
+    }
   }
 
   /** The rows a dv-delete commit removed, for the change feed: the pair

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * |vocab| rows (pair counting is a map-side-combined aggregate; the argmax
   * is a 1-row TakeOrdered collect, plan-time metadata cost like the CC
   * convergence probes). The per-iteration fold rewrite grows the logical
-  * plan, so the word frame is localCheckpoint()ed every iteration — the
+  * plan, so the word frame is pinned ([[Par.pin]]) every iteration — the
   * [[Dedup.clusters]] lesson. Training is inherently iterative, so the
   * corpus entries are rows-only; BpeSpec proves the merge table and
   * segmentation equal an independent reference implementation.
@@ -65,11 +65,10 @@ object Bpe {
   private def train(docs: DataFrame, idCol: String, textCol: String,
       numMerges: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
     require(numMerges >= 1 && numMerges <= 1000, "need 1 <= numMerges <= 1000")
-    var words = docs
+    var words = Par.pin(docs
       .select(explode(TextAnalysis.words(coalesce(col(textCol), lit("")))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(col("w"), col("cnt"), split(col("w"), "").as("syms"))
-      .localCheckpoint()
+      .select(col("w"), col("cnt"), split(col("w"), "").as("syms")))
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var rank = 0
     var done = false
@@ -90,12 +89,12 @@ object Bpe {
         merges += ((rank, l, r, n))
         // greedy left-to-right merge as a fold; literals are SQL-escaped
         def q(s: String) = "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-        words = words.withColumn("syms", expr(
+        // plan stays O(1) per iteration (the CC lesson)
+        words = Par.pin(words.withColumn("syms", expr(
           s"aggregate(syms, cast(array() as array<string>), (acc, x) -> " +
             s"case when size(acc) > 0 and element_at(acc, -1) = ${q(l)} and x = ${q(r)} " +
             s"then concat(slice(acc, 1, size(acc) - 1), array(${q(l + r)})) " +
-            "else concat(acc, array(x)) end)"))
-          .localCheckpoint() // plan stays O(1) per iteration (the CC lesson)
+            "else concat(acc, array(x)) end)")))
         rank += 1
       }
     }

@@ -2,32 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Lifecycle owner for the intermediate caches some lazy operators leave
-  * behind.
-  *
-  * [[Dedup.minHashLshPairs]] and [[FuzzyJoin.pairsWithin]]/
-  * [[FuzzyJoin.pairsBetween]] return LAZY DataFrames whose plans reference
-  * `.cache()`d intermediates (shingle arrays, signatures, distinct string
-  * reps). They cannot unpersist before returning — the caller has not run the
-  * action yet — and eagerly materializing inside the operator would both cost
-  * an extra pass and destroy the one-declarative-plan property the PlanSpec
-  * assertions pin. [[Similarity.ivfWrite]]-style try/finally only works for
-  * operators that run their own action.
-  *
-  * So the contract is explicit: THE CALLER OWNS THE CACHE LIFECYCLE. After
-  * consuming such an operator's result, call [[release]] (or `.unpersist()`
-  * the inputs you hold) — a long-lived session that runs many corpora and
-  * never releases accumulates dead storage blocks until Spark's LRU starts
-  * evicting the blocks you still want (it will not OOM, but it churns).
-  * `graft.Verify` releases after every query and `graft.Bench` after every
-  * measured query's repetitions; CacheHygieneSpec proves no cached block
-  * survives a release across a two-corpus session.
+/** Safety net for Dataset caches. Operators leave none: every intermediate
+  * they materialize goes through [[Par.pin]], whose blocks the context
+  * cleaner drops once the frame is unreachable. A caller that caches
+  * its own frames can still clear them here between queries, as Verify and
+  * Bench do.
   */
 object Caches {
 
-  /** Drop every cached Dataset in the session (Spark's public
-    * catalog-level clear — covers the operators' internal caches, which the
-    * caller has no handle to name individually).
-    */
+  /** Drop every cached Dataset in the session (Spark's catalog-level clear). */
   def release(spark: SparkSession): Unit = spark.catalog.clearCache()
 }

@@ -272,23 +272,24 @@ object Dedup {
     * convention): containment is a pure function of the two shingle SETS,
     * so identical-set docs are mutual containment-1 duplicates of each
     * other and match exactly what their set matches. Returns (withFp =
-    * (doc_id, shs, fp) per shingleable doc, cached; reps = one minimum-id
-    * representative per distinct set, cached; repPairs = the prefix-filter
-    * core's verified pairs over rep ids). A clone flood of g copies flows
+    * (doc_id, shs, fp) per shingleable doc, pinned — the reps aggregate
+    * and the caller's member joins read it; reps = one minimum-id
+    * representative per distinct set; repPairs = the prefix-filter core's
+    * verified pairs over rep ids). A clone flood of g copies flows
     * through df/rank/prefix/verify as ONE doc instead of paying g×
     * postings and g² candidate verifies. The consumers' two output classes
     * are disjoint by construction (same set → same rep → never a core
     * pair; different sets → different fps → never a within pair).
-    * Caches follow the [[Caches]] contract — the caller releases.
     */
   private def containmentRepCore(docs: DataFrame, idCol: String,
       textCol: String, n: Int, threshold: Double,
       minShingles: Int): (DataFrame, DataFrame, DataFrame) = {
-    val withFp = withSetKey(shingleArrays(docs, idCol, textCol, n)).cache()
+    val withFp = Par.pin(withSetKey(shingleArrays(docs, idCol, textCol, n)))
+    // every reader of reps is in the caller's one query, where exchange
+    // reuse shares the aggregate's shuffle
     val reps = withFp.groupBy("fp")
       .agg(min("doc_id").as("doc_id"),
         min_by(col("shs"), col("doc_id")).as("shs"))
-      .cache()
     val repSh = reps.select(col("doc_id"), explode(col("shs")).as("sh"))
     val repArr = reps.select(col("doc_id"), col("shs"))
     val repPairs =
@@ -403,13 +404,10 @@ object Dedup {
     val index = shAll.select(col("sh"), col("doc_id").as("doc_b"))
     val keep = if (earlierOnly) col("doc_b") < col("doc_a")
       else col("doc_a") =!= col("doc_b")
-    // cached: three consumers (the verify join + the two array-restriction
-    // semi-joins) would otherwise re-run the prefix-index join each;
-    // candidate volume is the operator's own output scale (Caches contract —
-    // the caller releases)
+    // not pinned: the verify join and the two array-restriction semi-joins
+    // are one query, and exchange reuse shares the distinct's shuffle
     val cands = prefix.join(index, "sh").filter(keep)
       .select("doc_a", "doc_b").distinct()
-      .cache()
     // verify arrays: callers holding per-doc shingle arrays already (the
     // collapsed rep path) pass them in instead of paying two collect_set
     // re-aggregations of the exploded postings; array_intersect/size are
@@ -536,12 +534,6 @@ object Dedup {
     * via `array_intersect`, and member re-expansion is proportional to the
     * emitted pair set — the full shingle stream is never exploded into rows
     * and no O(n²) stage exists.
-    *
-    * Cache lifecycle: the returned frame's plan references `.cache()`d
-    * shingle/signature intermediates that this (lazy) operator cannot
-    * unpersist itself — the CALLER owns them; after consuming the result,
-    * call [[Caches.release]] (see its scaladoc for why lazy operators
-    * cannot do better).
     */
   def minHashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numPerm: Int = 32, bands: Int = 8,
@@ -593,10 +585,10 @@ object Dedup {
 
   /** Shared LSH core: (withFp, reps, repPairs) with withFp = (doc_id, shs,
     * fp) for every doc with ≥ 1 shingle, fp = hash of the SORTED shingle set
-    * (CACHED — Caches contract, caller releases), reps = one minimum-id
-    * representative per distinct set carrying its shingle array (cached,
-    * same contract), and repPairs = (doc_a, doc_b, jaccard) over rep ids,
-    * verified exact, round(jaccard, 4).
+    * (pinned), reps = one minimum-id representative per distinct set
+    * carrying its shingle array (pinned: the signature pin's job and the
+    * caller's query both read it), and repPairs = (doc_a, doc_b, jaccard)
+    * over rep ids, verified exact, round(jaccard, 4).
     */
   private def minHashCore(docs: DataFrame, idCol: String, textCol: String,
       n: Int, numPerm: Int, bands: Int, threshold: Double,
@@ -615,24 +607,23 @@ object Dedup {
     // ~bands·g·maxBucket candidate pairs through the salted buckets, and
     // identical-set pairs are emitted at recall 1 REGARDLESS of maxBucket
     // (the salt split can no longer scatter them).
-    val withFp = withSetKey(shingleArrays(docs, idCol, textCol, n)).cache()
-    val cached = withFp
+    val withFp = Par.pin(withSetKey(shingleArrays(docs, idCol, textCol, n)))
+    val cached = Par.pin(withFp
       .groupBy("fp")
-      .agg(min("doc_id").as("doc_id"), min_by(col("shs"), col("doc_id")).as("shs"))
-      .cache()
+      .agg(min("doc_id").as("doc_id"), min_by(col("shs"), col("doc_id")).as("shs")))
 
     // narrow: numPerm signature mins per doc, straight from the array.
-    // Cached because three consumers read it (the hot-bucket width aggregate
+    // Pinned because three consumers read it (the hot-bucket width aggregate
     // and both sides of the band self-join — exchange reuse covers the join
     // sides but not the aggregate): signatures are numPerm longs per doc, and
     // computing them is the pipeline's dominant narrow cost (numPerm hashes
     // per shingle). At 100 TB a deployment materializes signatures to storage
-    // once and reuses them across dedup runs — this cache is the single-run
+    // once and reuses them across dedup runs — this pin is the single-run
     // form of that standard practice.
     val sigCols = (0 until numPerm).map { j =>
       expr(s"array_min(transform(shs, s -> xxhash64($j, s)))").as(s"m$j")
     }
-    val sig = cached.select(col("doc_id") +: sigCols: _*).cache()
+    val sig = Par.pin(cached.select(col("doc_id") +: sigCols: _*))
 
     // band hashes: narrow (band, bh) keys, then equality self-join per bucket
     val bandCols = (0 until bands).map { k =>
@@ -849,23 +840,22 @@ object Dedup {
   }
 
   /** Shared banding core for the hamming family: (fps, reps, repPairs) with
-    * fps = (doc_id, fp) CACHED (Caches contract — caller releases; the reps
-    * build, re-expansions, and within-group joins all consume it, and when
-    * the input is a decode kernel recomputing it means re-decoding the
-    * corpus), reps = one minimum-id representative per distinct fingerprint
-    * (cached, same contract), and repPairs = every DISTINCT-fingerprint pair
-    * within `maxHamming` as (rep_a, fp_a, rep_b, fp_b, hamming), rep_a <
-    * rep_b — distinct fingerprints never pair at hamming 0, so one
-    * bit_count runs per distinct-hash candidate pair.
+    * fps = (doc_id, fp) pinned (the reps build, re-expansions, and
+    * within-group joins all consume it, and when the input is a decode
+    * kernel recomputing it means re-decoding the corpus), reps = one
+    * minimum-id representative per distinct fingerprint (one query reads
+    * it, so exchange reuse shares its aggregate), and repPairs = every
+    * DISTINCT-fingerprint pair within `maxHamming` as (rep_a, fp_a, rep_b,
+    * fp_b, hamming), rep_a < rep_b — distinct fingerprints never pair at
+    * hamming 0, so one bit_count runs per distinct-hash candidate pair.
     */
   private def hammingCore(hashes: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int, maxBucket: Int): (DataFrame, DataFrame, DataFrame) = {
     require(maxHamming >= 0 && maxHamming < 64, "need 0 <= maxHamming < 64")
     require(maxBucket > 1, "maxBucket must be > 1")
-    val fps = hashes.select(Keys.id(hashes, idCol).as("doc_id"),
-      col(hashCol).cast("long").as("fp"))
-      .cache()
-    val reps = fps.groupBy("fp").agg(min("doc_id").as("rep_id")).cache()
+    val fps = Par.pin(hashes.select(Keys.id(hashes, idCol).as("doc_id"),
+      col(hashCol).cast("long").as("fp")))
+    val reps = fps.groupBy("fp").agg(min("doc_id").as("rep_id"))
     val chunks = chunkStructs(maxHamming)
     val blocked = reps
       .select(col("rep_id"), col("fp"), explode(array(chunks: _*)).as("b"))
@@ -1009,13 +999,12 @@ object Dedup {
           s"maxHamming=${stateBands - 1}), probe uses maxHamming=$maxHamming — " +
           "state and probe maxHamming must match")
     }
-    // cached (caller releases per the Caches contract): fps feeds the probe
-    // bands, the anti-join left side, AND hammingClusters' internal scan — a
-    // decode-kernel input (imageHash) would otherwise re-decode the batch
-    // three times, the exact cost hammingCore's own cache avoids
-    val fps = newHashes.select(Keys.id(newHashes, idCol).as("doc_id"),
-      col(hashCol).cast("long").as("fp"))
-      .cache()
+    // pinned: fps feeds the probe bands, the anti-join left side, AND
+    // hammingClusters' own checkpoint jobs — a decode-kernel input
+    // (imageHash) would otherwise re-decode the batch three times, the
+    // exact cost hammingCore's own pin avoids
+    val fps = Par.pin(newHashes.select(Keys.id(newHashes, idCol).as("doc_id"),
+      col(hashCol).cast("long").as("fp")))
     val repBands = fps.filter(col("fp").isNotNull).select("fp").distinct()
       .select(col("fp"), explode(array(chunkStructs(maxHamming): _*)).as("b"))
       .select(col("fp"), col("b.chunk").as("chunk"), col("b.ch").as("ch"))
@@ -1108,31 +1097,30 @@ object Dedup {
     * graphs whose ids are not monotone along chains, which real fingerprint
     * graphs are not. Star edges are map-side-combinable groupBy mins plus
     * equality joins — no neighborhood collect, no driver-side graph. The edge
-    * frame is eagerly `localCheckpoint`ed EVERY round: an uncheckpointed loop
-    * grows the logical plan geometrically and the driver ends up spending
+    * frame is pinned ([[Par.pin]]) EVERY round: an unpinned loop grows the
+    * logical plan geometrically and the driver ends up spending
     * minutes per job just analyzing and stringifying it (Spark renders the
     * plan for the listener bus on every action). Non-convergence at maxIter
     * throws — silently returning partially merged components is how a dedup
     * pipeline over-retains duplicates without anyone noticing.
     */
   def clusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // localCheckpoint rather than cache: a cache bounds recompute but leaves
-    // the full upstream plan (e.g. the whole minhash LSH pipeline) inside
-    // every iteration's logical plan, where it gets re-canonicalized for
-    // cache lookup and re-stringified for the listener bus on every action —
-    // the loop must start from a plan LEAF. `uniq` keeps u==v rows so the
-    // final node cover includes docs that only self-pair. A null id would
+    // the loop state is pinned (Par.pin's loop rule): a plan that kept the
+    // full upstream (e.g. the whole minhash LSH pipeline) inside every
+    // iteration would be re-analyzed and re-stringified for the listener
+    // bus on every action — the loop must start from a plan LEAF. `uniq`
+    // keeps u==v rows so the final node cover includes docs that only
+    // self-pair. A null id would
     // fold into a self-pair through greatest/least and quietly vanish from
     // the components, so the eager checkpoint asserts non-null ids once.
     def id(c: String): Column = when(col(c).isNull, raise_error(lit(
       s"Dedup.clusters: pair column '$c' holds a null doc id — drop or " +
         "repair null ids before clustering"))).otherwise(col(c))
-    val uniq = pairs.select(
+    val uniq = Par.pin(pairs.select(
       greatest(id("doc_a"), id("doc_b")).as("u"),
       least(id("doc_a"), id("doc_b")).as("v"))
-      .distinct()
-      .localCheckpoint()
-    var edges = uniq.filter(col("u") =!= col("v")).localCheckpoint()
+      .distinct())
+    var edges = Par.pin(uniq.filter(col("u") =!= col("v")))
     var nEdges = edges.count()
     var converged = nEdges == 0
     var i = 0
@@ -1159,9 +1147,9 @@ object Dedup {
         .select(col("e.a").as("u"), col("e.b").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct()
-      // eager localCheckpoint: materializes next AND resets the logical plan
-      // to a LogicalRDD leaf — see the scaladoc note
-      val next = ss.localCheckpoint()
+      // the pin materializes next AND resets the logical plan to a leaf —
+      // see the scaladoc note
+      val next = Par.pin(ss)
       // stable edge set = every component is a star on its min = done. The
       // count compare is near-free on the materialized frame and gates the
       // except pass: a round that changed the edge count cannot be stable.
@@ -1214,9 +1202,6 @@ object Dedup {
     * blocking for callers like [[Semantic.semanticDedup]]'s per-cell prune,
     * which would otherwise re-join the quadratic pair stream against the
     * cell map just to discard cross-cell pairs.
-    *
-    * Cache lifecycle: the non-exact path caches the bucket frame; the caller
-    * releases via [[Caches.release]] — the [[minHashLshPairs]] contract.
     */
   def embeddingPairs(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, exact: Boolean = false,
@@ -1311,16 +1296,15 @@ object Dedup {
     * dropped row needs SOME smaller-id near-dup, not the full pair set — and
     * clusters() reconnects components transitively.
     *
-    * Cache lifecycle: caches the bucket frame (three consumers: width
-    * aggregate + both self-join sides); the caller releases via
-    * [[Caches.release]] — the [[minHashLshPairs]] contract.
+    * The bucket frame is pinned: the width aggregate and the self-join read
+    * it through different exchanges, so exchange reuse cannot share it.
     */
   private[operators] def signLshPairs(emb: DataFrame, idCol: String,
       vecCol: String, threshold: Double, maxBucket: Int = 1024,
       within: Seq[String] = Nil): DataFrame = {
     require(maxBucket > 1, "maxBucket must be > 1")
     val key = within ++ Seq("band", "bh")
-    val buckets = lshBuckets(emb, idCol, vecCol, threshold, within).cache()
+    val buckets = Par.pin(lshBuckets(emb, idCol, vecCol, threshold, within))
     val salted = saltHot(buckets, key, maxBucket,
         Seq(col("band"), col("vec_id")))._1
       .select(col("vec_id") +: col("v") +: (key :+ "salt").map(col): _*)
@@ -1344,8 +1328,8 @@ object Dedup {
     * self-join's independent-salt treatment), and reducers stay bounded by
     * maxBucket × the left side's bucket width.
     *
-    * Cache lifecycle: caches the right bucket frame (width aggregate + join
-    * side); [[Caches.release]], as everywhere.
+    * The right bucket frame is pinned (width aggregate + join side, two
+    * different exchanges).
     */
   private[graft] def embeddingPairsBetween(left: DataFrame, right: DataFrame,
       idCol: String, vecCol: String, threshold: Double,
@@ -1353,7 +1337,7 @@ object Dedup {
     require(maxBucket > 1, "maxBucket must be > 1")
     val key = within ++ Seq("band", "bh")
     val lB = lshBuckets(left, idCol, vecCol, threshold, within)
-    val rB = lshBuckets(right, idCol, vecCol, threshold, within).cache()
+    val rB = Par.pin(lshBuckets(right, idCol, vecCol, threshold, within))
     val (rSalted, hot) =
       saltHot(rB, key, maxBucket, Seq(col("band"), col("vec_id")))
     val rS = rSalted

@@ -47,11 +47,6 @@ object FuzzyJoin {
 
   /** All pairs within edit distance `k`, exact. Output: (id_a, id_b, dist)
     * with id_a < id_b, each pair once.
-    *
-    * Cache lifecycle: the returned frame references the `.cache()`d distinct
-    * string reps; the CALLER releases them after consuming the result
-    * ([[Caches.release]] — the same contract as [[Dedup.minHashLshPairs]],
-    * and [[pairsBetween]]'s two rep frames).
     */
   def pairsWithin(df: DataFrame, idCol: String, strCol: String, k: Int): DataFrame =
     pairsWithinScheme(df, idCol, strCol, k, forceSegments = false)
@@ -64,11 +59,13 @@ object FuzzyJoin {
   private[graft] def pairsWithinScheme(df: DataFrame, idCol: String,
       strCol: String, k: Int, forceSegments: Boolean): DataFrame = {
     require(k >= 1 && k <= 8, "pairsWithin supports 1 <= k <= 8")
-    val ids = df.select(Keys.id(df, idCol).as("id"), col(strCol).as("s"))
-    // blocking over distinct strings only (see scaladoc); cached because the
-    // candidate stage reads it from two join sides plus (k>=3) a short-string
-    // bucket, and the distinct is an exchange worth paying once
-    val reps = ids.select("s").distinct().cache()
+    // pinned: the rep distinct, both re-expansion joins and the
+    // within-group self-join read it through different exchanges (a plain
+    // scan passes through and is re-read with pruning)
+    val ids = Par.pin(df.select(Keys.id(df, idCol).as("id"), col(strCol).as("s")))
+    // blocking over distinct strings only (see scaladoc); the candidate
+    // stage's readers share the distinct's exchange
+    val reps = ids.select("s").distinct()
     val repPairs =
       if (k <= 2 && !forceSegments) deletionPairs(reps, k) else segmentPairs(reps, k)
     // re-expand distinct-string pairs to id pairs: every id holding sa pairs
@@ -106,10 +103,14 @@ object FuzzyJoin {
   def pairsBetween(left: DataFrame, leftId: String, leftStr: String,
       right: DataFrame, rightId: String, rightStr: String, k: Int): DataFrame = {
     require(k >= 1 && k <= 8, "pairsBetween supports 1 <= k <= 8")
-    val l = left.select(Keys.id(left, leftId).as("lid"), col(leftStr).as("sl"))
-    val r = right.select(Keys.id(right, rightId).as("rid"), col(rightStr).as("sr"))
-    val lReps = l.select("sl").distinct().cache()
-    val rReps = r.select("sr").distinct().cache()
+    // pinned as in pairsWithin: each side is read by its rep distinct and
+    // its re-expansion join
+    val l = Par.pin(
+      left.select(Keys.id(left, leftId).as("lid"), col(leftStr).as("sl")))
+    val r = Par.pin(
+      right.select(Keys.id(right, rightId).as("rid"), col(rightStr).as("sr")))
+    val lReps = l.select("sl").distinct()
+    val rReps = r.select("sr").distinct()
     val strPairs =
       if (k <= 2) {
         val lv = variantHashes(lReps, "sl", k)

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * the host graph aggregates that stream down to |hosts|² worst-case but
   * realistically |edges| ≪ |links| rows; PageRank then iterates over the
   * HOST graph — millions of rows at web scale, not billions — with one
-  * hash-partitioned join + aggregate per iteration and a `localCheckpoint`
+  * hash-partitioned join + aggregate per iteration and a [[Par.pin]]
   * per round to keep lineage flat (the `Dedup.connectedComponents`
   * discipline, Dedup.scala:693).
   */
@@ -184,8 +184,8 @@ object Links {
     else e.groupBy("src", "dst").agg(sum("w").as("w"))
   }
 
-  /** The flow frame [[dampedRank]] reads, pinned once (its shuffle stages
-    * run when the pin is created, see [[Par.sever]]): (keys…, src, dst,
+  /** The flow frame [[dampedRank]] reads, pinned once ([[Par.pin]]; every
+    * round reads it): (keys…, src, dst,
     * num, den) over an edge set `e` of (keys…, src, dst[, w]), where a
     * node of rank r sends (r·num) div den along each out-edge.
     *  - Unweighted: num = 1, den = outdeg(src) — the classic r div outdeg.
@@ -202,11 +202,10 @@ object Links {
     val bySrc = keys :+ "src"
     val out = e.groupBy(bySrc.map(col): _*)
       .agg((if (weighted) sum("w") else count(lit(1))).as("out"))
-    e.join(out, bySrc)
+    Par.pin(e.join(out, bySrc)
       .select(bySrc.map(col) ++ Seq(col("dst"),
         (if (weighted) expr("(w * 10000L) div out") else lit(1L)).as("num"),
-        (if (weighted) lit(10000L) else col("out")).as("den")): _*)
-      .localCheckpoint(eager = false)
+        (if (weighted) lit(10000L) else col("out")).as("den")): _*))
   }
 
   /** The damped fixed-point rank recurrence — ONE definition feeds
@@ -223,8 +222,7 @@ object Links {
     * bit-identical across engines. Spark's `/` would be double division
     * (and dampBp·Σ brushes 2^53). Each round is one equi-join of the ranks
     * onto the flow plus one hash aggregate on the destination, then a
-    * localCheckpoint so the plan does not deepen with `iters` — which runs
-    * the round's shuffle stages as it is created ([[Par.sever]]).
+    * [[Par.pin]] so the plan does not deepen with `iters`.
     */
   private[operators] def dampedRank(flow: DataFrame, nodes: DataFrame,
       teleport: Column, ranks0: DataFrame, keys: Seq[String], node: String,
@@ -236,10 +234,9 @@ object Links {
         .join(flow, keys :+ "src")
         .groupBy(kc :+ col("dst").as(node): _*)
         .agg(sum(expr("(rank * num) div den")).as("contrib"))
-      ranks = nodes.join(contrib, keys :+ node, "left")
+      ranks = Par.pin(nodes.join(contrib, keys :+ node, "left")
         .select(kc :+ col(node) :+ (teleport +
-          expr(s"(${dampBp}L * coalesce(contrib, 0L)) div 10000L")).as("rank"): _*)
-        .localCheckpoint(eager = false)
+          expr(s"(${dampBp}L * coalesce(contrib, 0L)) div 10000L")).as("rank"): _*))
     }
     ranks
   }
@@ -369,16 +366,15 @@ object Links {
     * Output: (host, auth, hub) for every host in the graph. Scale shape:
     * per half-step one equi-join on the edge key + one hash aggregate +
     * one 1-row max — all shuffles host-keyed, AQE-coalesced, with a
-    * localCheckpoint per half-step so the plan does not deepen with
-    * `iters` (the [[pageRank]] lineage discipline). Each pin runs its
-    * half-step's shuffle stages as it is created ([[Par.sever]]).
+    * [[Par.pin]] per half-step so the plan does not deepen with `iters`
+    * (the [[pageRank]] lineage discipline).
     */
   def hits(edges: DataFrame, iters: Int = 3, srcCol: String = "src_host",
       dstCol: String = "dst_host"): DataFrame = {
     require(iters >= 1 && iters <= 50, "need 1 <= iters <= 50")
     val HitsScale = 1000000000L
-    val e = edgeSet(edges, srcCol, dstCol).localCheckpoint(eager = false)
-    val nodes = hostsOf(e).localCheckpoint(eager = false)
+    val e = Par.pin(edgeSet(edges, srcCol, dstCol))
+    val nodes = Par.pin(hostsOf(e))
     // one half-step: sum the partner scores over the edges, then divide by
     // the integer normalizer derived from the max
     def half(scores: DataFrame, joinOn: String, outOn: String): DataFrame = {
@@ -389,14 +385,11 @@ object Links {
       // half-step — 2·iters blocking jobs per call whose only purpose was
       // turning max(raw) into a literal. greatest(m div HitsScale, 1) is the
       // identical integer arithmetic (m ≥ 0), so scores are bit-identical.
-      // The half-step still runs its shuffle stages where it is pinned
-      // below: under AQE a localCheckpoint is not lazy (Par.sever).
       val mx = raw.agg(coalesce(max("raw"), lit(0L)).as("m"))
-      nodes.join(raw, nodes("host") === raw("h"), "left")
+      Par.pin(nodes.join(raw, nodes("host") === raw("h"), "left")
         .crossJoin(broadcast(mx))
         .select(col("host"),
-          expr(s"coalesce(raw, 0L) div greatest(m div ${HitsScale}L, 1L)").as("s"))
-        .localCheckpoint(eager = false)
+          expr(s"coalesce(raw, 0L) div greatest(m div ${HitsScale}L, 1L)").as("s")))
     }
     var hub = nodes.withColumn("s", lit(HitsScale))
     var auth = nodes.withColumn("s", lit(0L))
@@ -441,10 +434,9 @@ object Links {
       seeds.select(col(seedCol).as("host")).na.drop().distinct())
     val ns = nodes.join(sd, "host").count()
     require(ns > 0, "trustRank: no seed host appears in the edge set")
-    val marked = nodes
+    val marked = Par.pin(nodes
       .join(sd.withColumn("is_seed", lit(true)), Seq("host"), "left")
-      .select(col("host"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .localCheckpoint(eager = false)
+      .select(col("host"), coalesce(col("is_seed"), lit(false)).as("is_seed")))
     def seedOnly(v: Long) = when(col("is_seed"), lit(v)).otherwise(lit(0L))
     val ranks = dampedRank(f, marked, seedOnly((10000L - dampBp) * Scale / ns / 10000L),
       marked.select(col("host"), seedOnly(Scale / ns).as("rank")),
@@ -473,7 +465,7 @@ object Links {
     *
     * Scale shape per round: one equi-join of labels onto the symmetrized
     * edge set + three map-side-combinable keyed aggregates (neighbor-label
-    * counts → per-host max → min winning label); `localCheckpoint` pins
+    * counts → per-host max → min winning label); [[Par.pin]] pins
     * the recurrence (the CC/pageRank lineage discipline). No windows over
     * corpus-sized partitions, no driver materialization.
     */
@@ -510,11 +502,10 @@ object Links {
       srcCol: String = "src_host", dstCol: String = "dst_host",
       hostCol: String = "host", labelCol: String = "label"): DataFrame = {
     val (e, nodes) = lpaGraph(edges, srcCol, dstCol)
-    val labels0 = nodes
+    val labels0 = Par.pin(nodes
       .join(init.select(col(hostCol).as("host"), col(labelCol).as("__l")),
         Seq("host"), "left")
-      .select(col("host"), coalesce(col("__l"), col("host")).as("label"))
-      .localCheckpoint(eager = false)
+      .select(col("host"), coalesce(col("__l"), col("host")).as("label")))
     lpaLoop(e, labels0, iters)
   }
 
@@ -527,10 +518,8 @@ object Links {
     val e0 = edges.select(col(srcCol).as("a") +: col(dstCol).as("b") +: w: _*)
     val both = e0.union(
       e0.select(col("b").as("a") +: col("a").as("b") +: w.map(_ => col("w")): _*))
-    val e = edgeSet(both, "a", "b", weightCol.map(_ => "w"))
-      .localCheckpoint(eager = false)
-    val nodes = e.select(col("src").as("host")).distinct()
-      .localCheckpoint(eager = false)
+    val e = Par.pin(edgeSet(both, "a", "b", weightCol.map(_ => "w")))
+    val nodes = Par.pin(e.select(col("src").as("host")).distinct())
     (e, nodes)
   }
 
@@ -556,9 +545,8 @@ object Links {
       val winners = Rank.topK(neigh, Seq("host"),
           Seq(col("cnt").desc, col("label").asc), 1, "__rn")
         .select(col("host"), col("label").as("nl"))
-      labels = labels.join(winners, Seq("host"), "left")
-        .select(col("host"), coalesce(col("nl"), col("label")).as("label"))
-        .localCheckpoint(eager = false)
+      labels = Par.pin(labels.join(winners, Seq("host"), "left")
+        .select(col("host"), coalesce(col("nl"), col("label")).as("label")))
     }
     labels
   }

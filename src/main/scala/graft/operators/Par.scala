@@ -1,6 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.spark_partition_id
 
 /** Scale-adaptive parallelism guard for expensive narrow kernels (r15
@@ -58,7 +63,7 @@ object Par {
         case p @ (_: Join | _: Aggregate | _: Window | _: Sort |
           _: RepartitionOperation | _: Deduplicate | _: GlobalLimit |
           _: LocalLimit) => p
-        case r: org.apache.spark.sql.execution.LogicalRDD => r
+        case r: LogicalRDD => r
       }
     }
     if (boundary.isDefined) return df
@@ -81,37 +86,78 @@ object Par {
     else df
   }
 
-  /** Materialize a frame once (a localCheckpoint) when its lineage is
-    * COMPUTED — contains a join/aggregate/window/distinct — so an operator
-    * that consumes it several times neither recomputes the subtree per
-    * consumer nor replays Catalyst analysis/optimization over N copies of it
-    * (guide §3.3: very wide plans make planning itself the bottleneck —
-    * "materialising an intermediate result (write + read back, or
-    * localCheckpoint) truncates the plan"; measured here: a 20 s
-    * q_dedup_semantic_retract run whose stage wall-sum was 7 s — the rest
-    * was the driver re-planning the state subtree per consumer). A
-    * scan-chain input (a parquet-backed state table) passes through
-    * untouched: re-scanning cheap source bytes with pruning beats copying
-    * them into block storage. Rows are unchanged — only where they are read
-    * from the second time.
+  /** THE materialization primitive: an eager `localCheckpoint()` of `df`,
+    * returned as a plan leaf. Every intermediate an operator materializes
+    * goes through here (or [[pinned]]); nothing else in the engine calls
+    * `cache`, `persist` or `localCheckpoint`. Intermediates live in one
+    * managed layer instead of per-operator choices (the Dremel shape).
     *
-    * `eager = false` does not make the pin lazy under adaptive execution
-    * (on in every graft session): building the checkpoint's RDD plans the
-    * adaptive query, and that runs every shuffle stage below it there and
-    * then. Only the final stage waits for the first action. On Spark 4.1.2
-    * (range → aggregate → aggregate, `local[2]`) creating the checkpoint ran
-    * 2 jobs with AQE on and 0 with it off. So every pin, here and at the
-    * operators' own `localCheckpoint(eager = false)` sites, pays its
-    * subtree's shuffles where it is created, not where it is read.
+    * Placement rule — a pin is placed only where one of these holds:
+    *  1. a loop re-reads its state: each round pins, so the plan does not
+    *     deepen with the round count and each round reads the last from
+    *     storage;
+    *  2. two or more consumers read a computed frame that exchange reuse
+    *     does not share — a driver action plus the returned plan counts as
+    *     two (an aggregate beside a self-join, a probe `collect` beside the
+    *     result, units of [[inParallel]]);
+    *  3. the rows must be fixed before an append (read-before-append): a
+    *     result computed against a state dir is pinned before that dir
+    *     grows, since a later read would see the grown state.
+    * A single consumer, or consumers that ReuseExchange already shares
+    * (both sides of one self-join), get no pin: copying costs a pass and
+    * block storage for nothing.
+    *
+    * Pass-through: a frame that is already a leaf — an earlier pin, or a
+    * plain file scan under Filters and bare-column Projects — comes back
+    * unchanged. Re-reading such a frame with pruning is cheaper than
+    * copying it into block storage.
+    *
+    * Why eager: under adaptive execution (on in every graft session) even
+    * `localCheckpoint(eager = false)` is not lazy — building the
+    * checkpoint's RDD plans the adaptive query, which runs every shuffle
+    * stage below it there and then; only the final stage waits for the
+    * first action. On Spark 4.1.2 (range → aggregate → aggregate,
+    * `local[2]`) creating a lazy checkpoint ran 2 jobs with AQE on and 0
+    * with it off. A lazy pin whose first readers are concurrent jobs (two
+    * [[inParallel]] units, both sides of a join) computes the final stage
+    * once per reader, and leaves plan state that the context cleaner may
+    * reclaim under a running job. The eager pin runs it once, here.
+    *
+    * Lifetime: a pin's blocks live until its frame is unreachable and the
+    * context cleaner drops them; [[pinned]] drops them at the end of a
+    * scope. Operators return no plan over a cache, so no caller owns a
+    * release ([[Caches.release]] is only a safety net).
     */
-  def sever(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    val deep =
-      try df.queryExecution.analyzed.collectFirst {
-        case p @ (_: Join | _: Aggregate | _: Window | _: Deduplicate) => p
-      }.isDefined
-      catch { case _: Exception => false }
-    if (deep) df.localCheckpoint(eager = false) else df
+  def pin(df: DataFrame): DataFrame =
+    if (isLeaf(df.queryExecution.optimizedPlan)) df else df.localCheckpoint()
+
+  /** [[pin]] `df`, run `body` over the pinned frame, and drop the pin's
+    * blocks when `body` returns or throws — for an operator that runs its
+    * own actions (index and sidecar writes) over one shared intermediate.
+    * Spark logs that the dropped checkpoint "cannot be recomputed after
+    * unpersisting"; nothing may read the pinned frame after `body`.
+    */
+  def pinned[A](df: DataFrame)(body: DataFrame => A): A = {
+    val p = pin(df)
+    try body(p)
+    finally if (p ne df) p.queryExecution.analyzed.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+  }
+
+  private def isLeaf(plan: LogicalPlan): Boolean = plan match {
+    case r: LogicalRDD => r.rdd.isCheckpointed
+    case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+    case _: DataSourceV2Relation => true
+    case Filter(_, child) => isLeaf(child)
+    case SubqueryAlias(_, child) => isLeaf(child)
+    case Project(list, child) => list.forall {
+      case _: Attribute => true
+      case Alias(_: Attribute, _) => true
+      case _ => false
+    } && isLeaf(child)
+    case _ => false
   }
 
   /** Run independent side-effecting Spark actions concurrently (guide §2.6

@@ -330,18 +330,17 @@ object Pipelines {
     * single exchange whose map-side partial collapses a clone flood inside
     * each input partition before any bytes move; every downstream explode
     * (windows, tokens, sizes) runs on the collapsed frame, i.e. AFTER the
-    * collapse. The collapsed frame is cached (caller releases per the
-    * [[Caches]] contract) because three consumers read it — on a crawl-shaped
-    * corpus it is a fraction of the input, and caching pre-collapse rows
-    * instead measured strictly worse on both corpus shapes (round-9 A/B).
+    * collapse. The collapsed frame is pinned because three consumers read it
+    * through different exchanges — on a crawl-shaped corpus it is a
+    * fraction of the input, and materializing pre-collapse rows instead
+    * measured strictly worse on both corpus shapes (round-9 A/B).
     */
   private def collapseStreams(docs: DataFrame, idCol: String, textCol: String)
       : (DataFrame, DataFrame) = {
     val words = streamWords(docs, idCol, textCol)
     (words.select("doc_id", "sh"),
-      words.groupBy("sh")
-        .agg(first("ws").as("ws"), count(lit(1)).as("m"))
-        .cache())
+      Par.pin(words.groupBy("sh")
+        .agg(first("ws").as("ws"), count(lit(1)).as("m"))))
   }
 
   /** xxhash64'd w-token rolling windows over the `ws` token array; empty for
@@ -619,11 +618,11 @@ object Pipelines {
       "shares must be positive basis points")
     require(shares.values.sum == 10000,
       s"shares must sum to 10000 bp, got ${shares.values.sum}")
-    val base = Rank.md5Salted(docs
+    // pinned: the collected domain counts and the returned cut read it
+    val base = Par.pin(Rank.md5Salted(docs
       .select(Keys.id(docs, idCol).as("doc_id"),
         col(domainCol).cast("string").as("domain"))
-      .filter(col("domain").isin(shares.keys.toSeq: _*)), "doc_id")
-      .cache()
+      .filter(col("domain").isin(shares.keys.toSeq: _*)), "doc_id"))
     val counts = base.groupBy("domain").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val total = shares.map { case (d, bp) =>
@@ -670,10 +669,10 @@ object Pipelines {
     require(totalDocs >= 1, "need totalDocs >= 1")
     require(alphaQuarters == 1 || alphaQuarters == 2,
       "supported temperatures: alphaQuarters = 2 (α = 1/2) or 1 (α = 1/4)")
-    val base = Rank.md5Salted(docs
+    // pinned: the collected domain counts and the returned cut read it
+    val base = Par.pin(Rank.md5Salted(docs
       .select(Keys.id(docs, idCol).as("doc_id"),
-        coalesce(col(domainCol).cast("string"), lit("<null>")).as("domain")), "doc_id")
-      .cache()
+        coalesce(col(domainCol).cast("string"), lit("<null>")).as("domain")), "doc_id"))
     val counts = base.groupBy("domain").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     require(counts.size <= 65536,
@@ -834,18 +833,17 @@ object Pipelines {
     * distribution. Degenerate residual: a domain whose kept boundary falls
     * inside one massive EQUAL-score tie group still concentrates that group
     * in one bucket (ties cut by doc_id are inherently one ordered stream).
-    * The narrow (doc_id, domain, score) projection is cached (caller
-    * releases per [[Caches]]) — the range aggregate and the rank both read it.
+    * The narrow (doc_id, domain, score) projection is pinned — the range
+    * aggregate and the rank both read it.
     */
   def quantileFilter(docs: DataFrame, idCol: String, scoreCol: String,
       domainCol: String, q: Double): DataFrame = {
     require(q >= 0.0 && q <= 1.0, s"quantile must be in [0, 1], got $q")
     val myriad = math.round(q * 10000).toInt // 4dp resolution
-    val base = docs
+    val base = Par.pin(docs
       .select(Keys.id(docs, idCol).as("doc_id"),
         col(domainCol).as("domain"), col(scoreCol).cast("double").as("score"))
-      .filter(col("score").isNotNull && !isnan(col("score")))
-      .cache()
+      .filter(col("score").isNotNull && !isnan(col("score"))))
     // per-domain score range + count: one broadcastable row per domain,
     // joined back null-safe so null-domain rows rank as one group
     val rng = base.groupBy(col("domain").as("__rd")).agg(
@@ -871,19 +869,18 @@ object Pipelines {
     * Scale shape: `start_tok` is [[Rank.bucketedPrefix]] of the token counts
     * over the md5 order's 256 leading-hex buckets, so no domain routes through
     * one reducer (ProfileSkew's 90%-one-domain corpus pins the no-straggler
-    * claim). The narrow (doc_id, domain, n_tokens) projection is cached
-    * (caller releases per the [[Caches]] contract) because both levels of the
-    * prefix read it — without the cache the tokenization pass would run twice.
+    * claim). The narrow (doc_id, domain, n_tokens) projection is pinned
+    * because both levels of the prefix read it — unpinned, the tokenization
+    * pass would run twice.
     */
   def tokenBudgetSample(docs: DataFrame, idCol: String, textCol: String,
       domainCol: String, budgets: Map[String, Long],
       defaultBudget: Long = Long.MaxValue): DataFrame = {
     val nTok = size(TextAnalysis.words(col(textCol)))
-    val base = Rank.md5Salted(Par.spread(docs).select(
+    val base = Par.pin(Rank.md5Salted(Par.spread(docs).select(
       Keys.id(docs, idCol).as("doc_id"),
       col(domainCol).as("domain"),
-      nTok.cast("long").as("n_tokens")), "doc_id")
-      .cache()
+      nTok.cast("long").as("n_tokens")), "doc_id"))
     // a null domain never equals a configured name, so it draws the default
     // budget — the pre-split Window semantics
     val budget = budgets.foldLeft(lit(defaultBudget)) {
@@ -931,11 +928,11 @@ object Pipelines {
     require(state.columns.contains("domain") && state.columns.contains("spent_tok"),
       "state must be a tokenBudgetState table carrying (domain, spent_tok)")
     val nTok = size(TextAnalysis.words(col(textCol)))
-    val base = Rank.md5Salted(Par.spread(newDocs).select(
+    // pinned: both levels of the prefix read it (tokenBudgetSample)
+    val base = Par.pin(Rank.md5Salted(Par.spread(newDocs).select(
       Keys.id(newDocs, idCol).as("doc_id"),
       col(domainCol).as("domain"),
-      nTok.cast("long").as("n_tokens")), "doc_id")
-      .cache()
+      nTok.cast("long").as("n_tokens")), "doc_id"))
     // the ≤|domains|-row spend state, joined null-safe on the domain name
     val spent = state.select(col("domain").cast("string").as("__sd"),
       col("spent_tok").cast("long").as("__spent"))

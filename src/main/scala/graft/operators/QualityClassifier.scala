@@ -35,11 +35,11 @@ import org.apache.spark.sql.types.DecimalType
   *    model and a SQL oracle can unroll the training loop as one CTE chain
   *    per iteration.
   *
-  * Scale shape: the corpus is read ONCE into a cached (doc_id, f) feature
-  * frame plus a (doc_id, y6) label frame (caller releases per the [[Caches]]
-  * contract). Each iteration is: broadcast the (nBuckets+1)-row weight table
-  * to the features (a broadcast hash join — the corpus never re-shuffles on
-  * anything but the map-side-combinable doc_id/f aggregates), one
+  * Scale shape: the corpus is read ONCE into a pinned (doc_id, f) feature
+  * frame plus a pinned (doc_id, y6) label frame. Each iteration is:
+  * broadcast the (nBuckets+1)-row weight table to the features (a
+  * broadcast hash join — the corpus never re-shuffles on anything but the
+  * map-side-combinable doc_id/f aggregates), one
   * margin-per-doc aggregate, one gradient-per-feature aggregate, and a
   * driver collect of EXACTLY nBuckets+1 rows (bounded plan-time metadata,
   * the IVF-codebook pattern — never a corpus collect). Iterations are a
@@ -112,9 +112,9 @@ object QualityClassifier {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val labels = docs.select(Keys.id(docs, idCol).as("doc_id"),
-      (label.cast("bigint") * lit(Scale)).as("y6")).cache()
-    val feats = features(docs, idCol, textCol, nBuckets, wordBigrams).cache()
+    val labels = Par.pin(docs.select(Keys.id(docs, idCol).as("doc_id"),
+      (label.cast("bigint") * lit(Scale)).as("y6")))
+    val feats = Par.pin(features(docs, idCol, textCol, nBuckets, wordBigrams))
     val n = labels.count()
     require(n > 0, "empty training corpus")
     // |g6| <= n * 1e6, so |g6| * lr6 must stay inside a signed 64-bit long:
@@ -125,15 +125,14 @@ object QualityClassifier {
         "subsample the reference set upstream")
 
     // weights live as an (nBuckets+1)-row frame (bias at f = -1), the whole
-    // GD recurrence chained IN-PLAN with a localCheckpoint per round — no
-    // collect per iteration (r16 opt round; the Links.hits treatment: r15
-    // had already halved this loop from two collects per iteration to one,
-    // this removes the last). Bounded model state per round, identical
-    // exact fixed-point integers. The pins are not lazy under AQE: each
-    // round's shuffle stages run as its checkpoint is created (Par.sever),
-    // so the rounds run here, not at the caller's first action.
+    // GD recurrence chained IN-PLAN with a Par.pin per round — no collect
+    // per iteration (r16 opt round; the Links.hits treatment: r15 had
+    // already halved this loop from two collects per iteration to one, this
+    // removes the last). Bounded model state per round, identical exact
+    // fixed-point integers. The rounds run here, not at the caller's first
+    // action. The all-zero start is a local relation, read in place.
     var wDf = ((0L until nBuckets.toLong).map(_ -> 0L) :+ (-1L -> 0L))
-      .toDF("f", "w6").localCheckpoint(eager = false)
+      .toDF("f", "w6")
 
     for (_ <- 1 to iters) {
       val biasDf = wDf.filter(col("f") === -1L).select(col("w6").as("b6"))
@@ -146,10 +145,9 @@ object QualityClassifier {
           Seq("doc_id"), "left")
         .select(col("doc_id"), col("y6"),
           (col("b6") + coalesce(col("s6"), lit(0L))).as("z6"))
-      // algebraic sigmoid, all-integer — no libm anywhere; checkpointed (not
-      // cached) because both gradient branches below read it
-      val errs = zs.select(col("doc_id"), expr(errExprSql).as("err6"))
-        .localCheckpoint(eager = false)
+      // algebraic sigmoid, all-integer — no libm anywhere; pinned because
+      // both gradient branches below read it
+      val errs = Par.pin(zs.select(col("doc_id"), expr(errExprSql).as("err6")))
       // gradient: presence features ⇒ g6_f = Σ_{docs ∋ f} err6 — exact.
       // The bias gradient rides the SAME frame as the f = -1 row (features
       // are non-negative buckets, so -1 never collides).
@@ -158,10 +156,9 @@ object QualityClassifier {
         .unionByName(errs.agg(sum("err6").as("g6"))
           .select(lit(-1L).as("f"), col("g6")))
         .select(col("f"), expr(stepExprSql(lr6, n)).as("step6"))
-      wDf = wDf.join(steps, Seq("f"), "left")
+      wDf = Par.pin(wDf.join(steps, Seq("f"), "left")
         .select(col("f"),
-          (col("w6") - coalesce(col("step6"), lit(0L))).as("w6"))
-        .localCheckpoint(eager = false)
+          (col("w6") - coalesce(col("step6"), lit(0L))).as("w6")))
     }
     // w6 / 1e6 at 6dp is exact; the cast to DECIMAL(18,6) matches the old
     // BigDecimal.valueOf(v, 6) surface bit-for-bit

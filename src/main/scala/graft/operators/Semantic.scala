@@ -139,9 +139,8 @@ object Semantic {
     * (k·d multiply-adds per row inside codegen, no shuffle) plus one
     * (cell, pos)-keyed aggregate whose map-side partial combine caps the
     * exchange at k·d rows per task; centroids live as a k-row frame with
-    * a localCheckpoint per round so the plan does not deepen with
-    * `iters` (each one runs its round's shuffle stages as it is created,
-    * [[Par.sever]]). Data-sized work is exactly iters+1 scans — the textbook
+    * a [[Par.pin]] per round so the plan does not deepen with `iters`.
+    * Data-sized work is exactly iters+1 scans — the textbook
     * distributed Lloyd shape (Spark MLlib KMeans restated in the
     * portable-integer discipline).
     */
@@ -149,13 +148,11 @@ object Semantic {
       iters: Int = 2): DataFrame = {
     require(k >= 1, "k must be positive")
     require(iters >= 1 && iters <= 20, "need 1 <= iters <= 20")
-    val vecs = Par.spread(emb.filter(col(vecCol).isNotNull))
+    val vecs = Par.pin(Par.spread(emb.filter(col(vecCol).isNotNull))
       .select(Keys.id(emb, idCol).as("vec_id"),
-        qvGuard(quantized(vecCol), size(col(vecCol)), 1, "kmeansTrain").as("qv"))
-      .localCheckpoint(eager = false)
-    var cents = seedDraw(vecs, k)
-      .select(col("vec_id").as("cell"), col("qv").as("cv"))
-      .localCheckpoint(eager = false)
+        qvGuard(quantized(vecCol), size(col(vecCol)), 1, "kmeansTrain").as("qv")))
+    var cents = Par.pin(seedDraw(vecs, k)
+      .select(col("vec_id").as("cell"), col("qv").as("cv")))
     for (_ <- 1 to iters) {
       val means = assignAgainst(vecs, cents)
         .join(vecs, "vec_id")
@@ -167,9 +164,8 @@ object Semantic {
       val upd = means.groupBy("cell")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
           x => x.getField("c")).as("cv2"))
-      cents = cents.as("p").join(upd, Seq("cell"), "left")
-        .select(col("cell"), coalesce(col("cv2"), col("p.cv")).as("cv"))
-        .localCheckpoint(eager = false)
+      cents = Par.pin(cents.as("p").join(upd, Seq("cell"), "left")
+        .select(col("cell"), coalesce(col("cv2"), col("p.cv")).as("cv")))
     }
     val counts = assignAgainst(vecs, cents)
       .groupBy("cell").agg(count(lit(1)).as("n_members"))
@@ -268,11 +264,11 @@ object Semantic {
     require(vecIds.columns.contains("vec_id"),
       "vecIds must carry the retracted ids as 'vec_id'")
     // the seed probe is an EAGER action and the anti-join result is read
-    // again downstream — sever a computed state lineage once so the probe's
-    // forced computation is reused instead of repeated (Par.sever is a no-op
-    // for a parquet-backed state table)
-    val st = Par.sever(state)
-    val ids = Par.sever(vecIds.select("vec_id").distinct())
+    // again downstream — pin a computed state lineage once so the probe's
+    // computation is reused instead of repeated (a parquet-backed state
+    // table passes through)
+    val st = Par.pin(state)
+    val ids = Par.pin(vecIds.select("vec_id").distinct())
     val seedHit = st.filter(col("is_seed"))
       .join(broadcast(ids), Seq("vec_id"), "left_semi")
       .limit(1).collect()
@@ -306,9 +302,10 @@ object Semantic {
     // the state feeds FOUR subplans (seeds, hot-cell widths, the cold and
     // hot history sides) — a computed state lineage (the retract form chains
     // semanticState → semanticRetract in one plan) would be recomputed and
-    // RE-PLANNED per consumer; sever materializes it once (no-op for a
-    // parquet-backed state, which each consumer re-scans with pruning)
-    val st = Par.sever(state)
+    // RE-PLANNED per consumer; the pin materializes it once (a
+    // parquet-backed state passes through, and each consumer re-scans it
+    // with pruning)
+    val st = Par.pin(state)
     val seeds = Seeds.collect(st.filter(col("is_seed"))
       .select(col("vec_id").as("seed_id"), quantized("v").as("sv")), "seed_id", "sv")
     // an empty codebook would assign NOTHING and silently drop the whole
@@ -322,9 +319,9 @@ object Semantic {
     val vecs = newEmb.filter(col(vecCol).isNotNull)
       .select(Keys.id(newEmb, idCol).as("vec_id"), col(vecCol).as("v"),
         quantized(vecCol).as("qv"))
-    // batch-sized; severed because it feeds the history tag, the survivor
+    // batch-sized; pinned because it feeds the history tag, the survivor
     // anti-join AND the within-batch prune
-    val assigned = Par.sever(withCell(vecs, seeds).select("vec_id", "cell", "v"))
+    val assigned = Par.pin(withCell(vecs, seeds).select("vec_id", "cell", "v"))
     // History check, with the SAME hot-cell bound the within-batch prune
     // has: a cell whose STATE side exceeds maxCell would otherwise put
     // |batch-in-cell| × width cosines in one reducer. Cold cells join
@@ -362,7 +359,7 @@ object Semantic {
       "vec_id", "v", threshold, within = Seq("cell"))
       .select(col("vec_a").as("vec_id"))
     val hits = coldHits.unionByName(hotHits).distinct()
-    val fresh = Par.sever(assigned.join(hits, Seq("vec_id"), "left_anti"))
+    val fresh = Par.pin(assigned.join(hits, Seq("vec_id"), "left_anti"))
     fresh
       .join(withinCellDrops(fresh.select("cell", "vec_id", "v"), threshold, maxCell),
         Seq("vec_id"), "left_anti")

@@ -428,14 +428,14 @@ object Similarity {
       nlist: Int = 16, m: Int = 8, ksub: Int = 16): Unit = {
     val p0 = Semantic.pqParts(emb, idCol, vecCol, m, ksub)
     // the quantized vectors feed the encode + assign projection, both seed
-    // draws and the .cells sidecar; uncached they would re-scan +
+    // draws and the .cells sidecar; unpinned they would re-scan +
     // re-quantize the source each time
-    val p = p0.copy(vecs = p0.vecs.cache())
-    val draw = Semantic.seedDraw(p.vecs, nlist)
-    val cells = Seeds.collect(draw, "vec_id", "qv")
-    val rows = Semantic.withCell(p.vecs, cells)
-      .select(col("vec_id"), Semantic.codesOf(p).as("codes"), col("cell"))
-    try {
+    Par.pinned(p0.vecs) { vecs =>
+      val p = p0.copy(vecs = vecs)
+      val draw = Semantic.seedDraw(p.vecs, nlist)
+      val cells = Seeds.collect(draw, "vec_id", "qv")
+      val rows = Semantic.withCell(p.vecs, cells)
+        .select(col("vec_id"), Semantic.codesOf(p).as("codes"), col("cell"))
       // the index and its two sidecars are independent outputs — overlap
       // them (guide §2.6: independent output jobs from a small pool;
       // disjoint paths)
@@ -455,7 +455,7 @@ object Similarity {
         // count (m rides along so a probe needs no out-of-band metadata)
         () => p.seeds.select(col("r"), col("sv"), lit(p.m).as("m"))
           .write.mode("overwrite").parquet(s"$dir.codebook"))
-    } finally p.vecs.unpersist()
+    }
   }
 
   /** Probe a materialized IVF+PQ index: coarse-seed distances (nlist sidecar

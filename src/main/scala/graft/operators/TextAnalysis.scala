@@ -283,14 +283,12 @@ object TextAnalysis {
   def bm25IndexWrite(docs: DataFrame, idCol: String, textCol: String,
       dir: String): Unit = {
     val spark = docs.sparkSession
-    val base = Par.spread(docs).select(Keys.id(docs, idCol).as("doc_id"),
+    // the writes below share the tokenize pass
+    Par.pinned(Par.spread(docs).select(Keys.id(docs, idCol).as("doc_id"),
       words(coalesce(col(textCol), lit(""))).as("ws"))
-      .withColumn("dl", size(col("ws")).cast("long"))
-      .cache() // the writes below share the tokenize pass
-    try {
-      // three independent outputs off the shared cached tokenize pass —
-      // overlap them (guide §2.6); the cache lock dedupes the first
-      // materialization between the racing jobs
+      .withColumn("dl", size(col("ws")).cast("long"))) { base =>
+      // three independent outputs off the shared pinned tokenize pass —
+      // overlap them (guide §2.6)
       Par.inParallel(
         () => base.agg(count(lit(1)).as("nd"), coalesce(sum("dl"), lit(0L)).as("ltot"))
           .write.mode("overwrite").parquet(s"$dir.stats"),
@@ -310,7 +308,7 @@ object TextAnalysis {
       // bm25IndexDelete against the PREVIOUS index generation
       val (fs, pTomb) = fsAt(spark, s"$dir.tombstones")
       if (fs.exists(pTomb)) fs.delete(pTomb, true)
-    } finally base.unpersist()
+    }
   }
 
   private def fsAt(spark: org.apache.spark.sql.SparkSession, path: String) = {
@@ -392,11 +390,9 @@ object TextAnalysis {
       dir: String): Unit = {
     val spark = docs.sparkSession
     requireNoStagedSidecar(spark, dir)
-    val base = Par.spread(docs).select(Keys.id(docs, idCol).as("doc_id"),
+    Par.pinned(Par.spread(docs).select(Keys.id(docs, idCol).as("doc_id"),
       words(coalesce(col(textCol), lit(""))).as("ws"))
-      .withColumn("dl", size(col("ws")).cast("long"))
-      .cache()
-    try {
+      .withColumn("dl", size(col("ws")).cast("long"))) { base =>
       val delta = base.agg(count(lit(1)).as("nd"),
         coalesce(sum("dl"), lit(0L)).as("ltot")).head()
       val prev = spark.read.parquet(s"$dir.stats").head()
@@ -422,7 +418,7 @@ object TextAnalysis {
           .write.partitionBy("bucket").mode("append").parquet(dir))
       markPayloadCommitted(spark, dir)
       swapStats(spark, dir)
-    } finally base.unpersist()
+    }
   }
 
   /** Retire documents from a materialized BM25 index — the takedown /
@@ -450,8 +446,7 @@ object TextAnalysis {
   def bm25IndexDelete(docIds: DataFrame, idCol: String, dir: String): Unit = {
     val spark = docIds.sparkSession
     requireNoStagedSidecar(spark, dir)
-    val ids = docIds.select(Keys.id(docIds, idCol).as("doc_id")).distinct().cache()
-    try {
+    Par.pinned(docIds.select(Keys.id(docIds, idCol).as("doc_id")).distinct()) { ids =>
       val (fs, pTomb) = fsAt(spark, s"$dir.tombstones")
       val removed =
         if (fs.exists(pTomb))
@@ -464,7 +459,7 @@ object TextAnalysis {
       ids.write.mode("append").parquet(s"$dir.tombstones")
       markPayloadCommitted(spark, dir)
       swapStats(spark, dir)
-    } finally ids.unpersist()
+    }
   }
 
   /** Probe a materialized [[bm25IndexWrite]] index: read ONLY the query
@@ -686,9 +681,9 @@ object TextAnalysis {
     require(k >= 1, "k must be positive")
     val ids = Rank.md5Salted(
       docs.select(Keys.id(docs, docIdCol).as("neg_id")).distinct(), "neg_id")
-    val ranked = Rank.md5Prefix(ids, Nil, "neg_id", out = "__r")
-      .select("neg_id", "__r")
-      .localCheckpoint(eager = false)
+    // pinned: the size check's count and the returned probe both read it
+    val ranked = Par.pin(Rank.md5Prefix(ids, Nil, "neg_id", out = "__r")
+      .select("neg_id", "__r"))
     val nD = ranked.count()
     require(nD > k, s"need more than k=$k distinct documents, got $nD")
     val cands = pairs
@@ -1293,10 +1288,9 @@ object TextAnalysis {
         col("tg.w3").as("w3"))
     val refTri = trigramsOf(refDocs)
     val target = if (refDocs eq docs) refTri else trigramsOf(docs)
-    // four re-aggregations + the top-V cut read the trigram counts; the
-    // cache releases via the [[Caches]] caller-owned contract
+    // four re-aggregations + the top-V cut read the trigram counts, all in
+    // the one returned query, where exchange reuse shares the aggregate
     val freq3 = refTri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c123"))
-      .cache()
     // every lower-order table re-aggregates the trigram counts — the
     // bigramLogProb "non-final position" convention, one corpus pass total
     val ctx12 = freq3.groupBy("w1", "w2").agg(sum("c123").as("c12"))
@@ -1390,10 +1384,9 @@ object TextAnalysis {
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     val refBg = bigramsOf(refDocs)
     val target = if (refDocs eq docs) refBg else bigramsOf(docs)
-    // three re-aggregations + the top-V cut read the bigram counts; cache
-    // released via the [[Caches]] caller-owned contract
+    // three re-aggregations + the top-V cut read the bigram counts, all in
+    // the one returned query, where exchange reuse shares the aggregate
     val freq2 = refBg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .cache()
     val ctx = freq2.groupBy("w1")
       .agg(sum("c12").as("c1"), count(lit(1)).as("n1"))
     val cont = freq2.groupBy("w2").agg(count(lit(1)).as("nc"))
@@ -1574,12 +1567,11 @@ object TextAnalysis {
   def perplexityBuckets(scored: DataFrame, idCol: String, groupCol: String,
       sumCol: String, nCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // cached: the scored frame (often a full LM scoring pass) feeds BOTH
-    // the codomain count and the final join — uncached it would run twice.
-    // Caller-owned lifecycle, the [[Caches]] contract.
-    val a = scored.select(Keys.id(scored, idCol).as("doc_id"),
-      col(groupCol).as("grp"), avgE6Expr(sumCol, nCol).as("avg_e6"))
-      .cache()
+    // pinned: the scored frame (often a full LM scoring pass) feeds BOTH
+    // the codomain count and the final join, through different exchanges —
+    // unpinned it would run twice
+    val a = Par.pin(scored.select(Keys.id(scored, idCol).as("doc_id"),
+      col(groupCol).as("grp"), avgE6Expr(sumCol, nCol).as("avg_e6")))
     val cnt = a.groupBy("grp", "avg_e6").agg(count(lit(1)).as("c"))
     val desc6 = Window.partitionBy("grp").orderBy(col("avg_e6").desc)
     val buckets = cnt.select(col("grp"), col("avg_e6"),
@@ -1901,10 +1893,10 @@ object TextAnalysis {
     require(iters >= 1 && iters <= 20, "need 1 <= iters <= 20")
     require(topK >= 1, "topK must be positive")
     require(dampBp >= 0 && dampBp <= 10000, "dampBp is basis points")
-    val toks = Par.spread(docs.filter(col(textCol).isNotNull))
+    // pinned: both sides of the window join and the node set read it
+    val toks = Par.pin(Par.spread(docs.filter(col(textCol).isNotNull))
       .select(Keys.id(docs, idCol).as("doc_id"),
-        posexplode(words(col(textCol))).as(Seq("pos", "w")))
-      .localCheckpoint(eager = false)
+        posexplode(words(col(textCol))).as(Seq("pos", "w"))))
     // renamed right-side keys: both sides are `toks`, and a shared-lineage
     // join key trips DetectAmbiguousSelfJoin
     val fwd = toks
@@ -1919,8 +1911,8 @@ object TextAnalysis {
       .unionByName(fwd.select(col("doc_id"), col("w2").as("src"),
         col("w").as("dst")))
       .distinct()
-    val nodes = toks.select("doc_id", "w").distinct()
-      .localCheckpoint(eager = false)
+    // pinned: every rank round reads the per-doc node frame
+    val nodes = Par.pin(toks.select("doc_id", "w").distinct())
     val perDoc = nodes.join(
       nodes.groupBy(col("doc_id").as("nd_doc")).agg(count(lit(1)).as("n")),
       col("doc_id") === col("nd_doc"))

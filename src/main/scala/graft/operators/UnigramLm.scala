@@ -153,16 +153,18 @@ object UnigramLm {
     require(maxPieceLen >= 2 && maxPieceLen <= 16, "need 2 <= maxPieceLen <= 16")
     require(seedSize >= 1 && seedSize <= 16384, "need 1 <= seedSize <= 16384")
     require(iters >= 1 && iters <= 10, "need 1 <= iters <= 10")
-    val words = wordTypes(docs, textCol).localCheckpoint()
+    // pinned: the seed count and every EM round read the word types
+    val words = Par.pin(wordTypes(docs, textCol))
     // seed counts: every substring up to maxPieceLen, weighted by word
     // freq. NOT array_distinct'd: a piece occurring twice in one word
     // counts twice (its usage under any segmentation of that word)
-    val subs = words.select(col("cnt"), explode(expr(
+    val subCounts = words.select(col("cnt"), explode(expr(
       s"""flatten(transform(sequence(1, length(w)), i ->
          |  transform(sequence(i, least(length(w), i + ${maxPieceLen - 1})),
          |    j -> substring(w, i, j - i + 1))))""".stripMargin)).as("p"))
       .groupBy("p").agg(sum("cnt").as("n"))
-      .localCheckpoint()
+    // pinned: the two collects below both read the seed counts
+    val subs = Par.pin(subCounts)
     val chars = subs.filter(length(col("p")) === 1)
       .collect().map(r => r.getString(0) -> r.getLong(1))
     val seedMulti = subs.filter(length(col("p")) > 1)

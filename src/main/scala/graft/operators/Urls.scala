@@ -191,15 +191,13 @@ object Urls {
     * Scale shape: the per-host rank is [[Rank.bucketedPrefix]] over the md5
     * order's 256 leading-hex buckets, so NO host routes through a single
     * reducer, no matter how hot. The narrow (doc_id, host, ord) projection is
-    * cached (caller releases per the [[Caches]] contract) because both levels
-    * of the rank read it.
+    * pinned because both levels of the rank read it.
     */
   def hostCap(docs: DataFrame, idCol: String, urlCol: String,
       maxPerHost: Int): DataFrame = {
     require(maxPerHost >= 1, "need maxPerHost >= 1")
-    val base = Rank.md5Salted(docs.select(Keys.id(docs, idCol).as("doc_id"),
-      hostOf(col(urlCol)).as("host")), "doc_id")
-      .cache()
+    val base = Par.pin(Rank.md5Salted(docs.select(Keys.id(docs, idCol).as("doc_id"),
+      hostOf(col(urlCol)).as("host")), "doc_id"))
     Rank.md5Prefix(base, Seq("host"), "doc_id")
       .filter(col("__pre") < maxPerHost)
       .select("doc_id", "host")

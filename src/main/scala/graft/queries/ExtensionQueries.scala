@@ -872,8 +872,8 @@ object ExtensionQueries {
     "q_link_frontier" -> ((s, d) => {
       // materialized once: the regex link extraction feeds both the batch
       // and the state side of the incremental dedup
-      val links = Links.extractLinks(linkPages(t(s, d, "documents")),
-        "doc_id", "url", "html").localCheckpoint(eager = false)
+      val links = Par.pin(Links.extractLinks(linkPages(t(s, d, "documents")),
+        "doc_id", "url", "html"))
       graft.operators.Urls.urlDedupIncremental(
         links.filter(col("doc_id") >= 20), "doc_id", "dst_url",
         graft.operators.Urls.urlState(
@@ -886,8 +886,8 @@ object ExtensionQueries {
     "q_frontier_ranked" -> ((s, d) => {
       // materialized once: three consumers (frontier batch, frontier state,
       // the PageRank edge pass) would each re-run the regex extraction
-      val links = Links.extractLinks(linkPages(t(s, d, "documents")),
-        "doc_id", "url", "html").localCheckpoint(eager = false)
+      val links = Par.pin(Links.extractLinks(linkPages(t(s, d, "documents")),
+        "doc_id", "url", "html"))
       val frontier = graft.operators.Urls.urlDedupIncremental(
         links.filter(col("doc_id") >= 20), "doc_id", "dst_url",
         graft.operators.Urls.urlState(
@@ -934,13 +934,12 @@ object ExtensionQueries {
       val docs = t(s, d, "documents")
       // materialized once: frontier batch + frontier state + PageRank edges
       // all read the extraction; the robots fixture feeds rules AND delays
-      val links = Links.extractLinks(linkPages(docs), "doc_id", "url", "html")
-        .localCheckpoint(eager = false)
+      val links = Par.pin(Links.extractLinks(linkPages(docs), "doc_id", "url", "html"))
       val frontier = graft.operators.Urls.urlDedupIncremental(
         links.filter(col("doc_id") >= 20), "doc_id", "dst_url",
         graft.operators.Urls.urlState(
           links.filter(col("doc_id") < 20), "doc_id", "dst_url"))
-      val robots = frontierRobotsFixture(docs).localCheckpoint(eager = false)
+      val robots = Par.pin(frontierRobotsFixture(docs))
       val verdicts = graft.operators.Urls.robotsFilter(
         frontier, "url_canon", "url_canon",
         graft.operators.Urls.robotsRules(robots, "host", "content", "graftbot"))
@@ -1071,16 +1070,13 @@ object ExtensionQueries {
       val quotes = docs.filter(col("doc_id") % 20 === 0 && col("doc_id") < 250)
         .select((col("doc_id") + 100000L).as("doc_id"), col("source"),
           col("text"))
-      // materialized once, EAGERLY: both container writes consume it from
-      // concurrent inParallel threads, and a lazy checkpoint first
-      // materialized by two racing jobs degrades to duplicate computation.
-      // Spread BEFORE the checkpoint: the checkpointed RDD pins its
-      // partitioning, and an unspread scan+union materializes as 1-2
-      // partitions — every downstream fixture pass would run serial
+      // pinned: both container writes consume it from concurrent
+      // inParallel threads. Spread BEFORE the pin: the checkpointed RDD
+      // pins its partitioning, and an unspread scan+union materializes as
+      // 1-2 partitions — every downstream fixture pass would run serial
       // (warcFixture's own spread correctly declines on LogicalRDD leaves)
-      val all = graft.operators.Par.spread(
-        docs.select("doc_id", "source", "text").unionByName(quotes))
-        .localCheckpoint()
+      val all = Par.pin(Par.spread(
+        docs.select("doc_id", "source", "text").unionByName(quotes)))
       val dir0 = s"target/gwarc_${new java.io.File(d).getName}_inc0"
       val dir1 = s"target/gwarc_${new java.io.File(d).getName}_inc1"
       graft.operators.Par.inParallel(
@@ -1089,23 +1085,19 @@ object ExtensionQueries {
         () => graft.sources.Warc.write(
           warcFixture(all.filter(col("doc_id") >= 250), withNulls = false), dir1))
       // the container walks and the extracted/gated frames each feed 3-4
-      // downstream states — uncached, every consumer would re-run the GWARC
-      // parse / the extraction chain (measured 15.0 -> see BASELINE r10);
-      // released per the Caches contract (Verify/Bench release per query)
-      val recs0 = graft.sources.Warc.read(s, dir0).filter(col("html").isNotNull)
-        .cache()
-      val recs1 = graft.sources.Warc.read(s, dir1).filter(col("html").isNotNull)
-        .cache()
+      // downstream states — unpinned, every consumer would re-run the GWARC
+      // parse / the extraction chain (measured 15.0 -> see BASELINE r10)
+      val recs0 = Par.pin(graft.sources.Warc.read(s, dir0).filter(col("html").isNotNull))
+      val recs1 = Par.pin(graft.sources.Warc.read(s, dir1).filter(col("html").isNotNull))
       // ---- round 0: batch operators establish the four states ----
       val urlSt = graft.operators.Urls.urlState(recs0, "record_id", "url")
       val kept0 = graft.operators.Urls.urlDedup(recs0, "record_id", "url")
         .select(col("doc_id").as("record_id"))
-      val g0 = TextAnalysis.htmlExtract(recs0.join(kept0, "record_id"),
+      val g0 = Par.pin(TextAnalysis.htmlExtract(recs0.join(kept0, "record_id"),
           "record_id", "html", minWords = 5)
-        .filter(col("n_kept") >= 2).select(col("doc_id"), col("text"))
-        .cache()
+        .filter(col("n_kept") >= 2).select(col("doc_id"), col("text")))
       val fpSt = TextAnalysis.fingerprint(g0, "doc_id", "text")
-      val clean0 = g0.join(Dedup.exact(g0, "doc_id", "text"), "doc_id").cache()
+      val clean0 = Par.pin(g0.join(Dedup.exact(g0, "doc_id", "text"), "doc_id"))
       val contSt = Dedup.containmentState(clean0, "doc_id", "text", n = 3)
       val dom0 = clean0.join(recs0.select(col("record_id").as("doc_id"),
         graft.operators.Urls.hostOf(col("url")).as("domain")), "doc_id")
@@ -1116,10 +1108,9 @@ object ExtensionQueries {
       // ---- batch N: every stage the incremental form vs state N-1 ----
       val front1 = graft.operators.Urls.urlDedupIncremental(
         recs1, "record_id", "url", urlSt).select(col("doc_id").as("record_id"))
-      val g1 = TextAnalysis.htmlExtract(recs1.join(front1, "record_id"),
+      val g1 = Par.pin(TextAnalysis.htmlExtract(recs1.join(front1, "record_id"),
           "record_id", "html", minWords = 5)
-        .filter(col("n_kept") >= 2).select(col("doc_id"), col("text"))
-        .cache()
+        .filter(col("n_kept") >= 2).select(col("doc_id"), col("text")))
       val surv1 = g1.join(
         Dedup.exactIncremental(g1, "doc_id", "text", fpSt), "doc_id")
       val kept1 = surv1.join(Dedup.containmentDedupIncremental(surv1,
@@ -1151,18 +1142,15 @@ object ExtensionQueries {
       val quotes = docs.filter(col("doc_id") % 20 === 0 && col("doc_id") < 150)
         .select((col("doc_id") + 100000L).as("doc_id"), col("source"),
           col("text"))
-      // materialized once, EAGERLY (consumed from concurrent inParallel
-      // threads — see q_pipeline_e2e_incremental), spread BEFORE the
-      // checkpoint so the pinned partitioning stays parallel: three
-      // container writes read `all`; retrDocs feeds the recrawl records
-      // and the takedowns
-      val all = graft.operators.Par.spread(
-        docs.select("doc_id", "source", "text").unionByName(quotes))
-        .localCheckpoint()
-      val retrDocs = graft.operators.Par.spread(docs
+      // pinned (consumed from concurrent inParallel threads — see
+      // q_pipeline_e2e_incremental), spread BEFORE the pin so the pinned
+      // partitioning stays parallel: three container writes read `all`;
+      // retrDocs feeds the recrawl records and the takedowns
+      val all = Par.pin(Par.spread(
+        docs.select("doc_id", "source", "text").unionByName(quotes)))
+      val retrDocs = Par.pin(Par.spread(docs
         .filter(col("doc_id") % 10 === 1 && col("doc_id") < 150)
-        .select("doc_id", "source", "text"))
-        .localCheckpoint()
+        .select("doc_id", "source", "text")))
       val dir0 = s"target/gwarc_${sfn}_r3a"
       val dir1 = s"target/gwarc_${sfn}_r3b"
       val dir2 = s"target/gwarc_${sfn}_r3c"
@@ -1190,47 +1178,45 @@ object ExtensionQueries {
       def hostsOf(recs: DataFrame) = recs.select(
         col("record_id").as("doc_id"), Urls.hostOf(col("url")).as("domain"))
       // ---- round 0: batch operators establish the four persisted states ----
-      val recs0 = graft.sources.Warc.read(s, dir0).cache()
+      val recs0 = Par.pin(graft.sources.Warc.read(s, dir0))
       States.write(Urls.urlState(recs0, "record_id", "url"), uDir)
       val kept0 = Urls.urlDedup(recs0, "record_id", "url")
         .select(col("doc_id").as("record_id"))
-      val g0 = TextAnalysis.htmlExtract(recs0.join(kept0, "record_id"),
+      val g0 = Par.pin(TextAnalysis.htmlExtract(recs0.join(kept0, "record_id"),
           "record_id", "html", minWords = 5)
-        .filter(col("n_kept") >= 2).select(col("doc_id"), col("text")).cache()
+        .filter(col("n_kept") >= 2).select(col("doc_id"), col("text")))
       States.write(TextAnalysis.fingerprint(g0, "doc_id", "text"), fDir)
-      val clean0 = g0.join(Dedup.exact(g0, "doc_id", "text"), "doc_id").cache()
+      val clean0 = Par.pin(g0.join(Dedup.exact(g0, "doc_id", "text"), "doc_id"))
       States.write(Dedup.containmentState(clean0, "doc_id", "text", n = 3), cDir)
       val dom0 = clean0.join(hostsOf(recs0), "doc_id")
       val b0 = Pipelines.tokenBudgetSample(dom0, "doc_id", "text", "domain",
         budgets = Map.empty, defaultBudget = 3000L)
-      val dom0kept = dom0.join(b0.select("doc_id"), "doc_id").cache()
+      val dom0kept = Par.pin(dom0.join(b0.select("doc_id"), "doc_id"))
       States.write(
         Pipelines.tokenBudgetState(dom0kept, "doc_id", "text", "domain"), sDir)
       // ---- round 1: incrementals vs state₀, then append the additions ----
-      val recs1 = graft.sources.Warc.read(s, dir1).cache()
+      val recs1 = Par.pin(graft.sources.Warc.read(s, dir1))
       val front1 = Urls.urlDedupIncremental(recs1, "record_id", "url",
         States.read(s, uDir)).select(col("doc_id").as("record_id"))
-      // round-1 results must be SEVERED from the state-dir file listings
-      // before any append touches those dirs: an append's refreshByPath
-      // invalidates every cached plan reading the dir, so a mere cache()
-      // would silently RECOMPUTE against the grown state (batch-vs-own-
-      // additions — observed as an empty round 1). localCheckpoint pins the
-      // rows as computed against state N-1, the read-before-append contract.
-      val g1 = TextAnalysis.htmlExtract(recs1.join(front1, "record_id"),
+      // round-1 results must be pinned before any append touches the state
+      // dirs they read: a later read would RECOMPUTE against the grown
+      // state (batch-vs-own-additions — observed as an empty round 1). The
+      // pin fixes the rows as computed against state N-1, the
+      // read-before-append rule.
+      val g1 = Par.pin(TextAnalysis.htmlExtract(recs1.join(front1, "record_id"),
           "record_id", "html", minWords = 5)
-        .filter(col("n_kept") >= 2).select(col("doc_id"), col("text"))
-        .localCheckpoint()
+        .filter(col("n_kept") >= 2).select(col("doc_id"), col("text")))
       val surv1 = g1.join(
         Dedup.exactIncremental(g1, "doc_id", "text", States.read(s, fDir)),
         "doc_id")
-      val kept1 = surv1.join(Dedup.containmentDedupIncremental(surv1,
+      val kept1 = Par.pin(surv1.join(Dedup.containmentDedupIncremental(surv1,
         "doc_id", "text", States.read(s, cDir), n = 3, threshold = 0.9,
-        minShingles = 5), "doc_id").localCheckpoint()
+        minShingles = 5), "doc_id"))
       val dom1 = kept1.join(hostsOf(recs1), "doc_id")
       val b1 = Pipelines.tokenBudgetIncremental(dom1, "doc_id", "text",
         "domain", States.read(s, sDir, budgetMerge), budgets = Map.empty,
         defaultBudget = 3000L)
-      val dom1kept = dom1.join(b1.select("doc_id"), "doc_id").localCheckpoint()
+      val dom1kept = Par.pin(dom1.join(b1.select("doc_id"), "doc_id"))
       graft.operators.Par.inParallel(
         () => States.append(Urls.urlState(recs1, "record_id", "url"), uDir),
         () => States.append(TextAnalysis.fingerprint(g1, "doc_id", "text"), fDir),
@@ -1259,12 +1245,12 @@ object ExtensionQueries {
         () => States.compact(s, cDir),
         () => States.compact(s, sDir, budgetMerge))
       // ---- round 2: every incremental form vs the COMPACTED states ----
-      val recs2 = graft.sources.Warc.read(s, dir2).cache()
+      val recs2 = Par.pin(graft.sources.Warc.read(s, dir2))
       val front2 = Urls.urlDedupIncremental(recs2, "record_id", "url",
         States.read(s, uDir)).select(col("doc_id").as("record_id"))
-      val g2 = TextAnalysis.htmlExtract(recs2.join(front2, "record_id"),
+      val g2 = Par.pin(TextAnalysis.htmlExtract(recs2.join(front2, "record_id"),
           "record_id", "html", minWords = 5)
-        .filter(col("n_kept") >= 2).select(col("doc_id"), col("text")).cache()
+        .filter(col("n_kept") >= 2).select(col("doc_id"), col("text")))
       val surv2 = g2.join(
         Dedup.exactIncremental(g2, "doc_id", "text", States.read(s, fDir)),
         "doc_id")
@@ -2125,11 +2111,11 @@ object ExtensionQueries {
     // bucketed against them — no per-batch distribution pass
     "q_ccnet_serve" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val scored = TextAnalysis.backoffLogProb(
+      // pinned: feeds the cuts pass and the serve pass
+      val scored = Par.pin(TextAnalysis.backoffLogProb(
         docs.filter(col("source") === "src0"), docs, "doc_id", "text",
         topV = 50)
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-        .cache() // feeds the cuts pass and the serve pass
+        .join(docs.select(col("doc_id"), col("lang")), "doc_id"))
       val cuts = TextAnalysis.perplexityCuts(
         scored.filter(col("doc_id") < 250), "doc_id", "lang",
         "sum_log10p_e6", "n_trigrams")

@@ -1216,11 +1216,10 @@ object SurfaceQueries {
     // in one declarative chain; the recursive-CTE oracle proves the whole
     // multimodal-to-dedup-grid composition ----
     "q_image_dedup" -> ((s, d) => {
-      // cached (the q_image_dedup_incremental convention): the PNG decode
+      // pinned (the q_image_dedup_incremental convention): the PNG decode
       // kernel runs once; clustering and the survivor anti-join both read it
-      val hashes = graft.sources.Multimodal.imageHash(
-        graft.sources.Multimodal.asMedia(t(s, d, "documents"), "doc_id", "text"))
-        .cache()
+      val hashes = graft.operators.Par.pin(graft.sources.Multimodal.imageHash(
+        graft.sources.Multimodal.asMedia(t(s, d, "documents"), "doc_id", "text")))
       // hammingClusters = clusters∘hammingPairs with the clone-flood clique
       // removed: CC over distinct fingerprints, members join their fp's
       // label — identical components (see its scaladoc), pair-free plan
@@ -1239,12 +1238,11 @@ object SurfaceQueries {
     // incremental form the WHOLE operator hash-matches a brute-force
     // oracle ----
     "q_image_dedup_incremental" -> ((s, d) => {
-      // cached (Verify releases after the query): the decode kernel runs ONCE
-      // over the corpus; both the history-state build and the batch probe read
-      // the cached hashes instead of re-decoding every PNG per branch
-      val hashes = graft.sources.Multimodal.imageHash(
-        graft.sources.Multimodal.asMedia(t(s, d, "documents"), "doc_id", "text"))
-        .cache()
+      // pinned: the decode kernel runs ONCE over the corpus; both the
+      // history-state build and the batch probe read the pinned hashes
+      // instead of re-decoding every PNG per branch
+      val hashes = graft.operators.Par.pin(graft.sources.Multimodal.imageHash(
+        graft.sources.Multimodal.asMedia(t(s, d, "documents"), "doc_id", "text")))
       graft.operators.Dedup.hammingIncremental(
         hashes.filter(col("doc_id") >= 250), "doc_id", "phash",
         graft.operators.Dedup.hammingState(
@@ -1257,9 +1255,8 @@ object SurfaceQueries {
     // un-claimed — exactRetract semantics), and the >= 100 batch re-admits
     // exactly that content ----
     "q_image_dedup_retract" -> ((s, d) => {
-      val hashes = graft.sources.Multimodal.imageHash(
-        graft.sources.Multimodal.asMedia(t(s, d, "documents"), "doc_id", "text"))
-        .cache()
+      val hashes = graft.operators.Par.pin(graft.sources.Multimodal.imageHash(
+        graft.sources.Multimodal.asMedia(t(s, d, "documents"), "doc_id", "text")))
       graft.operators.Dedup.hammingIncremental(
         hashes.filter(col("doc_id") >= 100), "doc_id", "phash",
         graft.operators.Dedup.hammingRetract(

@@ -547,16 +547,19 @@ class PlanSpec extends SparkSpec {
 
   test("token-budget sampling: salted two-level prefix — no per-domain reducer, text never shuffles") {
     val docs = graft.sources.Tables(spark, sfDir, "documents")
-    val sample = graft.operators.Pipelines.tokenBudgetSample(docs, "doc_id", "text",
-      "source", budgets = Map("src0" -> 8000L), defaultBudget = 4000L)
     val state = graft.operators.Pipelines.tokenBudgetState(
       docs.filter(col("doc_id") % 7 === 0), "doc_id", "text", "source")
-    val incremental = graft.operators.Pipelines.tokenBudgetIncremental(docs,
-      "doc_id", "text", "source", state, budgets = Map("src0" -> 8000L),
-      defaultBudget = 4000L)
-    try for ((label, out) <- Seq("tokenBudgetSample" -> sample,
+    // the tokenized base is pinned inside the operator: read every plan the
+    // operator and its result run
+    val sample = plansRunBy(graft.operators.Pipelines.tokenBudgetSample(docs,
+      "doc_id", "text", "source", budgets = Map("src0" -> 8000L),
+      defaultBudget = 4000L).collect())
+    val incremental = plansRunBy(graft.operators.Pipelines.tokenBudgetIncremental(
+      docs, "doc_id", "text", "source", state, budgets = Map("src0" -> 8000L),
+      defaultBudget = 4000L).collect())
+    try for ((label, plans) <- Seq("tokenBudgetSample" -> sample,
         "tokenBudgetIncremental" -> incremental)) {
-      val plan = out.queryExecution.executedPlan.toString
+      val plan = plans.mkString("\n")
       // the corpus-side window must partition on (domain, salt), never on the
       // domain alone — a domain-only window is the one-reducer straggler at
       // scale; the tiny offsets window orders by the salt, so every window
@@ -661,10 +664,11 @@ class PlanSpec extends SparkSpec {
   test("quantile gate: salted two-level rank — no domain-only window, offsets broadcast") {
     val docs = graft.sources.Tables(spark, sfDir, "documents")
       .withColumn("sc", length(col("text")).cast("double"))
-    val out = graft.operators.Pipelines.quantileFilter(docs, "doc_id", "sc",
-      "source", q = 0.6)
+    // the (doc_id, domain, score) base is pinned inside the operator
+    val plans = plansRunBy(graft.operators.Pipelines.quantileFilter(docs,
+      "doc_id", "sc", "source", q = 0.6).collect())
     try {
-      val plan = out.queryExecution.executedPlan.toString
+      val plan = plans.mkString("\n")
       val windowLines = plan.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
       assert(windowLines.nonEmpty, s"expected window operators:\n$plan")
       // the corpus-side rank window must partition on (domain, bucket), never
@@ -713,9 +717,9 @@ class PlanSpec extends SparkSpec {
 
   test("canonical selection: no global sort; cluster labels join back, corpus never range-shuffles") {
     val docs = graft.sources.Tables(spark, sfDir, "documents")
-    val out = graft.operators.Pipelines.selectCanonical(docs, "doc_id", "text",
-      scoreCol = "n_chars")
-    val plan = out.queryExecution.executedPlan.toString
+    // the minhash core and the cluster rounds are pinned inside the operator
+    val plan = plansRunBy(graft.operators.Pipelines.selectCanonical(docs,
+      "doc_id", "text", scoreCol = "n_chars").collect()).mkString("\n")
     assert(!plan.contains("Exchange rangepartitioning"),
       s"canonical selection must not globally sort anything:\n$plan")
     assert(!plan.contains("CartesianProduct"),
@@ -750,9 +754,9 @@ class PlanSpec extends SparkSpec {
 
   test("containment: doc-partitioned rank window only, no cartesian, arrays never in the prefix exchange") {
     val docs = graft.sources.Tables(spark, sfDir, "documents")
-    val out = graft.operators.Dedup.containmentPairs(docs, "doc_id", "text",
-      n = 3, threshold = 0.9)
-    val plan = out.queryExecution.executedPlan.toString
+    // the shingle-set frame is pinned inside the operator
+    val plan = plansRunBy(graft.operators.Dedup.containmentPairs(docs, "doc_id",
+      "text", n = 3, threshold = 0.9).collect()).mkString("\n")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
       s"candidates must come from shingle equi-joins:\n$plan")
     // every window must be keyed by doc_id (high cardinality) — a
@@ -771,13 +775,16 @@ class PlanSpec extends SparkSpec {
     val urls = docs.select(col("doc_id"),
       concat(lit("https://h"), col("doc_id") % 7, lit(".example.com/p")).as("url"))
     val pairs = Seq(("q1", 5L), ("q2", 123L)).toDF("query_id", "pos_id")
+    // each operator pins its md5-salted base: read every plan it and its
+    // result run
     val plans = Seq(
-      "mixtureApply" -> Pipelines.mixtureApply(docs, "doc_id", "source",
-        Map("src0" -> 5000, "src1" -> 3000, "src2" -> 2000)),
-      "temperatureMixture" -> Pipelines.temperatureMixture(docs, "doc_id", "source",
-        totalDocs = 200L),
-      "hostCap" -> Urls.hostCap(urls, "doc_id", "url", maxPerHost = 30))
-      .map { case (label, out) => label -> out.queryExecution.executedPlan.toString } :+
+      "mixtureApply" -> plansRunBy(Pipelines.mixtureApply(docs, "doc_id", "source",
+        Map("src0" -> 5000, "src1" -> 3000, "src2" -> 2000)).collect()),
+      "temperatureMixture" -> plansRunBy(Pipelines.temperatureMixture(docs,
+        "doc_id", "source", totalDocs = 200L).collect()),
+      "hostCap" -> plansRunBy(Urls.hostCap(urls, "doc_id", "url",
+        maxPerHost = 30).collect()))
+      .map { case (label, ps) => label -> ps.mkString("\n") } :+
       // the global md5 rank is checkpointed inside the operator: pin the plan
       // that builds it
       ("randomNegatives" -> plansRunBy(TextAnalysis.randomNegatives(pairs, docs,

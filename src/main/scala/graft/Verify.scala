@@ -46,8 +46,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // safety net: drop any cache a caller-side frame left (operators
-      // leave none; see Caches)
+      // drop the pins this query's operators made (see Caches)
       graft.operators.Caches.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -313,29 +313,33 @@ object DeletionVectors {
             entries = entries.updated(kv, entries.getOrElse(kv, Nil) :+ g)
           }
         }
-        fs.delete(staging, true)
         // 3. dv union over the touched files (deleteWhere's discipline: the
         // new dir carries old-pairs-of-touched ∪ matched, one lookup per file)
         val touched = counts.keySet
         val name = s"dv-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
         val dvDir = new Path(new Path(root, Snapshots.DvDir), name)
-        val matchedPairs = matched
-          .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
-        val carried = dvPairs(spark, root, snap,
-          Some(touched.filter(snap.dvs.contains)))
-        val pairsOut = carried.map(matchedPairs.unionAll).getOrElse(matchedPairs)
-        pairsOut.coalesce(1).write.mode("overwrite").parquet(dvDir.toString)
+        def abandon(): Unit = {
+          fs.delete(dvDir, true)
+          Snapshots.dropGens(fs, root, adoptedGens)
+        }
+        // any failure before the commit (a lost pin block included) drops
+        // the adopted generations with the dv dir
+        try {
+          fs.delete(staging, true)
+          val matchedPairs = matched
+            .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
+          val carried = dvPairs(spark, root, snap,
+            Some(touched.filter(snap.dvs.contains)))
+          val pairsOut = carried.map(matchedPairs.unionAll).getOrElse(matchedPairs)
+          pairsOut.coalesce(1).write.mode("overwrite").parquet(dvDir.toString)
+        } catch { case e: Throwable => abandon(); throw e }
         val dvs = snap.dvs ++ touched.map(_ -> name)
         val dvRows = snap.dvRows ++ counts.map { case (f, n) =>
           f -> (snap.dvRows.getOrElse(f, 0L) + n)
         }
         try Snapshots.commit(fs, root, Some(snap), entries,
           kind = "morupdate", dvEdit = Some((dvs, dvRows)))
-        catch { case e: ConcurrentCommitException =>
-          fs.delete(dvDir, true)
-          Snapshots.dropGens(fs, root, adoptedGens)
-          throw e
-        }
+        catch { case e: ConcurrentCommitException => abandon(); throw e }
       }
     }
   }

@@ -404,10 +404,12 @@ object Dedup {
     val index = shAll.select(col("sh"), col("doc_id").as("doc_b"))
     val keep = if (earlierOnly) col("doc_b") < col("doc_a")
       else col("doc_a") =!= col("doc_b")
-    // not pinned: the verify join and the two array-restriction semi-joins
-    // are one query, and exchange reuse shares the distinct's shuffle
-    val cands = prefix.join(index, "sh").filter(keep)
-      .select("doc_a", "doc_b").distinct()
+    // pinned: the verify join and the two array-restriction semi-joins
+    // read it, and the optimizer folds each semi-join's distinct into its
+    // own aggregate over the prefix-index join, which then runs once per
+    // reader; candidate volume is the operator's own output scale
+    val cands = Par.pin(prefix.join(index, "sh").filter(keep)
+      .select("doc_a", "doc_b").distinct())
     // verify arrays: callers holding per-doc shingle arrays already (the
     // collapsed rep path) pass them in instead of paying two collect_set
     // re-aggregations of the exploded postings; array_intersect/size are
@@ -843,8 +845,9 @@ object Dedup {
     * fps = (doc_id, fp) pinned (the reps build, re-expansions, and
     * within-group joins all consume it, and when the input is a decode
     * kernel recomputing it means re-decoding the corpus), reps = one
-    * minimum-id representative per distinct fingerprint (one query reads
-    * it, so exchange reuse shares its aggregate), and repPairs = every
+    * minimum-id representative per distinct fingerprint (pinned:
+    * [[hammingClusters]] reads it in the cluster rounds' pin jobs and
+    * again in its returned query), and repPairs = every
     * DISTINCT-fingerprint pair within `maxHamming` as (rep_a, fp_a, rep_b,
     * fp_b, hamming), rep_a < rep_b — distinct fingerprints never pair at
     * hamming 0, so one bit_count runs per distinct-hash candidate pair.
@@ -855,7 +858,7 @@ object Dedup {
     require(maxBucket > 1, "maxBucket must be > 1")
     val fps = Par.pin(hashes.select(Keys.id(hashes, idCol).as("doc_id"),
       col(hashCol).cast("long").as("fp")))
-    val reps = fps.groupBy("fp").agg(min("doc_id").as("rep_id"))
+    val reps = Par.pin(fps.groupBy("fp").agg(min("doc_id").as("rep_id")))
     val chunks = chunkStructs(maxHamming)
     val blocked = reps
       .select(col("rep_id"), col("fp"), explode(array(chunks: _*)).as("b"))

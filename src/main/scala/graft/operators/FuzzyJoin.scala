@@ -59,15 +59,12 @@ object FuzzyJoin {
   private[graft] def pairsWithinScheme(df: DataFrame, idCol: String,
       strCol: String, k: Int, forceSegments: Boolean): DataFrame = {
     require(k >= 1 && k <= 8, "pairsWithin supports 1 <= k <= 8")
-    // pinned: the rep distinct, both re-expansion joins and the
-    // within-group self-join read it through different exchanges (a plain
-    // scan passes through and is re-read with pruning)
-    val ids = Par.pin(df.select(Keys.id(df, idCol).as("id"), col(strCol).as("s")))
-    // blocking over distinct strings only (see scaladoc); the candidate
-    // stage's readers share the distinct's exchange
-    val reps = ids.select("s").distinct()
+    val ids = df.select(Keys.id(df, idCol).as("id"), col(strCol).as("s"))
+    // blocking over distinct strings only (see scaladoc)
+    val reps = distinctReps(ids, "s")
     val repPairs =
-      if (k <= 2 && !forceSegments) deletionPairs(reps, k) else segmentPairs(reps, k)
+      if (k <= 2 && !forceSegments) deletionPairs(reps, k)
+      else segmentPairs(Par.pin(reps), k)
     // re-expand distinct-string pairs to id pairs: every id holding sa pairs
     // with every id holding sb (the pair set a dup-oblivious blocking would
     // have produced, at join cost proportional to the OUTPUT, not the blocks)
@@ -103,23 +100,22 @@ object FuzzyJoin {
   def pairsBetween(left: DataFrame, leftId: String, leftStr: String,
       right: DataFrame, rightId: String, rightStr: String, k: Int): DataFrame = {
     require(k >= 1 && k <= 8, "pairsBetween supports 1 <= k <= 8")
-    // pinned as in pairsWithin: each side is read by its rep distinct and
-    // its re-expansion join
-    val l = Par.pin(
-      left.select(Keys.id(left, leftId).as("lid"), col(leftStr).as("sl")))
-    val r = Par.pin(
-      right.select(Keys.id(right, rightId).as("rid"), col(rightStr).as("sr")))
-    val lReps = l.select("sl").distinct()
-    val rReps = r.select("sr").distinct()
+    val l = left.select(Keys.id(left, leftId).as("lid"), col(leftStr).as("sl"))
+    val r = right.select(Keys.id(right, rightId).as("rid"), col(rightStr).as("sr"))
+    val lRep = distinctReps(l, "sl")
+    val rRep = distinctReps(r, "sr")
     val strPairs =
       if (k <= 2) {
-        val lv = variantHashes(lReps, "sl", k)
-        val rv = variantHashes(rReps, "sr", k)
+        val lv = variantHashes(lRep, "sl", k)
+        val rv = variantHashes(rRep, "sr", k)
         lv.join(rv, "vh")
           .filter(abs(length(col("sl")) - length(col("sr"))) <= k)
           .select("sl", "sr").distinct()
       } else {
-        // both orientations of segment-vs-window, then the short-short bucket
+        // both orientations of segment-vs-window, then the short-short
+        // bucket; pinned, since the segment and probe sides of one string
+        // set are planned apart and exchange reuse cannot share them
+        val (lReps, rReps) = (Par.pin(lRep), Par.pin(rRep))
         val fwd = segmentSide(lReps, "sl", k).join(probeSide(rReps, "sr", k),
           Seq("L", "i", "seg")).select("sl", "sr")
         val bwd = probeSide(lReps, "sl", k).join(segmentSide(rReps, "sr", k),
@@ -137,6 +133,20 @@ object FuzzyJoin {
       .join(l, "sl").join(r, "sr")
       .select(col("lid").as("left_id"), col("rid").as("right_id"), col("dist"))
   }
+
+  /** The distinct strings of column `c`, hash-partitioned one partition
+    * per core. The variant and segment explodes over them cost far more
+    * per row than the strings' bytes suggest; a distinct left to adaptive
+    * execution is coalesced into one partition when small, and ran them in
+    * one task (q_fuzzy_join2, sf0.1, 4 cores: 104 s against 34 s). For
+    * k <= 2 every reader is in the caller's one query, where the
+    * fixed-count exchange is shared as a ReusedExchange; the segment path
+    * (k >= 3) pins them, since its two sides are planned apart.
+    */
+  private def distinctReps(df: DataFrame, c: String): DataFrame =
+    df.select(c)
+      .repartition(df.sparkSession.sparkContext.defaultParallelism, col(c))
+      .distinct()
 
   /** Depth-<=k (k <= 2) deletion-neighborhood variant hashes of the distinct
     * strings in column `c`: (c, vh) rows, shared by the self- and cross-join

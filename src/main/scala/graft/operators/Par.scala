@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -123,13 +126,31 @@ object Par {
     * once per reader, and leaves plan state that the context cleaner may
     * reclaim under a running job. The eager pin runs it once, here.
     *
-    * Lifetime: a pin's blocks live until its frame is unreachable and the
-    * context cleaner drops them; [[pinned]] drops them at the end of a
-    * scope. Operators return no plan over a cache, so no caller owns a
-    * release ([[Caches.release]] is only a safety net).
+    * Partitions: a pin keeps the partitions adaptive execution gave its
+    * final stage, so a small pin is coalesced to one partition, where a
+    * Dataset cache keeps the planned count. A narrow pass over a small pin
+    * runs in one task: FuzzyJoin's variant explode over its pinned
+    * distinct strings is the measured case (ROADMAP item 3).
+    *
+    * Lifetime: a pin's blocks live until [[release]] (which Verify, Bench
+    * and the benchmark call between queries through [[Caches.release]]),
+    * or until its frame is unreachable and the context cleaner drops them;
+    * [[pinned]] drops them at the end of a scope.
+    *
+    * No recompute: a checkpoint keeps no lineage, so a pin block that is
+    * lost (an executor gone) or dropped fails the job that reads it
+    * ("Checkpoint block not found") instead of being recomputed, where a
+    * `cache` would recompute. Every graft session is `local[N]`, whose
+    * blocks live in the driver; a cluster deployment trades that
+    * resilience for the pin's flat plan.
     */
   def pin(df: DataFrame): DataFrame =
-    if (isLeaf(df.queryExecution.optimizedPlan)) df else df.localCheckpoint()
+    if (isLeaf(df.queryExecution.optimizedPlan)) df
+    else {
+      val p = df.localCheckpoint()
+      blocks(p).foreach(live.put(_, java.lang.Boolean.TRUE))
+      p
+    }
 
   /** [[pin]] `df`, run `body` over the pinned frame, and drop the pin's
     * blocks when `body` returns or throws — for an operator that runs its
@@ -140,10 +161,30 @@ object Par {
   def pinned[A](df: DataFrame)(body: DataFrame => A): A = {
     val p = pin(df)
     try body(p)
-    finally if (p ne df) p.queryExecution.analyzed.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+    finally if (p ne df) blocks(p).foreach(unpin)
+  }
+
+  /** Drop the blocks of every pin made in `spark`'s context that is still
+    * held. Between queries only: a pinned frame read after its blocks are
+    * gone fails (see [[pin]], "No recompute").
+    */
+  def release(spark: SparkSession): Unit =
+    live.synchronized(live.keySet.asScala.toList)
+      .filter(_.sparkContext eq spark.sparkContext)
+      .foreach(unpin)
+
+  /** The checkpoint RDD of every live pin, weakly held so an unreachable
+    * pin stays the context cleaner's to drop.
+    */
+  private val live = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], java.lang.Boolean]())
+
+  private def blocks(p: DataFrame): Seq[RDD[_]] =
+    p.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
+
+  private def unpin(rdd: RDD[_]): Unit = {
+    live.remove(rdd)
+    rdd.unpersist(blocking = false)
   }
 
   private def isLeaf(plan: LogicalPlan): Boolean = plan match {

@@ -1288,9 +1288,10 @@ object TextAnalysis {
         col("tg.w3").as("w3"))
     val refTri = trigramsOf(refDocs)
     val target = if (refDocs eq docs) refTri else trigramsOf(docs)
-    // four re-aggregations + the top-V cut read the trigram counts, all in
-    // the one returned query, where exchange reuse shares the aggregate
-    val freq3 = refTri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c123"))
+    // pinned: four re-aggregations + the top-V cut read the trigram counts
+    // from three broadcast stages, which exchange reuse does not share
+    // (each re-runs the tokenize, explode and partial count)
+    val freq3 = Par.pin(refTri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c123")))
     // every lower-order table re-aggregates the trigram counts — the
     // bigramLogProb "non-final position" convention, one corpus pass total
     val ctx12 = freq3.groupBy("w1", "w2").agg(sum("c123").as("c12"))
@@ -1384,9 +1385,9 @@ object TextAnalysis {
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     val refBg = bigramsOf(refDocs)
     val target = if (refDocs eq docs) refBg else bigramsOf(docs)
-    // three re-aggregations + the top-V cut read the bigram counts, all in
-    // the one returned query, where exchange reuse shares the aggregate
-    val freq2 = refBg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+    // pinned as in backoffLogProb: three re-aggregations + the top-V cut
+    // read the bigram counts from broadcast stages that do not share them
+    val freq2 = Par.pin(refBg.groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val ctx = freq2.groupBy("w1")
       .agg(sum("c12").as("c1"), count(lit(1)).as("n1"))
     val cont = freq2.groupBy("w2").agg(count(lit(1)).as("nc"))

@@ -5,35 +5,33 @@ import org.apache.spark.sql.DataFrame
 import graft.operators.{Caches, Dedup, FuzzyJoin}
 
 /** The Caches.release contract: in a session that runs several corpora
-  * through the cache-leaving operators (minHashLshPairs, pairsWithin), no
-  * cached block outlives the release that follows its operator's consumption
-  * — and the operators stay correct on the corpus AFTER a release.
+  * through the pinning operators (minHashLshPairs, pairsWithin,
+  * containmentPairs), no block an operator materialized outlives the
+  * release that follows its result's consumption — and the operators stay
+  * correct on the corpus AFTER a release. Every such block is a pin
+  * ([[graft.operators.Par.pin]], a local checkpoint), so the check counts
+  * checkpointed RDDs: a pin that survives a release is a leak.
   *
   * Assertions are DELTA-based (ids created by this test's own action, not a
-  * global zero-count): the session is shared and suites run concurrently, so
-  * a sibling suite's cached or localCheckpointed blocks may exist at any
-  * moment. Checkpoint blocks are excluded — `clearCache` covers Dataset
-  * caches, which is what these operators leave behind; localCheckpoint
-  * lifetimes belong to their owning RDDs.
+  * global zero-count): the session is shared across suites, so blocks that
+  * other suites left may exist at any moment.
   */
 class CacheHygieneSpec extends SparkSpec {
 
   private def persistentIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** Run `op`'s action, release, and return the operator-created cached RDD
-    * ids that survived the release (excluding foreign checkpoint blocks).
+  /** Run `op`'s action, release, and return the operator-created block ids
+    * (pins or caches) that survived the release.
     */
   private def leakAfterRelease(op: => DataFrame)(check: Array[org.apache.spark.sql.Row] => Unit): Set[Int] = {
     val before = persistentIds
     check(op.collect())
     val created = persistentIds -- before
     assert(created.nonEmpty,
-      "fixture must actually materialize operator-internal caches")
+      "fixture must actually materialize operator-internal pins")
     Caches.release(spark)
-    spark.sparkContext.getPersistentRDDs
-      .filter { case (id, rdd) => created(id) && !rdd.isCheckpointed }
-      .keySet.toSet
+    persistentIds.intersect(created)
   }
 
   test("no cached block outlives its operator call across a two-corpus session") {
@@ -63,12 +61,14 @@ class CacheHygieneSpec extends SparkSpec {
     import spark.implicits._
     val names = Seq((1L, "smith"), (2L, "smyth"), (3L, "jones"))
       .toDF("id", "name")
-    val leak1 = leakAfterRelease(FuzzyJoin.pairsWithin(names, "id", "name", k = 1)) { rows =>
+    // k = 3 takes the segment path, which pins the distinct strings (the
+    // k <= 2 variant path materializes nothing, so it has nothing to leak)
+    val leak1 = leakAfterRelease(FuzzyJoin.pairsWithin(names, "id", "name", k = 3)) { rows =>
       assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
     }
     assert(leak1.isEmpty, s"cached blocks survived release: $leak1")
     // the same operator again post-release (a fresh plan, fresh caches)
-    val leak2 = leakAfterRelease(FuzzyJoin.pairsWithin(names, "id", "name", k = 1)) { rows =>
+    val leak2 = leakAfterRelease(FuzzyJoin.pairsWithin(names, "id", "name", k = 3)) { rows =>
       assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
     }
     assert(leak2.isEmpty, s"cached blocks survived release: $leak2")

@@ -557,29 +557,32 @@ class PlanSpec extends SparkSpec {
     val incremental = plansRunBy(graft.operators.Pipelines.tokenBudgetIncremental(
       docs, "doc_id", "text", "source", state, budgets = Map("src0" -> 8000L),
       defaultBudget = 4000L).collect())
+    // what must appear is asserted on the returned query's own plan (the
+    // last one run), what must not on every plan, the pin's job included
     try for ((label, plans) <- Seq("tokenBudgetSample" -> sample,
         "tokenBudgetIncremental" -> incremental)) {
       val plan = plans.mkString("\n")
+      val result = plans.last
+      def windows(p: String) = p.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
+      def exchanges(p: String) = p.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
       // the corpus-side window must partition on (domain, salt), never on the
       // domain alone — a domain-only window is the one-reducer straggler at
       // scale; the tiny offsets window orders by the salt, so every window
       // names it
-      val windowLines = plan.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-      assert(windowLines.nonEmpty, s"$label: expected window operators:\n$plan")
-      assert(windowLines.forall(_.contains("__salt")),
-        s"$label: corpus window must be salted:\n${windowLines.mkString("\n")}")
+      assert(windows(result).nonEmpty, s"$label: expected window operators:\n$result")
+      assert(windows(plan).forall(_.contains("__salt")),
+        s"$label: corpus window must be salted:\n${windows(plan).mkString("\n")}")
       // bucket offsets join back as a broadcast — a sort-merge join would
       // re-shuffle the corpus on (domain, salt) a second time
-      assert(plan.contains("BroadcastHashJoin"),
-        s"$label: bucket offsets must broadcast:\n$plan")
+      assert(result.contains("BroadcastHashJoin"),
+        s"$label: bucket offsets must broadcast:\n$result")
       assert(!plan.contains("SortMergeJoin"),
         s"$label: offsets must not sort-merge against the corpus:\n$plan")
       // the token count is computed BEFORE any exchange so only (doc_id,
       // domain, n_tokens, ord, salt) shuffles — the text column must not
       // survive into any exchange's output schema
-      val exchangeLines = plan.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
-      assert(exchangeLines.nonEmpty && exchangeLines.forall(!_.contains("text")),
-        s"$label: text must be projected away before every shuffle:\n${exchangeLines.mkString("\n")}")
+      assert(exchanges(result).nonEmpty && exchanges(plan).forall(!_.contains("text")),
+        s"$label: text must be projected away before every shuffle:\n${exchanges(plan).mkString("\n")}")
     } finally graft.operators.Caches.release(spark)
   }
 
@@ -667,17 +670,19 @@ class PlanSpec extends SparkSpec {
     // the (doc_id, domain, score) base is pinned inside the operator
     val plans = plansRunBy(graft.operators.Pipelines.quantileFilter(docs,
       "doc_id", "sc", "source", q = 0.6).collect())
+    // present: the returned query's plan (the last run); absent: every plan
     try {
       val plan = plans.mkString("\n")
-      val windowLines = plan.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-      assert(windowLines.nonEmpty, s"expected window operators:\n$plan")
+      val result = plans.last
+      def windows(p: String) = p.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
+      assert(windows(result).nonEmpty, s"expected window operators:\n$result")
       // the corpus-side rank window must partition on (domain, bucket), never
       // the domain alone; only the tiny per-bucket offsets window may
-      val corpusWindows = windowLines.filterNot(_.contains("__bn"))
+      val corpusWindows = windows(plan).filterNot(_.contains("__bn"))
       assert(corpusWindows.forall(_.contains("__b")),
         s"corpus rank window must be bucket-salted:\n${corpusWindows.mkString("\n")}")
-      assert(plan.contains("BroadcastHashJoin"),
-        s"range stats and offsets must broadcast:\n$plan")
+      assert(result.contains("BroadcastHashJoin"),
+        s"range stats and offsets must broadcast:\n$result")
       assert(!plan.contains("SortMergeJoin"),
         s"nothing here may sort-merge against the corpus:\n$plan")
       val exchangeLines = plan.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
@@ -754,17 +759,20 @@ class PlanSpec extends SparkSpec {
 
   test("containment: doc-partitioned rank window only, no cartesian, arrays never in the prefix exchange") {
     val docs = graft.sources.Tables(spark, sfDir, "documents")
-    // the shingle-set frame is pinned inside the operator
-    val plan = plansRunBy(graft.operators.Dedup.containmentPairs(docs, "doc_id",
-      "text", n = 3, threshold = 0.9).collect()).mkString("\n")
+    // the shingle sets and the candidates are pinned inside the operator:
+    // absences hold on every plan run; the rank windows run in exactly one,
+    // the candidate pin's
+    val plans = plansRunBy(graft.operators.Dedup.containmentPairs(docs, "doc_id",
+      "text", n = 3, threshold = 0.9).collect())
+    val plan = plans.mkString("\n")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
       s"candidates must come from shingle equi-joins:\n$plan")
     // every window must be keyed by doc_id (high cardinality) — a
     // partition-less rank would single-thread the corpus
-    val winSpecs = "windowspecdefinition\\(([^)]*)\\)".r
-      .findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(winSpecs.nonEmpty && winSpecs.forall(_.contains("doc_id")),
-      s"every containment window must be doc-partitioned:\n$winSpecs")
+    def winSpecs(p: String) = "windowspecdefinition\\(([^)]*)\\)".r
+      .findAllMatchIn(p).map(_.group(1)).toSeq
+    assert(plans.count(winSpecs(_).nonEmpty) == 1 && winSpecs(plan).forall(_.contains("doc_id")),
+      s"every containment window must be doc-partitioned:\n${winSpecs(plan)}")
     graft.operators.Caches.release(spark)
   }
 
@@ -775,8 +783,8 @@ class PlanSpec extends SparkSpec {
     val urls = docs.select(col("doc_id"),
       concat(lit("https://h"), col("doc_id") % 7, lit(".example.com/p")).as("url"))
     val pairs = Seq(("q1", 5L), ("q2", 123L)).toDF("query_id", "pos_id")
-    // each operator pins its md5-salted base: read every plan it and its
-    // result run
+    // each operator pins its md5-salted base: absences hold on every plan
+    // it and its result run, presences on the returned query's (the last)
     val plans = Seq(
       "mixtureApply" -> plansRunBy(Pipelines.mixtureApply(docs, "doc_id", "source",
         Map("src0" -> 5000, "src1" -> 3000, "src2" -> 2000)).collect()),
@@ -784,21 +792,23 @@ class PlanSpec extends SparkSpec {
         "doc_id", "source", totalDocs = 200L).collect()),
       "hostCap" -> plansRunBy(Urls.hostCap(urls, "doc_id", "url",
         maxPerHost = 30).collect()))
-      .map { case (label, ps) => label -> ps.mkString("\n") } :+
+      .map { case (label, ps) => (label, ps.last, ps.mkString("\n")) } :+ {
       // the global md5 rank is checkpointed inside the operator: pin the plan
       // that builds it
-      ("randomNegatives" -> plansRunBy(TextAnalysis.randomNegatives(pairs, docs,
+      val p = plansRunBy(TextAnalysis.randomNegatives(pairs, docs,
         "query_id", "pos_id", "doc_id", k = 5).collect())
-        .find(_.contains("windowspecdefinition")).getOrElse(""))
-    for ((label, plan) <- plans) {
-      assert(plan.contains("BroadcastHashJoin"),
-        s"$label: bucket offsets must ride a broadcast:\n$plan")
+        .find(_.contains("windowspecdefinition")).getOrElse("")
+      ("randomNegatives", p, p)
+    }
+    def winSpecs(p: String) = "windowspecdefinition\\(([^)]*)\\)".r
+      .findAllMatchIn(p).map(_.group(1)).toSeq
+    for ((label, result, plan) <- plans) {
+      assert(result.contains("BroadcastHashJoin"),
+        s"$label: bucket offsets must ride a broadcast:\n$result")
       // every window partition key set must include the salt — a domain-only
       // window would be the per-domain reducer the two-level design removes
-      val winSpecs = "windowspecdefinition\\(([^)]*)\\)".r
-        .findAllMatchIn(plan).map(_.group(1)).toSeq
-      assert(winSpecs.nonEmpty && winSpecs.forall(_.contains("__salt")),
-        s"$label: every rank window must be salted:\n$winSpecs")
+      assert(winSpecs(result).nonEmpty && winSpecs(plan).forall(_.contains("__salt")),
+        s"$label: every rank window must be salted:\n${winSpecs(plan)}")
     }
     graft.operators.Caches.release(spark)
   }

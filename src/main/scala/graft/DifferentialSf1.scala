@@ -358,14 +358,7 @@ object DifferentialSf1 {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val only: Option[Set[String]] = args.lift(1).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus(16)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     var bad = 0
     alternates.filter(p => only.forall(_.contains(p._1))).foreach {

@@ -54,7 +54,8 @@ object FuzzyJoin {
   /** [[pairsWithin]] with the blocking scheme pinned: `forceSegments` runs
     * PassJoin segment blocking below k = 3 too (both schemes are EXACT at
     * any k — deletion neighborhoods are merely assumed faster at k <= 2).
-    * Profiling hook (ProfileFuzzy A/B), not part of the public surface.
+    * Test hook (FuzzyJoinSpec checks the two schemes agree), not part of
+    * the public surface.
     */
   private[graft] def pairsWithinScheme(df: DataFrame, idCol: String,
       strCol: String, k: Int, forceSegments: Boolean): DataFrame = {

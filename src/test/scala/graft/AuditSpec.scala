@@ -7,43 +7,37 @@ import graft.observability.AuditListener
   */
 class AuditSpec extends SparkSpec {
 
+  /** Records `l` holds once `f` has run and its events are delivered
+    * (`Inspect.record` drains the listener bus both listeners share).
+    */
+  private def auditedBy(l: AuditListener)(f: => Unit): Seq[graft.observability.AuditRecord] =
+    try { Inspect.record(spark)(f); l.records }
+    finally spark.listenerManager.unregister(l)
+
   test("successful query produces an audit record with the reference fields") {
-    val listener = AuditListener.install(spark)
-    spark.sql("SELECT count(*) FROM graft.main.region").collect()
-    // listener callbacks are async; wait for delivery
-    eventuallyRecords(listener) { rs =>
-      assert(rs.nonEmpty, "no audit record delivered")
-      val r = rs.last
-      assert(r.success)
-      assert(r.user.nonEmpty)
-      assert(r.durationNs > 0)
-      assert(r.sql.toLowerCase.contains("region"))
+    val rs = auditedBy(AuditListener.install(spark)) {
+      spark.sql("SELECT count(*) FROM graft.main.region").collect()
     }
-    spark.listenerManager.unregister(listener)
+    assert(rs.nonEmpty, "no audit record delivered")
+    // the first record after install is the query's (the drain's own
+    // marker query may follow it)
+    val r = rs.head
+    assert(r.success)
+    assert(r.user.nonEmpty)
+    assert(r.durationNs > 0)
+    assert(r.sql.toLowerCase.contains("region"))
   }
 
   test("failed query is audited as error") {
-    val listener = AuditListener.install(spark)
-    intercept[Exception] {
-      spark.sql("SELECT raise_error('boom') FROM graft.main.region").collect()
+    val rs = auditedBy(AuditListener.install(spark)) {
+      intercept[Exception] {
+        spark.sql("SELECT raise_error('boom') FROM graft.main.region").collect()
+      }
     }
-    eventuallyRecords(listener) { rs =>
-      val err = rs.find(r => !r.success && r.error.exists(_.contains("boom")))
-      assert(err.isDefined, s"error record missing: $rs")
-      // the error path recovers the true start from the planning tracker —
-      // failed queries must carry a real duration, not 0
-      assert(err.get.durationNs > 0, s"failure duration lost: ${err.get}")
-    }
-    spark.listenerManager.unregister(listener)
-  }
-
-  private def eventuallyRecords(l: AuditListener)(check: Seq[graft.observability.AuditRecord] => Unit): Unit = {
-    val deadline = System.currentTimeMillis() + 10000
-    var last: Throwable = null
-    while (System.currentTimeMillis() < deadline) {
-      try { check(l.records); return }
-      catch { case t: Throwable => last = t; Thread.sleep(200) }
-    }
-    throw last
+    val err = rs.find(r => !r.success && r.error.exists(_.contains("boom")))
+    assert(err.isDefined, s"error record missing: $rs")
+    // the error path recovers the true start from the planning tracker —
+    // failed queries must carry a real duration, not 0
+    assert(err.get.durationNs > 0, s"failure duration lost: ${err.get}")
   }
 }

@@ -90,20 +90,7 @@ class BloomSkipSpec extends SparkSpec {
 
       // input-bytes accounting: the bloom DELETE must read ~1/8 of what
       // the bloom-less DELETE reads (both dv tables — same write path)
-      val readBytes = new java.util.concurrent.atomic.AtomicLong
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null) readBytes.addAndGet(m.inputMetrics.bytesRead)
-          }
-        })
-      def measured(sql: String): Long = {
-        Thread.sleep(200); readBytes.set(0L)
-        spark.sql(sql)
-        Thread.sleep(200); readBytes.get()
-      }
+      def measured(sql: String): Long = Inspect.record(spark)(spark.sql(sql)).inputBytes
       val withBloom = measured("DELETE FROM graft_bl.main.t WHERE user_id = 777")
       val noBloom = measured("DELETE FROM graft_bl.main.nb WHERE user_id = 777")
       assert(spark.table("graft_bl.main.t").count() == 19999)

@@ -109,19 +109,22 @@ class PinSpec extends SparkSpec {
   }
 }
 
-/** Keeps the materialization rule from eroding: nothing in the engine
+/** Keeps the one-mechanism rules from eroding: nothing in the engine
   * calls `cache`, `persist` or `localCheckpoint` except [[Par]] and the
-  * independent sf1 reference run.
+  * independent sf1 reference run, and every session is built by
+  * [[GraftSession]] (`Bench` keeps its frozen config).
   */
 class MaterializationLintSpec extends AnyFunSuite {
 
-  test("src/main calls no cache, persist or localCheckpoint outside Par") {
-    val root = java.nio.file.Paths.get("src/main/scala")
+  /** `file:line: text` of every line under `roots` matching `pattern`,
+    * outside the files named in `allowed`.
+    */
+  private def hits(roots: Seq[String], allowed: Set[String],
+      pattern: scala.util.matching.Regex): Seq[String] = roots.flatMap { r =>
+    val root = java.nio.file.Paths.get(r)
     assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val allowed = Set("Par.scala", "DifferentialSf1.scala")
-    val call = """\.cache\(\)|\.persist\(|localCheckpoint\(""".r
     val stream = java.nio.file.Files.walk(root)
-    val hits = try {
+    try {
       import scala.jdk.CollectionConverters._
       stream.iterator().asScala.toSeq
         .filter(p => p.toString.endsWith(".scala") &&
@@ -129,11 +132,23 @@ class MaterializationLintSpec extends AnyFunSuite {
         .flatMap { p =>
           val lines = java.nio.file.Files.readAllLines(p).asScala
           lines.zipWithIndex.collect {
-            case (l, i) if call.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
+            case (l, i) if pattern.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
           }
         }
     } finally stream.close()
-    assert(hits.isEmpty, "materialize through Par.pin / Par.pinned instead:\n" +
-      hits.mkString("\n"))
+  }
+
+  test("src/main calls no cache, persist or localCheckpoint outside Par") {
+    val found = hits(Seq("src/main/scala"), Set("Par.scala", "DifferentialSf1.scala"),
+      """\.cache\(\)|\.persist\(|localCheckpoint\(""".r)
+    assert(found.isEmpty, "materialize through Par.pin / Par.pinned instead:\n" +
+      found.mkString("\n"))
+  }
+
+  test("sessions are built only by GraftSession (and Bench)") {
+    val found = hits(Seq("src/main/scala", "src/test/scala"),
+      Set("GraftSession.scala", "Bench.scala"), """SparkSession\s*\.\s*builder""".r)
+    assert(found.isEmpty, "start from GraftSession.builder(cpus) instead:\n" +
+      found.mkString("\n"))
   }
 }

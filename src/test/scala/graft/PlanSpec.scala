@@ -20,29 +20,9 @@ class PlanSpec extends SparkSpec {
 
   /** Executed plans of every query `f` runs, in order — for operators that
     * collect or checkpoint a stage internally, so the frame they return no
-    * longer shows it. Listener delivery is asynchronous; a marker query run
-    * last tells when every earlier plan has arrived.
+    * longer shows it.
     */
-  private def plansRunBy(f: => Unit): Seq[String] = {
-    import org.apache.spark.sql.execution.QueryExecution
-    import scala.jdk.CollectionConverters._
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    val mark = s"plans_marker_${java.util.UUID.randomUUID().toString.take(8)}"
-    spark.listenerManager.register(listener)
-    try {
-      f
-      spark.range(1).select(lit(mark)).collect()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!plans.asScala.exists(_.contains(mark)) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
-    } finally spark.listenerManager.unregister(listener)
-    plans.asScala.toSeq.filterNot(_.contains(mark))
-  }
+  private def plansRunBy(f: => Unit): Seq[String] = Inspect.record(spark)(f).plans
 
   /** Build plans with [[graft.operators.Par.spread]] disabled. The
     * narrow-pass tests below pin the AT-SCALE plan shape, where the spread

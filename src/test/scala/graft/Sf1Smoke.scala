@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1 smoke (scale sanity for the heavy headline set): materialize ~10× the
@@ -18,7 +17,9 @@ import org.apache.spark.sql.functions._
   * events.ts is written as the raw int64 nanos the nanosAsLong read yields —
   * `Tables` applies the same div-1000 truncation to either representation.
   *
-  * sbt "Test/runMain graft.Sf1Smoke [srcDir] [outDir]"
+  * sbt "Test/runMain graft.Sf1Smoke [srcDir] [outDir] [--fixtures-only]"
+  *
+  * Runs on `local[N]`, N = `SPARK_GRAFT_CPUS` (default 32).
   */
 object Sf1Smoke {
 
@@ -66,13 +67,7 @@ object Sf1Smoke {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("target/sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
@@ -99,23 +94,11 @@ object Sf1Smoke {
 
     if (args.contains("--fixtures-only")) { spark.stop(); return }
 
-    def time(label: String)(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"[sf1] $label%-28s $dt%8.2f s"); dt
-    }
-    val all = SparkEntry.queries
-    all("q_count_star")(spark, out).write.format("noop").mode("overwrite").save()
-    for (name <- smoke) {
-      // two reps: rep1 carries codegen/JIT warmup, rep2 is the number to
-      // compare against the recorded sf0.1 steady state (expect ~10× or the
-      // documented duplication-stress factor, never ~100×)
-      for (rep <- 1 to 2)
-        time(s"$name #$rep") {
-          all(name)(spark, out).write.format("noop").mode("overwrite").save()
-        }
-      graft.operators.Caches.release(spark)
-    }
+    // two reps: rep1 carries codegen/JIT warmup, rep2 is the number to
+    // compare against the recorded sf0.1 steady state (expect ~10× or the
+    // documented duplication-stress factor, never ~100×); q_count_star
+    // warms the session first
+    Inspect.timeQueries(spark, out, "q_count_star" +: smoke, reps = 2)
     spark.stop()
   }
 }

@@ -43,13 +43,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
       .config("spark.sql.catalog.graft.dir", "/root/testdata/sf0.001")
       // delegation allow-list is static-conf-only (set at context build, like

@@ -296,8 +296,7 @@ object DeletionVectors {
         }
         val newRows = matched.select(outCols: _*)
         // 2. stage and adopt the new generation(s) — invisible until commit
-        val uuid = java.util.UUID.randomUUID().toString.take(8)
-        val staging = new Path(root.getParent, s".morupd-${root.getName}-$uuid")
+        val staging = Swap.sibling(root, "morupd")
         var entries = snap.entries
         var adoptedGens: Map[String, String] = Map.empty
         if (meta.partitionCols.isEmpty) {

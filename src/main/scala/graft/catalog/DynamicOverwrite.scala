@@ -28,18 +28,15 @@ import org.apache.spark.sql.functions.col
   * resolved plan FIRST and rewrites it into a command that (a) writes the
   * incoming rows to a hidden staging layout with the stock distributed
   * partitioned write, then (b) swaps exactly the staged `k=v` directories
-  * into the live table — the SwapOverwrite / States aside discipline
-  * applied per partition directory.
+  * into the live table, each by one [[Swap.replace]].
   *
   * Crash semantics, stated exactly: the staging layout is FULLY
   * materialized before the first swap, so a crash during the write leaves
   * every live partition untouched (debris: one dot-prefixed staging dir,
-  * swept by the next overwrite or DROP). The per-partition swap is two
-  * renames (live → aside, staged → live); a crash mid-LOOP leaves each
-  * partition wholly old or wholly new (never mixed), and a crash between
-  * one partition's two renames leaves that single partition absent with
-  * its data recoverable under its dot-prefixed `.old-<k=v>-<uuid>` aside —
-  * the same window and recovery story as the whole-table SwapOverwrite.
+  * swept by the next overwrite or DROP). A crash mid-LOOP leaves each
+  * partition wholly old or wholly new (never mixed), and a crash inside
+  * one partition's swap leaves that single partition absent with its data
+  * recoverable under its dot-prefixed `.old-<k=v>-<uuid>` aside.
   * Cross-partition atomicity is deliberately NOT promised (the reference
   * points here are per-directory, like the States marker discipline).
   *
@@ -68,18 +65,7 @@ object DynamicOverwrite {
       val src = rel.foldLeft(staging)((p, n) => new Path(p, n))
       val dst = rel.foldLeft(live)((p, n) => new Path(p, n))
       fs.mkdirs(dst.getParent)
-      if (fs.exists(dst)) {
-        val aside = new Path(dst.getParent,
-          s".old-${dst.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
-        if (!fs.rename(dst, aside))
-          throw new java.io.IOException(s"dynamic overwrite: cannot move $dst aside")
-        if (!fs.rename(src, dst)) {
-          fs.rename(aside, dst) // roll back — the old partition lives
-          throw new java.io.IOException(s"dynamic overwrite: cannot swap $src in")
-        }
-        fs.delete(aside, true)
-      } else if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"dynamic overwrite: cannot move $src in")
+      Swap.replace(fs, src, dst, Swap.sibling(dst, "old"))()
     }
     parts.size
   }
@@ -100,8 +86,7 @@ case class GraftDynamicOverwriteCommand(tableName: String, livePath: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val live = new Path(livePath)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = new Path(live.getParent,
-      s".dynover-${live.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
+    val staging = Swap.sibling(live, "dynover")
     try {
       org.apache.spark.sql.GraftSqlShims.ofRows(spark, query)
         .hint("rebalance", partCols.map(col): _*)

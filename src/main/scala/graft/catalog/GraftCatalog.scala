@@ -356,8 +356,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     invalidateTable(oldIdent); invalidateTable(newIdent)
   }
 
-  /** Crash recovery for the rename-swap commits (commitStaged /
-    * SwapOverwrite): a kill between "move live aside" and "move staging in"
+  /** Crash recovery for [[Swap.replace]]: a kill between its two renames
     * leaves the table absent from its canonical path with the pre-swap data
     * intact under `.old-<name>-<uuid>`. On a load MISS with exactly ONE
     * matching aside, restore it — the swap never happened, so the aside IS
@@ -366,21 +365,26 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * Only load consults asides, and DROP/RENAME clean them up, so a stale
     * aside can never resurrect a deliberately dropped table.
     */
-  private def recoverAside(ns: Array[String], name: String): Option[Path] = {
+  private def recoverAside(ns: Array[String], name: String): Option[Path] =
+    hidden(ns, Swap.asides(name)) match {
+      case Seq(stranded) =>
+        val target = new Path(nsDir(ns), name)
+        if (fs.rename(stranded.getPath, target)) Some(target) else None
+      case _ => None
+    }
+
+  /** The entries of namespace `ns`'s directory whose names match `re`. */
+  private def hidden(ns: Array[String],
+      re: scala.util.matching.Regex): Seq[org.apache.hadoop.fs.FileStatus] = {
     val filesystem = fs
     val root = nsDir(ns)
-    if (!filesystem.exists(root)) return None
-    val re = ("\\.old-" + java.util.regex.Pattern.quote(name) + "-[0-9a-f]{8}").r
-    val asides = filesystem.listStatus(root).map(_.getPath)
-      .filter(p => re.pattern.matcher(p.getName).matches())
-    if (asides.length != 1) return None
-    val target = new Path(root, name)
-    if (filesystem.rename(asides.head, target)) Some(target) else None
+    if (!filesystem.exists(root)) Nil
+    else filesystem.listStatus(root).toSeq.filter(st => re.matches(st.getPath.getName))
   }
 
-  /** Delete a table's crash debris: `.old-` asides AND orphaned `.staging-`
-    * / `.overwrite-` dirs (a kill mid-CTAS or mid-overwrite leaks a
-    * full-size table copy otherwise — r12 ADVICE). Callers are the
+  /** Delete a table's crash debris, every [[Swap.debris]] sibling (a kill
+    * mid-CTAS or mid-overwrite leaks a full-size table copy otherwise —
+    * r12 ADVICE). Callers are the
     * name-retiring operations (DROP, RENAME's old name) and CREATE over a
     * resolved non-ambiguous name — all points where no write of this table
     * can legitimately be in flight under the single-writer-per-table
@@ -388,15 +392,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     */
   private def dropAsides(ns: Array[String], name: String): Unit = {
     val filesystem = fs
-    val root = nsDir(ns)
-    if (!filesystem.exists(root)) return
-    val q = java.util.regex.Pattern.quote(name)
-    val re = ("\\.(old|staging|overwrite|dynover|rlflat|rlpart|snapstage|snapcompact)-" + q +
-      "-[0-9a-f]{8}|\\.gen-" + q + "-[0-9]{13}-[0-9a-f]{8}|\\.commitlock-" + q +
-      "(\\.break)?").r
-    filesystem.listStatus(root).map(_.getPath)
-      .filter(p => re.pattern.matcher(p.getName).matches())
-      .foreach(p => filesystem.delete(p, true))
+    hidden(ns, Swap.debris(name)).foreach(st => filesystem.delete(st.getPath, true))
   }
 
   /** CREATE-side aside discipline (r12 ADVICE): `tableExists` consults only
@@ -412,19 +408,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     requireNotSampled("CREATE TABLE")
     val ns = ident.namespace
     if (tablePath(ns, ident.name).isEmpty) {
-      val filesystem = fs
-      val root = nsDir(ns)
-      if (filesystem.exists(root)) {
-        val re = ("\\.old-" + java.util.regex.Pattern.quote(ident.name) +
-          "-[0-9a-f]{8}").r
-        val asides = filesystem.listStatus(root).map(_.getPath)
-          .filter(p => re.pattern.matcher(p.getName).matches())
-        if (asides.length == 1) recoverAside(ns, ident.name)
-        else if (asides.length > 1)
-          throw new IllegalStateException(
-            s"cannot create ${ident.name}: ${asides.length} crash-asides " +
-              "exist (ambiguous recovery) — reconcile the .old-* dirs first")
-      }
+      val asides = hidden(ns, Swap.asides(ident.name)).length
+      if (asides == 1) recoverAside(ns, ident.name)
+      else if (asides > 1)
+        throw new IllegalStateException(
+          s"cannot create ${ident.name}: $asides crash-asides " +
+            "exist (ambiguous recovery) — reconcile the .old-* dirs first")
     }
     if (tableExists(ident))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
@@ -1151,14 +1140,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private[catalog] def vacuumTable(ident: Identifier, path: Path,
       olderThanMs: Long): Int = {
     val filesystem = fs
-    val root = nsDir(ident.namespace)
-    val q = java.util.regex.Pattern.quote(ident.name)
-    val re = ("\\.(old|staging|overwrite|dynover|rlflat|rlpart|snapstage|" +
-      "snapcompact|morupd)-" + q + "-[0-9a-f]{8}|\\.gen-" + q +
-      "-[0-9]{13}-[0-9a-f]{8}|\\.commitlock-" + q + "(\\.tags)?(\\.break)?").r
     val now = System.currentTimeMillis()
-    val debris = filesystem.listStatus(root).toSeq
-      .filter(st => re.pattern.matcher(st.getPath.getName).matches())
+    val debris = hidden(ident.namespace, Swap.debris(ident.name))
       .filter(st => now - st.getModificationTime > olderThanMs)
     debris.foreach(st => filesystem.delete(st.getPath, true))
     Snapshots.current(filesystem, path).foreach(cur =>
@@ -1223,9 +1206,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     invalidateTable(oldIdent); invalidateTable(newIdent)
   }
 
-  // ---- StagingTableCatalog: atomic CTAS via stage-write-then-rename (the
-  // States/ivfPqCompact swap discipline — a failed CTAS leaves either no
-  // table or the old table, never a half-written one) ----
+  // ---- StagingTableCatalog: atomic CTAS via stage-write-then-Swap.replace
+  // (a failed CTAS leaves either no table or the old table, never a
+  // half-written one) ----
 
   override def stageCreate(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: java.util.Map[String, String]): StagedTable = {
@@ -1278,10 +1261,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       deletionVectors: Boolean = false,
       blooms: (Seq[String], Double) = (Nil, 0.001)): StagedTable = {
     val base = nsDir(ident.namespace)
-    val staging = new Path(base,
-      s".staging-${ident.name}-${java.util.UUID.randomUUID().toString.take(8)}")
-    new GraftStagedTable(ident, canonicalSchema(schema, partCols), staging,
-      new Path(base, ident.name), replace, this, partCols, snapshots, sortOrder,
+    val target = new Path(base, ident.name)
+    new GraftStagedTable(ident, canonicalSchema(schema, partCols),
+      Swap.sibling(target, "staging"), target, replace, this, partCols, snapshots, sortOrder,
       changelog, deletionVectors, blooms)
   }
 
@@ -1322,28 +1304,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       // uuid-suffixed aside: concurrent REPLACEs of the same table cannot
       // collide on a fixed aside name (r11 ADVICE) — and the commit lock
       // (r14) makes the RACE itself refuse instead of silently retiring
-      // the other writer's output. Crash recovery: between the two renames
-      // the table is briefly absent from its canonical path — the pre-swap
-      // data survives under this dot-prefixed aside (invisible to
-      // listing); restore it by renaming `.old-<name>-<uuid>` back over
-      // `<name>`.
+      // the other writer's output
       CommitLock.withLock(filesystem, target.getParent, ident.name) {
-        val aside = new Path(target.getParent,
-          s".old-${ident.name}-${java.util.UUID.randomUUID().toString.take(8)}")
-        if (!filesystem.rename(target, aside))
-          throw new java.io.IOException(s"ctas: cannot move $target aside")
-        if (!filesystem.rename(staging, target)) {
-          filesystem.rename(aside, target) // roll back — the old table lives
-          throw new java.io.IOException(s"ctas: cannot swap $staging in")
-        }
         // history (graft.history=N): unpartitioned replaced contents retire
         // as a readable generation instead of being deleted (partitioned
         // tables mutate per-directory later — no whole-table history)
-        if (partCols.isEmpty) History.retire(filesystem, ident.name, target, aside)
-        else filesystem.delete(aside, true)
+        Swap.replace(filesystem, staging, target, Swap.sibling(target, "old")) {
+          aside =>
+            if (partCols.isEmpty) History.retire(filesystem, ident.name, target, aside)
+            else filesystem.delete(aside, true)
+        }
       }
-    } else if (!filesystem.rename(staging, target))
-      throw new java.io.IOException(s"ctas: cannot move $staging into place")
+    } else Swap.replace(filesystem, staging, target, Swap.sibling(target, "old"))()
     invalidateTable(ident)
   }
 

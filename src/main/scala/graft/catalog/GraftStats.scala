@@ -195,8 +195,7 @@ class GraftTable(delegate: ParquetTable, rowCount: () => Long,
       onWrite()
       return true
     }
-    val staging = new Path(live.getParent,
-      s".overwrite-${live.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
+    val staging = Swap.sibling(live, "overwrite")
     val meta = TableMeta.read(fs, live)
     fs.mkdirs(staging)
     meta match {
@@ -209,18 +208,12 @@ class GraftTable(delegate: ParquetTable, rowCount: () => Long,
           .write.mode("append").parquet(staging.toString)
     }
     CommitLock.withLock(fs, live.getParent, live.getName) {
-      val aside = new Path(live.getParent,
-        s".old-${live.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
-      if (!fs.rename(live, aside))
-        throw new java.io.IOException(s"truncate: cannot move $live aside")
-      if (!fs.rename(staging, live)) {
-        fs.rename(aside, live)
-        throw new java.io.IOException(s"truncate: cannot swap $staging in")
-      }
       // unpartitioned truncates participate in history like any replacement
-      if (meta.forall(_.partitionCols.isEmpty))
-        History.retire(fs, live.getName, live, aside)
-      else fs.delete(aside, true)
+      Swap.replace(fs, staging, live, Swap.sibling(live, "old")) { aside =>
+        if (meta.forall(_.partitionCols.isEmpty))
+          History.retire(fs, live.getName, live, aside)
+        else fs.delete(aside, true)
+      }
     }
     onWrite()
     true
@@ -696,8 +689,7 @@ private[catalog] class PartitionedV1WriteBuilder(tableName: String,
             // overwrite replaces the whole entry map. Atomic across
             // partitions; a crash pre-commit leaves unreferenced debris.
             val arranged = arrange(data)
-            val staging = new Path(live.getParent,
-              s".snapstage-${live.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
+            val staging = Swap.sibling(live, "snapstage")
             try {
               arranged.write.partitionBy(partCols: _*).mode("overwrite")
                 .parquet(staging.toString)
@@ -756,22 +748,13 @@ private[catalog] class PartitionedV1WriteBuilder(tableName: String,
           // funnel a 60%-one-value write through a single task
           val arranged = arrange(data)
           if (truncating || overwriteFlag) {
-            val staging = new Path(live.getParent,
-              s".overwrite-${live.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
+            val staging = Swap.sibling(live, "overwrite")
             arranged.write.partitionBy(partCols: _*).mode("overwrite")
               .parquet(staging.toString)
             // the sidecar travels with the table
             TableMeta.read(fs, live).foreach(TableMeta.write(fs, staging, _))
             CommitLock.withLock(fs, live.getParent, live.getName) {
-              val aside = new Path(live.getParent,
-                s".old-${live.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
-              if (!fs.rename(live, aside))
-                throw new java.io.IOException(s"overwrite: cannot move $live aside")
-              if (!fs.rename(staging, live)) {
-                fs.rename(aside, live) // roll back — the old table lives
-                throw new java.io.IOException(s"overwrite: cannot swap $staging in")
-              }
-              fs.delete(aside, true)
+              Swap.replace(fs, staging, live, Swap.sibling(live, "old"))()
             }
           } else
             arranged.write.partitionBy(partCols: _*).mode("append")
@@ -830,8 +813,7 @@ private[catalog] class SwapOverwrite(tableName: String, livePath: String,
 
   private val spark = org.apache.spark.sql.SparkSession.active
   private val live = new Path(livePath)
-  private val staging = new Path(live.getParent,
-    s".overwrite-${live.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
+  private val staging = Swap.sibling(live, "overwrite")
   private def fs = live.getFileSystem(spark.sessionState.newHadoopConf())
 
   def write(): Write = {
@@ -861,7 +843,7 @@ private[catalog] class SwapOverwrite(tableName: String, livePath: String,
             case Some(doomed) => CommitLock.withLock(filesystem, live.getParent, live.getName) {
               // FILE-granularity replace: staged files in, candidates out,
               // everything else untouched
-              val uuid = java.util.UUID.randomUUID().toString.take(8)
+              val uuid = Swap.uuid8()
               val asides = doomed.toSeq.sorted.map { p =>
                 val src = new Path(p)
                 val aside = new Path(live, s".rlold-${src.getName}-$uuid")
@@ -893,18 +875,10 @@ private[catalog] class SwapOverwrite(tableName: String, livePath: String,
               info.schema()).write.mode("append").parquet(staging.toString)
           CommitLock.withLock(filesystem, live.getParent, live.getName) {
             // uuid-suffixed aside (r11 ADVICE): concurrent overwrites cannot
-            // collide; a crash between the two renames leaves the old table
-            // recoverable under the dot-prefixed aside
-            val aside = new Path(live.getParent,
-              s".old-${live.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
-            if (!filesystem.rename(live, aside))
-              throw new java.io.IOException(s"overwrite: cannot move $live aside")
-            if (!filesystem.rename(staging, live)) {
-              filesystem.rename(aside, live) // roll back — the old table lives
-              throw new java.io.IOException(s"overwrite: cannot swap $staging in")
-            }
-            // graft.history=N retires the replaced contents as a generation
-            History.retire(filesystem, tableName, live, aside)
+            // collide; graft.history=N retires the replaced contents as a
+            // generation
+            Swap.replace(filesystem, staging, live, Swap.sibling(live, "old"))(
+              History.retire(filesystem, tableName, live, _))
           }
           onWrite()
         }
@@ -947,8 +921,7 @@ private[catalog] class SnapshotFilesWrite(tableName: String, livePath: String,
 
   private val spark = org.apache.spark.sql.SparkSession.active
   private val live = new Path(livePath)
-  private val staging = new Path(live.getParent,
-    s".snapstage-${live.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
+  private val staging = Swap.sibling(live, "snapstage")
   private def fs = live.getFileSystem(spark.sessionState.newHadoopConf())
 
   def write(): Write = {

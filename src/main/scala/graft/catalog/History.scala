@@ -45,13 +45,12 @@ object History {
     * or delete (history off); prune to the newest N generations.
     */
   def retire(fs: FileSystem, tableName: String, live: Path,
-      aside: Path): Unit = {
+      replaced: Path): Unit = {
     val n = keep(SparkSession.active)
-    if (n <= 0) { fs.delete(aside, true); return }
+    if (n <= 0) { fs.delete(replaced, true); return }
     val stamp = System.currentTimeMillis()
-    val gen = new Path(live.getParent,
-      f".gen-$tableName-$stamp%013d-${java.util.UUID.randomUUID().toString.take(8)}")
-    if (!fs.rename(aside, gen)) fs.delete(aside, true) // degrade to no-history
+    val gen = new Path(live.getParent, f".gen-$tableName-$stamp%013d-${Swap.uuid8()}")
+    if (!fs.rename(replaced, gen)) fs.delete(replaced, true) // degrade to no-history
     generations(fs, live.getParent, tableName).drop(n)
       .foreach { case (_, p) => fs.delete(p, true) }
   }

@@ -100,7 +100,7 @@ private[catalog] class HiveFactory(conf: SerializableConfiguration,
         val f = rowSchema.fields(i)
         BoundReference(i, f.dataType, f.nullable)
       }.toIndexedSeq)
-      private val uuid = java.util.UUID.randomUUID().toString.take(8)
+      private val uuid = Swap.uuid8()
       private val fs = new Path(stagingRoot).getFileSystem(conf.value)
       private var currentKey: Seq[String] = null
       private var current: org.apache.spark.sql.execution.datasources.OutputWriter = null

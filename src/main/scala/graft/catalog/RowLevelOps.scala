@@ -352,8 +352,7 @@ private[catalog] class GroupScopedScan(val delegate: ParquetScan,
   * ONCE; at 100 TB that beats the whole-table rewrite by the selectivity
   * of the merge. A crash before the first rename leaves the table
   * untouched (dot-prefixed debris only, swept by DROP); each partition
-  * swap is the two-rename aside discipline of
-  * [[DynamicOverwrite.backfill]].
+  * swap is one [[Swap.replace]].
   */
 private[catalog] class PartitionScopedReplaceWrite(tableName: String,
     livePath: String, partCols: Seq[String], winfo: LogicalWriteInfo,
@@ -364,8 +363,8 @@ private[catalog] class PartitionScopedReplaceWrite(tableName: String,
 
   private val spark = SparkSession.active
   private val live = new Path(livePath)
-  private val uuid = java.util.UUID.randomUUID().toString.take(8)
-  private val hive = new Path(live.getParent, s".rlpart-${live.getName}-$uuid")
+  private val uuid = Swap.uuid8()
+  private val hive = Swap.sibling(live, "rlpart", uuid)
   private def fs = live.getFileSystem(spark.sessionState.newHadoopConf())
 
   def write(): Write = {
@@ -460,20 +459,9 @@ private[catalog] class PartitionScopedReplaceWrite(tableName: String,
               val src = rel.foldLeft(hive)((p, n) => new Path(p, n))
               val dst = rel.foldLeft(live)((p, n) => new Path(p, n))
               filesystem.mkdirs(dst.getParent)
-              if (affectedSet(rel.mkString("/")) && filesystem.exists(dst)) {
-                // replace the affected partition: two-rename aside swap
-                val aside = new Path(dst.getParent,
-                  s".old-${dst.getName}-$uuid")
-                if (!filesystem.rename(dst, aside))
-                  throw new java.io.IOException(s"cow: cannot move $dst aside")
-                if (!filesystem.rename(src, dst)) {
-                  filesystem.rename(aside, dst) // roll back — old partition lives
-                  throw new java.io.IOException(s"cow: cannot swap $src in")
-                }
-                filesystem.delete(aside, true)
-              } else if (!filesystem.exists(dst)) {
-                if (!filesystem.rename(src, dst))
-                  throw new java.io.IOException(s"cow: cannot move $src in")
+              if (affectedSet(rel.mkString("/")) || !filesystem.exists(dst)) {
+                // replace the affected partition, or move a new one in
+                Swap.replace(filesystem, src, dst, Swap.sibling(dst, "old", uuid))()
               } else {
                 // rows moved into an UNAFFECTED partition (merge insert /
                 // partition-changing update): append its files under fresh

@@ -806,7 +806,7 @@ object Snapshots {
     val body = all.toSeq.sortBy(_._1).map { case (n, v) =>
       js(n) + ":" + v
     }.mkString("{", ",", "}")
-    val tmp = new Path(tableDir, s".$TagsFile-${java.util.UUID.randomUUID().toString.take(8)}")
+    val tmp = new Path(tableDir, s".$TagsFile-${Swap.uuid8()}")
     val out = fs.create(tmp, true)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
     fs.delete(p, false)
@@ -1050,8 +1050,7 @@ object Snapshots {
       gens.length > 1 || dvKvs(kv)
     }
     if (multi.isEmpty) return 0
-    val staging = new Path(tableDir.getParent,
-      s".snapcompact-${tableDir.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
+    val staging = Swap.sibling(tableDir, "snapcompact")
     try {
       val units = multi.toSeq.sortBy(_._1).flatMap { case (kv, gens) =>
         gens.sorted.map(g => s"$kv/$g")
@@ -1085,8 +1084,7 @@ object Snapshots {
     val files = base.relDirs
     if (files.length <= 1 && base.dvs.isEmpty) return 0
     if (files.isEmpty) return 0
-    val staging = new Path(tableDir.getParent,
-      s".snapcompact-${tableDir.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
+    val staging = Swap.sibling(tableDir, "snapcompact")
     try {
       val bytes = files.map(f =>
         try fs.getFileStatus(new Path(tableDir, f)).getLen

@@ -109,9 +109,8 @@ object BloomState {
     } finally in.close()
   }
 
-  /** Write to `<path>.next`, move the live file aside, rename the new one
-    * in, drop the old — either the previous or the new sidecar is readable
-    * at every instant (the bm25 stats-sidecar swap).
+  /** Write to `<path>.next` and [[graft.catalog.Swap.replace]] it over
+    * `path` through the `<path>.old` aside.
     */
   private def swapIn(spark: SparkSession, path: String, expectedItems: Long,
       fpp: Double, bf: BloomFilter): Unit = {
@@ -124,16 +123,6 @@ object BloomState {
       out.writeDouble(fpp)
       bf.writeTo(out)
     } finally out.close()
-    val aside = new Path(s"$path.old")
-    if (fs.exists(p)) {
-      if (fs.exists(aside)) fs.delete(aside, true)
-      if (!fs.rename(p, aside))
-        throw new java.io.IOException(s"cannot move $path aside")
-    }
-    if (!fs.rename(next, p)) {
-      if (fs.exists(aside)) fs.rename(aside, p) // roll back to the old filter
-      throw new java.io.IOException(s"cannot swap $path.next in")
-    }
-    if (fs.exists(aside)) fs.delete(aside, true)
+    graft.catalog.Swap.replace(fs, next, p, new Path(s"$path.old"))()
   }
 }

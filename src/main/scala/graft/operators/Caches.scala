@@ -10,11 +10,13 @@ import org.apache.spark.sql.SparkSession
   */
 object Caches {
 
-  /** Drop every pin (see [[Par.release]]) and every cached Dataset in the
-    * session.
+  /** Drop every pin (see [[Par.release]]), every cached Dataset in the
+    * session and the driver's broadcast values (see
+    * [[org.apache.spark.sql.GraftSqlShims.broadcastValues]]).
     */
   def release(spark: SparkSession): Unit = {
     Par.release(spark)
     spark.catalog.clearCache()
+    org.apache.spark.sql.GraftSqlShims.dropBroadcastValues()
   }
 }

@@ -623,14 +623,8 @@ object Similarity {
       .write.partitionBy("cell").mode("overwrite").parquet(tmp)
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val old = new org.apache.hadoop.fs.Path(s"$dir.old")
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compact: cannot move $dir aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), p)) {
-      fs.rename(old, p) // roll back — the live index stays valid
-      throw new java.io.IOException(s"compact: cannot swap $tmp into place")
-    }
-    fs.delete(old, true)
+    graft.catalog.Swap.replace(fs, new org.apache.hadoop.fs.Path(tmp), p,
+      new org.apache.hadoop.fs.Path(s"$dir.old"))()
     // tombstoned rows are now physically gone; a stale sidecar would hide
     // any future re-append of the same ids
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir.tombstones"), true)

@@ -278,7 +278,11 @@ object States {
       fs.mkdirs(g.sidecarPath)
       late.foreach { f =>
         val src = new Path(f)
-        fs.rename(src, new Path(g.sidecarPath, src.getName))
+        // the superseded sidecar is swept next: a retraction left behind
+        // would be lost
+        if (!fs.rename(src, new Path(g.sidecarPath, src.getName)))
+          throw new java.io.IOException(
+            s"compact: cannot carry the late retraction $src into ${g.sidecarPath}")
       }
     }
     sweep(spark, dir, g)

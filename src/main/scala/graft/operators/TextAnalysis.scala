@@ -350,20 +350,14 @@ object TextAnalysis {
     fs.create(marker, true).close()
   }
 
-  /** Rename-swap `<dir>.stats.next` over `<dir>.stats` — either the old or
-    * the new 1-row sidecar is in place at every instant, never a torn one.
+  /** [[graft.catalog.Swap.replace]] `<dir>.stats.next` over `<dir>.stats`
+    * — never a torn 1-row sidecar.
     */
   private def swapStats(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     val (fs, p) = fsAt(spark, s"$dir.stats")
-    val aside = new org.apache.hadoop.fs.Path(s"$dir.stats.old")
-    if (!fs.rename(p, aside))
-      throw new java.io.IOException(s"cannot move $dir.stats aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(s"$dir.stats.next"), p)) {
-      fs.rename(aside, p) // roll back — the live sidecar stays valid
-      throw new java.io.IOException(s"cannot swap $dir.stats.next in")
-    }
-    fs.delete(aside, true)
+    graft.catalog.Swap.replace(fs, new org.apache.hadoop.fs.Path(s"$dir.stats.next"),
+      p, new org.apache.hadoop.fs.Path(s"$dir.stats.old"))()
   }
 
   /** Append NEW documents to a materialized [[bm25IndexWrite]] index — the

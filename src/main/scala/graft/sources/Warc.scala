@@ -100,21 +100,8 @@ object Warc {
     // staging dir so the swapped-in container holds only committed parts
     for (st <- dirFs.globStatus(new org.apache.hadoop.fs.Path(tmp, "*.gwarc.tmp-*")))
       dirFs.delete(st.getPath, false)
-    // swap the finished container in: move the old aside, rename the new
-    // into place, then drop the old — a crash leaves one intact container
-    if (dirFs.exists(dirPath)) {
-      val aside = new org.apache.hadoop.fs.Path(s"$path.old")
-      if (dirFs.exists(aside)) dirFs.delete(aside, true)
-      if (!dirFs.rename(dirPath, aside))
-        throw new java.io.IOException(s"warc write: cannot move $path aside")
-      if (!dirFs.rename(tmpPath, dirPath)) {
-        dirFs.rename(aside, dirPath) // roll back — the old container lives
-        throw new java.io.IOException(s"warc write: cannot swap $tmp in")
-      }
-      dirFs.delete(aside, true)
-    } else if (!dirFs.rename(tmpPath, dirPath))
-      throw new java.io.IOException(s"warc write: cannot move $tmp into place")
-    ()
+    graft.catalog.Swap.replace(dirFs, tmpPath, dirPath,
+      new org.apache.hadoop.fs.Path(s"$path.old"))()
   }
 
   /** Write one partition's records as a GWARC part file, speculation-safely

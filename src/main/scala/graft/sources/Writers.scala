@@ -157,10 +157,8 @@ object Writers {
     * partition with bit-identical content; sidecars beside the directory
     * are untouched.
     *
-    * Crash semantics, stated exactly: a torn table can never appear (every
-    * directory at `dir` is complete), but the two renames are not one
-    * atomic step — a crash BETWEEN them leaves `dir` momentarily absent
-    * with the old table intact at `dir.old`. Recovery is one rename back;
+    * Crash semantics are [[graft.catalog.Swap.replace]]'s, with the old
+    * table at `dir.old` between the renames. Recovery is one rename back;
     * this function detects the leftovers of a crashed run (`.old` /
     * `.compacting`) and refuses to proceed so that recovery stays a
     * deliberate operator action, never a silent overwrite.
@@ -189,15 +187,11 @@ object Writers {
       if (sortCols.isEmpty) rebalanced
       else rebalanced.sortWithinPartitions((partCol +: sortCols).map(col): _*)
     arranged.write.partitionBy(partCol).mode("overwrite").parquet(tmp)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val old = new org.apache.hadoop.fs.Path(s"$dir.old")
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compact: cannot move $dir aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), p)) {
-      fs.rename(old, p) // roll back — the live table stays valid
-      throw new java.io.IOException(s"compact: cannot swap $tmp into place")
+    val (live, staged) = (new org.apache.hadoop.fs.Path(dir), new org.apache.hadoop.fs.Path(tmp))
+    try graft.catalog.Swap.replace(fs0, staged, live, new org.apache.hadoop.fs.Path(s"$dir.old"))()
+    catch { case e: java.io.IOException if fs0.exists(live) =>
+      fs0.delete(staged, true) // the swap rolled back: no leftover to reconcile
+      throw e
     }
-    fs.delete(old, true)
   }
 }

@@ -89,4 +89,16 @@ object GraftSqlShims {
       : Option[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.execution.datasources.DataSourceStrategy
       .translateFilter(e, supportNestedPredicatePushdown = false)
+
+  /** The driver's copies of broadcast values, kept only under a local
+    * master (SPARK-39983). `graft.operators.Caches.release` drops them: a
+    * broadcast-join relation holds a whole memory page (16 MB in a 3 GB,
+    * 4-core driver), which the context cleaner frees only after some
+    * collection. A later read rebuilds a value from its serialized pieces.
+    */
+  def broadcastValues(): Seq[org.apache.spark.storage.BlockId] = org.apache.spark.SparkEnv.get
+    .blockManager.getMatchingBlockIds(b => b.isBroadcast && !b.name.contains("_piece"))
+
+  def dropBroadcastValues(): Unit = broadcastValues()
+    .foreach(org.apache.spark.SparkEnv.get.blockManager.removeBlock(_, tellMaster = false))
 }

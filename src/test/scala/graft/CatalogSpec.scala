@@ -376,6 +376,20 @@ class CatalogSpec extends SparkSpec {
     intercept[Exception] { cnt() }
   }
 
+  test("DROP removes every hidden sibling vacuum would: MOR staging and the tags lock") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cat-debris")
+      .toFile.getAbsolutePath
+    spark.conf.set("spark.sql.catalog.graft_db", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_db.dir", dir)
+    spark.sql("CREATE TABLE graft_db.main.t (id BIGINT)")
+    // a crashed merge-on-read UPDATE's staging and a crashed tag commit's lock
+    val staging = new java.io.File(s"$dir/.morupd-t-0123abcd")
+    val lock = new java.io.File(s"$dir/.commitlock-t.tags")
+    assert(staging.mkdirs() && lock.createNewFile())
+    spark.sql("DROP TABLE graft_db.main.t")
+    assert(!staging.exists && !lock.exists, "DROP must take the table's debris with it")
+  }
+
   test("dynamic partition overwrite: backfilled partitions swap, untouched files byte-identical (r12 ask #2)") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft-cat-dyn")

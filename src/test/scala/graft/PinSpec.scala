@@ -93,6 +93,25 @@ class PinSpec extends SparkSpec {
     assert(!sc.getPersistentRDDs.contains(failId), "blocks survived a failed scope")
   }
 
+  test("Caches.release drops the driver's broadcast values and the broadcasts stay readable") {
+    import org.apache.spark.sql.GraftSqlShims.broadcastValues
+    Caches.release(spark)
+    val joined = spark.range(0, 1000, 1, 4).select(col("id"), (col("id") % 10).as("k"))
+      .join(broadcast(spark.range(0, 10).select(col("id").as("k"),
+        (col("id") * 2).as("v"))), "k")
+      .groupBy("v").count()
+    val first = joined.collect().toSet
+    assert(first.size == 10)
+    assert(broadcastValues().nonEmpty, "a broadcast join keeps its relation on the driver")
+    val explicit = sc.broadcast(Array(3L, 4L, 5L))
+    Caches.release(spark)
+    assert(broadcastValues().isEmpty, s"left on the driver: ${broadcastValues().mkString(", ")}")
+    assert(joined.collect().toSet == first, "a re-run reads the join's broadcast from its pieces")
+    assert(sc.parallelize(1 to 4, 2).map(_ => explicit.value.sum).collect().toSeq ==
+      Seq.fill(4)(12L))
+    Caches.release(spark)
+  }
+
   test("a plain scan under a filter and a rename, and an earlier pin, pass through unpinned") {
     val dir = java.nio.file.Files.createTempDirectory("pin_scan").toString
     spark.range(0, 50).select(col("id"), (col("id") % 5).as("g"))
@@ -142,6 +161,13 @@ class MaterializationLintSpec extends AnyFunSuite {
     val found = hits(Seq("src/main/scala"), Set("Par.scala", "DifferentialSf1.scala"),
       """\.cache\(\)|\.persist\(|localCheckpoint\(""".r)
     assert(found.isEmpty, "materialize through Par.pin / Par.pinned instead:\n" +
+      found.mkString("\n"))
+  }
+
+  test("the rename-swap rollback and hidden-sibling names live only in Swap") {
+    val found = hits(Seq("src/main/scala"), Set("Swap.scala"),
+      """rename\((aside|old), |s"\.(old|staging|overwrite|dynover|rlpart|snapstage|snapcompact|morupd)-""".r)
+    assert(found.isEmpty, "commit through graft.catalog.Swap instead:\n" +
       found.mkString("\n"))
   }
 

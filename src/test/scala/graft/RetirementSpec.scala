@@ -89,18 +89,13 @@ class RetirementSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_bm25fail").toString + "/idx"
     TextAnalysis.bm25IndexWrite(corpus.filter($"doc_id" <= 3), "doc_id", "text", dir)
     val batch = corpus.filter($"doc_id" >= 4)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    hconf.set("fs.refusenext.impl", classOf[RefuseStatsNextFs].getName)
-    hconf.setBoolean("fs.refusenext.impl.disable.cache", true)
-    try {
-      // the same index, reached through a scheme whose writes under
-      // *.stats.next fail: the staged sidecar never lands
+    // the same index, reached through a scheme whose writes under
+    // *.stats.next fail: the staged sidecar never lands
+    RefusingFs.withRefusal(spark.sparkContext.hadoopConfiguration,
+        create = """.*\.stats\.next(/.*)?""") {
       intercept[Exception] {
-        TextAnalysis.bm25IndexAppend(batch, "doc_id", "text", s"refusenext://$dir")
+        TextAnalysis.bm25IndexAppend(batch, "doc_id", "text", s"refuse://$dir")
       }
-    } finally {
-      hconf.unset("fs.refusenext.impl")
-      hconf.unset("fs.refusenext.impl.disable.cache")
     }
     val retried = scala.util.Try(
       TextAnalysis.bm25IndexAppend(batch, "doc_id", "text", dir))
@@ -432,55 +427,31 @@ class RetirementSpec extends SparkSpec {
     States.compact(spark, dir)
     assert(States.read(spark, dir).collect().map(_.getLong(0)).toSet == Set(1L))
   }
-}
 
-/** Local file system under the `refusenext` scheme that refuses every create
-  * and mkdirs under a `*.stats.next` path — the failure of a staged-sidecar
-  * write, with every other write landing normally.
-  */
-class RefuseStatsNextFs extends org.apache.hadoop.fs.FilterFileSystem(
-    new org.apache.hadoop.fs.RawLocalFileSystem {
-      override def getUri: java.net.URI = java.net.URI.create("refusenext:///")
-    }) {
-  import org.apache.hadoop.fs.{CreateFlag, FSDataOutputStream, Path}
-  import org.apache.hadoop.fs.permission.FsPermission
-  import org.apache.hadoop.util.Progressable
-
-  private def refuse(p: Path): Unit =
-    if (p.toUri.getPath.contains(".stats.next"))
-      throw new java.io.IOException(s"injected failure: write refused under $p")
-
-  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
-      bufferSize: Int, replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
-    refuse(f)
-    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
-  }
-
-  override def create(f: Path, permission: FsPermission,
-      flags: java.util.EnumSet[CreateFlag], bufferSize: Int, replication: Short,
-      blockSize: Long, progress: Progressable,
-      checksumOpt: org.apache.hadoop.fs.Options.ChecksumOpt): FSDataOutputStream = {
-    refuse(f)
-    super.create(f, permission, flags, bufferSize, replication, blockSize, progress,
-      checksumOpt)
-  }
-
-  override def createNonRecursive(f: Path, permission: FsPermission,
-      flags: java.util.EnumSet[CreateFlag], bufferSize: Int, replication: Short,
-      blockSize: Long, progress: Progressable): FSDataOutputStream = {
-    refuse(f)
-    super.createNonRecursive(f, permission, flags, bufferSize, replication,
-      blockSize, progress)
-  }
-
-  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
-    refuse(f)
-    super.mkdirs(f, permission)
-  }
-
-  override def mkdirs(f: Path): Boolean = {
-    refuse(f)
-    super.mkdirs(f)
+  test("States compact: a late retraction that cannot be carried forward fails the compact") {
+    import graft.operators.States
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_states_lost")
+      .toString + "/st"
+    States.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), dir)
+    States.retract(Seq((2L, "b")).toDF("id", "v"), dir)
+    // the mid-compact retraction above, but the move of its file into the
+    // new generation's sidecar is refused: sweeping the old sidecar anyway
+    // would lose it, so compact fails and leaves the file in place
+    val e = intercept[java.io.IOException] {
+      RefusingFs.withRefusal(spark.sparkContext.hadoopConfiguration,
+          rename = ".*/_retracted-gen-[^/]+/part-[^/]+") {
+        States.compact(spark, s"refuse://$dir", { df =>
+          States.retract(Seq((3L, "c")).toDF("id", "v"), s"refuse://$dir")
+          df.distinct()
+        })
+      }
+    }
+    assert(e.getMessage.contains("late retraction"), e.getMessage)
+    val sidecars = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("_retracted-gen-")).flatMap(_.listFiles())
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(spark.read.parquet(sidecars.map(_.getPath).toIndexedSeq: _*)
+      .collect().map(_.getLong(0)).contains(3L), "the late retraction was swept")
   }
 }

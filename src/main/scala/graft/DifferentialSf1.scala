@@ -374,9 +374,8 @@ object DifferentialSf1 {
         } catch {
           case e: Throwable =>
             bad += 1
-            s"""{"q":"$name","error":"${e.getMessage.take(200)
-              .replace("\\", "\\\\").replace("\"", "'")
-              .replaceAll("[\\n\\r\\t]", " ")}"}"""
+            graft.catalog.Sidecar.render(Map("q" -> name,
+              "error" -> String.valueOf(e.getMessage).take(200)))
         }
         println(r)
         System.out.flush()

@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr}
@@ -45,10 +43,9 @@ object BloomSkip {
     case _ => false
   }
 
-  // genDir -> file name -> column (lowercase) -> decoded filter.
-  // Sidecars are immutable; the cache mirrors Snapshots.GenStats.
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[Map[String, Map[String, BloomFilter]]]]()
+  // sidecar path -> file name -> column (lowercase) -> decoded filter; the
+  // bound limits the decoded-filter footprint
+  private val cache = new Sidecar.Immutable(4096)(raw => decode(parse(raw)))
 
   /** Build per-file blooms for one fresh generation: ONE distributed job
     * over the generation's files reading only the bloom columns, each
@@ -108,54 +105,27 @@ object BloomSkip {
   def write(fs: FileSystem, genDir: Path,
       blooms: Map[String, Map[String, Array[Byte]]]): Unit = {
     if (blooms.isEmpty) return
-    val out = fs.create(new Path(genDir, FileName), true)
-    try out.write(render(blooms).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val key = qualify(fs, genDir)
-    cache.put(key, Some(blooms.map { case (f, m) =>
-      f -> m.map { case (c, bytes) =>
-        c -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-      }
-    }))
+    val p = new Path(genDir, FileName)
+    Sidecar.write(fs, p, render(blooms))
+    cache.put(fs, p, decode(blooms))
   }
-
-  private def qualify(fs: FileSystem, p: Path): String =
-    try fs.makeQualified(p).toString catch { case _: Exception => p.toString }
 
   /** The generation's blooms (file name -> col -> filter); None = no
     * sidecar (table has no bloom columns, or the generation predates them).
     */
   def read(fs: FileSystem, genDir: Path)
-      : Option[Map[String, Map[String, BloomFilter]]] = {
-    val key = qualify(fs, genDir)
-    val cached = cache.get(key)
-    if (cached != null) return cached
-    val loaded: Option[Map[String, Map[String, BloomFilter]]] =
-      try {
-        val p = new Path(genDir, FileName)
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val raw = try {
-            val out = new java.io.ByteArrayOutputStream()
-            val buf = new Array[Byte](65536)
-            var n = in.read(buf)
-            while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-            new String(out.toByteArray, StandardCharsets.UTF_8)
-          } finally in.close()
-          Some(parse(raw).map { case (f, m) =>
-            f -> m.map { case (c, bytes) =>
-              c -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-            }
-          })
-        }
-      } catch { case _: Exception => None }
-    if (cache.size > 4096) cache.clear() // bound the decoded-filter footprint
-    cache.put(key, loaded)
-    loaded
-  }
+      : Option[Map[String, Map[String, BloomFilter]]] =
+    cache(fs, new Path(genDir, FileName))
 
   def invalidate(): Unit = cache.clear()
+
+  private def decode(blooms: Map[String, Map[String, Array[Byte]]])
+      : Map[String, Map[String, BloomFilter]] =
+    blooms.map { case (f, m) =>
+      f -> m.map { case (c, bytes) =>
+        c -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
+      }
+    }
 
   /** Blooms of one data file by table-root-relative path. */
   def forFile(fs: FileSystem, tableDir: Path,
@@ -166,43 +136,21 @@ object BloomSkip {
       .flatMap(_.get(relFile.substring(i + 1))).getOrElse(Map.empty)
   }
 
-  private def js(x: String): String = "\"" + x.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   private[catalog] def render(
       blooms: Map[String, Map[String, Array[Byte]]]): String = {
     val enc = java.util.Base64.getEncoder
-    val files = blooms.toSeq.sortBy(_._1).map { case (f, m) =>
-      val cols = m.toSeq.sortBy(_._1).map { case (c, bytes) =>
-        js(c) + ":" + js(enc.encodeToString(bytes))
-      }.mkString(",")
-      js(f) + ":{" + cols + "}"
-    }.mkString(",")
-    "{" + js("files") + ":{" + files + "}}"
+    Sidecar.render(Map("files" -> blooms.map { case (f, m) =>
+      f -> m.map { case (c, bytes) => c -> enc.encodeToString(bytes) }
+    }))
   }
 
   private[catalog] def parse(raw: String): Map[String, Map[String, Array[Byte]]] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(raw)
+    val root = Sidecar.tree(raw)
     require(root.has("files"), "not a graft bloom sidecar")
     val dec = java.util.Base64.getDecoder
-    val b = Map.newBuilder[String, Map[String, Array[Byte]]]
-    val it = root.get("files").fields()
-    while (it.hasNext) {
-      val e = it.next()
-      val cb = Map.newBuilder[String, Array[Byte]]
-      val cit = e.getValue.fields()
-      while (cit.hasNext) {
-        val ce = cit.next()
-        cb += ce.getKey -> dec.decode(ce.getValue.asText())
-      }
-      b += e.getKey -> cb.result()
-    }
-    b.result()
+    Sidecar.fields(root.get("files")).map { case (f, cols) =>
+      f -> Sidecar.fields(cols).map { case (c, v) => c -> dec.decode(v.asText()) }.toMap
+    }.toMap
   }
 
   /** Could any row of a file with these blooms satisfy `f`? Absence of a

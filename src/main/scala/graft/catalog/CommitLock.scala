@@ -21,9 +21,10 @@ import org.apache.spark.sql.SparkSession
   * its owner's release or by the single marker holder after
   * re-verification. Snapshot tables don't need this: their
   * manifest claim IS the commit point (optimistic concurrency,
-  * [[Snapshots.commit]]). Same caveat as every file-based protocol:
-  * create-exclusive is atomic on local/HDFS, best-effort on S3-class
-  * stores.
+  * [[Snapshots.commit]]). Lock and marker are created exclusively by
+  * [[Sidecar.publish]] (O_EXCL on `file://`): atomic on local/HDFS,
+  * best-effort on S3-class stores, the caveat of every file-based
+  * protocol.
   *
   * The lock covers only the COMMIT section (the renames), never the data
   * write — staging writes are uuid-isolated and safely concurrent, so a
@@ -33,36 +34,12 @@ object CommitLock {
 
   val TtlKey = "graft.commit_lock_ttl_ms"
 
-  /** Create `path` exclusively with `bytes` as content; false when it
-    * already exists. HDFS enforces create-exclusive atomically at the
-    * namenode; RawLocalFileSystem's create(overwrite=false) is
-    * CHECK-then-create — racy — so the file:// scheme goes through
-    * File.createNewFile (an atomic O_CREAT|O_EXCL). Object stores without
-    * atomic create remain best-effort, the standing caveat.
-    */
-  private[catalog] def createExclusive(fs: FileSystem, path: Path,
-      bytes: Array[Byte]): Boolean =
-    try {
-      if ("file".equalsIgnoreCase(fs.getUri.getScheme)) {
-        val local = new java.io.File(fs.makeQualified(path).toUri.getPath)
-        val dir = local.getParentFile
-        if (dir != null && !dir.exists()) dir.mkdirs()
-        if (!local.createNewFile()) return false
-        val w = new java.io.FileOutputStream(local)
-        try w.write(bytes) finally w.close()
-      } else {
-        val out = fs.create(path, false)
-        try out.write(bytes) finally out.close()
-      }
-      true
-    } catch { case _: java.io.IOException => false }
-
   def withLock[T](fs: FileSystem, parent: Path, table: String)(body: => T): T = {
     val ttl = SparkSession.active.conf.getOption(TtlKey)
       .flatMap(_.toLongOption).getOrElse(600000L)
     val lock = new Path(parent, s".commitlock-$table")
-    def tryAcquire(): Boolean = CommitLock.createExclusive(fs, lock,
-      System.currentTimeMillis().toString.getBytes("UTF-8"))
+    def tryAcquire(): Boolean =
+      Sidecar.publish(fs, lock, System.currentTimeMillis().toString)
     var acquired = tryAcquire()
     if (!acquired) {
       val stale =
@@ -79,7 +56,7 @@ object CommitLock {
         // another breaker had already broken and freshly re-acquired.
         val now = System.currentTimeMillis()
         val marker = new Path(parent, s".commitlock-$table.break")
-        if (CommitLock.createExclusive(fs, marker, now.toString.getBytes("UTF-8"))) {
+        if (Sidecar.publish(fs, marker, now.toString)) {
           try {
             val stillStale =
               try now - fs.getFileStatus(lock).getModificationTime > ttl

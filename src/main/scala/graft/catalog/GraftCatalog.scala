@@ -179,10 +179,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (tablePath(defaultNs, ns.head).isDefined)
       throw new IllegalArgumentException(
         s"cannot create namespace ${ns.head}: a table of that name exists in main")
-    val marker = new Path(nsDir(ns), NsMarker)
-    fs.mkdirs(marker.getParent)
-    val out = fs.create(marker, false)
-    out.write("{}".getBytes("UTF-8")); out.close()
+    if (!Sidecar.publish(fs, new Path(nsDir(ns), NsMarker), "{}"))
+      throw new org.apache.spark.sql.catalyst.analysis.NamespaceAlreadyExistsException(
+        ns.toSeq.toArray)
   }
 
   override def alterNamespace(ns: Array[String], changes: NamespaceChange*): Unit =
@@ -259,10 +258,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
         ident.namespace.toSeq :+ ident.name)
     }
-    filesystem.mkdirs(p.getParent)
-    val out = filesystem.create(p, true)
-    try out.write(GraftViews.render(sql, schema).getBytes("UTF-8"))
-    finally out.close()
+    Sidecar.write(filesystem, p, GraftViews.render(sql, schema))
     invalidateTable(ident)
   }
 

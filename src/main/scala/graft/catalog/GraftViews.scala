@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.ResolvedIdentifier
@@ -50,34 +48,17 @@ object GraftViews {
 
   val Suffix = ".graftview.json"
 
-  def render(sql: String, schema: StructType): String = {
-    def js(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    s"""{"version":1,"sql":${js(sql)},"schema":${schema.json}}"""
-  }
+  def render(sql: String, schema: StructType): String =
+    Sidecar.render(Map("version" -> 1, "sql" -> sql, "schema" -> Sidecar.tree(schema.json)))
 
   def parse(raw: String): (String, StructType) = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(raw)
+    val root = Sidecar.tree(raw)
     (root.get("sql").asText(),
       DataType.fromJson(root.get("schema").toString).asInstanceOf[StructType])
   }
 
-  def read(fs: FileSystem, p: Path): (String, StructType) = {
-    val in = fs.open(p)
-    val raw = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    parse(raw)
-  }
+  def read(fs: FileSystem, p: Path): (String, StructType) =
+    parse(Sidecar.read(fs, p).getOrElse(throw new java.io.FileNotFoundException(p.toString)))
 
   /** Re-entrancy guard for nested view analysis: a view whose text (maybe
     * transitively) references itself would recurse forever.

@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
@@ -55,7 +53,7 @@ import org.apache.spark.sql.types._
   * The COMMIT POINT is one create-exclusive manifest write:
   *  - writers first materialize new units (invisible — no manifest
   *    references them yet), then claim version `base+1` with
-  *    `fs.create(path, overwrite = false)`. A crash beforehand leaves
+  *    [[Sidecar.publish]] (create-exclusive). A crash beforehand leaves
   *    unreferenced debris only; a crash mid-write leaves a truncated
   *    manifest that readers skip (a commit that never completed);
   *  - OPTIMISTIC CONCURRENCY falls out: the filesystem grants each version
@@ -131,8 +129,7 @@ object Snapshots {
 
   /** Immutable segment IO: {entries: {key: [units]}, rows: {unit: n}}. */
   object SegStore {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[
-      String, Option[(Map[String, Seq[String]], Map[String, Long])]]()
+    private val cache = new Sidecar.Immutable(65536)(parseSeg)
 
     private def pathOf(tableDir: Path, name: String) =
       new Path(new Path(tableDir, SegDir), name)
@@ -141,44 +138,15 @@ object Snapshots {
         entries: Map[String, Seq[String]], rows: Map[String, Long]): String = {
       val name = s"seg-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
       val p = pathOf(tableDir, name)
-      fs.mkdirs(p.getParent)
-      val out = fs.create(p, false)
-      try out.write(renderSeg(entries, rows).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      cache.put(qualify(fs, p), Some((entries, rows)))
+      if (!Sidecar.publish(fs, p, renderSeg(entries, rows)))
+        throw new java.io.IOException(s"cannot write snapshot segment $p")
+      cache.put(fs, p, (entries, rows))
       name
     }
 
     def read(fs: FileSystem, tableDir: Path,
-        name: String): Option[(Map[String, Seq[String]], Map[String, Long])] = {
-      val key = qualify(fs, pathOf(tableDir, name))
-      val cached = cache.get(key)
-      if (cached != null) return cached
-      val loaded =
-        try {
-          val p = pathOf(tableDir, name)
-          if (!fs.exists(p)) None
-          else {
-            val in = fs.open(p)
-            val raw = try {
-              val out = new java.io.ByteArrayOutputStream()
-              val buf = new Array[Byte](65536)
-              var n = in.read(buf)
-              while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-              new String(out.toByteArray, StandardCharsets.UTF_8)
-            } finally in.close()
-            Some(parseSeg(raw))
-          }
-        } catch { case _: Exception => None }
-      if (cache.size > 65536) cache.clear()
-      cache.put(key, loaded)
-      loaded
-    }
-
-    def invalidate(): Unit = cache.clear()
-
-    private def qualify(fs: FileSystem, p: Path): String =
-      try fs.makeQualified(p).toString catch { case _: Exception => p.toString }
+        name: String): Option[(Map[String, Seq[String]], Map[String, Long])] =
+      cache(fs, pathOf(tableDir, name))
   }
 
   val OrphanGraceKey = "graft.snapshot_orphan_grace_ms"
@@ -202,50 +170,20 @@ object Snapshots {
   object GenStats {
     val FileName = "_graft_stats.json"
 
-    private val cache =
-      new java.util.concurrent.ConcurrentHashMap[String, Option[Map[String, FileRef]]]()
+    private val cache = new Sidecar.Immutable(65536)(parseStats)
 
     def write(fs: FileSystem, genDir: Path, stats: Map[String, FileRef]): Unit = {
-      val out = fs.create(new Path(genDir, FileName), true)
-      try out.write(renderStats(stats).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      // the commit's own pre-write read may have negative-cached this dir
-      val key = try fs.makeQualified(genDir).toString
-      catch { case _: Exception => genDir.toString }
-      cache.put(key, Some(stats))
+      val p = new Path(genDir, FileName)
+      Sidecar.write(fs, p, renderStats(stats))
+      cache.put(fs, p, stats)
     }
 
     /** Stats of every data file in `genDir` (keyed by FILE NAME); None =
       * sidecar absent/corrupt (pre-stats generation) — callers stay
       * conservative.
       */
-    def read(fs: FileSystem, genDir: Path): Option[Map[String, FileRef]] = {
-      val key = try fs.makeQualified(genDir).toString
-      catch { case _: Exception => genDir.toString }
-      val cached = cache.get(key)
-      if (cached != null) return cached
-      val loaded: Option[Map[String, FileRef]] =
-        try {
-          val p = new Path(genDir, FileName)
-          if (!fs.exists(p)) None
-          else {
-            val in = fs.open(p)
-            val raw = try {
-              val out = new java.io.ByteArrayOutputStream()
-              val buf = new Array[Byte](8192)
-              var n = in.read(buf)
-              while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-              new String(out.toByteArray, StandardCharsets.UTF_8)
-            } finally in.close()
-            Some(parseStats(raw))
-          }
-        } catch { case _: Exception => None }
-      if (cache.size > 65536) cache.clear() // crude bound; entries re-load
-      cache.put(key, loaded)
-      loaded
-    }
-
-    private[catalog] def invalidate(): Unit = cache.clear()
+    def read(fs: FileSystem, genDir: Path): Option[Map[String, FileRef]] =
+      cache(fs, new Path(genDir, FileName))
   }
 
   /** Stats of one data file by table-root-relative path, from its
@@ -381,20 +319,11 @@ object Snapshots {
   /** Read one manifest; None when absent or truncated/corrupt (a crashed
     * commit — never acknowledged, so skipping it is correct).
     */
-  def read(fs: FileSystem, tableDir: Path, version: Long): Option[Snapshot] = {
-    val p = manifestPath(tableDir, version)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val raw = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    try Some(parse(raw, SegStore.read(fs, tableDir, _)))
-    catch { case _: Exception => None }
-  }
+  def read(fs: FileSystem, tableDir: Path, version: Long): Option[Snapshot] =
+    Sidecar.read(fs, manifestPath(tableDir, version)).flatMap { raw =>
+      try Some(parse(raw, SegStore.read(fs, tableDir, _)))
+      catch { case _: Exception => None }
+    }
 
   /** The CURRENT snapshot: highest parseable version. */
   def current(fs: FileSystem, tableDir: Path): Option[Snapshot] =
@@ -507,11 +436,9 @@ object Snapshots {
           buildSnapshot(fs, tableDir, curBase, curEntries, next,
             kind, changes, liveDvs, liveDvRows))
         val p = manifestPath(tableDir, next)
-        // create-exclusive via CommitLock.createExclusive: atomic on HDFS
-        // and (through O_EXCL) on local fs; best-effort on object stores
-        val claimed = CommitLock.createExclusive(fs, p,
-          render(snap).getBytes(StandardCharsets.UTF_8))
-        if (claimed) {
+        // create-exclusive via Sidecar.publish: atomic on HDFS and
+        // (through O_EXCL) on local fs; best-effort on object stores
+        if (Sidecar.publish(fs, p, render(snap))) {
           prune(fs, tableDir, next)
           return snap
         }
@@ -781,34 +708,20 @@ object Snapshots {
     * version is PINNED: [[prune]] (and therefore [[expire]]) never drops
     * its manifest or sweeps what it references, no matter the retention
     * window — "the snapshot training run X read" stays readable until the
-    * tag is dropped. `VERSION AS OF '<tag>'` resolves through here.
+    * tag is dropped. `VERSION AS OF '<tag>'` resolves through here. Read
+    * and written with the other sidecars' [[Sidecar]] codec.
     */
-  def tags(fs: FileSystem, tableDir: Path): Map[String, Long] = {
-    val p = new Path(tableDir, TagsFile)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val raw = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    // {"name":version,...} — same minimal hand parser family as the rest
-    // of the sidecars
-    """"((?:[^"\\]|\\.)*)"\s*:\s*(\d+)""".r.findAllMatchIn(raw).map { m =>
-      m.group(1).replace("\\\"", "\"").replace("\\\\", "\\") -> m.group(2).toLong
-    }.toMap
-  }
+  def tags(fs: FileSystem, tableDir: Path): Map[String, Long] =
+    Sidecar.read(fs, new Path(tableDir, TagsFile)).map { raw =>
+      Sidecar.fields(Sidecar.tree(raw)).map { case (n, v) => n -> v.asLong() }.toMap
+    }.getOrElse(Map.empty)
 
   private def writeTags(fs: FileSystem, tableDir: Path,
       all: Map[String, Long]): Unit = {
     val p = new Path(tableDir, TagsFile)
     if (all.isEmpty) { fs.delete(p, false); return }
-    val body = all.toSeq.sortBy(_._1).map { case (n, v) =>
-      js(n) + ":" + v
-    }.mkString("{", ",", "}")
     val tmp = new Path(tableDir, s".$TagsFile-${Swap.uuid8()}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    Sidecar.write(fs, tmp, Sidecar.render(all))
     fs.delete(p, false)
     if (!fs.rename(tmp, p))
       throw new java.io.IOException(s"tags: cannot install $tmp as $p")
@@ -1258,7 +1171,7 @@ object Snapshots {
     Some(pairs.toMap)
   }
 
-  // ---- wire format (jackson on Spark's classpath, like TableMeta) ----
+  // ---- wire format: field names here, JSON codec in [[Sidecar]] ----
 
   /** Tag + string round-trip for the external value families stats carry;
     * unknown family = not serialized (stays unknown, conservative).
@@ -1285,169 +1198,87 @@ object Snapshots {
     case _ => None
   }
 
-  private def js(x: String): String = "\"" + x.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  private def renderEntryMap(m: Map[String, Seq[String]]): String =
-    m.toSeq.sortBy(_._1).map { case (kv, gens) =>
-      s"${js(kv)}:[${gens.sorted.map(js).mkString(",")}]"
-    }.mkString(",")
-
-  private def renderRowMap(m: Map[String, Long]): String =
-    m.toSeq.sortBy(_._1).map { case (rel, n) => s"${js(rel)}:$n" }.mkString(",")
+  private def sortedUnits(m: Map[String, Seq[String]]): Map[String, Seq[String]] =
+    m.map { case (k, units) => k -> units.sorted }
 
   private[catalog] def renderSeg(entries: Map[String, Seq[String]],
       rows: Map[String, Long]): String =
-    "{" + js("entries") + ":{" + renderEntryMap(entries) + "}," +
-      js("rows") + ":{" + renderRowMap(rows) + "}}"
+    Sidecar.render(Map("entries" -> sortedUnits(entries), "rows" -> rows))
 
   private[catalog] def parseSeg(raw: String)
       : (Map[String, Seq[String]], Map[String, Long]) = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(raw)
+    val root = Sidecar.tree(raw)
     require(root.has("entries"), "not a graft snapshot segment")
-    (parseEntryNode(root.get("entries")),
-      parseRowNode(Option(root.get("rows"))))
+    (parseEntryNode(root.get("entries")), parseRowNode(root.get("rows")))
   }
 
   private def parseEntryNode(node: com.fasterxml.jackson.databind.JsonNode)
-      : Map[String, Seq[String]] = {
-    val it = node.fields()
-    val b = Map.newBuilder[String, Seq[String]]
-    while (it.hasNext) {
-      val e = it.next()
-      val git = e.getValue.elements()
-      val gb = Seq.newBuilder[String]
-      while (git.hasNext) gb += git.next().asText()
-      b += e.getKey -> gb.result()
-    }
-    b.result()
-  }
+      : Map[String, Seq[String]] =
+    Sidecar.fields(node).map { case (k, units) => k -> Sidecar.strings(units) }.toMap
 
-  private def parseRowNode(node: Option[com.fasterxml.jackson.databind.JsonNode])
+  private def parseRowNode(node: com.fasterxml.jackson.databind.JsonNode)
       : Map[String, Long] =
-    node.map { n =>
-      val it = n.fields()
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) {
-        val e = it.next()
-        b += e.getKey -> e.getValue.asLong()
-      }
-      b.result()
-    }.getOrElse(Map.empty)
+    Sidecar.fields(node).map { case (k, n) => k -> n.asLong() }.toMap
 
   private[catalog] def render(s: Snapshot): String = {
     // segmented form: only the delta is inline; the segment list carries
     // the bulk (commit bytes ∝ the commit, not the table)
-    val (entries, rows, segExtra) = s.seg match {
-      case Some(form) =>
-        (renderEntryMap(form.inlineEntries), renderRowMap(form.inlineRows),
-          "," + js("segs") + ":[" + form.segs.map(js).mkString(",") + "]," +
-            js("drops") + ":[" + form.drops.toSeq.sorted.map(js).mkString(",") + "]")
-      case None => (renderEntryMap(s.entries), renderRowMap(s.rows), "")
+    val (entries, rows, segs) = s.seg match {
+      case Some(form) => (form.inlineEntries, form.inlineRows,
+        Map("segs" -> form.segs, "drops" -> form.drops.toSeq.sorted))
+      case None => (s.entries, s.rows, Map.empty)
     }
-    val changes = s.changes.map(c => "," + js("changes") + ":" + js(c)).getOrElse("")
-    val dvs =
-      if (s.dvs.isEmpty) ""
-      else "," + js("dvs") + ":{" + s.dvs.toSeq.sortBy(_._1).map {
-        case (f, ref) => s"${js(f)}:${js(ref)}"
-      }.mkString(",") + "}"
-    val dvRows =
-      if (s.dvRows.isEmpty) ""
-      else "," + js("dvRows") + ":{" + s.dvRows.toSeq.sortBy(_._1).map {
-        case (f, n) => s"${js(f)}:$n"
-      }.mkString(",") + "}"
-    "{" + js("version") + ":" + s.version + "," +
-      js("stampMillis") + ":" + s.stampMillis + "," +
-      js("kind") + ":" + js(s.kind) + "," +
-      js("entries") + ":{" + entries + "}," +
-      js("rows") + ":{" + rows + "}" + segExtra + changes + dvs + dvRows + "}"
+    Sidecar.render(Map[String, Any]("version" -> s.version,
+      "stampMillis" -> s.stampMillis, "kind" -> s.kind,
+      "entries" -> sortedUnits(entries), "rows" -> rows) ++ segs ++
+      s.changes.map("changes" -> _) ++
+      Option.when(s.dvs.nonEmpty)("dvs" -> s.dvs) ++
+      Option.when(s.dvRows.nonEmpty)("dvRows" -> s.dvRows))
   }
 
   /** Per-generation stats sidecar wire format: file name -> {rows, cols}. */
-  private[catalog] def renderStats(stats: Map[String, FileRef]): String = {
-    val files = stats.toSeq.sortBy(_._1).map { case (name, ref) =>
-      val cols = ref.cols.toSeq.sortBy(_._1).map { case (c, st) =>
+  private[catalog] def renderStats(stats: Map[String, FileRef]): String =
+    Sidecar.render(Map("files" -> stats.map { case (name, ref) =>
+      name -> Map("rows" -> ref.rows, "cols" -> ref.cols.map { case (c, st) =>
         // serialize only bounds that round-trip; a column with unknown
         // bounds still carries its null flags
-        val mnT = st.min.flatMap(tagOf)
-        val mxT = st.max.flatMap(tagOf)
-        val tag = mnT.map(_._1).orElse(mxT.map(_._1))
-        val parts = Seq.newBuilder[String]
-        tag.foreach(t => parts += js("t") + ":" + js(t))
-        mnT.foreach { case (_, v) => parts += js("mn") + ":" + js(v) }
-        mxT.foreach { case (_, v) => parts += js("mx") + ":" + js(v) }
-        parts += js("hn") + ":" + st.hasNulls
-        parts += js("an") + ":" + st.allNull
-        js(c) + ":{" + parts.result().mkString(",") + "}"
-      }.mkString(",")
-      js(name) + ":{" + js("rows") + ":" + ref.rows + "," +
-        js("cols") + ":{" + cols + "}}"
-    }.mkString(",")
-    "{" + js("files") + ":{" + files + "}}"
-  }
+        val mn = st.min.flatMap(tagOf)
+        val mx = st.max.flatMap(tagOf)
+        c -> (Map[String, Any]("hn" -> st.hasNulls, "an" -> st.allNull) ++
+          mn.orElse(mx).map("t" -> _._1) ++ mn.map("mn" -> _._2) ++ mx.map("mx" -> _._2))
+      })
+    }))
 
   private[catalog] def parseStats(raw: String): Map[String, FileRef] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(raw)
+    val root = Sidecar.tree(raw)
     require(root.has("files"), "not a graft stats sidecar")
-    val b = Map.newBuilder[String, FileRef]
-    val it = root.get("files").fields()
-    while (it.hasNext) {
-      val e = it.next()
-      val fn = e.getValue
-      val cols = Option(fn.get("cols")).map { cn =>
-        val cit = cn.fields()
-        val cb = Map.newBuilder[String, FileStats.ColStats]
-        while (cit.hasNext) {
-          val ce = cit.next()
-          val o = ce.getValue
+    Sidecar.fields(root.get("files")).map { case (name, fn) =>
+      name -> FileRef(Option(fn.get("rows")).map(_.asLong()).getOrElse(-1L),
+        Sidecar.fields(fn.get("cols")).map { case (c, o) =>
           val tag = Option(o.get("t")).map(_.asText()).getOrElse("")
-          val mn = Option(o.get("mn")).flatMap(n => untag(tag, n.asText()))
-          val mx = Option(o.get("mx")).flatMap(n => untag(tag, n.asText()))
-          val hn = Option(o.get("hn")).forall(_.asBoolean(true))
-          val an = Option(o.get("an")).exists(_.asBoolean(false))
-          cb += ce.getKey -> FileStats.ColStats(mn, mx, hn, an)
-        }
-        cb.result()
-      }.getOrElse(Map.empty[String, FileStats.ColStats])
-      b += e.getKey -> FileRef(
-        Option(fn.get("rows")).map(_.asLong()).getOrElse(-1L), cols)
-    }
-    b.result()
+          def bound(f: String) = Option(o.get(f)).flatMap(n => untag(tag, n.asText()))
+          c -> FileStats.ColStats(bound("mn"), bound("mx"),
+            Option(o.get("hn")).forall(_.asBoolean(true)),
+            Option(o.get("an")).exists(_.asBoolean(false)))
+        }.toMap)
+    }.toMap
   }
 
   private[catalog] def parse(raw: String,
       resolveSeg: String => Option[(Map[String, Seq[String]], Map[String, Long])]
         = _ => None): Snapshot = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(raw)
+    val root = Sidecar.tree(raw)
     require(root.has("version") && root.has("stampMillis") && root.has("entries"),
       "not a graft snapshot manifest")
     val inlineEntries = parseEntryNode(root.get("entries"))
-    val inlineRows = parseRowNode(Option(root.get("rows")))
+    val inlineRows = parseRowNode(root.get("rows"))
     // segmented form (r15): materialize (ordered segment union − drops)
     // overridden by the inline block. A missing/corrupt segment makes the
     // whole manifest unreadable (read() skips it as a crashed commit) —
     // never a silently partial table.
-    val segNames = Option(root.get("segs")).map { node =>
-      val it = node.elements()
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) b += it.next().asText()
-      b.result()
-    }
-    val (entries, rows, seg) = segNames match {
+    val (entries, rows, seg) = Option(root.get("segs")).map(Sidecar.strings) match {
       case Some(names) =>
-        val drops = Option(root.get("drops")).map { node =>
-          val it = node.elements()
-          val b = Set.newBuilder[String]
-          while (it.hasNext) b += it.next().asText()
-          b.result()
-        }.getOrElse(Set.empty[String])
+        val drops = Sidecar.strings(root.get("drops")).toSet
         val segE = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
         val segR = scala.collection.mutable.LinkedHashMap.empty[String, Long]
         names.foreach { n =>
@@ -1463,26 +1294,9 @@ object Snapshots {
     }
     val kind = Option(root.get("kind")).map(_.asText()).getOrElse("")
     val changes = Option(root.get("changes")).map(_.asText()).filter(_.nonEmpty)
-    val dvs = Option(root.get("dvs")).map { node =>
-      val it = node.fields()
-      val b = Map.newBuilder[String, String]
-      while (it.hasNext) {
-        val e = it.next()
-        b += e.getKey -> e.getValue.asText()
-      }
-      b.result()
-    }.getOrElse(Map.empty[String, String])
-    val dvRows = Option(root.get("dvRows")).map { node =>
-      val it = node.fields()
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) {
-        val e = it.next()
-        b += e.getKey -> e.getValue.asLong()
-      }
-      b.result()
-    }.getOrElse(Map.empty[String, Long])
+    val dvs = Sidecar.fields(root.get("dvs")).map { case (f, ref) => f -> ref.asText() }.toMap
     Snapshot(root.get("version").asLong(), root.get("stampMillis").asLong(),
-      entries, rows, kind, changes, dvs, dvRows, seg)
+      entries, rows, kind, changes, dvs, parseRowNode(root.get("dvRows")), seg)
   }
 }
 

@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -77,85 +75,31 @@ object TableMeta {
 
   def pathIn(tableDir: Path): Path = new Path(tableDir, FileName)
 
-  def read(fs: FileSystem, tableDir: Path): Option[TableMeta] = {
-    val p = pathIn(tableDir)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val raw = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    Some(parse(raw))
-  }
+  def read(fs: FileSystem, tableDir: Path): Option[TableMeta] =
+    Sidecar.read(fs, pathIn(tableDir)).map(parse)
 
-  def write(fs: FileSystem, tableDir: Path, meta: TableMeta): Unit = {
-    val out = fs.create(pathIn(tableDir), true)
-    try out.write(render(meta).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  def write(fs: FileSystem, tableDir: Path, meta: TableMeta): Unit =
+    Sidecar.write(fs, pathIn(tableDir), render(meta))
 
   /** Serialized form: StructType's own JSON wrapped with the partition
     * list. StructType.fromJson/json is the stable Spark wire format for
     * schemas — no hand-rolled type grammar.
     */
-  private[catalog] def render(meta: TableMeta): String = {
-    def js(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    s"""{"version":1,"partitionCols":[${meta.partitionCols.map(js).mkString(",")}],""" +
-      s""""droppedColumns":[${meta.droppedColumns.map(js).mkString(",")}],""" +
-      s""""snapshots":${meta.snapshots},""" +
-      s""""changelog":${meta.changelog},""" +
-      s""""deletionVectors":${meta.deletionVectors},""" +
-      s""""bloomCols":[${meta.bloomCols.map(js).mkString(",")}],""" +
-      s""""bloomFpp":${meta.bloomFpp},""" +
-      s""""sortOrder":[${meta.sortOrder.map(js).mkString(",")}],""" +
-      s""""schema":${meta.schema.json}}"""
-  }
+  private[catalog] def render(meta: TableMeta): String = Sidecar.render(Map(
+    "version" -> 1, "partitionCols" -> meta.partitionCols,
+    "droppedColumns" -> meta.droppedColumns, "snapshots" -> meta.snapshots,
+    "changelog" -> meta.changelog, "deletionVectors" -> meta.deletionVectors,
+    "bloomCols" -> meta.bloomCols, "bloomFpp" -> meta.bloomFpp,
+    "sortOrder" -> meta.sortOrder, "schema" -> Sidecar.tree(meta.schema.json)))
 
   private[catalog] def parse(raw: String): TableMeta = {
-    // the schema value is itself JSON — lift the fields with jackson (on
-    // Spark's classpath) rather than substring surgery
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(raw)
-    val parts = {
-      val it = root.get("partitionCols").elements()
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) b += it.next().asText()
-      b.result()
-    }
-    val dropped = Option(root.get("droppedColumns")).map { node =>
-      val it = node.elements()
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) b += it.next().asText()
-      b.result()
-    }.getOrElse(Nil)
-    val snapshots = Option(root.get("snapshots")).exists(_.asBoolean(false))
-    val changelog = Option(root.get("changelog")).exists(_.asBoolean(false))
-    val sortOrder = Option(root.get("sortOrder")).map { node =>
-      val it = node.elements()
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) b += it.next().asText()
-      b.result()
-    }.getOrElse(Nil)
-    val dv = Option(root.get("deletionVectors")).exists(_.asBoolean(false))
-    val bloomCols = Option(root.get("bloomCols")).map { node =>
-      val it = node.elements()
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) b += it.next().asText()
-      b.result()
-    }.getOrElse(Nil)
-    val bloomFpp = Option(root.get("bloomFpp")).map(_.asDouble(0.001))
-      .getOrElse(0.001)
-    val schema = DataType.fromJson(root.get("schema").toString)
-      .asInstanceOf[StructType]
-    TableMeta(schema, parts, dropped, snapshots, sortOrder, changelog, dv,
-      bloomCols, bloomFpp)
+    val root = Sidecar.tree(raw)
+    def flag(f: String) = Option(root.get(f)).exists(_.asBoolean(false))
+    def names(f: String) = Sidecar.strings(root.get(f))
+    TableMeta(DataType.fromJson(root.get("schema").toString).asInstanceOf[StructType],
+      names("partitionCols"), names("droppedColumns"), flag("snapshots"),
+      names("sortOrder"), flag("changelog"), flag("deletionVectors"),
+      names("bloomCols"),
+      Option(root.get("bloomFpp")).map(_.asDouble(0.001)).getOrElse(0.001))
   }
 }

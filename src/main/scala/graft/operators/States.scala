@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+
+import graft.catalog.Sidecar
 
 /** Persisted-state lifecycle for the rolling-crawl operators — the ONE
   * convention every incremental dedup/budget/frontier state follows, so a
@@ -42,7 +44,7 @@ import org.apache.spark.sql.functions.col
   *
   * The LIVE generation is the highest-(seq, uuid) marker whose `gen-` dir
   * exists. `write`/`compact` fully materialize the new generation FIRST,
-  * then commit it with one `FileSystem.create(marker, overwrite = false)` —
+  * then commit it with one exclusive marker create ([[Sidecar.publish]]) —
   * atomic on local FS and HDFS. A kill at ANY instant leaves either (a) no
   * new marker — the old generation is still live and a later write sweeps
   * the orphaned `gen-` debris — or (b) the new marker — the new generation
@@ -53,8 +55,8 @@ import org.apache.spark.sql.functions.col
   * by construction (no delete-ordering window), and `compact` snapshots the
   * sidecar file list it folds in: retraction files that appear AFTER the
   * snapshot (a concurrent `retract` violating the documented single-writer
-  * lifecycle) are carried forward into the new generation's sidecar instead
-  * of being silently dropped (r11 ADVICE).
+  * lifecycle) are copied into the new generation's sidecar before its
+  * marker commits instead of being silently dropped (r11 ADVICE).
   *
   * == Concurrency contract ==
   *
@@ -153,10 +155,10 @@ object States {
     live(spark, dir).map(_.sidecarPath).getOrElse(new Path(s"$dir.retracted"))
 
   /** Commit a fully-written generation: one atomic marker create. */
-  private def commitMarker(spark: SparkSession, g: Gen): Unit = {
-    val fs = fsOf(spark, g.markerPath)
-    fs.create(g.markerPath, false).close()
-  }
+  private def commitMarker(spark: SparkSession, g: Gen): Unit =
+    if (!Sidecar.publish(fsOf(spark, g.markerPath), g.markerPath, ""))
+      throw new java.io.IOException(s"cannot commit ${g.genPath}: marker ${g.markerPath} " +
+        "exists or cannot be created")
 
   /** Best-effort sweep of everything that is not the live generation:
     * superseded generations (marker first, so a crash mid-sweep never
@@ -261,7 +263,9 @@ object States {
     * The sidecar file list is SNAPSHOTTED before the compaction read:
     * retraction files that land between the snapshot and the commit (a
     * concurrent `retract` outside the documented single-writer lifecycle)
-    * are moved into the new generation's sidecar rather than dropped.
+    * are copied into the new generation's sidecar before its marker
+    * commits, so the old sidecar stays whole until then and a failed copy
+    * leaves the new generation unpublished.
     */
   def compact(spark: SparkSession, dir: String,
       merge: DataFrame => DataFrame = _.distinct()): Unit = {
@@ -270,21 +274,15 @@ object States {
     val g = nextGen(spark, dir)
     readPaths(spark, liveReadPaths(spark, dir), snapshot, merge)
       .write.mode("overwrite").parquet(g.genPath.toString)
-    commitMarker(spark, g)
     // late retractions (post-snapshot) carry forward to the new generation
-    val late = sidecarFiles(spark, srcSidecar).toSet -- snapshot
-    if (late.nonEmpty) {
-      val fs = fsOf(spark, g.sidecarPath)
-      fs.mkdirs(g.sidecarPath)
-      late.foreach { f =>
-        val src = new Path(f)
-        // the superseded sidecar is swept next: a retraction left behind
-        // would be lost
-        if (!fs.rename(src, new Path(g.sidecarPath, src.getName)))
-          throw new java.io.IOException(
-            s"compact: cannot carry the late retraction $src into ${g.sidecarPath}")
-      }
+    val fs = fsOf(spark, g.sidecarPath)
+    sidecarFiles(spark, srcSidecar).filterNot(snapshot.toSet).foreach { f =>
+      val src = new Path(f)
+      try FileUtil.copy(fs, src, fs, new Path(g.sidecarPath, src.getName), false, fs.getConf)
+      catch { case e: java.io.IOException => throw new java.io.IOException(
+        s"compact: cannot carry the late retraction $src into ${g.sidecarPath}", e) }
     }
+    commitMarker(spark, g)
     sweep(spark, dir, g)
   }
 }

@@ -130,7 +130,8 @@ class PinSpec extends SparkSpec {
 
 /** Keeps the one-mechanism rules from eroding: nothing in the engine
   * calls `cache`, `persist` or `localCheckpoint` except [[Par]] and the
-  * independent sf1 reference run, and every session is built by
+  * independent sf1 reference run, metadata files go through
+  * [[graft.catalog.Sidecar]], and every session is built by
   * [[GraftSession]] (`Bench` keeps its frozen config).
   */
 class MaterializationLintSpec extends AnyFunSuite {
@@ -168,6 +169,13 @@ class MaterializationLintSpec extends AnyFunSuite {
     val found = hits(Seq("src/main/scala"), Set("Swap.scala"),
       """rename\((aside|old), |s"\.(old|staging|overwrite|dynover|rlpart|snapstage|snapcompact|morupd)-""".r)
     assert(found.isEmpty, "commit through graft.catalog.Swap instead:\n" +
+      found.mkString("\n"))
+  }
+
+  test("metadata-file codecs, read loops and exclusive creates live only in Sidecar") {
+    val found = hits(Seq("src/main/scala"), Set("Sidecar.scala"),
+      """ObjectMapper|%04x|new Array\[Byte\]\((8192|65536)\)|copyBytes\(|create\([^)]*, *false\)""".r)
+    assert(found.isEmpty, "read, write and create sidecars through graft.catalog.Sidecar:\n" +
       found.mkString("\n"))
   }
 

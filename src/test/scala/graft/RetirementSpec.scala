@@ -435,12 +435,13 @@ class RetirementSpec extends SparkSpec {
       .toString + "/st"
     States.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), dir)
     States.retract(Seq((2L, "b")).toDF("id", "v"), dir)
-    // the mid-compact retraction above, but the move of its file into the
-    // new generation's sidecar is refused: sweeping the old sidecar anyway
-    // would lose it, so compact fails and leaves the file in place
+    // the mid-compact retraction above, but its copy into the new
+    // generation's sidecar is refused: compact fails before the new
+    // generation's marker, so the old generation and its whole sidecar
+    // stay live
     val e = intercept[java.io.IOException] {
       RefusingFs.withRefusal(spark.sparkContext.hadoopConfiguration,
-          rename = ".*/_retracted-gen-[^/]+/part-[^/]+") {
+          create = ".*/_retracted-gen-[^/]+/part-[^/]+") {
         States.compact(spark, s"refuse://$dir", { df =>
           States.retract(Seq((3L, "c")).toDF("id", "v"), s"refuse://$dir")
           df.distinct()
@@ -453,5 +454,9 @@ class RetirementSpec extends SparkSpec {
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
     assert(spark.read.parquet(sidecars.map(_.getPath).toIndexedSeq: _*)
       .collect().map(_.getLong(0)).contains(3L), "the late retraction was swept")
+    def ids = States.read(spark, dir).collect().map(_.getLong(0)).toSet
+    assert(ids == Set(1L), "the failed compact published a generation without the retraction")
+    States.compact(spark, dir)
+    assert(ids == Set(1L), "a following compact lost the retraction")
   }
 }

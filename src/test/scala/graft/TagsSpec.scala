@@ -91,4 +91,34 @@ class TagsSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS graft_tg.main.t")
     }
   }
+
+  test("a tag whose name holds a control character resolves and drops by that name") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tags-ctl")
+      .toFile.getAbsolutePath
+    spark.conf.set("spark.sql.catalog.graft_tctl", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_tctl.dir", dir)
+    val prevH = spark.conf.getOption(graft.catalog.History.Key)
+    spark.conf.set(graft.catalog.History.Key, "10")
+    try {
+      spark.sql("CREATE TABLE graft_tctl.main.t " +
+        "TBLPROPERTIES ('snapshots'='true') AS SELECT id FROM range(10)")
+      spark.sql("INSERT INTO graft_tctl.main.t SELECT id FROM range(5)") // v2
+      val root = new Path(s"$dir/t")
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      val name = "a\tb"
+      spark.sql(s"CALL graft_tctl.system.create_tag('main.t', '$name', 1)").collect()
+      assert(Snapshots.tags(fs, root) == Map(name -> 1L))
+      assert(spark.sql(s"SELECT count(*) FROM graft_tctl.main.t VERSION AS OF '$name'")
+        .collect().head.getLong(0) == 10)
+      assert(spark.sql(s"CALL graft_tctl.system.drop_tag('main.t', '$name')")
+        .collect().head.getBoolean(0))
+      assert(Snapshots.tags(fs, root).isEmpty)
+    } finally {
+      prevH match {
+        case Some(v) => spark.conf.set(graft.catalog.History.Key, v)
+        case None => spark.conf.unset(graft.catalog.History.Key)
+      }
+      spark.sql("DROP TABLE IF EXISTS graft_tctl.main.t")
+    }
+  }
 }

@@ -71,11 +71,24 @@ class SnapshotInternalsSpec extends graft.SparkSpec {
 
   test("manifest + stats-sidecar wire formats round-trip every value family") {
     val snap = Snapshots.Snapshot(7L, 123456789L,
-      entries = Map("k=a" -> Seq("gen-x"), "gen-y/f.parquet" -> Nil),
+      entries = Map("k=a" -> Seq("gen-w", "gen-x"), "gen-y/f.parquet" -> Nil),
       rows = Map("k=a/gen-x" -> 10L, "gen-y/f.parquet" -> 3L),
-      kind = "rowlevel", changes = Some("chg-abc123"))
+      kind = "rowlevel", changes = Some("chg-abc123"),
+      dvs = Map("gen-y/f.parquet" -> "dv-1"), dvRows = Map("gen-y/f.parquet" -> 2L))
     val back = Snapshots.parse(Snapshots.render(snap))
     assert(back == snap, s"round-trip mismatch:\n$back\nvs\n$snap")
+    // segmented form: segments round-trip on their own, and the manifest
+    // materializes (segment union - drops) ++ inline over them
+    val seg = (Map("gen-a/f1.parquet" -> Seq.empty[String], "gen-z/f9.parquet" -> Nil),
+      Map("gen-a/f1.parquet" -> 4L, "gen-z/f9.parquet" -> 1L))
+    assert(Snapshots.parseSeg(Snapshots.renderSeg(seg._1, seg._2)) == seg)
+    val form = Snapshots.SegForm(Seq("seg-1"), Map("gen-y/f.parquet" -> Nil),
+      Map("gen-y/f.parquet" -> 3L), Set("gen-z/f9.parquet"))
+    val segmented = Snapshots.Snapshot(8L, 123456790L,
+      entries = Map("gen-a/f1.parquet" -> Nil, "gen-y/f.parquet" -> Nil),
+      rows = seg._2 + ("gen-y/f.parquet" -> 3L), kind = "append", seg = Some(form))
+    val backSeg = Snapshots.parse(Snapshots.render(segmented), Map("seg-1" -> seg).get)
+    assert(backSeg == segmented, s"round-trip mismatch:\n$backSeg\nvs\n$segmented")
     val stats = Map(
       "p0.parquet" -> Snapshots.FileRef(10L, Map(
         "i" -> FileStats.ColStats(Some(Int.box(-3)), Some(Int.box(9)), false, false),

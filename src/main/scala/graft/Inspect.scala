@@ -6,6 +6,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SQLExecution}
@@ -30,7 +31,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    (an operator's internal collects and pins).
   *  - `time` runs each query `reps` times (default 3) into the noop sink,
   *    releasing pins after each rep, and prints every rep and the best.
-  *  - `stages` runs the same reps and prints the stage table of the last.
+  *  - `stages` runs the same reps and prints the stage table of the last,
+  *    with the generated classes it compiled.
   *
   * The session is [[GraftSession]]'s with `SPARK_GRAFT_CPUS` task threads
   * (default: the machine's available processors).
@@ -49,10 +51,12 @@ object Inspect {
       shuffleReadBytes: Long, shuffleWriteBytes: Long, readsPin: Boolean)
 
   /** A recorded scope: its `value`, every query it executed (in order;
-    * `plans` are their executed plans), its job count and its stages.
+    * `plans` are their executed plans), its job count, its stages and the
+    * generated classes compiled meanwhile (Spark's JVM-wide codegen
+    * compile count, so a concurrent query's compiles count too).
     */
   final case class Recording[+A](value: A, executions: Seq[QueryExecution],
-      plans: Seq[String], jobs: Int, stages: Seq[Stage]) {
+      plans: Seq[String], jobs: Int, stages: Seq[Stage], compiles: Long) {
     def tasks: Int = stages.map(_.tasks).sum
     def inputBytes: Long = stages.map(_.inputBytes).sum
     def outputBytes: Long = stages.map(_.outputBytes).sum
@@ -74,7 +78,9 @@ object Inspect {
     sc.addSparkListener(rec)
     spark.listenerManager.register(rec)
     try {
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val value = body
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
       val prev = sc.getLocalProperty(MarkKey)
       sc.setLocalProperty(MarkKey, mark)
       try spark.range(1).select(lit(mark)).collect()
@@ -82,7 +88,7 @@ object Inspect {
       if (!Seq(rec.jobEnded, rec.planSeen).forall(_.await(DrainSeconds, TimeUnit.SECONDS)))
         throw new IllegalStateException(
           s"listener bus not drained within $DrainSeconds s")
-      rec.recording(value)
+      rec.recording(value, compiles)
     } finally {
       spark.listenerManager.unregister(rec)
       sc.removeSparkListener(rec)
@@ -154,13 +160,13 @@ object Inspect {
     }
     override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
 
-    def recording[A](value: A): Recording[A] = synchronized {
+    def recording[A](value: A, compiles: Long): Recording[A] = synchronized {
       val (qes, plans) = executed.asScala.toSeq.unzip
       Recording(value, qes, plans, jobs, stages.toSeq.map { case (id, a) =>
         Stage(id, a.name, math.max(0L, a.completed - a.submitted), a.tasks,
           a.runMs, a.cpuNs / 1000000L, a.in, a.out, a.shufRead, a.shufWrite,
           a.readsPin)
-      })
+      }, compiles)
     }
   }
 
@@ -198,6 +204,7 @@ object Inspect {
       val r = record(spark)(time(s"$name #$reps")(runOnce(spark, sfDir, name)))
       val sts = r.stages
       println(f"[stages] $name: ${r.jobs} jobs, ${sts.size} stages, ${r.tasks} tasks, " +
+        f"${r.compiles} compiles, " +
         f"wall sum ${sts.map(_.wallMs).sum / 1e3}%.2f s, task run ${sts.map(_.runMs).sum / 1e3}%.2f s, " +
         f"cpu ${sts.map(_.cpuMs).sum / 1e3}%.2f s (stages overlap)")
       println("[stage]    id   wall s tasks   run ms   cpu ms    in KB   out KB    sr KB    sw KB pin name")

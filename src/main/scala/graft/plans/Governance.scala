@@ -273,5 +273,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectHintResolutionRule(graft.catalog.GraftMorUpdateStandinRule(_))
     // SQL incremental consumption: graft_table_changes / graft_table_added
     graft.catalog.TableFunctions.register(e)
+    // sum(CAST(x AS DECIMAL(p, s))) on the exact 192-bit kernel
+    e.injectOptimizerRule(_ => graft.functions.ExactDecimalSums)
   }
 }

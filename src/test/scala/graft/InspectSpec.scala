@@ -36,6 +36,14 @@ class InspectSpec extends SparkSpec {
     assert((a.tasks, a.inputBytes, a.outputBytes) == (b.tasks, b.inputBytes, b.outputBytes))
   }
 
+  test("a first-seen query compiles generated code; the compile count says so") {
+    // a literal no earlier query used makes the generated code new
+    val salt = scala.util.Random.nextInt(1 << 30)
+    val r = Inspect.record(spark)(spark.range(100).selectExpr(s"id * 3 + $salt AS v")
+      .where("v % 7 = 1").collect())
+    assert(r.compiles >= 1, r)
+  }
+
   test("the listeners are removed after a body that throws") {
     val before = ListenerProbe.count(spark)
     var during = (0, 0)

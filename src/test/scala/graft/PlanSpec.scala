@@ -162,6 +162,59 @@ class PlanSpec extends SparkSpec {
     assert(df2.queryExecution.optimizedPlan.stats.rowCount.isDefined)
   }
 
+  test("catalog scans size themselves from decoded rows; stats_mode=none keeps the stock size") {
+    def scan = spark.table("graft.main.lineitem")
+      .select("l_orderkey", "l_extendedprice", "l_discount")
+    val sized = scan.queryExecution.optimizedPlan.stats.sizeInBytes
+    spark.conf.set(graft.plans.SessionProps.StatsModeKey, "none")
+    val stock = try scan.queryExecution.optimizedPlan.stats.sizeInBytes
+      finally spark.conf.unset(graft.plans.SessionProps.StatsModeKey)
+    val decoded = BigInt(scan.count()) * (8 + scan.schema.defaultSize)
+    assert(decoded > stock, s"decoded $decoded must exceed the stock $stock here")
+    assert(sized == decoded, s"sizeInBytes $sized != decoded rows $decoded (stock $stock)")
+  }
+
+  /** The sql_star revenue idiom: an exact DECIMAL(30,8) sum rounded to cents. */
+  private def revenue(e: String) =
+    s"CAST(round(sum(CAST($e AS DECIMAL(30,8))), 2) * 100 AS BIGINT)"
+
+  test("wide decimal sums run on the decimal_sum kernel; DISTINCT, decimal and narrow sums stay") {
+    def q1 = spark.sql(
+      s"""SELECT l_returnflag, l_linestatus, CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
+         |${revenue("l_extendedprice")} AS base_c2,
+         |${revenue("l_extendedprice * (1 - l_discount)")} AS disc_c2, count(*) AS n
+         |FROM graft.main.lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+         |GROUP BY l_returnflag, l_linestatus""".stripMargin)
+    val q1Plan = q1.queryExecution.optimizedPlan.toString
+    assert("decimal_sum\\(".r.findAllIn(q1Plan).size == 2 && !q1Plan.contains(" sum(cast("),
+      s"both revenue sums must run on the kernel:\n$q1Plan")
+    // the same text analyzed again has new attribute ids, and must reuse
+    // the generated classes
+    q1.collect()
+    assert(Inspect.record(spark)(q1.collect()).compiles == 0)
+    val running = spark.sql(
+      """SELECT o_custkey, o_orderkey,
+        |CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,8))) OVER (PARTITION BY o_custkey
+        |  ORDER BY o_orderdate, o_orderkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
+        |  * 100 AS BIGINT) AS running_c2
+        |FROM graft.main.orders WHERE o_custkey < 300""".stripMargin)
+    val runningPlan = running.queryExecution.optimizedPlan.toString
+    assert(runningPlan.contains("decimal_sum(") && !runningPlan.contains("as decimal(30,8)) AS"),
+      s"the running sum must run on the kernel, its cast no longer projected:\n$runningPlan")
+    for ((label, sql) <- Seq(
+        "distinct" -> "sum(DISTINCT CAST(l_extendedprice AS DECIMAL(30,8)))",
+        "decimal to decimal" -> "sum(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) AS DECIMAL(30,8)))",
+        "p + 10 <= 18" -> "sum(CAST(l_quantity AS DECIMAL(8,2)))")) {
+      val plan = spark.sql(s"SELECT l_returnflag, $sql AS s FROM graft.main.lineitem " +
+        "GROUP BY l_returnflag").queryExecution.optimizedPlan.toString
+      assert(!plan.contains("decimal_sum("), s"$label must stay Spark's sum:\n$plan")
+    }
+    val beside = spark.sql("SELECT count(DISTINCT l_partkey) AS n, " +
+      "sum(CAST(l_extendedprice AS DECIMAL(30,8))) AS s FROM graft.main.lineitem")
+      .queryExecution.optimizedPlan.toString
+    assert(!beside.contains("decimal_sum("), s"no keys beside a DISTINCT must stay:\n$beside")
+  }
+
   test("dynamic partition pruning fires on a partitioned fact table") {
     val dir = Files.createTempDirectory("graft-dpp").toFile.getAbsolutePath
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")

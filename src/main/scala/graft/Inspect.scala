@@ -34,6 +34,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - `stages` runs the same reps and prints the stage table of the last,
   *    with the generated classes it compiled.
   *
+  * A query that fails is reported on stderr and the rest still run; `main`
+  * then throws, naming every failed query.
+  *
   * The session is [[GraftSession]]'s with `SPARK_GRAFT_CPUS` task threads
   * (default: the machine's available processors).
   */
@@ -180,17 +183,25 @@ object Inspect {
     s
   }
 
+  /** Run `body` for each name in turn, releasing pins after each; print
+    * each failure to stderr and return the names that failed.
+    */
+  private def failures(spark: SparkSession, names: Seq[String])(
+      body: String => Unit): Seq[String] = names.filter { name =>
+    try { body(name); false }
+    catch { case e: Throwable =>
+      System.err.println(s"[inspect] $name failed: ${e.getMessage}")
+      true
+    } finally graft.operators.Caches.release(spark)
+  }
+
   /** Time each query `reps` times into the noop sink, releasing pins after
-    * each rep, and print the best rep.
+    * each rep, and print the best rep. Returns the queries that failed.
     */
   def timeQueries(spark: SparkSession, sfDir: String, names: Seq[String],
-      reps: Int): Unit = names.foreach { name =>
-    try {
-      val runs = (1 to reps).map(i => time(s"$name #$i")(runOnce(spark, sfDir, name)))
-      println(f"[time] $name best=${runs.min}%.2f reps=${runs.map(r => f"$r%.2f").mkString(",")}")
-    } catch { case e: Throwable =>
-      System.err.println(s"[inspect] $name failed: ${e.getMessage}")
-    }
+      reps: Int): Seq[String] = failures(spark, names) { name =>
+    val runs = (1 to reps).map(i => time(s"$name #$i")(runOnce(spark, sfDir, name)))
+    println(f"[time] $name best=${runs.min}%.2f reps=${runs.map(r => f"$r%.2f").mkString(",")}")
   }
 
   private def runOnce(spark: SparkSession, sfDir: String, name: String): Unit =
@@ -198,43 +209,35 @@ object Inspect {
     finally graft.operators.Caches.release(spark)
 
   private def stageTable(spark: SparkSession, sfDir: String, names: Seq[String],
-      reps: Int): Unit = names.foreach { name =>
-    try {
-      (1 until reps).foreach(i => time(s"$name #$i")(runOnce(spark, sfDir, name)))
-      val r = record(spark)(time(s"$name #$reps")(runOnce(spark, sfDir, name)))
-      val sts = r.stages
-      println(f"[stages] $name: ${r.jobs} jobs, ${sts.size} stages, ${r.tasks} tasks, " +
-        f"${r.compiles} compiles, " +
-        f"wall sum ${sts.map(_.wallMs).sum / 1e3}%.2f s, task run ${sts.map(_.runMs).sum / 1e3}%.2f s, " +
-        f"cpu ${sts.map(_.cpuMs).sum / 1e3}%.2f s (stages overlap)")
-      println("[stage]    id   wall s tasks   run ms   cpu ms    in KB   out KB    sr KB    sw KB pin name")
-      sts.sortBy(-_.wallMs).foreach { s =>
-        println(f"[stage] ${s.id}%5d ${s.wallMs / 1e3}%8.3f ${s.tasks}%5d ${s.runMs}%8d ${s.cpuMs}%8d " +
-          f"${s.inputBytes / 1024}%8d ${s.outputBytes / 1024}%8d ${s.shuffleReadBytes / 1024}%8d " +
-          f"${s.shuffleWriteBytes / 1024}%8d ${if (s.readsPin) "pin" else "   "} " +
-          s.name.linesIterator.nextOption().getOrElse("").take(100))
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[inspect] $name failed: ${e.getMessage}")
+      reps: Int): Seq[String] = failures(spark, names) { name =>
+    (1 until reps).foreach(i => time(s"$name #$i")(runOnce(spark, sfDir, name)))
+    val r = record(spark)(time(s"$name #$reps")(runOnce(spark, sfDir, name)))
+    val sts = r.stages
+    println(f"[stages] $name: ${r.jobs} jobs, ${sts.size} stages, ${r.tasks} tasks, " +
+      f"${r.compiles} compiles, " +
+      f"wall sum ${sts.map(_.wallMs).sum / 1e3}%.2f s, task run ${sts.map(_.runMs).sum / 1e3}%.2f s, " +
+      f"cpu ${sts.map(_.cpuMs).sum / 1e3}%.2f s (stages overlap)")
+    println("[stage]    id   wall s tasks   run ms   cpu ms    in KB   out KB    sr KB    sw KB pin name")
+    sts.sortBy(-_.wallMs).foreach { s =>
+      println(f"[stage] ${s.id}%5d ${s.wallMs / 1e3}%8.3f ${s.tasks}%5d ${s.runMs}%8d ${s.cpuMs}%8d " +
+        f"${s.inputBytes / 1024}%8d ${s.outputBytes / 1024}%8d ${s.shuffleReadBytes / 1024}%8d " +
+        f"${s.shuffleWriteBytes / 1024}%8d ${if (s.readsPin) "pin" else "   "} " +
+        s.name.linesIterator.nextOption().getOrElse("").take(100))
     }
   }
 
   private def planDump(spark: SparkSession, sfDir: String, names: Seq[String],
-      outDir: String, suffix: String): Unit = {
+      outDir: String, suffix: String): Seq[String] = {
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { name =>
-      try {
-        val r = record(spark)(SparkEntry.queries(name)(spark, sfDir))
-        val inside = r.executions.zipWithIndex.map { case (qe, i) =>
-          s"\n== Executed while building the frame (${i + 1} of ${r.executions.size}) ==\n" +
-            qe.explainString(FormattedMode)
-        }
-        val txt = r.value.queryExecution.explainString(FormattedMode) + inside.mkString
-        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
-        println(s"[inspect] wrote $name (${r.executions.size} plans run inside)")
-      } catch { case e: Throwable =>
-        System.err.println(s"[inspect] $name failed: ${e.getMessage}")
-      } finally graft.operators.Caches.release(spark)
+    failures(spark, names) { name =>
+      val r = record(spark)(SparkEntry.queries(name)(spark, sfDir))
+      val inside = r.executions.zipWithIndex.map { case (qe, i) =>
+        s"\n== Executed while building the frame (${i + 1} of ${r.executions.size}) ==\n" +
+          qe.explainString(FormattedMode)
+      }
+      val txt = r.value.queryExecution.explainString(FormattedMode) + inside.mkString
+      Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
+      println(s"[inspect] wrote $name (${r.executions.size} plans run inside)")
     }
   }
 
@@ -250,10 +253,12 @@ object Inspect {
     val spark = GraftSession.builder(
       GraftSession.cpus(Runtime.getRuntime.availableProcessors)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try mode match {
+    val failed = try mode match {
       case "plan" => planDump(spark, sfDir, names, args(3), args(4))
       case "time" => timeQueries(spark, sfDir, names, reps)
       case "stages" => stageTable(spark, sfDir, names, reps)
     } finally spark.stop()
+    if (failed.nonEmpty) throw new IllegalStateException(
+      s"${failed.size} of ${names.size} queries failed: ${failed.mkString(", ")}")
   }
 }

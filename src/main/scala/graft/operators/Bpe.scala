@@ -65,14 +65,12 @@ object Bpe {
   private def train(docs: DataFrame, idCol: String, textCol: String,
       numMerges: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
     require(numMerges >= 1 && numMerges <= 1000, "need 1 <= numMerges <= 1000")
-    var words = Par.pin(docs
+    val types = Par.pin(docs
       .select(explode(TextAnalysis.words(coalesce(col(textCol), lit("")))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(col("w"), col("cnt"), split(col("w"), "").as("syms")))
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var rank = 0
-    var done = false
-    while (rank < numMerges && !done) {
+    val words = Par.iterate(types, numMerges) { (words, round) =>
       // adjacent-pair counts weighted by word frequency; map-side combined
       val top = words
         .select(col("cnt"), explode(expr(
@@ -83,19 +81,17 @@ object Bpe {
         .agg(sum("cnt").as("n"))
         .orderBy(col("n").desc, col("l").asc, col("r").asc)
         .limit(1).collect()
-      if (top.isEmpty) done = true
+      if (top.isEmpty) words
       else {
         val (l, r, n) = (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
-        merges += ((rank, l, r, n))
+        merges += ((round - 1, l, r, n))
         // greedy left-to-right merge as a fold; literals are SQL-escaped
         def q(s: String) = "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-        // plan stays O(1) per iteration (the CC lesson)
-        words = Par.pin(words.withColumn("syms", expr(
+        words.withColumn("syms", expr(
           s"aggregate(syms, cast(array() as array<string>), (acc, x) -> " +
             s"case when size(acc) > 0 and element_at(acc, -1) = ${q(l)} and x = ${q(r)} " +
             s"then concat(slice(acc, 1, size(acc) - 1), array(${q(l + r)})) " +
-            "else concat(acc, array(x)) end)")))
-        rank += 1
+            "else concat(acc, array(x)) end)"))
       }
     }
     (merges.toSeq, words)

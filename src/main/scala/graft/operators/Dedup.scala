@@ -1099,23 +1099,16 @@ object Dedup {
     * which the global min crawls one hop per round — O(diameter) rounds on
     * graphs whose ids are not monotone along chains, which real fingerprint
     * graphs are not. Star edges are map-side-combinable groupBy mins plus
-    * equality joins — no neighborhood collect, no driver-side graph. The edge
-    * frame is pinned ([[Par.pin]]) EVERY round: an unpinned loop grows the
-    * logical plan geometrically and the driver ends up spending
-    * minutes per job just analyzing and stringifying it (Spark renders the
-    * plan for the listener bus on every action). Non-convergence at maxIter
-    * throws — silently returning partially merged components is how a dedup
-    * pipeline over-retains duplicates without anyone noticing.
+    * equality joins — no neighborhood collect, no driver-side graph.
+    * Non-convergence at maxIter throws — silently returning partially
+    * merged components is how a dedup pipeline over-retains duplicates
+    * without anyone noticing.
     */
   def clusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // the loop state is pinned (Par.pin's loop rule): a plan that kept the
-    // full upstream (e.g. the whole minhash LSH pipeline) inside every
-    // iteration would be re-analyzed and re-stringified for the listener
-    // bus on every action — the loop must start from a plan LEAF. `uniq`
-    // keeps u==v rows so the final node cover includes docs that only
-    // self-pair. A null id would
-    // fold into a self-pair through greatest/least and quietly vanish from
-    // the components, so the eager checkpoint asserts non-null ids once.
+    // `uniq` keeps u==v rows so the final node cover includes docs that
+    // only self-pair. A null id would fold into a self-pair through
+    // greatest/least and quietly vanish from the components, so the eager
+    // pin asserts non-null ids once.
     def id(c: String): Column = when(col(c).isNull, raise_error(lit(
       s"Dedup.clusters: pair column '$c' holds a null doc id — drop or " +
         "repair null ids before clustering"))).otherwise(col(c))
@@ -1123,11 +1116,22 @@ object Dedup {
       greatest(id("doc_a"), id("doc_b")).as("u"),
       least(id("doc_a"), id("doc_b")).as("v"))
       .distinct())
-    var edges = Par.pin(uniq.filter(col("u") =!= col("v")))
-    var nEdges = edges.count()
-    var converged = nEdges == 0
-    var i = 0
-    while (!converged && i < maxIter) {
+    val edges0 = Par.pin(uniq.filter(col("u") =!= col("v")))
+    // stable edge set = every component is a star on its min = done. The
+    // count compare is near-free on the pinned frame and gates the anti-join:
+    // a round that changed the edge count cannot be stable. Both sides are
+    // DISTINCT sets, so equal cardinality + (next \ prev) = ∅ ⇒ next = prev,
+    // and isEmpty short-circuits at the first witness. The previous round's
+    // count is carried, not recounted.
+    var nPrev = edges0.count()
+    def stable(prev: DataFrame, next: DataFrame): Boolean = {
+      val n = next.count()
+      val same = n == nPrev && next.join(prev, Seq("u", "v"), "left_anti").isEmpty
+      nPrev = n
+      same
+    }
+    val edges = if (nPrev == 0) edges0 else Par.iterate(edges0, maxIter,
+        stable = Some(stable _)) { (edges, _) =>
       // large-star: over the full (bidirectional) neighborhood of u, connect
       // each neighbor v > u to m = min of the closed neighborhood. Output
       // stays child-points-to-smaller-parent oriented.
@@ -1143,36 +1147,14 @@ object Dedup {
       // set is exactly its ≤-neighborhood; re-point u AND each parent at the
       // minimum parent.
       val mins2 = ls.groupBy("u").agg(min("v").as("m"))
-      val ss = ls.join(mins2, "u")
+      ls.join(mins2, "u")
         .select(explode(array(
           struct(col("u").as("a"), col("m").as("b")),
           struct(col("v").as("a"), col("m").as("b")))).as("e"))
         .select(col("e.a").as("u"), col("e.b").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct()
-      // the pin materializes next AND resets the logical plan to a leaf —
-      // see the scaladoc note
-      val next = Par.pin(ss)
-      // stable edge set = every component is a star on its min = done. The
-      // count compare is near-free on the materialized frame and gates the
-      // except pass: a round that changed the edge count cannot be stable.
-      val nNext = next.count()
-      // set equality via ONE anti-join probe: both sides are DISTINCT sets,
-      // so equal cardinality + (next \ edges) = ∅ ⇒ next = edges — half the
-      // shuffles of the old except/union/except pass, and isEmpty
-      // short-circuits at the first witness
-      converged = nNext == nEdges &&
-        next.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      nEdges = nNext
-      // old rounds' checkpoint blocks are reclaimed by the context cleaner
-      // once unreferenced; explicit unpersist on a checkpointed frame is a
-      // no-op, so we simply drop the reference
-      edges = next
-      i += 1
     }
-    if (!converged) throw new IllegalStateException(
-      s"Dedup.clusters did not converge within $maxIter iterations — " +
-        "component labels would be partially merged; raise maxIter")
     // at convergence every non-min node carries exactly one (node, min) star
     // edge; component minima and self-pair-only docs label themselves
     val nodes = uniq

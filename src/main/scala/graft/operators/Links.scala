@@ -28,9 +28,7 @@ import org.apache.spark.sql.functions._
   * the host graph aggregates that stream down to |hosts|² worst-case but
   * realistically |edges| ≪ |links| rows; PageRank then iterates over the
   * HOST graph — millions of rows at web scale, not billions — with one
-  * hash-partitioned join + aggregate per iteration and a [[Par.pin]]
-  * per round to keep lineage flat (the `Dedup.connectedComponents`
-  * discipline, Dedup.scala:693).
+  * hash-partitioned join + aggregate per round ([[Par.iterate]]).
   */
 object Links {
 
@@ -221,24 +219,21 @@ object Links {
     * (`div`) and the oracle engine (`//`) — exact integer arithmetic,
     * bit-identical across engines. Spark's `/` would be double division
     * (and dampBp·Σ brushes 2^53). Each round is one equi-join of the ranks
-    * onto the flow plus one hash aggregate on the destination, then a
-    * [[Par.pin]] so the plan does not deepen with `iters`.
+    * onto the flow plus one hash aggregate on the destination.
     */
   private[operators] def dampedRank(flow: DataFrame, nodes: DataFrame,
       teleport: Column, ranks0: DataFrame, keys: Seq[String], node: String,
       iters: Int, dampBp: Int): DataFrame = {
     val kc = keys.map(col)
-    var ranks = ranks0
-    for (_ <- 1 to iters) {
+    Par.iterate(ranks0, iters) { (ranks, _) =>
       val contrib = ranks.select(kc :+ col(node).as("src") :+ col("rank"): _*)
         .join(flow, keys :+ "src")
         .groupBy(kc :+ col("dst").as(node): _*)
         .agg(sum(expr("(rank * num) div den")).as("contrib"))
-      ranks = Par.pin(nodes.join(contrib, keys :+ node, "left")
+      nodes.join(contrib, keys :+ node, "left")
         .select(kc :+ col(node) :+ (teleport +
-          expr(s"(${dampBp}L * coalesce(contrib, 0L)) div 10000L")).as("rank"): _*))
+          expr(s"(${dampBp}L * coalesce(contrib, 0L)) div 10000L")).as("rank"): _*)
     }
-    ranks
   }
 
   private def requireRank(iters: Int, dampBp: Int): Unit = {
@@ -365,9 +360,8 @@ object Links {
     *
     * Output: (host, auth, hub) for every host in the graph. Scale shape:
     * per half-step one equi-join on the edge key + one hash aggregate +
-    * one 1-row max — all shuffles host-keyed, AQE-coalesced, with a
-    * [[Par.pin]] per half-step so the plan does not deepen with `iters`
-    * (the [[pageRank]] lineage discipline).
+    * one 1-row max — all shuffles host-keyed, AQE-coalesced, each half-step
+    * pinned.
     */
   def hits(edges: DataFrame, iters: Int = 3, srcCol: String = "src_host",
       dstCol: String = "dst_host"): DataFrame = {
@@ -386,17 +380,17 @@ object Links {
       // turning max(raw) into a literal. greatest(m div HitsScale, 1) is the
       // identical integer arithmetic (m ≥ 0), so scores are bit-identical.
       val mx = raw.agg(coalesce(max("raw"), lit(0L)).as("m"))
-      Par.pin(nodes.join(raw, nodes("host") === raw("h"), "left")
+      nodes.join(raw, nodes("host") === raw("h"), "left")
         .crossJoin(broadcast(mx))
         .select(col("host"),
-          expr(s"coalesce(raw, 0L) div greatest(m div ${HitsScale}L, 1L)").as("s")))
+          expr(s"coalesce(raw, 0L) div greatest(m div ${HitsScale}L, 1L)").as("s"))
     }
-    var hub = nodes.withColumn("s", lit(HitsScale))
-    var auth = nodes.withColumn("s", lit(0L))
-    for (_ <- 1 to iters) {
-      auth = half(hub, "src", "dst")
-      hub = half(auth, "dst", "src")
+    // odd rounds compute authorities from hubs, even rounds hubs from
+    // authorities; the last round is an authority half, then its hub half
+    val auth = Par.iterate(nodes.withColumn("s", lit(HitsScale)), 2 * iters - 1) {
+      (s, round) => if (round % 2 == 1) half(s, "src", "dst") else half(s, "dst", "src")
     }
+    val hub = Par.pin(half(auth, "dst", "src"))
     auth.withColumnRenamed("s", "auth")
       .join(hub.withColumnRenamed("s", "hub"), "host")
   }
@@ -464,10 +458,9 @@ object Links {
     * is deployed.
     *
     * Scale shape per round: one equi-join of labels onto the symmetrized
-    * edge set + three map-side-combinable keyed aggregates (neighbor-label
-    * counts → per-host max → min winning label); [[Par.pin]] pins
-    * the recurrence (the CC/pageRank lineage discipline). No windows over
-    * corpus-sized partitions, no driver materialization.
+    * edge set + one map-side-combinable (host, label) count + one
+    * host-partitioned pick of the winner. No windows over corpus-sized
+    * partitions, no driver materialization.
     */
   def labelPropagate(edges: DataFrame, iters: Int = 3,
       srcCol: String = "src_host", dstCol: String = "dst_host"): DataFrame = {
@@ -532,8 +525,7 @@ object Links {
       weighted: Boolean = false): DataFrame = {
     require(iters >= 0 && iters <= 50, "need 0 <= iters <= 50")
     val vote = if (weighted) col("w") else lit(1L)
-    var labels = labels0
-    for (_ <- 1 to iters) {
+    Par.iterate(labels0, iters) { (labels, _) =>
       val neigh = labels.join(e, labels("host") === e("src"))
         .select(col("dst").as("host"), col("label"), vote.as("__v"))
         .groupBy("host", "label").agg(sum("__v").as("cnt"))
@@ -545,10 +537,9 @@ object Links {
       val winners = Rank.topK(neigh, Seq("host"),
           Seq(col("cnt").desc, col("label").asc), 1, "__rn")
         .select(col("host"), col("label").as("nl"))
-      labels = Par.pin(labels.join(winners, Seq("host"), "left")
-        .select(col("host"), coalesce(col("nl"), col("label")).as("label")))
+      labels.join(winners, Seq("host"), "left")
+        .select(col("host"), coalesce(col("nl"), col("label")).as("label"))
     }
-    labels
   }
 
   /** [[extractLinks]] → [[hostEdges]] → [[pageRank]] composed, joined back

@@ -98,7 +98,7 @@ object Par {
     * Placement rule — a pin is placed only where one of these holds:
     *  1. a loop re-reads its state: each round pins, so the plan does not
     *     deepen with the round count and each round reads the last from
-    *     storage;
+    *     storage. [[iterate]] is this rule's one home;
     *  2. two or more consumers read a computed frame that exchange reuse
     *     does not share — a driver action plus the returned plan counts as
     *     two (an aggregate beside a self-join, a probe `collect` beside the
@@ -151,6 +151,35 @@ object Par {
       blocks(p).foreach(live.put(_, java.lang.Boolean.TRUE))
       p
     }
+
+  /** The pin-per-round loop (rule 1 of [[pin]]): from `init`, run
+    * `step(state, round)` for rounds 1 to `rounds` and [[pin]] each round's
+    * result, so the plan does not deepen with the round count. `init` is
+    * not pinned.
+    *  - A step that returns its input (the same reference) has reached a
+    *    fixed point: the loop ends there.
+    *  - With `stable`, the loop ends at the first round whose (previous,
+    *    pinned next) pair the probe accepts. A probe that has not held by
+    *    `rounds` throws: the caller asked for a fixed point, and the last
+    *    round is not one.
+    */
+  def iterate(init: DataFrame, rounds: Int,
+      stable: Option[(DataFrame, DataFrame) => Boolean] = None)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    @annotation.tailrec
+    def loop(state: DataFrame, round: Int): DataFrame =
+      if (round > rounds) {
+        if (stable.isDefined) throw new IllegalStateException(
+          s"did not converge within $rounds rounds")
+        state
+      } else step(state, round) match {
+        case next if next eq state => state
+        case next =>
+          val p = pin(next)
+          if (stable.exists(_(state, p))) p else loop(p, round + 1)
+      }
+    loop(init, 1)
+  }
 
   /** [[pin]] `df`, run `body` over the pinned frame, and drop the pin's
     * blocks when `body` returns or throws — for an operator that runs its

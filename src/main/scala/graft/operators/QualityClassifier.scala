@@ -125,16 +125,14 @@ object QualityClassifier {
         "subsample the reference set upstream")
 
     // weights live as an (nBuckets+1)-row frame (bias at f = -1), the whole
-    // GD recurrence chained IN-PLAN with a Par.pin per round — no collect
-    // per iteration (r16 opt round; the Links.hits treatment: r15 had
-    // already halved this loop from two collects per iteration to one, this
-    // removes the last). Bounded model state per round, identical exact
-    // fixed-point integers. The rounds run here, not at the caller's first
-    // action. The all-zero start is a local relation, read in place.
-    var wDf = ((0L until nBuckets.toLong).map(_ -> 0L) :+ (-1L -> 0L))
-      .toDF("f", "w6")
-
-    for (_ <- 1 to iters) {
+    // GD recurrence chained IN-PLAN — no collect per iteration (r16 opt
+    // round; the Links.hits treatment: r15 had already halved this loop from
+    // two collects per iteration to one, this removes the last). Bounded
+    // model state per round, identical exact fixed-point integers. The
+    // rounds run here, not at the caller's first action. The all-zero start
+    // is a local relation, read in place.
+    val zero = ((0L until nBuckets.toLong).map(_ -> 0L) :+ (-1L -> 0L)).toDF("f", "w6")
+    val wDf = Par.iterate(zero, iters) { (wDf, _) =>
       val biasDf = wDf.filter(col("f") === -1L).select(col("w6").as("b6"))
       // margin per doc: z6 = b6 + Σ_{f ∈ doc} w6_f — exact integer sum; the
       // bias rides a broadcast 1-row cross join instead of a collected literal
@@ -156,9 +154,9 @@ object QualityClassifier {
         .unionByName(errs.agg(sum("err6").as("g6"))
           .select(lit(-1L).as("f"), col("g6")))
         .select(col("f"), expr(stepExprSql(lr6, n)).as("step6"))
-      wDf = Par.pin(wDf.join(steps, Seq("f"), "left")
+      wDf.join(steps, Seq("f"), "left")
         .select(col("f"),
-          (col("w6") - coalesce(col("step6"), lit(0L))).as("w6")))
+          (col("w6") - coalesce(col("step6"), lit(0L))).as("w6"))
     }
     // w6 / 1e6 at 6dp is exact; the cast to DECIMAL(18,6) matches the old
     // BigDecimal.valueOf(v, 6) surface bit-for-bit

@@ -138,8 +138,8 @@ object Semantic {
     * Scale shape: per iteration one collected-centroid assignment pass
     * (k·d multiply-adds per row inside codegen, no shuffle) plus one
     * (cell, pos)-keyed aggregate whose map-side partial combine caps the
-    * exchange at k·d rows per task; centroids live as a k-row frame with
-    * a [[Par.pin]] per round so the plan does not deepen with `iters`.
+    * exchange at k·d rows per task; centroids live as a k-row frame,
+    * pinned each round.
     * Data-sized work is exactly iters+1 scans — the textbook
     * distributed Lloyd shape (Spark MLlib KMeans restated in the
     * portable-integer discipline).
@@ -151,9 +151,8 @@ object Semantic {
     val vecs = Par.pin(Par.spread(emb.filter(col(vecCol).isNotNull))
       .select(Keys.id(emb, idCol).as("vec_id"),
         qvGuard(quantized(vecCol), size(col(vecCol)), 1, "kmeansTrain").as("qv")))
-    var cents = Par.pin(seedDraw(vecs, k)
-      .select(col("vec_id").as("cell"), col("qv").as("cv")))
-    for (_ <- 1 to iters) {
+    val seeds = Par.pin(seedDraw(vecs, k).select(col("vec_id").as("cell"), col("qv").as("cv")))
+    val cents = Par.iterate(seeds, iters) { (cents, _) =>
       val means = assignAgainst(vecs, cents)
         .join(vecs, "vec_id")
         .select(col("cell"), posexplode(col("qv")).as(Seq("pos", "v")))
@@ -164,8 +163,8 @@ object Semantic {
       val upd = means.groupBy("cell")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
           x => x.getField("c")).as("cv2"))
-      cents = Par.pin(cents.as("p").join(upd, Seq("cell"), "left")
-        .select(col("cell"), coalesce(col("cv2"), col("p.cv")).as("cv")))
+      cents.as("p").join(upd, Seq("cell"), "left")
+        .select(col("cell"), coalesce(col("cv2"), col("p.cv")).as("cv"))
     }
     val counts = assignAgainst(vecs, cents)
       .groupBy("cell").agg(count(lit(1)).as("n_members"))

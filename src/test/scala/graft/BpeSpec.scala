@@ -55,28 +55,32 @@ class BpeSpec extends SparkSpec {
     val vocab = (0 until 60).map { _ =>
       (0 until (2 + rnd.nextInt(6))).map(_ => alphabet(rnd.nextInt(4))).mkString
     } :+ "aaaa" :+ "bbbb"
-    val corpus = (0L until 300L).map(i => (i, Seq.fill(4)(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
-    val docs = corpus.toDF("doc_id", "text")
+    val random = (0L until 300L).map(i => (i, Seq.fill(4)(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+    // "ab ab" runs out of pairs after its one merge, before numMerges
+    assert(refTrain(Map("ab" -> 2L), m = 5)._1 == Seq((0, "a", "b", 2L)))
+    for ((corpus, m) <- Seq(random -> 15, Seq((0L, "ab ab")) -> 5)) {
+      val docs = corpus.toDF("doc_id", "text")
 
-    val wordCounts = corpus.flatMap(_._2.split(" ")).groupBy(identity)
-      .map { case (w, occ) => w -> occ.size.toLong }
-    val (refMerges, refSeg) = refTrain(wordCounts, m = 15)
+      val wordCounts = corpus.flatMap(_._2.split(" ")).groupBy(identity)
+        .map { case (w, occ) => w -> occ.size.toLong }
+      val (refMerges, refSeg) = refTrain(wordCounts, m)
 
-    val got = Bpe.trainMerges(docs, "doc_id", "text", numMerges = 15)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .sortBy(_._1).toSeq
-    assert(got == refMerges,
-      s"merge tables differ:\n got $got\n ref $refMerges")
+      val got = Bpe.trainMerges(docs, "doc_id", "text", numMerges = m)
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .sortBy(_._1).toSeq
+      assert(got == refMerges,
+        s"merge tables differ:\n got $got\n ref $refMerges")
 
-    // token counts under the learned segmentation
-    val gotCounts = Bpe.tokenCounts(docs, "doc_id", "text", numMerges = 15)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val refCounts = corpus.map { case (id, text) =>
-      val ws = text.split(" ").toSeq
-      (id, ws.size.toLong, ws.map(w => refSeg(w).size.toLong).sum)
+      // token counts under the learned segmentation
+      val gotCounts = Bpe.tokenCounts(docs, "doc_id", "text", numMerges = m)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+      val refCounts = corpus.map { case (id, text) =>
+        val ws = text.split(" ").toSeq
+        (id, ws.size.toLong, ws.map(w => refSeg(w).size.toLong).sum)
+      }
+      assert(gotCounts.toSeq == refCounts,
+        "per-doc BPE token counts must match the reference segmentation")
     }
-    assert(gotCounts.toSeq == refCounts,
-      "per-doc BPE token counts must match the reference segmentation")
   }
 
   test("empty corpus: zero merges, total zero counts, no crash") {

@@ -44,6 +44,11 @@ class InspectSpec extends SparkSpec {
     assert(r.compiles >= 1, r)
   }
 
+  test("timeQueries returns the queries that failed") {
+    assert(Inspect.timeQueries(spark, sfDir, Seq("q_count_star", "q_no_such_query"), 1) ==
+      Seq("q_no_such_query"))
+  }
+
   test("the listeners are removed after a body that throws") {
     val before = ListenerProbe.count(spark)
     var during = (0, 0)

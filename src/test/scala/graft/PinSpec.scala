@@ -9,8 +9,9 @@ import graft.operators.{Caches, Dedup, FuzzyJoin, Par, QualityClassifier, TextAn
 
 /** The one materialization rule ([[Par.pin]]): operators leave no Dataset
   * cache behind, a pin computes its subtree once however many concurrent
-  * readers it has, [[Par.pinned]] drops its blocks, and a plain scan is
-  * never copied.
+  * readers it has, [[Par.pinned]] drops its blocks, a plain scan is
+  * never copied, and [[Par.iterate]] pins every round and stops where it
+  * is told to.
   */
 class PinSpec extends SparkSpec {
 
@@ -69,6 +70,65 @@ class PinSpec extends SparkSpec {
     assert(grouped.get == 7)
     assert(evals.sum == 200,
       s"the pinned subtree ran ${evals.sum / 200.0} times for 200 rows")
+  }
+
+  /** 100 rows (id, x = 0) over 2 partitions: the start of every iterate case. */
+  private def start = spark.range(0, 100, 1, 2).select(col("id"), lit(0L).as("x"))
+  private def plusOne(s: DataFrame) = s.select(col("id"), (col("x") + 1).as("x"))
+  private def xs(df: DataFrame) = df.select("x").distinct().collect().map(_.getLong(0)).toSeq
+
+  test("Par.iterate pins every round: after N rounds the plan is one pinned leaf") {
+    for (n <- Seq(1, 6)) {
+      val out = Par.iterate(start, n)((s, _) => plusOne(s))
+      val plan = out.queryExecution.analyzed
+      assert(plan.children.isEmpty && pinRdd(out).isCheckpointed,
+        s"after $n rounds the plan deepened:\n$plan")
+      assert(xs(out) == Seq(n.toLong))
+    }
+  }
+
+  test("Par.iterate over 0 rounds returns its input and runs no job") {
+    val init = start
+    val r = Inspect.record(spark)(Par.iterate(init, 0)((_, _) => fail("step ran")))
+    assert(r.value eq init)
+    assert(r.jobs == 0, r)
+  }
+
+  test("Par.iterate ends when a step returns its input") {
+    var calls = 0
+    val out = Par.iterate(start, 10) { (s, round) =>
+      calls += 1
+      if (round <= 2) plusOne(s) else s
+    }
+    assert(calls == 3, "the step ran again after its fixed point")
+    assert(pinRdd(out).isCheckpointed && xs(out) == Seq(2L))
+  }
+
+  test("Par.iterate stops when its probe holds and returns the last pinned round") {
+    var calls = 0
+    var probed: DataFrame = null
+    val out = Par.iterate(start, 10, stable = Some { (prev, next) =>
+      probed = next
+      next.exceptAll(prev).isEmpty
+    }) { (s, _) =>
+      calls += 1
+      s.select(col("id"), least(col("x") + 1, lit(3L)).as("x"))
+    }
+    // x: 1, 2, 3, then 3 again — round 4 is the first stable one
+    assert(calls == 4)
+    assert((out eq probed) && pinRdd(out).isCheckpointed && xs(out) == Seq(3L))
+  }
+
+  test("Par.iterate throws at its limit when the probe never holds") {
+    var calls = 0
+    val e = intercept[IllegalStateException] {
+      Par.iterate(start, 3, stable = Some((_, _) => false)) { (s, _) =>
+        calls += 1
+        plusOne(s)
+      }
+    }
+    assert(e.getMessage.contains("did not converge") && e.getMessage.contains("3"), e.getMessage)
+    assert(calls == 3)
   }
 
   test("Par.pinned drops its blocks on success and on a thrown failure") {
@@ -130,9 +190,9 @@ class PinSpec extends SparkSpec {
 
 /** Keeps the one-mechanism rules from eroding: nothing in the engine
   * calls `cache`, `persist` or `localCheckpoint` except [[Par]] and the
-  * independent sf1 reference run, metadata files go through
-  * [[graft.catalog.Sidecar]], and every session is built by
-  * [[GraftSession]] (`Bench` keeps its frozen config).
+  * independent sf1 reference run, only [[Par.iterate]] pins a loop's
+  * state, metadata files go through [[graft.catalog.Sidecar]], and every
+  * session is built by [[GraftSession]] (`Bench` keeps its frozen config).
   */
 class MaterializationLintSpec extends AnyFunSuite {
 
@@ -176,6 +236,13 @@ class MaterializationLintSpec extends AnyFunSuite {
     val found = hits(Seq("src/main/scala"), Set("Sidecar.scala"),
       """ObjectMapper|%04x|new Array\[Byte\]\((8192|65536)\)|copyBytes\(|create\([^)]*, *false\)""".r)
     assert(found.isEmpty, "read, write and create sidecars through graft.catalog.Sidecar:\n" +
+      found.mkString("\n"))
+  }
+
+  test("only Par.iterate pins a loop's state") {
+    val found = hits(Seq("src/main/scala"), Set("Par.scala"),
+      """^\s*(var\s+)?\w+\s*=\s*(graft\.operators\.)?Par\.pin\(""".r)
+    assert(found.isEmpty, "pin each round through Par.iterate instead:\n" +
       found.mkString("\n"))
   }
 
